@@ -27,7 +27,9 @@ object JobProfile {
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
     val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val jobShuffle = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
-    val out = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Double, Int)]()
+    // (jobId, call site, seconds, tasks, t0, t1): the bare call site is
+    // the rollup key, so the job's own start/end times ride separately
+    val out = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Double, Int, Long, Long)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(ev: SparkListenerJobStart): Unit = {
         // prefer the explicit phase label (JobLabel, guide §1.5); fall
@@ -52,8 +54,8 @@ object JobProfile {
       override def onJobEnd(ev: SparkListenerJobEnd): Unit = {
         Option(jobs.remove(ev.jobId)).foreach { case (site, t0) =>
           val parts = site.split(" tasks=")
-          out.add((ev.jobId, parts(0) + s" t0=$t0 t1=${ev.time}", (ev.time - t0) / 1000.0,
-            parts.lift(1).map(_.toInt).getOrElse(-1)))
+          out.add((ev.jobId, parts(0), (ev.time - t0) / 1000.0,
+            parts.lift(1).map(_.toInt).getOrElse(-1), t0, ev.time))
         }
       }
     })
@@ -65,9 +67,9 @@ object JobProfile {
     import scala.jdk.CollectionConverters._
     val rows = out.asScala.toSeq.sortBy(_._1)
     println(f"\n=== $name: ${rows.size} jobs, wall $wall%.2f s ===")
-    rows.foreach { case (id, site, sec, tasks) =>
+    rows.foreach { case (id, site, sec, tasks, t0, t1) =>
       val (sw, sr) = Option(jobShuffle.get(id)).getOrElse((0L, 0L))
-      println(f"job $id%4d  $sec%7.3f s  tasks=$tasks%-4d  shW=${sw / 1e6}%9.2fMB shR=${sr / 1e6}%9.2fMB  $site")
+      println(f"job $id%4d  $sec%7.3f s  tasks=$tasks%-4d  shW=${sw / 1e6}%9.2fMB shR=${sr / 1e6}%9.2fMB  $site t0=$t0 t1=$t1")
     }
     val bySite = rows.groupBy(_._2).map { case (s, rs) =>
       (s, rs.size, rs.map(_._3).sum)

@@ -182,15 +182,12 @@ final class MergeSink(
     val paths = rel.values.flatten.toSeq.distinct.sorted
     if (paths.isEmpty) df
     else {
-      // ONE read with an EXPLICIT schema (round 16): DV files hold
-      // exactly the key columns, whose types `df` already knows — a
-      // bare spark.read.parquet per vector file each ran a single-task
-      // footer schema-inference job, so a table with v delete commits
-      // paid O(v x buckets) job launches per DV-applied read
+      // ONE scan with an EXPLICIT schema: DV files hold exactly the key
+      // columns, whose types `df` already knows, so no vector file's
+      // footer is read to plan it
       val dvSchema = org.apache.spark.sql.types.StructType(
         df.schema.fields.filter(f => keys.contains(f.name)))
-      val dvKeys = spark.read.schema(dvSchema)
-        .parquet(paths.map(p => s"$path/$p"): _*)
+      val dvKeys = manifest.scanDirs(paths, dvSchema)
         .select(keys.map(col): _*).distinct()
       df.join(broadcast(dvKeys), keys, "left_anti")
     }
@@ -783,12 +780,10 @@ final class MergeSink(
       val snap1 = manifest.snapshotAt(v1, Some(touched))
         .getOrElse(throw new IllegalStateException(s"version $v1 missing at $path"))
         .drop(BucketCol)
-      // one read, explicit key schema (round 16) — see [[applyDv]]: a
-      // bare read per vector file ran a schema-inference job each
+      // one scan, explicit key schema — see [[applyDv]]
       val dvSchema = org.apache.spark.sql.types.StructType(
         snap1.schema.fields.filter(f => keys.contains(f.name)))
-      val newKeys = spark.read.schema(dvSchema)
-        .parquet(newDv.map { case (_, p) => s"$path/$p" }: _*)
+      val newKeys = manifest.scanDirs(newDv.map(_._2), dvSchema)
         .select(keys.map(col): _*).distinct()
       // alive-at-v1 rows of ONLY the vectored buckets (a key in a new
       // vector that an older vector already killed must NOT re-report)
@@ -864,9 +859,14 @@ final class MergeSink(
     * sidecar instead of rewriting any data bucket. [[purgeKeys]]'
     * copy-on-write rewrite costs O(|every bucket holding a deleted
     * key|) — for a scattered delete under hash layout that approaches
-    * O(|table|) even when |keys| is tiny; this commit writes
-    * O(|keys|) bytes and touches NO data file, which is the only
-    * delete shape that stays cheap at 100 TB.
+    * O(|table|) even when |keys| is tiny; this commit touches NO data
+    * file, which is the only delete shape that stays cheap at 100 TB.
+    *
+    * Caller contract: sidecar bytes scale with the `keyRows` passed
+    * in, duplicates included — the write does not de-duplicate (see
+    * the body), so a caller holding repeated keys should pass
+    * `keyRows.distinct()` to keep the vector O(|distinct keys|).
+    * Readers de-duplicate, so duplicates cost bytes, never results.
     *
     * Semantics: every read path anti-joins the outstanding vectors
     * (reads, range/point lookups, time travel at the vector's

@@ -1,7 +1,14 @@
 package graft.sink
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileContext, FileStatus, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
 /** Snapshot-manifest commit protocol for the bucketed sink tables
   * (MergeSink / AggSink) — the atomic-commit layer that replaces
@@ -59,6 +66,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (one line per bucket — metadata, not data), so the cost of history
   * is only the superseded data generations, which expiry reclaims.
   *
+  * READ PATH: a snapshot read is planned from the manifest alone. The
+  * mapping names each bucket's generation dir; the handle lists each
+  * (generation, bucket) dir once and reads each generation's data
+  * schema once from one parquet footer, both cached for the handle's
+  * life because generation dirs are immutable ([[vacuum]] evicts what
+  * it deletes). The scan is one `HadoopFsRelation` over a
+  * [[ManifestFileIndex]] of exactly the mapped buckets' files — no
+  * per-read directory listing, no schema-inference job, no per-read
+  * Hadoop configuration copy. Generations whose schemas disagree on a
+  * field name or type fail the read loudly.
+  *
   * Concurrency: writers are serialized by [[MergeSink.withWriterLock]]
   * (single-writer contract). Readers never lock; they race only the
   * manifest rename, which is atomic. A long-running reader of an OLD
@@ -70,9 +88,18 @@ final class TableManifest(spark: SparkSession, val root: String) {
   import MergeSink.BucketCol
   import TableManifest.{ColStats, Layout, Migration, Stats}
 
-  private def conf = spark.sessionState.newHadoopConf()
+  // one configuration copy and one FileSystem handle per table handle:
+  // a fresh copy per call was a fifth of a point read's main-thread time
+  private lazy val conf = spark.sessionState.newHadoopConf()
   private val rootPath = new Path(root)
-  private def fs = rootPath.getFileSystem(conf)
+  private lazy val fs = rootPath.getFileSystem(conf)
+
+  // Caches of immutable objects: a generation dir never changes once
+  // written, so none of these can go stale; [[vacuum]] evicts the dirs
+  // it deletes. Keys are root-relative dirs / generation dirs.
+  private val listings = new ConcurrentHashMap[String, Seq[FileStatus]]()
+  private val genSchemas = new ConcurrentHashMap[String, StructType]()
+  private val blooms = new ConcurrentHashMap[(String, Int, String), Option[(Int, Array[Byte])]]()
   private def manifestPath = new Path(root, TableManifest.ManifestFile)
   private def versionsDir = new Path(root, TableManifest.VersionsDir)
   private def versionPath(n: Long) = new Path(versionsDir, s"v-$n")
@@ -545,13 +572,19 @@ final class TableManifest(spark: SparkSession, val root: String) {
         val rel = s"data/${st.getPath.getName}"
         if (pending.contains(rel)) ()
         else liveRefs.get(rel) match {
-          case None => fs.delete(st.getPath, true)
+          case None =>
+            fs.delete(st.getPath, true)
+            evict(rel, None)
           case Some(liveBuckets) =>
             fs.listStatus(st.getPath).foreach { sub =>
               val name = sub.getPath.getName
-              if (name.startsWith(s"$BucketCol=") &&
-                  !liveBuckets.contains(name.stripPrefix(s"$BucketCol=").toInt))
-                fs.delete(sub.getPath, true)
+              if (name.startsWith(s"$BucketCol=")) {
+                val b = name.stripPrefix(s"$BucketCol=").toInt
+                if (!liveBuckets.contains(b)) {
+                  fs.delete(sub.getPath, true)
+                  evict(rel, Some(b))
+                }
+              }
             }
         }
       }
@@ -567,6 +600,20 @@ final class TableManifest(spark: SparkSession, val root: String) {
     }
   }
 
+  /** Drop the cached state of a deleted dir: one bucket of `gen`, or
+    * (None) the whole generation. Runs after the delete, so a listing
+    * racing the delete cannot re-insert a stale entry.
+    */
+  private def evict(gen: String, bucket: Option[Int]): Unit = bucket match {
+    case Some(b) =>
+      listings.remove(s"$gen/$BucketCol=$b")
+      blooms.keySet.removeIf { case (g, bb, _) => g == gen && bb == b }
+    case None =>
+      listings.keySet.removeIf(_.startsWith(s"$gen/"))
+      blooms.keySet.removeIf(_._1 == gen)
+      genSchemas.remove(gen)
+  }
+
   /** Drop history: retain only the `keepLast` most recent versions
     * (minimum 1 — the current snapshot is always readable), then
     * vacuum generation dirs only the expired versions referenced.
@@ -580,30 +627,97 @@ final class TableManifest(spark: SparkSession, val root: String) {
     vacuum()
   }
 
+  /** Data files of one root-relative dir, listed once per handle.
+    * Hidden names (`_`/`.`-led: bloom sidecars, checksums, markers) are
+    * skipped, as Spark's own file listing skips them.
+    */
+  private def dataFiles(dir: String): Seq[FileStatus] =
+    listings.computeIfAbsent(dir, d =>
+      fs.listStatus(new Path(root, d)).toSeq
+        .filter { st =>
+          val n = st.getPath.getName
+          st.isFile && !n.startsWith("_") && !n.startsWith(".")
+        }
+        .sortBy(_.getPath.getName))
+
+  /** Generation `gen`'s data schema from ONE parquet footer among
+    * `files` — Spark's row-metadata schema (parquet's own as fallback),
+    * made nullable: exactly what `spark.read.parquet` infers, read
+    * in-process instead of by a schema-inference job.
+    */
+  private def genSchema(gen: String, files: Seq[FileStatus]): StructType =
+    genSchemas.computeIfAbsent(gen, g => {
+      import org.apache.parquet.format.converter.ParquetMetadataConverter
+      import org.apache.parquet.hadoop.Footer
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+      val probe = files.headOption.getOrElse(throw new IllegalStateException(
+        s"generation $g at $root holds no data file to read its schema from"))
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(probe, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      PlanBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
+        new Footer(probe.getPath, footer), new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    })
+
+  /** Generations of one snapshot must agree on the set of field names
+    * and on each field's type (nullability aside): forcing one
+    * generation's schema onto another would read a missing column as
+    * silent nulls.
+    */
+  private def requireSameSchema(g0: String, s0: StructType, g: String, s: StructType): Unit = {
+    val (a, b) = (s0.fields.map(f => f.name -> f.dataType).toMap,
+                  s.fields.map(f => f.name -> f.dataType).toMap)
+    if (a != b) {
+      def show(t: Option[DataType]) = t.fold("absent")(_.simpleString)
+      val diff = (a.keySet ++ b.keySet).toSeq.sorted
+        .filter(n => a.get(n) != b.get(n))
+        .map(n => s"$n ${show(a.get(n))} vs ${show(b.get(n))}")
+      throw new IllegalStateException(
+        s"schema drift at $root: generations $g0 and $g disagree on " +
+          s"${diff.mkString(", ")} — refusing to read one generation's schema over the other")
+    }
+  }
+
+  private val bucketSchema = StructType(Seq(StructField(BucketCol, IntegerType, nullable = true)))
+
+  /** One file scan over `dirs` (root-relative dir, partition values,
+    * data files) — no listing, no inference: see the class doc.
+    */
+  private def scan(dirs: Seq[(String, InternalRow, Seq[FileStatus])],
+                   dataSchema: StructType, partitionSchema: StructType): DataFrame = {
+    val index = new ManifestFileIndex(
+      dirs.map { case (d, v, files) => (v, fs.makeQualified(new Path(root, d)), files) },
+      partitionSchema)
+    PlanBridge.ofRows(spark, LogicalRelation(HadoopFsRelation(
+      index, partitionSchema, dataSchema, None, new ParquetFileFormat(), Map.empty)(spark)))
+  }
+
   private def resolve(m: Map[Int, String], buckets: Option[Seq[Int]]): Option[DataFrame] = {
     val sel = buckets match {
-      case Some(bs) => m.filter { case (b, _) => bs.contains(b) }
-      case None     => m
+      case Some(bs) =>
+        val keep = bs.toSet
+        m.filter { case (b, _) => keep(b) }
+      case None => m
     }
     if (sel.isEmpty) None
     else {
-      // ONE schema inference for the whole snapshot (round 16): every
-      // generation of a sink table writes the full logical schema, so
-      // the first generation's inferred schema serves the rest — a bare
-      // spark.read.parquet per generation each ran its own single-task
-      // footer schema-inference job, so a snapshot spanning g
-      // generations paid g job launches purely to re-learn one schema.
-      val gens = sel.groupBy(_._2).toSeq.map { case (gen, bm) =>
-        val base = s"$root/$gen"
-        (base, bm.keys.toSeq.sorted.map(b => s"$base/$BucketCol=$b"))
+      val dirs = sel.toSeq.sortBy(_._1).map { case (b, gen) =>
+        (gen, b, dataFiles(s"$gen/$BucketCol=$b"))
       }
-      val first = spark.read.option("basePath", gens.head._1).parquet(gens.head._2: _*)
-      val rest = gens.tail.map { case (base, paths) =>
-        spark.read.schema(first.schema).option("basePath", base).parquet(paths: _*)
-      }
-      Some((first +: rest).reduce(_ unionByName _))
+      val byGen = dirs.groupBy(_._1)
+      val schemas = dirs.map(_._1).distinct.map(g => g -> genSchema(g, byGen(g).flatMap(_._3)))
+      val (g0, s0) = schemas.head
+      schemas.tail.foreach { case (g, s) => requireSameSchema(g0, s0, g, s) }
+      Some(scan(dirs.map { case (gen, b, files) => (s"$gen/$BucketCol=$b", InternalRow(b), files) },
+        s0, bucketSchema))
     }
   }
+
+  /** Rows of root-relative, unpartitioned dirs (deletion vectors) read
+    * with `schema` — the same cached, listing-free scan as [[snapshot]].
+    */
+  def scanDirs(dirs: Seq[String], schema: StructType): DataFrame =
+    scan(dirs.map(d => (d, InternalRow.empty, dataFiles(d))), schema, new StructType())
 
   /** Resolved snapshot read with the `__bucket` partition column.
     * `buckets` restricts resolution to those buckets' file sets —
@@ -646,6 +760,7 @@ final class TableManifest(spark: SparkSession, val root: String) {
                  numHashes: Int, bits: Array[Byte]): Unit = {
     val out = fs.create(bloomPath(gen, bucket, c), true)
     try { out.writeInt(numHashes); out.write(bits) } finally out.close()
+    blooms.remove((gen, bucket, c))
   }
 
   /** Current snapshot's bloom for (bucket, column), if the writer
@@ -658,21 +773,24 @@ final class TableManifest(spark: SparkSession, val root: String) {
     * batched probes use so one manifest resolve serves every bucket
     * (and so a probe can never mix two committed versions
     * mid-iteration, which per-bucket `mapping()` calls could).
+    * Sidecars of a published generation are immutable, so each is read
+    * once per handle (absence included).
     */
-  private def bloomIn(gen: String, bucket: Int, c: String): Option[(Int, Array[Byte])] = {
-    val p = bloomPath(gen, bucket, c)
-    if (!fs.exists(p)) None
-    else {
-      val len = fs.getFileStatus(p).getLen.toInt - 4
-      val in = fs.open(p)
-      try {
-        val k = in.readInt()
-        val bits = new Array[Byte](len)
-        in.readFully(bits)
-        Some((k, bits))
-      } finally in.close()
-    }
-  }
+  private def bloomIn(gen: String, bucket: Int, c: String): Option[(Int, Array[Byte])] =
+    blooms.computeIfAbsent((gen, bucket, c), _ => {
+      val p = bloomPath(gen, bucket, c)
+      if (!fs.exists(p)) None
+      else {
+        val len = fs.getFileStatus(p).getLen.toInt - 4
+        val in = fs.open(p)
+        try {
+          val k = in.readInt()
+          val bits = new Array[Byte](len)
+          in.readFully(bits)
+          Some((k, bits))
+        } finally in.close()
+      }
+    })
 
   /** Buckets that MIGHT hold a row with `c` hashing to `hash` — the
     * metadata-level point-lookup decision ([[bucketsForRange]]'s
