@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   * those keys are read; (3) partials add to the stored aggregates —
   * sums of sums, counts of counts, all associative + commutative, so
   * any batch slicing converges to the whole-history aggregate; (4)
-  * only touched buckets rewrite via dynamic partition overwrite.
+  * only touched buckets rewrite, into a fresh generation published by
+  * one [[TableManifest]] commit.
   *
   * EXACTNESS: sum columns should be decimal or integral — float sums
   * depend on addition order across batches, exact types do not (the
@@ -26,27 +27,31 @@ import org.apache.spark.sql.functions._
   * REPLAY SAFETY (addition is NOT idempotent): the applied-batch-id
   * fence is stored INSIDE the state table — every bucket rewrite
   * carries the writing batch's id in the `__applied_batch` column, so
-  * fence and data commit in the SAME per-partition directory swap;
-  * there is no separate fence write and therefore no crash window
-  * between data commit and fence commit. On re-delivery of batch B
-  * (restart replay), each touched bucket is folded only if its stored
-  * fence is < B: under per-partition-atomic replace, a crash
-  * mid-overwrite leaves every bucket either old (fence < B, refolded
-  * on replay) or new (fence = B, skipped) — per-bucket exactly-once.
+  * fence and data publish in the SAME manifest commit; there is no
+  * separate fence write and therefore no crash window between data
+  * commit and fence commit. On re-delivery of batch B (restart
+  * replay), each touched bucket is folded only if its stored fence is
+  * < B: a crash leaves the snapshot either old (every bucket's fence
+  * < B, refolded on replay) or new (fence = B, skipped) — per-bucket
+  * exactly-once.
   * Structured Streaming's monotone batch ids + single-writer
   * discipline (enforced by the same writer lock as MergeSink) make
   * the fence comparison sound: batch B is only ever re-delivered
   * while no batch > B has committed its offsets.
   *
-  * The round-3 residual window — Hadoop's delete-before-rename inside
-  * dynamic partition overwrite, which could lose a bucket directory on
-  * a crash — is CLOSED: writes now go through [[TableManifest]]
-  * snapshot commits (immutable generation dirs + one atomic manifest
-  * rename), so a crash at any point leaves either the old snapshot or
-  * the new one, never a partial table. The fence still rides inside
-  * the data files, so fence and aggregate publish in the same atomic
-  * commit: a replayed batch after a pre-commit crash folds exactly
-  * once (PipelineSpec crash-injection tests cover both crash sides).
+  * Writes go through [[TableManifest]] snapshot commits (immutable
+  * generation dirs + one atomic manifest rename), so a crash at any
+  * point leaves either the old snapshot or the new one, never a
+  * partial table; a replayed batch after a pre-commit crash folds
+  * exactly once (PipelineSpec crash-injection tests cover both crash
+  * sides).
+  *
+  * FOLD PARALLELISM: each fold is one `repartition(col(__bucket))`
+  * exchange (see `foldLocked`), so at most one non-empty task per
+  * TOUCHED bucket does the aggregate — a batch touching 4 buckets
+  * folds on at most 4 cores however many the cluster has. Size
+  * `nBuckets` to at least the number of cores you want folding (and,
+  * as for [[MergeSink]], so one bucket stays a few GB at scale).
   */
 final class AggSink(
     spark: SparkSession,
@@ -134,8 +139,7 @@ final class AggSink(
     val partial = partial0.withColumn(BucketCol, bucketOf)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val touched = partial.select(col(BucketCol)).distinct()
-        .collect().map(_.getInt(0)).toSeq
+      val touched = TableManifest.touchedBuckets(partial, col(BucketCol))
       if (touched.nonEmpty) {
         val current = manifest.mapping()
         // Per-bucket applied fences ride the fold plan itself (round
@@ -154,7 +158,6 @@ final class AggSink(
           case Some(state) => state.unionByName(partialIn)
           case None        => partialIn
         }
-        val gen = manifest.newGenDir()
         // fence-row reclamation: a key retracted to count zero exists
         // only to carry its bucket's replay fence — once the bucket
         // holds ANY nonzero row (which carries the same per-bucket
@@ -180,8 +183,10 @@ final class AggSink(
         // (bucket ++ keys) under an explicit hash(bucket) repartition
         // satisfies the aggregate's distribution AND both windows'
         // partitionBy(bucket) — the old shape exchanged once for the
-        // agg (hash keys) and again for the windows (hash bucket).
-        base.repartition(col(BucketCol))
+        // agg (hash keys) and again for the windows (hash bucket). The
+        // price: at most one non-empty task per touched bucket (class
+        // doc, FOLD PARALLELISM).
+        val w = manifest.writeGeneration("fold", base.repartition(col(BucketCol))
           .groupBy((col(BucketCol) +: keys.map(col)): _*)
           .agg(aggs.head, aggs.tail: _*)
           .withColumn("__f_bucket", coalesce(applied, lit(-1L)))
@@ -191,17 +196,14 @@ final class AggSink(
           .withColumn("__rk", row_number().over(wOrd))
           .filter(col(CountCol) =!= 0L || (col("__nz") === 0 && col("__rk") === 1))
           .withColumn(FenceCol, greatest(lit(batchId), col("__f_bucket")))
-          .drop("__nz", "__rk", "__f_key", "__f_bucket")
-          .write
-          .partitionBy(BucketCol).parquet(s"$path/$gen")
+          .drop("__nz", "__rk", "__f_key", "__f_bucket"))
         // a fully-fenced (replayed) batch writes no bucket dir: no
         // commit, no version — the old fold-set-empty skip, now decided
         // by the write's own output
-        val written = manifest.writtenBuckets(gen)
-        if (written.nonEmpty) {
-          manifest.commit(current ++ written.map(_ -> gen))
+        if (w.buckets.nonEmpty) {
+          manifest.commit(current ++ w.mapping)
           manifest.vacuum()
-        } else graft.core.TempDirs.deleteRecursively(s"$path/$gen")
+        }
       }
     } finally partial.unpersist()
   }

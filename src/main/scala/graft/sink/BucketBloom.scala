@@ -1,8 +1,5 @@
 package graft.sink
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-
 /** Fixed-geometry Bloom filter over 64-bit hashes — the per-bucket
   * SECONDARY-column membership sidecar for [[TableManifest]] tables.
   *
@@ -28,8 +25,8 @@ import org.apache.spark.sql.expressions.Aggregator
   * independent hashes).
   *
   * The input hash IS Spark's `xxhash64` (seed 42): the build side
-  * computes it codegen'd inside the scan ([[Build]] aggregates only
-  * the 64-bit hashes), and the probe side reproduces it on the driver
+  * computes it codegen'd inside the scan (tasks fold only the 64-bit
+  * hashes into bitsets), and the probe side reproduces it on the driver
   * via the same public XXH64 kernel — one definition of the hash on
   * both sides, so a sidecar can never disagree with the engine.
   */
@@ -76,27 +73,14 @@ object BucketBloom {
     true
   }
 
-  /** Distributed bloom build as a typed [[Aggregator]] over the
-    * 64-bit `xxhash64` column values: per-partition partials set bits
-    * locally (map-side combine — the shuffle carries one `m/8`-byte
-    * bitset per partition per bucket, never the values), merge is a
-    * byte-wise OR (commutative, associative, idempotent — retry-safe
-    * by construction). The per-bucket result is fixed-size metadata:
-    * collecting `nBuckets x 4 KiB` to the driver is a manifest-scale
-    * operation, not a data-scale one.
+  /** Union of two same-geometry bitsets into `a` (mutates; returns
+    * `a`): how per-task partial sidecars combine — commutative,
+    * associative and idempotent, so retried or re-split tasks build the
+    * same bytes.
     */
-  case class Build(mBits: Int, numHashes: Int)
-      extends Aggregator[Long, Array[Byte], Array[Byte]] {
-    require(mBits % 8 == 0 && mBits > 0, s"mBits must be a positive multiple of 8: $mBits")
-    def zero: Array[Byte] = new Array[Byte](mBits >> 3)
-    def reduce(b: Array[Byte], h: Long): Array[Byte] = { add(b, numHashes, h); b }
-    def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-      var i = 0
-      while (i < a.length) { a(i) = (a(i) | b(i)).toByte; i += 1 }
-      a
-    }
-    def finish(b: Array[Byte]): Array[Byte] = b
-    def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  def or(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+    var i = 0
+    while (i < a.length) { a(i) = (a(i) | b(i)).toByte; i += 1 }
+    a
   }
 }

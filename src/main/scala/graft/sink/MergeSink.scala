@@ -1,7 +1,5 @@
 package graft.sink
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -51,10 +49,11 @@ import graft.ops.Cdc
   *
   * ZONE MAPS (`statsCols`): after each rewrite the sink records
   * per-bucket min/max of the named numeric columns in the manifest
-  * (read back from the freshly written files — a columnar metadata
-  * scan of only those columns). [[readRange]] then resolves ONLY the
-  * buckets whose range can intersect the predicate — Iceberg-style
-  * data skipping where files outside the range are never even listed.
+  * (read from the freshly written files' parquet footers, or a
+  * columnar scan of only those columns where a footer cannot decide).
+  * [[readRange]] then resolves ONLY the buckets whose range can
+  * intersect the predicate — Iceberg-style data skipping where files
+  * outside the range are never even listed.
   * Stats are only selective when layout correlates with the column
   * (range bucketing on a key, or a time-ordered ingest on an
   * event-time column); under hash bucketing they are recorded but
@@ -91,7 +90,9 @@ final class MergeSink(
     bloomBits: Int = BucketBloom.DefaultBits) {
 
   import MergeSink.{BucketCol, LayoutStride, MaxLayoutGen}
-  import TableManifest.{ColStats, Layout, Migration, Stats}
+  import TableManifest.{Layout, Migration, Written}
+
+  private[graft] val manifest = new TableManifest(spark, path)
 
   /** Gate/spec instrumentation: per-instance counters of sidecar-
     * pruned point probes ([[readBucketsForPoints]]) — probes made,
@@ -109,10 +110,8 @@ final class MergeSink(
     * metadata) vs the fallback columnar re-scan — the spec pins that
     * the footer path actually fires, not just that stats are right.
     */
-  val statsFromFooter = new java.util.concurrent.atomic.AtomicLong(0)
-  val statsFromScan = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private[graft] val manifest = new TableManifest(spark, path)
+  val statsFromFooter: java.util.concurrent.atomic.AtomicLong = manifest.statsFromFooter
+  val statsFromScan: java.util.concurrent.atomic.AtomicLong = manifest.statsFromScan
 
   /** LAYOUT IS MANIFEST-AUTHORITATIVE: the constructor's
     * nBuckets/rangeBucketWidth only name the layout a NEW table is
@@ -278,8 +277,7 @@ final class MergeSink(
     * serving one layout's routing over another's data.
     */
   def readForKeys(probe: DataFrame): DataFrame = consistentRead {
-    val touched = probe.select(bucketOf.as(BucketCol)).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val touched = route("read", probe)
     if (touched.isEmpty) read().filter(lit(false))
     else readBuckets(touched).getOrElse(read().filter(lit(false)))
   }
@@ -327,148 +325,6 @@ final class MergeSink(
 
   /** (fileName, size, mtime) per bucket — maintenance metadata. */
   def bucketFiles(): Map[Int, Seq[(String, Long, Long)]] = manifest.bucketFiles()
-
-  /** Per-bucket min/max of `statsCols` read back from a just-written
-    * generation — a columnar scan of ONLY those columns over ONLY the
-    * rewritten buckets' files. All-NULL columns record no stats for
-    * that bucket (missing stats never prune).
-    */
-  private def statsOfGen(gen: String): Map[Int, Stats] =
-    if (statsCols.isEmpty) Map.empty
-    else footerStatsOfGen(gen).map { m =>
-      statsFromFooter.incrementAndGet(); m
-    }.getOrElse {
-      statsFromScan.incrementAndGet()
-      // fallback scan — the pre-round-15 path, kept for any footer the
-      // metadata read cannot decide (missing statistics, non-numeric
-      // physical type): correctness never depends on footers
-      val aggs = statsCols.flatMap(c => Seq(
-        min(col(c)).cast("double").as(s"__mn_$c"),
-        max(col(c)).cast("double").as(s"__mx_$c")))
-      graft.core.JobLabel(spark, s"merge:stats-scan $path") {
-        spark.read.parquet(s"$path/$gen")
-          .groupBy(col(BucketCol))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-          .map { r =>
-            val b = r.getAs[Number](BucketCol).intValue()
-            val st: Stats = statsCols.flatMap { c =>
-              val mn = r.getAs[Any](s"__mn_$c"); val mx = r.getAs[Any](s"__mx_$c")
-              if (mn == null || mx == null) None
-              else Some(c -> ColStats(mn.asInstanceOf[Double], mx.asInstanceOf[Double]))
-            }.toMap
-            b -> st
-          }.toMap
-      }
-    }
-
-  /** Zone-map stats read from the just-written generation's PARQUET
-    * FOOTERS (round 15, optimization guide §6): the writer sorted and
-    * wrote these files moments ago, and their row-group statistics
-    * already hold exact per-column min/max for numeric types — so the
-    * commit-time stats pass is O(files) driver-side metadata instead
-    * of a full columnar re-scan of the generation (at 100 TB the old
-    * scan re-read every byte just written). Returns None — falling
-    * back to the scan — if ANY (file, column) is undecidable: missing
-    * statistics, a non-numeric physical type, or an unreadable footer.
-    * All-NULL columns record no stats, exactly like the scan path
-    * (missing stats never prune). Equivalence is spec-pinned
-    * (PipelineSpec "footer stats").
-    */
-  private def footerStatsOfGen(gen: String): Option[Map[Int, Stats]] = try {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sessionState.newHadoopConf()
-    val genPath = new Path(s"$path/$gen")
-    val fs = genPath.getFileSystem(conf)
-    if (!fs.exists(genPath)) return Some(Map.empty)
-    val bucketDirs = fs.listStatus(genPath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$BucketCol="))
-    val out = bucketDirs.map { bd =>
-      val b = bd.getPath.getName.stripPrefix(s"$BucketCol=").toInt
-      // (min, max, sawValue) per stats column, folded over row groups
-      val acc = scala.collection.mutable.Map.empty[String, (Double, Double)]
-      fs.listStatus(bd.getPath).toSeq
-        .filter(f => f.getPath.getName.startsWith("part-") &&
-                     f.getPath.getName.endsWith(".parquet"))
-        .foreach { f =>
-          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
-          try {
-            val md = reader.getFooter.getBlocks
-            statsCols.foreach { c =>
-              md.forEach { blk =>
-                val colChunk = blk.getColumns.asScala
-                  .find(_.getPath.toDotString == c)
-                  .getOrElse(return None) // column missing: undecidable
-                // Only PLAIN numeric physical types are decidable from
-                // footers: a logical annotation over a numeric physical
-                // (int32/int64-backed DECIMAL's unscaled value,
-                // TIMESTAMP/TIME/DATE epochs) yields raw physical units
-                // that diverge from the scan path's cast-to-double
-                // semantics — wrong zone maps would silently prune
-                // buckets holding matching rows (round-15 ADVICE). Such
-                // columns fall back to the scan, which casts correctly.
-                val pt = colChunk.getPrimitiveType
-                import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-                val physOk = pt.getPrimitiveTypeName match {
-                  case INT32 | INT64 | FLOAT | DOUBLE => true
-                  case _                              => false
-                }
-                val annOk = pt.getLogicalTypeAnnotation match {
-                  case null => true
-                  case i: org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
-                    i.isSigned // unsigned stats reinterpret as signed: undecidable
-                  case _ => false // DECIMAL / TIMESTAMP / TIME / DATE / ...
-                }
-                if (!physOk || !annOk) return None
-                val st = colChunk.getStatistics
-                if (st == null || !st.isNumNullsSet) return None
-                if (st.hasNonNullValue) {
-                  val (mn, mx) = (st.genericGetMin, st.genericGetMax) match {
-                    case (a: Number, bx: Number) => (a.doubleValue(), bx.doubleValue())
-                    case _ => return None // non-numeric: undecidable
-                  }
-                  acc.get(c) match {
-                    case Some((m0, m1)) => acc(c) = (math.min(m0, mn), math.max(m1, mx))
-                    case None           => acc(c) = (mn, mx)
-                  }
-                } else if (st.getNumNulls != blk.getRowCount) {
-                  return None // no value recorded but not all-null: undecidable
-                }
-              }
-            }
-          } finally reader.close()
-        }
-      b -> acc.toMap.map { case (c, (mn, mx)) => c -> ColStats(mn, mx) }
-    }.toMap
-    Some(out)
-  } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Per-(bucket, column) BLOOM SIDECARS for a just-written generation
-    * (see [[BucketBloom]] for geometry and why): one extra columnar
-    * scan of only the written files, hashing with codegen'd `xxhash64`
-    * inside the scan and aggregating fixed-size bitsets with map-side
-    * combine — the collect is `nBuckets x bloomBits/8` bytes of
-    * metadata. Sidecars land inside the generation dir BEFORE the
-    * manifest rename, so they share the data files' atomic-publish
-    * story.
-    */
-  private def writeBloomsOfGen(gen: String): Unit =
-    if (bloomCols.nonEmpty) {
-      val build = udaf(BucketBloom.Build(bloomBits, BucketBloom.DefaultHashes))
-      val df = spark.read.parquet(s"$path/$gen")
-      bloomCols.foreach { c =>
-        df.filter(col(c).isNotNull)
-          .select(col(BucketCol), xxhash64(col(c)).as("__h"))
-          .groupBy(col(BucketCol))
-          .agg(build(col("__h")).as("__bloom"))
-          .collect()
-          .foreach { r =>
-            manifest.writeBloom(gen, r.getAs[Number](BucketCol).intValue(), c,
-              BucketBloom.DefaultHashes, r.getAs[Array[Byte]]("__bloom"))
-          }
-      }
-    }
 
   /** Buckets that might hold `c = v` per the bloom sidecars — the
     * metadata-level point-lookup pruning decision. `c` must be a
@@ -522,8 +378,8 @@ final class MergeSink(
     * Holds the writer lock: a concurrent merge or compact on the same
     * table fails fast instead of interleaving commits
     * (see [[MergeSink.withWriterLock]]).
-    */
-  /** Upsert one batch. `materializeBatch = true` runs the batch plan
+    *
+    * `materializeBatch = true` runs the batch plan
     * ONCE (lazy localCheckpoint: the touched-bucket route collect is
     * the materializing action, the merge write scans the blocks, the
     * blocks are freed after the commit) — the right call when the
@@ -546,39 +402,41 @@ final class MergeSink(
   }
 
   private def mergeImpl(batch: DataFrame): Unit = {
-    val touched = graft.core.JobLabel(spark, s"merge:route $path") {
-      batch.select(bucketOf.as(BucketCol)).distinct()
-        .collect().map(_.getInt(0)).toSeq
-    }
+    val touched = route("merge", batch)
     if (touched.nonEmpty) {
       val current = manifest.mapping()
-      val base = readBuckets(touched) match {
-        case Some(state) => state.unionByName(batch)
-        case None        => batch
-      }
-      val merged = Cdc.latestByKey(base, keys, orderCols)
-      val gen = manifest.newGenDir()
-      graft.core.JobLabel(spark, s"merge:write $path") {
-        merged
-          .withColumn(BucketCol, bucketOf)
-          // key-sorted within each write task: parquet row-group min/max
-          // stats then let point lookups and merge reads skip row groups
-          .sortWithinPartitions(keys.map(col): _*)
-          .write
-          .partitionBy(BucketCol)
-          .parquet(s"$path/$gen")
-      }
-      graft.core.JobLabel(spark, s"merge:sidecars $path") {
-        writeBloomsOfGen(gen)
-        // all-or-nothing publish; crashed attempts' files stay invisible
-        manifest.commit(
-          current ++ manifest.writtenBuckets(gen).map(_ -> gen),
-          manifest.stats() ++ statsOfGen(gen),
-          layoutState)
-      }
+      val w = write("merge", mergedWith(batch, touched))
+      // all-or-nothing publish; crashed attempts' files stay invisible
+      manifest.commit(current ++ w.mapping, manifest.stats() ++ w.stats, layoutState)
       manifest.vacuum()
     }
   }
+
+  /** Buckets `df`'s keys route to under the committed layout (JobLabel
+    * `<op>:route`).
+    */
+  private def route(op: String, df: DataFrame): Seq[Int] =
+    graft.core.JobLabel(spark, s"$op:route $path")(TableManifest.touchedBuckets(df, bucketOf))
+
+  /** `df` routed to its buckets and key-sorted within each write task:
+    * parquet row-group min/max stats then let point lookups and merge
+    * reads skip row groups.
+    */
+  private def keySorted(df: DataFrame): DataFrame =
+    df.withColumn(BucketCol, bucketOf).sortWithinPartitions(keys.map(col): _*)
+
+  /** The LWW merge of `batch` into the current state of its `touched`
+    * buckets, ready for the write — what [[merge]] commits and
+    * [[stageMerge]] stages.
+    */
+  private def mergedWith(batch: DataFrame, touched: Seq[Int]): DataFrame =
+    keySorted(Cdc.latestByKey(readBuckets(touched).fold(batch)(_.unionByName(batch)), keys, orderCols))
+
+  /** One generation of this table through the manifest's writer, with
+    * this table's zone-map and bloom columns.
+    */
+  private def write(op: String, df: DataFrame, gen: String = manifest.newGenDir()): Written =
+    manifest.writeGeneration(op, df, statsCols, bloomCols, bloomBits, gen)
 
   /** foreachBatch adapter: `stream.writeStream.foreachBatch(sink.forEachBatch)`. */
   def forEachBatch: (DataFrame, Long) => Unit = (batch, _) => merge(batch)
@@ -619,8 +477,7 @@ final class MergeSink(
   private[graft] var onStageBaseRead: () => Unit = () => ()
 
   private def stageImpl(batch: DataFrame): String = {
-    val touched = batch.select(bucketOf.as(BucketCol)).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val touched = route("stage", batch)
     require(touched.nonEmpty, "stageMerge of an empty batch has nothing to audit")
     // ONE atomic manifest read: the #base fence must be the version
     // this mapping (the merge input) was read at. Reading the fence
@@ -628,24 +485,12 @@ final class MergeSink(
     // commit land unseen and be silently overwritten at publish.
     val (baseVersion, current, curStats) = manifest.versionedState()
     onStageBaseRead()
-    val base = readBuckets(touched) match {
-      case Some(state) => state.unionByName(batch)
-      case None        => batch
-    }
-    val merged = Cdc.latestByKey(base, keys, orderCols)
+    val merged = mergedWith(batch, touched)
     val gen = manifest.newGenDir()
     val pending = manifest.preStage(gen)
     try {
-      merged
-        .withColumn(BucketCol, bucketOf)
-        .sortWithinPartitions(keys.map(col): _*)
-        .write
-        .partitionBy(BucketCol)
-        .parquet(s"$path/$gen")
-      writeBloomsOfGen(gen)
-      manifest.finalizeStage(pending,
-        current ++ manifest.writtenBuckets(gen).map(_ -> gen),
-        curStats ++ statsOfGen(gen),
+      val w = write("stage", merged, gen)
+      manifest.finalizeStage(pending, current ++ w.mapping, curStats ++ w.stats,
         baseVersion = Some(baseVersion))
     } catch {
       case scala.util.control.NonFatal(e) =>
@@ -713,36 +558,6 @@ final class MergeSink(
   /** Outstanding stage tokens. */
   def stagedTokens(): Seq[String] = manifest.staged()
 
-  /** COMPLIANCE PURGE — hard-delete every row whose merge key appears
-    * in `keyRows` (a frame of the key columns), then DESTROY history so
-    * the data is physically unrecoverable (the GDPR / takedown-request
-    * primitive; a tombstone merge only hides a key, and time travel
-    * would happily resurrect it).
-    *
-    *   1. touched buckets come from `bucketOf` over the key list —
-    *      metadata, same pruning decision as [[merge]]; keys hash (or
-    *      range) to buckets deterministically, so NO other bucket can
-    *      hold the key;
-    *   2. ONLY those buckets rewrite, anti-joined against the
-    *      (broadcast-small) key list — Delta/Iceberg DELETE rewrite
-    *      semantics;
-    *   3. the commit publishes atomically like any other, then
-    *      `expireVersions(1)` drops every prior version: the old
-    *      generations holding the purged rows are deleted, not merely
-    *      dereferenced. (On object stores add the provider's billing /
-    *      versioning purge on top; here deletion is deletion.)
-    *
-    * Cost: O(|buckets holding purged keys| + |key list|), not
-    * O(|table|). The price of erasure is losing time travel across the
-    * purge point — inherent, not incidental: retained history IS the
-    * data you were asked to destroy.
-    *
-    * `destroyHistory = false` is the TTL-EVICTION variant (dropping
-    * cold keys for cost, not compliance): the delete commits like any
-    * other version, history and time travel survive, and
-    * [[changesBetween]] across the eviction reports the keys as
-    * `delete` rows — downstream increments see them leave.
-    */
   /** CHANGE DATA FEED between two retained versions — the incremental-
     * consumption primitive (Delta CDF analog): downstream pipelines
     * read "what changed since the version I last processed" instead of
@@ -820,33 +635,48 @@ final class MergeSink(
   private[graft] def purgeKeptFrame(keyList: DataFrame, rewrite: Seq[Int]): DataFrame =
     readBuckets(rewrite).get.join(broadcast(keyList), keys, "left_anti")
 
+  /** COMPLIANCE PURGE — hard-delete every row whose merge key appears
+    * in `keyRows` (a frame of the key columns), then DESTROY history so
+    * the data is physically unrecoverable (the GDPR / takedown-request
+    * primitive; a tombstone merge only hides a key, and time travel
+    * would happily resurrect it).
+    *
+    *   1. touched buckets come from `bucketOf` over the key list —
+    *      metadata, same pruning decision as [[merge]]; keys hash (or
+    *      range) to buckets deterministically, so NO other bucket can
+    *      hold the key;
+    *   2. ONLY those buckets rewrite, anti-joined against the
+    *      (broadcast-small) key list — Delta/Iceberg DELETE rewrite
+    *      semantics;
+    *   3. the commit publishes atomically like any other, then
+    *      `expireVersions(1)` drops every prior version: the old
+    *      generations holding the purged rows are deleted, not merely
+    *      dereferenced. (On object stores add the provider's billing /
+    *      versioning purge on top; here deletion is deletion.)
+    *
+    * Cost: O(|buckets holding purged keys| + |key list|), not
+    * O(|table|). The price of erasure is losing time travel across the
+    * purge point — inherent, not incidental: retained history IS the
+    * data you were asked to destroy.
+    *
+    * `destroyHistory = false` is the TTL-EVICTION variant (dropping
+    * cold keys for cost, not compliance): the delete commits like any
+    * other version, history and time travel survive, and
+    * [[changesBetween]] across the eviction reports the keys as
+    * `delete` rows — downstream increments see them leave.
+    */
   def purgeKeys(keyRows: DataFrame, destroyHistory: Boolean = true): Unit =
       MergeSink.withWriterLock(spark, path, "purge") {
     val keyList = keyRows.select(keys.map(col): _*).distinct()
-    val touched = keyList.select(bucketOf.as(BucketCol)).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val held = manifest.mapping().keySet
-    val rewrite = touched.filter(held.contains)
+    val current = manifest.mapping()
+    val rewrite = route("purge", keyList).filter(current.contains)
     if (rewrite.nonEmpty) {
-      val current = manifest.mapping()
-      val kept = purgeKeptFrame(keyList, rewrite)
-      val gen = manifest.newGenDir()
-      kept
-        .withColumn(BucketCol, bucketOf)
-        .sortWithinPartitions(keys.map(col): _*)
-        .write
-        .partitionBy(BucketCol)
-        .parquet(s"$path/$gen")
+      val w = write("purge", keySorted(purgeKeptFrame(keyList, rewrite)))
       // a bucket whose every row was purged vanishes from the mapping
       // (the write produced no dir for it) rather than keeping a stale gen
-      writeBloomsOfGen(gen)
-      val written = manifest.writtenBuckets(gen)
-      val emptied = rewrite.toSet -- written
-      manifest.commit(
-        (current -- emptied) ++ written.map(_ -> gen),
-        (manifest.stats() -- rewrite) ++
-          (if (statsCols.isEmpty) Map.empty else statsOfGen(gen)),
-        layoutState)
+      val emptied = rewrite.toSet -- w.buckets
+      manifest.commit((current -- emptied) ++ w.mapping,
+        (manifest.stats() -- rewrite) ++ w.stats, layoutState)
     }
     // history carries the purged rows — for a compliance purge destroy
     // it even when no bucket matched (the request may target data
@@ -909,20 +739,15 @@ final class MergeSink(
     graft.core.JobLabel(spark, s"dv:write $path") {
       keyList.write.partitionBy(BucketCol).parquet(s"$path/$gen/dvtmp")
     }
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = manifest.fs
     val dvtmp = new Path(s"$path/$gen/dvtmp")
-    val written =
-      if (!fs.exists(dvtmp)) Seq.empty[Int]
-      else fs.listStatus(dvtmp).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$BucketCol="))
-        .map(_.getPath.getName.stripPrefix(s"$BucketCol=").toInt)
     // only buckets that exist can hold rows to delete — a key routed
     // to an absent bucket has no row, and recording a vector for it
     // would wrongly delete a FUTURE insert of that key
-    val touched = written.filter(held.contains).sorted
+    val touched = manifest.bucketDirs(dvtmp).filter(held.contains)
     if (touched.nonEmpty) {
       touched.foreach { b =>
-        fs.rename(new Path(s"$path/$gen/dvtmp/$BucketCol=$b"),
+        fs.rename(new Path(path, manifest.bucketDir(s"$gen/dvtmp", b)),
                   new Path(s"$path/$gen/dv_$b"))
       }
       fs.delete(dvtmp, true)
@@ -982,11 +807,8 @@ final class MergeSink(
         // below coalesces to false so NULL-flag rows survive the
         // rewrite — compact is layout maintenance and must never
         // hard-delete a row whose tombstone state is merely unknown.
-        case Some(flag) => manifest.snapshot(None) match {
-          case None     => Set.empty
-          case Some(df) => df.filter(coalesce(col(flag), lit(false)))
-            .select(col(BucketCol)).distinct()
-            .collect().map(_.getInt(0)).toSet
+        case Some(flag) => manifest.snapshot(None).fold(Set.empty[Int]) { df =>
+          TableManifest.touchedBuckets(df.filter(coalesce(col(flag), lit(false))), col(BucketCol)).toSet
         }
       }
       // buckets with outstanding deletion vectors are compaction
@@ -996,26 +818,19 @@ final class MergeSink(
       val rewrite = (oversized ++ tombstoned ++ dvHeld).toSeq.sorted
       if (rewrite.nonEmpty) {
         val current = manifest.mapping()
-        val gen = manifest.newGenDir()
         val base = applyDv(manifest.snapshot(Some(rewrite)).get,
           manifest.dv(), Some(rewrite))
-        dropDeleted.fold(base)(flag => base.filter(!coalesce(col(flag), lit(false))))
-          .repartition(rewrite.length, col(BucketCol))
-          .write
-          .partitionBy(BucketCol)
-          .parquet(s"$path/$gen")
-        // content rows are unchanged (minus dropped tombstones) but the
-        // rewritten buckets move to a new generation dir — sidecars are
-        // generation-scoped, so rebuild
-        writeBloomsOfGen(gen)
-        val written = manifest.writtenBuckets(gen)
+        // content rows are unchanged (minus dropped tombstones), so zone
+        // maps carry over; sidecars are generation-scoped and rebuilt
+        val w = manifest.writeGeneration("compact",
+          dropDeleted.fold(base)(flag => base.filter(!coalesce(col(flag), lit(false))))
+            .repartition(rewrite.length, col(BucketCol)),
+          bloomCols = bloomCols, bloomBits = bloomBits)
         // a bucket whose every row was a tombstone vanishes from the
         // mapping (the write produced no dir for it)
-        val emptied = rewrite.toSet -- written
-        manifest.commit(
-          (current -- emptied) ++ written.map(_ -> gen),
-          manifest.stats() -- emptied,
-          layoutState)
+        val emptied = rewrite.toSet -- w.buckets
+        manifest.commit((current -- emptied) ++ w.mapping,
+          manifest.stats() -- emptied, layoutState)
         manifest.vacuum()
       }
     }
@@ -1065,20 +880,13 @@ final class MergeSink(
         manifest.commit(Map.empty, Map.empty, Some((target, None)))
         handle
       case Some(snap) =>
-        val gen = manifest.newGenDir()
-        applyDv(snap.drop(BucketCol), manifest.dv(), None)
+        val w = write("rebucket", applyDv(snap.drop(BucketCol), manifest.dv(), None)
           .withColumn(BucketCol, physOf(target))
           .repartition(newNBuckets, col(BucketCol))
-          .sortWithinPartitions(keys.map(col): _*)
-          .write
-          .partitionBy(BucketCol)
-          .parquet(s"$path/$gen")
-        writeBloomsOfGen(gen)
-        val written = manifest.writtenBuckets(gen)
+          .sortWithinPartitions(keys.map(col): _*))
         // FULL mapping replacement: every old bucket id retires with
         // this commit (prior versions still resolve them)
-        manifest.commit(written.map(_ -> gen).toMap, statsOfGen(gen),
-          Some((target, None)))
+        manifest.commit(w.mapping, w.stats, Some((target, None)))
         manifest.vacuum()
         handle
     }
@@ -1148,27 +956,18 @@ final class MergeSink(
       // which target buckets these keys land in: at most k * spread
       // small ints reach the driver — the same metadata-not-data
       // pruning decision merge() makes
-      val targets = moving.select(col(BucketCol)).distinct()
-        .collect().map(_.getInt(0)).toSeq
+      val targets = TableManifest.touchedBuckets(moving, col(BucketCol))
       val affected = targets.filter(current.contains)
       val out = manifest.snapshot(Some(affected))
           .map(df => applyDv(df, manifest.dv(), Some(affected))) match {
         case Some(existing) => existing.unionByName(moving)
         case None           => moving
       }
-      val gen = manifest.newGenDir()
-      out
+      val w = write("migrate", out
         .repartition(math.max(targets.size, 1), col(BucketCol))
-        .sortWithinPartitions(keys.map(col): _*)
-        .write
-        .partitionBy(BucketCol)
-        .parquet(s"$path/$gen")
-      writeBloomsOfGen(gen)
-      val written = manifest.writtenBuckets(gen)
-      manifest.commit(
-        (current -- physPick) ++ written.map(_ -> gen),
-        (manifest.stats() -- physPick) ++ statsOfGen(gen),
-        nextState)
+        .sortWithinPartitions(keys.map(col): _*))
+      manifest.commit((current -- physPick) ++ w.mapping,
+        (manifest.stats() -- physPick) ++ w.stats, nextState)
       manifest.vacuum()
     }
     remaining

@@ -1,14 +1,19 @@
 package graft.sink
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileContext, FileStatus, Options, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.functions.{col, max, min, xxhash64}
 import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import graft.core.JobLabel
 
 /** Snapshot-manifest commit protocol for the bucketed sink tables
   * (MergeSink / AggSink) — the atomic-commit layer that replaces
@@ -77,6 +82,12 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   * Hadoop configuration copy. Generations whose schemas disagree on a
   * field name or type fail the read loudly.
   *
+  * WRITE PATH: every data commit of both sinks writes its generation
+  * through [[writeGeneration]] — one partitioned write, one listing of
+  * what it produced, then bloom sidecars and zone maps built from the
+  * same listing and the same scan a read would use. The caller only
+  * shapes the frame and decides whether the result commits or stages.
+  *
   * Concurrency: writers are serialized by [[MergeSink.withWriterLock]]
   * (single-writer contract). Readers never lock; they race only the
   * manifest rename, which is atomic. A long-running reader of an OLD
@@ -86,13 +97,13 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   */
 final class TableManifest(spark: SparkSession, val root: String) {
   import MergeSink.BucketCol
-  import TableManifest.{ColStats, Layout, Migration, Stats}
+  import TableManifest.{ColStats, Layout, Migration, Stats, Written}
 
   // one configuration copy and one FileSystem handle per table handle:
   // a fresh copy per call was a fifth of a point read's main-thread time
   private lazy val conf = spark.sessionState.newHadoopConf()
   private val rootPath = new Path(root)
-  private lazy val fs = rootPath.getFileSystem(conf)
+  private[sink] lazy val fs = rootPath.getFileSystem(conf)
 
   // Caches of immutable objects: a generation dir never changes once
   // written, so none of these can go stale; [[vacuum]] evicts the dirs
@@ -114,11 +125,20 @@ final class TableManifest(spark: SparkSession, val root: String) {
     * adoption: move the bucket dirs into a generation dir and commit a
     * manifest naming them.
     */
-  private def legacyBuckets(): Seq[Int] =
-    if (!fs.exists(rootPath)) Seq.empty
-    else fs.listStatus(rootPath).toSeq
+  private def legacyBuckets(): Seq[Int] = bucketDirs(rootPath)
+
+  /** Bucket ids of the `__bucket=N` dirs directly under `dir` (none when
+    * `dir` is absent) — the one place that naming is parsed.
+    */
+  private[sink] def bucketDirs(dir: Path): Seq[Int] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$BucketCol="))
       .map(_.getPath.getName.stripPrefix(s"$BucketCol=").toInt)
+      .sorted
+
+  /** Root-relative dir of one bucket of generation `gen`. */
+  private[sink] def bucketDir(gen: String, b: Int): String = s"$gen/$BucketCol=$b"
 
   private def requireNotLegacy(): Unit =
     if (!exists) {
@@ -576,15 +596,9 @@ final class TableManifest(spark: SparkSession, val root: String) {
             fs.delete(st.getPath, true)
             evict(rel, None)
           case Some(liveBuckets) =>
-            fs.listStatus(st.getPath).foreach { sub =>
-              val name = sub.getPath.getName
-              if (name.startsWith(s"$BucketCol=")) {
-                val b = name.stripPrefix(s"$BucketCol=").toInt
-                if (!liveBuckets.contains(b)) {
-                  fs.delete(sub.getPath, true)
-                  evict(rel, Some(b))
-                }
-              }
+            bucketDirs(st.getPath).filterNot(liveBuckets).foreach { b =>
+              fs.delete(new Path(root, bucketDir(rel, b)), true)
+              evict(rel, Some(b))
             }
         }
       }
@@ -606,7 +620,7 @@ final class TableManifest(spark: SparkSession, val root: String) {
     */
   private def evict(gen: String, bucket: Option[Int]): Unit = bucket match {
     case Some(b) =>
-      listings.remove(s"$gen/$BucketCol=$b")
+      listings.remove(bucketDir(gen, b))
       blooms.keySet.removeIf { case (g, bb, _) => g == gen && bb == b }
     case None =>
       listings.keySet.removeIf(_.startsWith(s"$gen/"))
@@ -642,8 +656,8 @@ final class TableManifest(spark: SparkSession, val root: String) {
 
   /** Generation `gen`'s data schema from ONE parquet footer among
     * `files` — Spark's row-metadata schema (parquet's own as fallback),
-    * made nullable: exactly what `spark.read.parquet` infers, read
-    * in-process instead of by a schema-inference job.
+    * made nullable: exactly what Spark's parquet schema inference
+    * yields, read in-process instead of by a schema-inference job.
     */
   private def genSchema(gen: String, files: Seq[FileStatus]): StructType =
     genSchemas.computeIfAbsent(gen, g => {
@@ -702,13 +716,13 @@ final class TableManifest(spark: SparkSession, val root: String) {
     if (sel.isEmpty) None
     else {
       val dirs = sel.toSeq.sortBy(_._1).map { case (b, gen) =>
-        (gen, b, dataFiles(s"$gen/$BucketCol=$b"))
+        (gen, b, dataFiles(bucketDir(gen, b)))
       }
       val byGen = dirs.groupBy(_._1)
       val schemas = dirs.map(_._1).distinct.map(g => g -> genSchema(g, byGen(g).flatMap(_._3)))
       val (g0, s0) = schemas.head
       schemas.tail.foreach { case (g, s) => requireSameSchema(g0, s0, g, s) }
-      Some(scan(dirs.map { case (gen, b, files) => (s"$gen/$BucketCol=$b", InternalRow(b), files) },
+      Some(scan(dirs.map { case (gen, b, files) => (bucketDir(gen, b), InternalRow(b), files) },
         s0, bucketSchema))
     }
   }
@@ -753,10 +767,10 @@ final class TableManifest(spark: SparkSession, val root: String) {
     * are guaranteed present and consistent with its rows.
     */
   private def bloomPath(gen: String, bucket: Int, c: String): Path =
-    new Path(root, s"$gen/$BucketCol=$bucket/_bloom_$c")
+    new Path(root, s"${bucketDir(gen, bucket)}/_bloom_$c")
 
   /** Sidecar format: 4-byte big-endian hash count, then the bitset. */
-  def writeBloom(gen: String, bucket: Int, c: String,
+  private def writeBloom(gen: String, bucket: Int, c: String,
                  numHashes: Int, bits: Array[Byte]): Unit = {
     val out = fs.create(bloomPath(gen, bucket, c), true)
     try { out.writeInt(numHashes); out.write(bits) } finally out.close()
@@ -823,25 +837,176 @@ final class TableManifest(spark: SparkSession, val root: String) {
     */
   def bucketFiles(): Map[Int, Seq[(String, Long, Long)]] =
     mapping().map { case (b, gen) =>
-      val d = new Path(root, s"$gen/$BucketCol=$b")
-      val files =
-        if (fs.exists(d))
-          fs.listStatus(d).toSeq
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
-        else Seq.empty
-      b -> files
+      b -> dataFiles(bucketDir(gen, b)).map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
     }
 
-  /** Buckets that a just-written generation actually produced files
-    * for (resolved from the filesystem, not assumed from the plan).
+  // ------------------------------------------------- generation writer
+
+  /** Where commit-time zone maps came from, per generation written:
+    * parquet footers (driver-side metadata) or the fallback scan.
     */
-  def writtenBuckets(gen: String): Seq[Int] = {
-    val p = new Path(root, gen)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$BucketCol="))
-      .map(_.getPath.getName.stripPrefix(s"$BucketCol=").toInt)
+  private[sink] val statsFromFooter = new AtomicLong(0)
+  private[sink] val statsFromScan = new AtomicLong(0)
+
+  /** Write `df` — which already carries `__bucket` and the caller's
+    * sort or partitioning — into the fresh generation dir `gen`, and
+    * build what its commit needs: the buckets it produced files for
+    * (listed once, through the listing cache the next read uses), a
+    * bloom sidecar per (bucket, `bloomCols` column) and the zone maps of
+    * `statsCols`. Sidecars and stats are built from the generation's
+    * manifest scan (footer schema, no inference job). Committing or
+    * staging [[Written.mapping]] is the caller's; until then the
+    * generation is an unreferenced orphan. A write that produced no
+    * bucket builds nothing and leaves no dir. `op` names the JobLabel
+    * phases `<op>:write`, `<op>:sidecars` and `<op>:stats-scan`.
+    */
+  private[sink] def writeGeneration(op: String, df: DataFrame,
+                                    statsCols: Seq[String] = Nil,
+                                    bloomCols: Seq[String] = Nil,
+                                    bloomBits: Int = BucketBloom.DefaultBits,
+                                    gen: String = newGenDir()): Written = {
+    JobLabel(spark, s"$op:write $root") {
+      df.write.partitionBy(BucketCol).parquet(s"$root/$gen")
+    }
+    val buckets = bucketDirs(new Path(root, gen))
+    if (buckets.isEmpty) {
+      fs.delete(new Path(root, gen), true)
+      Written(gen, Nil, Map.empty)
+    } else {
+      lazy val written = resolve(buckets.map(_ -> gen).toMap, None).get
+      JobLabel(spark, s"$op:sidecars $root") {
+        bloomCols.foreach(c => writeBlooms(gen, written, c, bloomBits))
+      }
+      val stats =
+        if (statsCols.isEmpty) Map.empty[Int, Stats]
+        else footerStats(gen, buckets, statsCols) match {
+          case Some(m) => statsFromFooter.incrementAndGet(); m
+          case None =>
+            statsFromScan.incrementAndGet()
+            JobLabel(spark, s"$op:stats-scan $root")(scanStats(written, statsCols))
+        }
+      Written(gen, buckets, stats)
+    }
+  }
+
+  /** Bloom sidecars of column `c` for every bucket of a just-written
+    * generation (see [[BucketBloom]]): ONE job, no shuffle — each task
+    * sets bits in a per-bucket bitset of the rows it scans, and the
+    * driver ORs the partials (OR is commutative and idempotent, so the
+    * bytes equal a grouped aggregate's). Sidecars land inside the
+    * generation dir before any commit names it, so they share the data
+    * files' atomic-publish story.
+    */
+  private def writeBlooms(gen: String, written: DataFrame, c: String, bloomBits: Int): Unit = {
+    require(bloomBits % 8 == 0 && bloomBits > 0, s"bloomBits must be a positive multiple of 8: $bloomBits")
+    val k = BucketBloom.DefaultHashes
+    written.filter(col(c).isNotNull)
+      .select(col(BucketCol), xxhash64(col(c)))
+      .as(Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
+      .mapPartitions { rows =>
+        val acc = scala.collection.mutable.HashMap.empty[Int, Array[Byte]]
+        rows.foreach { case (b, h) =>
+          BucketBloom.add(acc.getOrElseUpdate(b, new Array[Byte](bloomBits >> 3)), k, h)
+        }
+        acc.iterator
+      }(Encoders.tuple(Encoders.scalaInt, Encoders.BINARY))
+      .collect()
+      .groupMapReduce(_._1)(_._2)(BucketBloom.or)
+      .foreach { case (b, bits) => writeBloom(gen, b, c, k, bits) }
+  }
+
+  /** Zone-map stats from the just-written generation's PARQUET FOOTERS:
+    * the writer sorted and wrote these files moments ago, and their
+    * row-group statistics already hold exact per-column min/max for
+    * numeric types — so the commit-time stats pass is O(files)
+    * driver-side metadata instead of a columnar re-scan of the
+    * generation. Returns None — falling back to [[scanStats]] — if ANY
+    * (file, column) is undecidable: missing statistics, a non-numeric
+    * physical type, or an unreadable footer. All-NULL columns record no
+    * stats, exactly like the scan path (missing stats never prune).
+    * Equivalence is spec-pinned (PipelineSpec "footer stats").
+    */
+  private def footerStats(gen: String, buckets: Seq[Int],
+                          statsCols: Seq[String]): Option[Map[Int, Stats]] = try {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val out = buckets.map { b =>
+      // (min, max) per stats column, folded over row groups
+      val acc = scala.collection.mutable.Map.empty[String, (Double, Double)]
+      dataFiles(bucketDir(gen, b)).foreach { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try {
+          val md = reader.getFooter.getBlocks
+          statsCols.foreach { c =>
+            md.forEach { blk =>
+              val colChunk = blk.getColumns.asScala
+                .find(_.getPath.toDotString == c)
+                .getOrElse(return None) // column missing: undecidable
+              // Only PLAIN numeric physical types are decidable from
+              // footers: a logical annotation over a numeric physical
+              // (int32/int64-backed DECIMAL's unscaled value,
+              // TIMESTAMP/TIME/DATE epochs) yields raw physical units
+              // that diverge from the scan path's cast-to-double
+              // semantics — wrong zone maps would silently prune
+              // buckets holding matching rows. Such columns fall back
+              // to the scan, which casts correctly.
+              val pt = colChunk.getPrimitiveType
+              import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+              val physOk = pt.getPrimitiveTypeName match {
+                case INT32 | INT64 | FLOAT | DOUBLE => true
+                case _                              => false
+              }
+              val annOk = pt.getLogicalTypeAnnotation match {
+                case null => true
+                case i: org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
+                  i.isSigned // unsigned stats reinterpret as signed: undecidable
+                case _ => false // DECIMAL / TIMESTAMP / TIME / DATE / ...
+              }
+              if (!physOk || !annOk) return None
+              val st = colChunk.getStatistics
+              if (st == null || !st.isNumNullsSet) return None
+              if (st.hasNonNullValue) {
+                val (mn, mx) = (st.genericGetMin, st.genericGetMax) match {
+                  case (a: Number, bx: Number) => (a.doubleValue(), bx.doubleValue())
+                  case _ => return None // non-numeric: undecidable
+                }
+                acc.get(c) match {
+                  case Some((m0, m1)) => acc(c) = (math.min(m0, mn), math.max(m1, mx))
+                  case None           => acc(c) = (mn, mx)
+                }
+              } else if (st.getNumNulls != blk.getRowCount) {
+                return None // no value recorded but not all-null: undecidable
+              }
+            }
+          }
+        } finally reader.close()
+      }
+      b -> acc.toMap.map { case (c, (mn, mx)) => c -> ColStats(mn, mx) }
+    }.toMap
+    Some(out)
+  } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Per-bucket min/max of `statsCols` by a columnar scan of only those
+    * columns — the fallback for footers [[footerStats]] cannot decide;
+    * correctness never depends on footers. All-NULL columns record no
+    * stats for that bucket (missing stats never prune).
+    */
+  private def scanStats(written: DataFrame, statsCols: Seq[String]): Map[Int, Stats] = {
+    val aggs = statsCols.flatMap(c => Seq(
+      min(col(c)).cast("double").as(s"__mn_$c"),
+      max(col(c)).cast("double").as(s"__mx_$c")))
+    written.groupBy(col(BucketCol))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect()
+      .map { r =>
+        val b = r.getAs[Number](BucketCol).intValue()
+        val st: Stats = statsCols.flatMap { c =>
+          val mn = r.getAs[Any](s"__mn_$c"); val mx = r.getAs[Any](s"__mx_$c")
+          if (mn == null || mx == null) None
+          else Some(c -> ColStats(mn.asInstanceOf[Double], mx.asInstanceOf[Double]))
+        }.toMap
+        b -> st
+      }.toMap
   }
 }
 
@@ -858,6 +1023,21 @@ object TableManifest {
 
   /** Column name -> zone map, for one bucket. */
   type Stats = Map[String, ColStats]
+
+  /** A generation written by [[TableManifest.writeGeneration]]: its
+    * root-relative dir, the buckets it produced files for, and their
+    * zone maps.
+    */
+  private[sink] final case class Written(gen: String, buckets: Seq[Int], stats: Map[Int, Stats]) {
+    def mapping: Map[Int, String] = buckets.map(_ -> gen).toMap
+  }
+
+  /** Distinct buckets `df`'s rows route to under `bucket` — at most
+    * one small int per bucket reaches the driver: the touched-bucket
+    * pruning decision every keyed write and read makes.
+    */
+  private[sink] def touchedBuckets(df: DataFrame, bucket: Column): Seq[Int] =
+    df.select(bucket.as(MergeSink.BucketCol)).distinct().collect().map(_.getInt(0)).toSeq
 
   /** One bucket-layout generation of a [[MergeSink]] table: `n`
     * hash (rangeWidth = None) or range buckets, living in the physical

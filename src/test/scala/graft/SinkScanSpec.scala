@@ -1,20 +1,25 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ListenerBridge
-import graft.sink.{AggSink, MergeSink, TableManifest}
+import graft.sink.{AggSink, BucketBloom, MergeSink, TableManifest}
 
 /** The manifest-resolved snapshot scan ([[TableManifest]] read path):
   * planning a sink read launches no Spark job, answers exactly what the
   * per-generation `spark.read.parquet` resolution answered, keeps the
   * plan properties that resolution had (value-equal file indexes,
   * file-length statistics), and fails loudly on generation schema
-  * drift instead of reading missing columns as nulls.
+  * drift instead of reading missing columns as nulls. And its write
+  * twin, the one generation writer: every write op's zone maps and
+  * bloom sidecars equal those built from a plain `spark.read.parquet`
+  * of the generation it wrote.
   */
 class SinkScanSpec extends SparkSpec {
   import spark.implicits._
@@ -77,23 +82,26 @@ class SinkScanSpec extends SparkSpec {
     df.select(cols.map(col).toSeq: _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
   }
 
-  /** Jobs started by THIS thread while `body` runs (a thread-local job
+  /** Descriptions (JobLabel phases; "" when unlabelled) of the jobs
+    * started by THIS thread while `body` runs (a thread-local job
     * property tags them, so other threads' jobs cannot leak in).
     */
-  private def jobsDuring[T](body: => T): (T, Int) = {
+  private def jobsDuring[T](body: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
     val tag = s"scan-spec-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(ev: SparkListenerJobStart): Unit =
-        if (Option(ev.properties).exists(_.getProperty("graft.scanSpec") == tag)) n.incrementAndGet()
+        Option(ev.properties).filter(_.getProperty("graft.scanSpec") == tag).foreach { p =>
+          jobs.add(Option(p.getProperty("spark.job.description")).getOrElse(""))
+        }
     }
     sc.addSparkListener(listener)
     sc.setLocalProperty("graft.scanSpec", tag)
     try {
       val out = body
       ListenerBridge.waitUntilEmpty(sc)
-      (out, n.get())
+      (out, jobs.asScala.toSeq)
     } finally {
       sc.setLocalProperty("graft.scanSpec", null)
       sc.removeSparkListener(listener)
@@ -112,7 +120,7 @@ class SinkScanSpec extends SparkSpec {
       val (frames, jobs) = jobsDuring(Seq(
         s.read(), s.readAt(past), s.readRange("v", 10.0, 20.0),
         s.readPoints("s", Seq(3L, 300L, 606L)), a.read()))
-      assert(jobs == 0, s"planning ${frames.size} sink reads launched $jobs Spark job(s)")
+      assert(jobs.isEmpty, s"planning ${frames.size} sink reads launched ${jobs.size} Spark job(s)")
     }
     // and the frames still answer (the construction above ran no action)
     assert(cold.readPoints("s", Seq(3L, 300L, 606L)).count() == 3)
@@ -208,5 +216,108 @@ class SinkScanSpec extends SparkSpec {
     sink.merge(Seq((11L, 0L, "y")).toDF("k", "upd", "b"))
     val e = intercept[IllegalStateException](sink.read())
     assert(e.getMessage.contains("schema drift"), e.getMessage)
+  }
+
+  /** Zone maps and bloom sidecars (sidecar file bytes) of generation
+    * `gen`'s buckets built from a plain `spark.read.parquet` of it —
+    * the reference the writer must reproduce.
+    */
+  private def reference(root: String, gen: String, statsCols: Seq[String], bloomCols: Seq[String])
+      : (Map[Int, TableManifest.Stats], Map[(Int, String), Seq[Byte]]) = {
+    val bc = MergeSink.BucketCol
+    val df = spark.read.parquet(s"$root/$gen")
+    val aggs = statsCols.flatMap(c => Seq(min(col(c)).cast("double"), max(col(c)).cast("double")))
+    val stats = df.groupBy(col(bc)).agg(aggs.head, aggs.tail: _*).collect().map { r =>
+      r.getInt(0) -> statsCols.zipWithIndex.collect {
+        case (c, i) if !r.isNullAt(1 + 2 * i) =>
+          c -> TableManifest.ColStats(r.getDouble(1 + 2 * i), r.getDouble(2 + 2 * i))
+      }.toMap
+    }.toMap
+    val blooms = bloomCols.flatMap { c =>
+      df.filter(col(c).isNotNull).select(col(bc), xxhash64(col(c))).collect()
+        .groupMap(_.getInt(0))(_.getLong(1)).map { case (b, hs) =>
+          val bits = new Array[Byte](BucketBloom.DefaultBits / 8)
+          hs.foreach(h => BucketBloom.add(bits, BucketBloom.DefaultHashes, h))
+          val out = new java.io.ByteArrayOutputStream()
+          val data = new java.io.DataOutputStream(out)
+          data.writeInt(BucketBloom.DefaultHashes); data.write(bits); data.close()
+          (b, c) -> out.toByteArray.toSeq
+        }
+    }.toMap
+    (stats, blooms)
+  }
+
+  test("purging or compacting every row of a bloom-indexed table commits an empty snapshot") {
+    val rows = Seq((1L, 0L, 1.0, true), (2L, 0L, 2.0, true)).toDF("k", "upd", "v", "gone")
+    def table() = {
+      val sink = new MergeSink(spark, freshDir() + "/t", Seq("k"), Seq("upd"),
+        nBuckets = 4, bloomCols = Seq("v"))
+      sink.merge(rows)
+      sink
+    }
+    val purged = table()
+    purged.purgeKeys(Seq(1L, 2L).toDF("k"))
+    assert(purged.manifest.mapping().isEmpty, "the purge must commit a snapshot without the keys")
+    assert(purged.versions() == Seq(purged.manifest.currentVersion()), "history must be destroyed")
+
+    val compacted = table()
+    val v0 = compacted.manifest.currentVersion()
+    compacted.compact(dropDeleted = Some("gone"))
+    assert(compacted.manifest.currentVersion() == v0 + 1 && compacted.manifest.mapping().isEmpty)
+  }
+
+  test("one generation writer: every write op's zone maps and bloom sidecars equal a plain parquet read's") {
+    val statsCols = Seq("k", "v")
+    val bloomCols = Seq("s", "v")
+    val sink = new MergeSink(spark, freshDir() + "/t", keys = Seq("k"), orderCols = Seq("upd"),
+      nBuckets = 8, statsCols = statsCols, bloomCols = bloomCols)
+    sink.merge(batch(0, 240, 0))
+    /** Runs one op and checks the generation it committed; returns the
+      * op's job descriptions.
+      */
+    def check(op: String, carriesStats: Boolean = false)(body: => Unit): Seq[String] = {
+      val (m0, st0) = (sink.manifest.mapping(), sink.manifest.stats())
+      val (_, jobs) = jobsDuring(body)
+      val m = sink.manifest.mapping()
+      val gens = m.values.toSet -- m0.values
+      assert(gens.size == 1, s"$op: expected one new generation, got $gens")
+      val gen = gens.head
+      val buckets = m.collect { case (b, g) if g == gen => b }.toSeq
+      val (refStats, refBlooms) = reference(sink.path, gen, statsCols, bloomCols)
+      assert(refStats.keySet == buckets.toSet, s"$op: mapped buckets are not the written ones")
+      val committed = sink.manifest.stats().filter { case (b, _) => buckets.contains(b) }
+      assert(committed == refStats, s"$op: zone maps differ from the parquet read's")
+      if (carriesStats) assert(committed == st0.filter { case (b, _) => buckets.contains(b) })
+      for (b <- buckets; c <- bloomCols) {
+        val p = Paths.get(s"${sink.path}/$gen/${MergeSink.BucketCol}=$b/_bloom_$c")
+        assert(refBlooms.get((b, c)) == Some(p).filter(Files.exists(_)).map(Files.readAllBytes(_).toSeq),
+          s"$op: bloom sidecar of bucket $b column $c differs from the parquet read's")
+      }
+      assert(jobs.count(_.startsWith(s"$op:sidecars ")) == bloomCols.size,
+        s"$op: sidecars must be one job per bloom column, got ${jobs.mkString("; ")}")
+      assert(!jobs.exists(_.startsWith(s"$op:stats-scan")), s"$op: footer stats must not scan")
+      jobs
+    }
+    val mergeJobs = check("merge")(sink.merge(batch(0, 3, 1)))
+    assert(mergeJobs.forall(_.startsWith("merge:")), s"unlabelled merge job: ${mergeJobs.mkString("; ")}")
+    check("stage")(sink.publishStaged(sink.stageMerge(batch(10, 14, 2))))
+    check("stage")(assert(sink.mergeOptimistic(batch(20, 25, 3)) == 1))
+    check("purge")(sink.purgeKeys(Seq(30L, 31L, 41L).toDF("k")))
+    check("compact", carriesStats = true)(sink.compact(maxFilesPerBucket = 0))
+    check("rebucket")(sink.rebucket(16))
+    sink.beginMigration(4)
+    check("migrate")(sink.migrateStep(5))
+    assert(sink.statsFromScan.get() == 0 && sink.statsFromFooter.get() > 0)
+
+    // the view's fold writes through the same writer, without sidecars
+    val view = new AggSink(spark, freshDir() + "/view", Seq("k"), Seq("v"), nBuckets = 4)
+    val feed = batch(0, 50, 0).select(($"k" % 7).as("k"), $"v".cast("long").as("v"))
+    val (_, foldJobs) = jobsDuring(view.merge(feed, batchId = 0L))
+    assert(foldJobs.exists(_.startsWith("fold:write ")) && !foldJobs.exists(_.contains(":sidecars")))
+    assert(rows(view.read()) == rows(feed.groupBy("k").agg(sum("v").as("v"), count(lit(1)).as("n_rows"))))
+    val gen = view.manifest.mapping().values.toSet
+    assert(gen.size == 1 && view.manifest.mapping().keySet ==
+      spark.read.parquet(s"${view.path}/${gen.head}").select(MergeSink.BucketCol).distinct()
+        .collect().map(_.getInt(0)).toSet)
   }
 }
