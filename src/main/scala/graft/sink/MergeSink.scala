@@ -725,9 +725,15 @@ final class MergeSink(
     // `.distinct()` the vector keys), so the exchange a distinct plans
     // here bought nothing — duplicate probe rows merely repeat in the
     // sidecar bytes
+    // only buckets that exist can hold rows to delete — a key routed
+    // to an absent bucket has no row, and recording a vector for it
+    // would wrongly delete a FUTURE insert of that key — so keys of
+    // absent buckets are dropped before the write, not written and
+    // then deleted
+    val held = manifest.mapping().keySet.toSeq
     val keyList = keyRows.select(keys.map(col): _*)
       .withColumn(BucketCol, bucketOf)
-    val held = manifest.mapping().keySet
+      .filter(col(BucketCol).isin(held: _*))
     val gen = manifest.newGenDir()
     // ONE distributed write; the touched-bucket set is discovered from
     // the write's own output dirs (round 16, guide §2.4: the previous
@@ -736,15 +742,10 @@ final class MergeSink(
     // renames then move the dirs out of the partition layout (DV dirs
     // must NOT look like `__bucket=` data dirs, and must NOT be
     // `_`-prefixed — Spark file discovery hides such segments).
-    graft.core.JobLabel(spark, s"dv:write $path") {
-      keyList.write.partitionBy(BucketCol).parquet(s"$path/$gen/dvtmp")
-    }
+    manifest.writeBuckets("dv", keyList, s"$gen/dvtmp")
     val fs = manifest.fs
     val dvtmp = new Path(s"$path/$gen/dvtmp")
-    // only buckets that exist can hold rows to delete — a key routed
-    // to an absent bucket has no row, and recording a vector for it
-    // would wrongly delete a FUTURE insert of that key
-    val touched = manifest.bucketDirs(dvtmp).filter(held.contains)
+    val touched = manifest.bucketDirs(dvtmp)
     if (touched.nonEmpty) {
       touched.foreach { b =>
         fs.rename(new Path(path, manifest.bucketDir(s"$gen/dvtmp", b)),

@@ -420,11 +420,23 @@ class PipelineSpec extends SparkSpec {
       .as[(String, Long)].collect().toSet
     assert(state() == expected, "migration lost rows")
     // and the migrated table merges normally (bump the DOMINANT version
-    // column — event_time leads VersionCols, a bare seq bump loses LWW)
-    sink.merge(rows.limit(50)
+    // column — event_time leads VersionCols, a bare seq bump loses LWW);
+    // the merge touches half the buckets, so the snapshot mixes the
+    // fixture's default-format (SNAPPY) files with the sink's ZSTD ones
+    val bumped = rows.filter(pmod(hash($"original_id"), lit(8)) < 4).limit(50)
       .withColumn("event_time", $"event_time" + expr("INTERVAL 1000 DAYS"))
-      .withColumn("ingestion_seq", $"ingestion_seq" + 10000L))
-    assert(state() != expected && state().size == expected.size)
+      .withColumn("ingestion_seq", $"ingestion_seq" + 10000L)
+    sink.merge(bumped)
+    val merged = Cdc.latestByKey(rows.unionByName(bumped), Warehouse.DedupKeys, Warehouse.VersionCols)
+      .select($"original_id", $"ingestion_seq").as[(String, Long)].collect().toSet
+    assert(merged != expected && merged.size == expected.size)
+    def codecs() = sink.read().inputFiles.toSeq.flatMap(parquetChunks).map(_._1).toSet
+    assert(codecs() == Set("SNAPPY", "ZSTD"), "one snapshot must read both file formats")
+    assert(state() == merged)
+    // the rewrite re-encodes the legacy generation, content unchanged
+    sink.compact(maxFilesPerBucket = 0)
+    assert(codecs() == Set("ZSTD"))
+    assert(state() == merged)
   }
 
   test("MergeSink compaction rewrites only oversized buckets, content intact") {

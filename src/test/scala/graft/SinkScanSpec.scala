@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.functions._
@@ -247,6 +247,37 @@ class SinkScanSpec extends SparkSpec {
     (stats, blooms)
   }
 
+  /** Parquet data files under `dir`, recursively (`_`- and `.`-led
+    * names — sidecars, checksums, markers — skipped).
+    */
+  private def dataFiles(dir: String): Seq[java.nio.file.Path] =
+    Files.walk(Paths.get(dir)).iterator().asScala.toSeq.filter { p =>
+      val n = p.getFileName.toString
+      Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith(".") && n.endsWith(".parquet")
+    }
+
+  /** The files under `dirs` are the sink's file format: every column
+    * chunk ZSTD, some DELTA_* encoding (v2 pages), and fewer bytes in
+    * total than Spark's default write (SNAPPY, v1 pages) of the same
+    * rows, dir by dir.
+    */
+  private def assertSinkFormat(what: String, dirs: Seq[String], partitioned: Boolean): Unit = {
+    val files = dirs.flatMap(dataFiles)
+    assert(files.nonEmpty, s"$what: no data files")
+    val chunks = files.flatMap(f => parquetChunks(f.toString))
+    assert(chunks.forall(_._1 == "ZSTD"), s"$what: codecs ${chunks.map(_._1).distinct}")
+    assert(chunks.exists(_._2.exists(_.startsWith("DELTA_"))),
+      s"$what: no DELTA_* encoding in ${chunks.flatMap(_._2).distinct}")
+    val defaultFiles = dirs.flatMap { dir =>
+      val ref = freshDir() + "/default"
+      val w = spark.read.parquet(dir).write
+      (if (partitioned) w.partitionBy(MergeSink.BucketCol) else w).parquet(ref)
+      dataFiles(ref)
+    }
+    val (bytes, defaultBytes) = (files.map(Files.size).sum, defaultFiles.map(Files.size).sum)
+    assert(bytes < defaultBytes, s"$what: $bytes bytes, Spark's default write $defaultBytes")
+  }
+
   test("purging or compacting every row of a bloom-indexed table commits an empty snapshot") {
     val rows = Seq((1L, 0L, 1.0, true), (2L, 0L, 2.0, true)).toDF("k", "upd", "v", "gone")
     def table() = {
@@ -296,6 +327,7 @@ class SinkScanSpec extends SparkSpec {
       assert(jobs.count(_.startsWith(s"$op:sidecars ")) == bloomCols.size,
         s"$op: sidecars must be one job per bloom column, got ${jobs.mkString("; ")}")
       assert(!jobs.exists(_.startsWith(s"$op:stats-scan")), s"$op: footer stats must not scan")
+      assertSinkFormat(op, Seq(s"${sink.path}/$gen"), partitioned = true)
       jobs
     }
     val mergeJobs = check("merge")(sink.merge(batch(0, 3, 1)))
@@ -308,10 +340,20 @@ class SinkScanSpec extends SparkSpec {
     sink.beginMigration(4)
     check("migrate")(sink.migrateStep(5))
     assert(sink.statsFromScan.get() == 0 && sink.statsFromFooter.get() > 0)
+    // deletion vectors share the format. One write task, so each vector
+    // file holds its bucket's share of the keys: a file of one or two
+    // keys is all footer, and there zstd's frame header makes it about
+    // 1% larger than Spark's default
+    sink.deleteVector((0L until 240L by 2).toDF("k").coalesce(1))
+    assertSinkFormat("dv", sink.deleteVectors().values.flatten.toSeq.map(d => s"${sink.path}/$d"),
+      partitioned = false)
 
     // the view's fold writes through the same writer, without sidecars
+    // (500 groups: a bucket file of a couple of rows is all footer, and
+    // there zstd's frame header makes it a few percent larger than
+    // Spark's default — the size check needs rows)
     val view = new AggSink(spark, freshDir() + "/view", Seq("k"), Seq("v"), nBuckets = 4)
-    val feed = batch(0, 50, 0).select(($"k" % 7).as("k"), $"v".cast("long").as("v"))
+    val feed = batch(0, 2000, 0).select(($"k" % 500).as("k"), $"v".cast("long").as("v"))
     val (_, foldJobs) = jobsDuring(view.merge(feed, batchId = 0L))
     assert(foldJobs.exists(_.startsWith("fold:write ")) && !foldJobs.exists(_.contains(":sidecars")))
     assert(rows(view.read()) == rows(feed.groupBy("k").agg(sum("v").as("v"), count(lit(1)).as("n_rows"))))
@@ -319,5 +361,39 @@ class SinkScanSpec extends SparkSpec {
     assert(gen.size == 1 && view.manifest.mapping().keySet ==
       spark.read.parquet(s"${view.path}/${gen.head}").select(MergeSink.BucketCol).distinct()
         .collect().map(_.getInt(0)).toSet)
+    assertSinkFormat("fold", Seq(s"${view.path}/${gen.head}"), partitioned = true)
+  }
+
+  test("deleteVector writes only the keys of buckets the table holds") {
+    val sink = new MergeSink(spark, freshDir() + "/t", keys = Seq("k"), orderCols = Seq("upd"),
+      nBuckets = 16)
+    sink.merge(batch(0, 3, 0))
+    assert(sink.manifest.mapping().size <= 3, "fixture: most buckets must be absent")
+    val probe = (0L until 64L).toDF("k")
+    val sc = spark.sparkContext
+    val dvStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit =
+        if (Option(ev.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+              .exists(_.startsWith("dv:write ")))
+          ev.stageIds.foreach(dvStages.add)
+      override def onTaskEnd(ev: SparkListenerTaskEnd): Unit =
+        if (dvStages.contains(ev.stageId) && ev.taskMetrics != null)
+          written.addAndGet(ev.taskMetrics.outputMetrics.recordsWritten)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sink.deleteVector(probe)
+      ListenerBridge.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    val dv = sink.deleteVectors()
+    assert(dv.keySet.subsetOf(sink.manifest.mapping().keySet))
+    // every probe row routed to a held bucket lands in that bucket's vector
+    val routedToHeld = spark.read.parquet(dv.values.flatten.map(d => s"${sink.path}/$d").toSeq: _*).count()
+    assert(routedToHeld > 0 && routedToHeld < probe.count())
+    assert(written.get() == routedToHeld,
+      s"dv:write wrote ${written.get()} rows, $routedToHeld route to held buckets")
+    assert(sink.read().isEmpty, "every key of the table was probed")
   }
 }

@@ -26,4 +26,18 @@ object GraftTestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftTestSession.spark
   def sfDir: String = GraftTestSession.sfDir
+
+  /** (codec, encodings) of every column chunk of parquet file `file`,
+    * read from its footer.
+    */
+  def parquetChunks(file: String): Seq[(String, Set[String])] = {
+    import scala.jdk.CollectionConverters._
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file), spark.sessionState.newHadoopConf())
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map { c =>
+      (c.getCodec.name, c.getEncodings.asScala.map(_.name).toSet)
+    })
+    finally reader.close()
+  }
 }
