@@ -1,14 +1,11 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 import graft.ops.Cdc
 import graft.sink.MergeSink
+import StreamGate._
 
 /** The streaming pipeline surfaced at the driver gate: unlike
   * q16–q20 (which verify the same TRANSFORMS in batch), q66 executes a
@@ -18,18 +15,18 @@ import graft.sink.MergeSink
   *
   * Wire + engine path: CDC envelopes as JSON-lines file drops (the
   * reference's json_util.dumps wire format, producer/producer.py:68)
-  * -> `readStream` with the explicit envelope schema -> null-safe
+  * -> `readStream` with the envelope's own schema -> null-safe
   * flatten + ratio enrich (the q16 transforms) -> `foreachBatch` into
   * a `MergeSink` (durable hash-bucketed LWW upsert, rewriting only
   * touched partitions) -> final state read back from parquet.
   *
-  * Micro-batching is forced (maxFilesPerTrigger=1 over several input
-  * files) so the merge genuinely runs incrementally; the LWW merge is
-  * commutative + associative + idempotent, so the oracle — latest
-  * record per key over the WHOLE history, q17's semantics — is
-  * batch-boundary-invariant. Timestamps ride as exact epoch micros
-  * (`ts_us`): a JSON round-trip of a formatted timestamp would
-  * truncate to millis and (in principle) flip LWW winners.
+  * Micro-batching is forced (one file per micro-batch over several
+  * input files) so the merge genuinely runs incrementally; the LWW
+  * merge is commutative + associative + idempotent, so the oracle —
+  * latest record per key over the WHOLE history, q17's semantics — is
+  * batch-boundary-invariant. Every gate's scaffolding (slice feeds,
+  * AvailableNow drains, the stateful conf latch, the equality witness
+  * and the CDC LWW fixture) is the [[StreamGate]] harness.
   */
 object StreamingQueries {
 
@@ -69,194 +66,35 @@ object StreamingQueries {
     */
   val StatePartitionsDefault = 8
 
-  /** Write `df` as ONE data file per non-empty slice into `inDir`
-    * (slice = `sliceOf`, a deterministic long expression over the
-    * row), in a SINGLE Spark job — the micro-batch feed builder every
-    * slice-fed gate uses. The old form ran one full filter scan +
-    * coalesce(1) write job PER slice (n passes over the source, n job
-    * launches); this stages one `partitionBy(slice)` write (each slice
-    * value is owned by exactly one task after the explicit hash
-    * repartition, so each slice dir holds exactly one part file) and
-    * then MOVES the files into `inDir` — renames, not data. File
-    * mtimes are stamped strictly increasing in slice order, making
-    * batch arrival order explicit instead of a write-timing accident
-    * (the q250 stampBatchMtime discipline); under maxFilesPerTrigger=1
-    * each non-empty slice is exactly one micro-batch, empty slices
-    * produce no file (the old form wrote a 0-row file whose batch was
-    * a no-op end to end). Returns the number of files written (=
-    * non-empty slices), which IS the expected micro-batch count.
-    */
-  private def writeSliceFeed(df: DataFrame, sliceOf: Column, nSlices: Int,
-                             inDir: String, format: String = "parquet"): Int = {
-    import org.apache.hadoop.fs.Path
-    val staging = inDir.stripSuffix("/") + "__stage"
-    df.withColumn("__sl", sliceOf.cast("long"))
-      .repartition(nSlices, col("__sl"))
-      .write.partitionBy("__sl").format(format).save(staging)
-    // Hadoop FS API throughout (round-15 ADVICE): the write above goes
-    // through Spark's Hadoop layer, so the listing/moves must resolve
-    // the SAME filesystem — the old java.io.File form silently found
-    // zero slice dirs on any non-local FS
-    val fs = new Path(staging).getFileSystem(
-      df.sparkSession.sessionState.newHadoopConf())
-    val stagingPath = new Path(staging)
-    val sliceDirs =
-      (if (fs.exists(stagingPath)) fs.listStatus(stagingPath).toSeq else Seq.empty)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("__sl="))
-        .sortBy(_.getPath.getName.stripPrefix("__sl=").toLong)
-    fs.mkdirs(new Path(inDir))
-    var n = 0
-    sliceDirs.foreach { dir =>
-      val sl = dir.getPath.getName.stripPrefix("__sl=").toLong
-      val parts = fs.listStatus(dir.getPath).toSeq.filter(f =>
-        f.getPath.getName.startsWith("part-") && !f.getPath.getName.endsWith(".crc"))
-      require(parts.length == 1,
-        s"slice $sl wrote ${parts.length} files — one task must own each slice")
-      val ext = parts.head.getPath.getName.dropWhile(_ != '.')
-      val dst = new Path(inDir, f"slice-$sl%05d$ext")
-      require(fs.rename(parts.head.getPath, dst), s"cannot move slice file to $dst")
-      fs.setTimes(dst, 1700000000000L + sl * 60000L, -1)
-      n += 1
-    }
-    fs.delete(stagingPath, true)
-    n
-  }
-
-  /** ONE-ACTION bag-equality witness (round 16, guide §2.4): the
-    * bidirectional `a.exceptAll(b) ∪ b.exceptAll(a) isEmpty` pattern
-    * plans two aggregate+anti-join subtrees with each side's plan
-    * embedded twice (or force-persisted); tagging the union and
-    * requiring every row's side-sum to cancel is the SAME multiset
-    * equality predicate in one shuffle of a+b and one action, each
-    * side computed once. For the key-unique frames these gates
-    * compare (LWW sink state, one row per key) bag equality and the
-    * old set-`except` witnesses coincide.
-    */
-  private def bagEqual(a: DataFrame, b: DataFrame): Boolean = {
-    val cs = a.columns.toSeq.map(col)
-    a.withColumn("__side", lit(1L))
-      .unionByName(b.select(cs: _*).withColumn("__side", lit(-1L)))
-      .groupBy(cs: _*)
-      .agg(sum(col("__side")).as("__d"))
-      .filter(col("__d") =!= 0L)
-      .isEmpty
-  }
-
-  /** Session conf for STATEFUL streams, latched by the query at
-    * `start()` and restored immediately after (both settings are baked
-    * into the running query once started):
-    *
-    *  - state partitions from [[StatePartitionsKey]] (default 8), not
-    *    the session's batch default — partition count is fixed at the
-    *    query's first batch, so 32 partitions x 4 stores x N batches
-    *    of commit overhead would dominate these gates;
-    *  - RocksDB state store provider — the default HDFS-backed store
-    *    keeps every key on-heap, the one piece of the streaming tier
-    *    that cannot hold at 100 TB key cardinality; RocksDB keeps
-    *    working state on local disk with bounded memory (public Spark
-    *    conf, changelog-checkpointed like the default).
-    */
-  private def startStateful(s: SparkSession)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val logKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = s.conf.getOption(provKey)
-    val prevLog = s.conf.getOption(logKey)
-    val stateParts = s.conf.getOption(StatePartitionsKey)
-      .getOrElse(StatePartitionsDefault.toString)
-    require(stateParts.matches("[1-9][0-9]*"),
-      s"$StatePartitionsKey must be a positive int, got '$stateParts'")
-    s.conf.set("spark.sql.shuffle.partitions", stateParts)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // commit deltas, not full snapshots, per micro-batch — snapshots
-    // still happen, just asynchronously every N batches
-    s.conf.set(logKey, "true")
-    def restore(key: String, prev: Option[String]): Unit = prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None    => s.conf.unset(key)
-    }
-    try start
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      restore(provKey, prevProv)
-      restore(logKey, prevLog)
-    }
-  }
-
-  private val dataSchema = StructType(Seq(
-    StructField("watched", DoubleType),
-    StructField("duration", IntegerType),
-    StructField("etype", StringType)))
-
-  private val wireSchema = StructType(Seq(
-    StructField("operation", StringType),
-    StructField("document_id", LongType),
-    StructField("user_id", LongType),
-    StructField("ts_us", LongType),
-    StructField("data", dataSchema)))
-
-  /** Envelope JSON-lines in 4 files -> 4 forced micro-batches. */
-  private def writeEnvelopeJson(s: SparkSession, d: String, inDir: String): Unit =
-    CdcQueries.envelope(s, d)
-      .withColumn("ts_us", unix_micros(col("ts"))).drop("ts")
-      .repartition(4)
-      .write.json(inDir)
-
   def q66StreamingCdc(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q66_")
-    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val stateDir = s"$base/state"
-
-    // 1. wire format: envelope JSON-lines in 4 files -> 4 micro-batches
-    writeEnvelopeJson(s, d, inDir)
-
-    // 2. the real streaming pipeline (same transforms as q16/q17)
-    val stream = s.readStream.schema(wireSchema)
-      .option("maxFilesPerTrigger", "1").json(inDir)
-    val flat = Cdc.enrichWatchedRatio(
-      Cdc.flattenEnvelope(stream), "watched", "duration", rounded = false)
-    val sink = new MergeSink(s, stateDir,
-      keys = Seq("user_id"), orderCols = Seq("ts_us", "document_id"), nBuckets = 16)
-    val q = flat.writeStream
-      .foreachBatch(sink.forEachBatch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    // 3. final durable state, q17-shaped
-    sink.read().select(
-      col("user_id"),
-      col("document_id").as("last_document_id"),
-      col("operation").as("last_operation"),
-      expr("ts_us div 1000").as("last_ms"),
-      col("watched_ratio").as("last_ratio"))
+    val sink = lwwSink(s, s"$base/state")
+    // the real streaming pipeline (same transforms as q16/q17)
+    drain(cdcFlat(cdcFeed(s, d, s"$base/in").stream()), s"$base/ckpt")(sink.forEachBatch)
+    lastState(sink.read()) // final durable state, q17-shaped
   }
 
   /** q17's semantics over the whole history — micro-batch boundaries
     * cannot show through an LWW merge.
     */
-  val q66Sql: String =
-    """SELECT user_id, document_id AS last_document_id,
-      |  operation AS last_operation, epoch_ms(ts) AS last_ms,
-      |  (CASE WHEN coalesce(duration, 1) > 0
-      |        THEN coalesce(watched, 0.0) / coalesce(duration, 1)
-      |        ELSE 0.0 END) AS last_ratio
-      |FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-      |        ORDER BY ts DESC, document_id DESC) AS rn
-      |      FROM (SELECT
-      |        CASE WHEN event_type = 'signup' THEN 'insert'
-      |             WHEN event_type = 'error' THEN 'delete'
-      |             ELSE 'update' END AS operation,
-      |        event_id AS document_id, user_id, ts,
-      |        CASE WHEN event_type = 'error' THEN NULL ELSE value END AS watched,
-      |        CASE WHEN event_type = 'error' THEN NULL
-      |             ELSE CAST(json_extract_string(props, '$.k') AS INT) END AS duration
-      |      FROM events))
-      |WHERE rn = 1""".stripMargin
+  val q66Sql: String = lwwSql()
+
+  /** Distributed producers: publish `wire` as JSON lines to the bus at
+    * `busDir`, one confirmed segment per task (segment id = task
+    * partition id, coordination-free); returns the message count.
+    */
+  private def publishWire(wire: DataFrame, busDir: String): Long = {
+    val n = wire.count()
+    wire.toJSON.repartition(8).foreachPartition { it: Iterator[String] =>
+      val rows = it.toArray
+      if (rows.nonEmpty) {
+        new graft.streaming.FileBus(busDir, 60000L, 3)
+          .publish(rows.toSeq, org.apache.spark.TaskContext.getPartitionId().toLong)
+        ()
+      }
+    }
+    n
+  }
 
   // ---------------------------------------------------------------- q282
   /** MESSAGE-BUS delivery semantics made REAL (S3/S4 — the reference's
@@ -282,28 +120,18 @@ object StreamingQueries {
   def q282MessageBus(s: SparkSession, d: String): DataFrame = {
     import graft.streaming.FileBus
     val base = graft.core.TempDirs.scoped("graft_q282_")
-    val busDir = s"$base/bus"; val stateDir = s"$base/state"
+    val busDir = s"$base/bus"
     val visMs = 60000L
     val bus = new FileBus(busDir, visibilityMs = visMs, maxDeliveries = 3)
 
     // 1. distributed producers: one confirmed segment per task
-    val wire = CdcQueries.envelope(s, d)
-      .withColumn("ts_us", unix_micros(col("ts"))).drop("ts")
-    val nMsgs = wire.count()
-    wire.toJSON.repartition(8).foreachPartition { it: Iterator[String] =>
-      val rows = it.toArray
-      if (rows.nonEmpty) {
-        new FileBus(busDir, visMs, 3)
-          .publish(rows.toSeq, org.apache.spark.TaskContext.getPartitionId().toLong)
-        ()
-      }
-    }
+    val wire = cdcWire(s, d)
+    val nMsgs = publishWire(wire, busDir)
     bus.publish(Seq("""{"operation": "insert", "user_id":"""), 999L) // truncated JSON
     require(bus.published() == nMsgs + 1,
       "publisher confirms must cover every message")
 
-    val sink = new MergeSink(s, stateDir,
-      keys = Seq("user_id"), orderCols = Seq("ts_us", "document_id"), nBuckets = 16)
+    val sink = lwwSink(s, s"$base/state")
     val group = "warehouse"
 
     /** One consumer wake-up: lease everything deliverable at `nowMs`,
@@ -320,20 +148,16 @@ object StreamingQueries {
       // the pass cost at gate scale
       val frame = ds.map(x => (x.segment, x.index, x.payload))
         .toDF("seg", "idx", "payload")
-        .withColumn("r", from_json(col("payload"), wireSchema))
+        .withColumn("r", from_json(col("payload"), wire.schema))
         .persist()
       // poison = unparseable or missing the LWW key; bounded by the planted count
       val badIds = frame.filter(col("r").isNull || col("r.user_id").isNull)
         .select("seg", "idx").collect()
         .map(r => (r.getLong(0), r.getInt(1))).toSeq
-      if (badIds.size < ds.size) {
-        val good = frame
+      if (badIds.size < ds.size)
+        sink.merge(cdcFlat(frame
           .filter(col("r").isNotNull && col("r.user_id").isNotNull)
-          .select(col("r.*"))
-        val flat = Cdc.enrichWatchedRatio(Cdc.flattenEnvelope(good),
-          "watched", "duration", rounded = false)
-        sink.merge(flat)
-      }
+          .select(col("r.*"))))
       frame.unpersist()
       val poison = badIds.toSet
       val goodIds = ds.map(x => (x.segment, x.index)).filterNot(poison)
@@ -386,12 +210,7 @@ object StreamingQueries {
             bus.consume(group, Int.MaxValue, visMs * 3).isEmpty,
       "redrive + fixed consumer drains the queue terminally")
 
-    sink.read().select(
-      col("user_id"),
-      col("document_id").as("last_document_id"),
-      col("operation").as("last_operation"),
-      expr("ts_us div 1000").as("last_ms"),
-      col("watched_ratio").as("last_ratio"))
+    lastState(sink.read())
   }
 
   // ---------------------------------------------------------------- q283
@@ -418,25 +237,15 @@ object StreamingQueries {
   def q283BusSource(s: SparkSession, d: String): DataFrame = {
     import graft.streaming.FileBus
     val base = graft.core.TempDirs.scoped("graft_q283_")
-    val busDir = s"$base/bus"; val ckpt = s"$base/ckpt"; val stateDir = s"$base/state"
+    val busDir = s"$base/bus"; val ckpt = s"$base/ckpt"
     val bus = new FileBus(busDir, visibilityMs = 60000L, maxDeliveries = 3)
 
     // wave 1: distributed producers — one confirmed segment per task
-    val wire = CdcQueries.envelope(s, d)
-      .withColumn("ts_us", unix_micros(col("ts"))).drop("ts")
-    val nMsgs = wire.count()
-    wire.toJSON.repartition(8).foreachPartition { it: Iterator[String] =>
-      val rows = it.toArray
-      if (rows.nonEmpty) {
-        new FileBus(busDir, 60000L, 3)
-          .publish(rows.toSeq, org.apache.spark.TaskContext.getPartitionId().toLong)
-        ()
-      }
-    }
+    val wire = cdcWire(s, d)
+    val nMsgs = publishWire(wire, busDir)
     val wave1Segs = FileBus.segments(busDir).size
 
-    val sink = new MergeSink(s, stateDir,
-      keys = Seq("user_id"), orderCols = Seq("ts_us", "document_id"), nBuckets = 16)
+    val sink = lwwSink(s, s"$base/state")
     val group = "warehouse"
     val batches = new java.util.concurrent.atomic.AtomicInteger(0)
     val rowsSeen = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -446,21 +255,12 @@ object StreamingQueries {
         .option("path", busDir).option("group", group)
         .option("maxSegmentsPerTrigger", "3")
         .load()
-      val flat = Cdc.enrichWatchedRatio(
-        Cdc.flattenEnvelope(
-          src.select(from_json(col("value"), wireSchema).as("r")).select(col("r.*"))),
-        "watched", "duration", rounded = false)
-      val q = flat.writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          batches.incrementAndGet()
-          rowsSeen.addAndGet(df.count())
-          sink.merge(df)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(cdcFlat(src.select(from_json(col("value"), wire.schema).as("r")).select(col("r.*"))),
+          ckpt) { (df, _) =>
+        batches.incrementAndGet()
+        rowsSeen.addAndGet(df.count())
+        sink.merge(df)
+      }
     }
 
     runStream()
@@ -498,12 +298,7 @@ object StreamingQueries {
     require(bus.depth(group) == 0L && bus.published() == nMsgs + replay.size,
       "a backfill is a tap: it settles nothing and the log is intact")
 
-    sink.read().select(
-      col("user_id"),
-      col("document_id").as("last_document_id"),
-      col("operation").as("last_operation"),
-      expr("ts_us div 1000").as("last_ms"),
-      col("watched_ratio").as("last_ratio"))
+    lastState(sink.read())
   }
 
   // ---------------------------------------------------------------- q284
@@ -528,23 +323,15 @@ object StreamingQueries {
   def q284BusSink(s: SparkSession, d: String): DataFrame = {
     import graft.streaming.FileBus
     val base = graft.core.TempDirs.scoped("graft_q284_")
-    val inDir = s"$base/in"; val busDir = s"$base/bus"
-    val wCkpt = s"$base/wckpt"; val rCkpt = s"$base/rckpt"
-    val stateDir = s"$base/state"
+    val busDir = s"$base/bus"; val wCkpt = s"$base/wckpt"; val rCkpt = s"$base/rckpt"
 
     // wire format on disk -> 4 producer micro-batches
-    writeEnvelopeJson(s, d, inDir)
+    val in = cdcFeed(s, d, s"$base/in")
     val nMsgs = CdcQueries.envelope(s, d).count()
 
-    def runProducer(): Unit = {
-      val q = s.readStream.schema(wireSchema)
-        .option("maxFilesPerTrigger", "1").json(inDir)
-        .select(to_json(struct(col("*"))).as("value"))
-        .writeStream.format("filebus").option("path", busDir)
-        .option("checkpointLocation", wCkpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    def runProducer(): Unit =
+      drainTo(in.stream().select(to_json(struct(col("*"))).as("value"))
+        .writeStream.format("filebus").option("path", busDir), wCkpt)
     runProducer()
     val bus = new FileBus(busDir, 60000L, 3)
     require(bus.published() == nMsgs,
@@ -570,29 +357,15 @@ object StreamingQueries {
       "epoch replay must republish nothing: deterministic ids + skip-if-exists")
 
     // consumer: the q283 connector, LWW merge, commit-log settle
-    val sink = new MergeSink(s, stateDir,
-      keys = Seq("user_id"), orderCols = Seq("ts_us", "document_id"), nBuckets = 16)
+    val sink = lwwSink(s, s"$base/state")
     val group = "warehouse"
-    val q = s.readStream.format("filebus")
-      .option("path", busDir).option("group", group).load()
-      .select(from_json(col("value"), wireSchema).as("r"))
-      .select(col("r.*"))
-      .transform(df => Cdc.enrichWatchedRatio(Cdc.flattenEnvelope(df),
-        "watched", "duration", rounded = false))
-      .writeStream
-      .foreachBatch { (df: DataFrame, _: Long) => sink.merge(df); () }
-      .option("checkpointLocation", rCkpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    drain(cdcFlat(s.readStream.format("filebus")
+        .option("path", busDir).option("group", group).load()
+        .select(from_json(col("value"), in.schema).as("r"))
+        .select(col("r.*"))), rCkpt)(sink.forEachBatch)
     graft.streaming.FileBusSource.settleCommitted(rCkpt, busDir, group)
     require(bus.depth(group) == 0L, "consumer drains the whole bus")
-
-    sink.read().select(
-      col("user_id"),
-      col("document_id").as("last_document_id"),
-      col("operation").as("last_operation"),
-      expr("ts_us div 1000").as("last_ms"),
-      col("watched_ratio").as("last_ratio"))
+    lastState(sink.read())
   }
 
   // ---------------------------------------------------------------- q76
@@ -608,22 +381,12 @@ object StreamingQueries {
   def q76StreamingAgg(s: SparkSession, d: String): DataFrame = {
     import graft.sink.AggSink
     val base = graft.core.TempDirs.scoped("graft_q76_")
-    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val stateDir = s"$base/state"
-    writeEnvelopeJson(s, d, inDir)
-
-    val stream = s.readStream.schema(wireSchema)
-      .option("maxFilesPerTrigger", "1").json(inDir)
-    val upserts = Cdc.routeUpserts(Cdc.flattenEnvelope(stream))
+    val upserts = Cdc.routeUpserts(Cdc.flattenEnvelope(cdcFeed(s, d, s"$base/in").stream()))
       .select(col("etype"),
               round(col("watched") * 100).cast("long").as("w_cents"))
-    val sink = new AggSink(s, stateDir, keys = Seq("etype"),
+    val sink = new AggSink(s, s"$base/state", keys = Seq("etype"),
       sumCols = Seq("w_cents"), nBuckets = 8)
-    val q = upserts.writeStream
-      .foreachBatch(sink.forEachBatch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(upserts, s"$base/ckpt")(sink.forEachBatch)
 
     sink.read().select(
       col("etype"), col("n_rows"), col("w_cents"),
@@ -650,13 +413,8 @@ object StreamingQueries {
     */
   def q82MergeCompact(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q82_")
-    val stateDir = s"$base/state"
-    val env = CdcQueries.envelope(s, d)
-      .withColumn("ts_us", unix_micros(col("ts"))).drop("ts")
-    val flat = Cdc.enrichWatchedRatio(
-      Cdc.flattenEnvelope(env), "watched", "duration", rounded = false)
-    val sink = new MergeSink(s, stateDir,
-      keys = Seq("user_id"), orderCols = Seq("ts_us", "document_id"), nBuckets = 16)
+    val flat = cdcFlat(cdcWire(s, d))
+    val sink = lwwSink(s, s"$base/state")
     // LWW is commutative/associative: any batch slicing converges
     (0 until 4).foreach(i =>
       sink.merge(flat.filter(pmod(col("document_id"), lit(4)) === lit(i))))
@@ -664,12 +422,7 @@ object StreamingQueries {
     val perBucket = sink.bucketFileCounts()
     require(perBucket.nonEmpty && perBucket.values.forall(_ <= 1),
       s"compaction left oversized buckets: $perBucket")
-    sink.read().select(
-      col("user_id"),
-      col("document_id").as("last_document_id"),
-      col("operation").as("last_operation"),
-      expr("ts_us div 1000").as("last_ms"),
-      col("watched_ratio").as("last_ratio"))
+    lastState(sink.read())
   }
 
   // ---------------------------------------------------------------- q83
@@ -703,78 +456,30 @@ object StreamingQueries {
   /** WATERMARKED streaming session windows — q78's semantics as a real
     * StreamingQuery in APPEND mode: sessions are emitted only once the
     * event-time watermark passes their end, i.e. the stateful path the
-    * batch twin cannot exercise.
-    *
-    * Determinism discipline:
-    *  - the event history is sliced into TIME-ORDERED files (slice i+1
-    *    starts at or after slice i's end), so with one file per
-    *    micro-batch nothing is ever late relative to the
-    *    previous-batch watermark — zero dropped rows;
-    *  - file order is pinned by both name and mtime (FileStreamSource
-    *    orders by timestamp, then path);
-    *  - two far-future sentinel rows ride in trailing files: the first
-    *    advances the watermark past every real session's end, the
-    *    second forces a further batch so the advanced watermark is
-    *    APPLIED and flushes all remaining state. Sentinels use
-    *    negative user ids and are filtered from the output.
-    *
-    * The closed-session output then hash-matches the batch
-    * gaps-and-islands oracle over the whole history (q78's SQL).
+    * batch twin cannot exercise. The history arrives as time-ordered
+    * slices (slice i+1 starts at or after slice i's end, so with one
+    * file per micro-batch nothing is ever late relative to the
+    * previous-batch watermark — zero dropped rows), then the sentinel
+    * flush (negative user ids, filtered from the output). The
+    * closed-session output then hash-matches the batch gaps-and-islands
+    * oracle over the whole history (q78's SQL).
     */
   def q84StreamingSessions(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q84_")
-    val inDir = new java.io.File(base, "in"); inDir.mkdirs()
-    val ckpt = s"$base/ckpt"
-
     val ev = graft.core.Tables.events(s, d)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
-    val mm = ev.agg(min(col("ts_us")), max(col("ts_us"))).first()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
     // two time-ordered halves: sessions spanning the boundary still
     // merge through state (the mechanism under test) at half the
     // stateful-micro-batch cost of finer slicing
-    val step = (hi - lo) / 2 + 1
-
-    def writeSlice(df: DataFrame, i: Int): Unit = {
-      val tmp = s"$base/slice$i"
-      df.coalesce(1).write.json(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-        .getOrElse(sys.error(s"no part-*.json under $tmp — empty slice or changed writer naming"))
-      val dest = new java.io.File(inDir, f"$i%02d.json")
-      Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(60000L * (i + 1))
+    val in = watermarkFeed(ev, 2, s"$base/in") { (k, at) =>
+      s.range(1).select(lit(-1L - k).as("user_id"), lit(at).as("ts_us"))
     }
-    (0 until 2).foreach { i =>
-      writeSlice(ev.filter(col("ts_us") >= lo + i * step &&
-                           col("ts_us") <  lo + (i + 1) * step), i)
-    }
-    val day_us = 86400000000L
-    writeSlice(s.range(1).select(lit(-1L).as("user_id"),
-      lit(hi + 10 * day_us).as("ts_us")), 2)
-    writeSlice(s.range(1).select(lit(-2L).as("user_id"),
-      lit(hi + 20 * day_us).as("ts_us")), 3)
-
-    val wire = StructType(Seq(
-      StructField("user_id", LongType), StructField("ts_us", LongType)))
-    val sessions = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").json(inDir.toString)
+    val sessions = in.stream()
       .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"))
       .withWatermark("ts", "1 second")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"))
-    val memName = "q84_sessions_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = startStateful(s) {
-      sessions.writeStream
-        .format("memory").queryName(memName)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-
-    s.table(memName)
+    drainToMemory(sessions, s"$base/ckpt")
       .filter(col("user_id") >= 0)
       .select(col("user_id"),
               unix_millis(col("session_window.start")).as("start_ms"),
@@ -796,54 +501,21 @@ object StreamingQueries {
     */
   def q87StreamingDedup(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q87_")
-    val inDir = new java.io.File(base, "in"); inDir.mkdirs()
-    val ckpt = s"$base/ckpt"
-
     val ev = graft.core.Tables.events(s, d)
       .select(col("event_id"), col("user_id"),
               unix_micros(col("ts")).as("ts_us"), col("value"))
-    val mm = ev.agg(min(col("ts_us")), max(col("ts_us"))).first()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val step = (hi - lo) / 2 + 1
-    def slice(i: Int) =
-      ev.filter(col("ts_us") >= lo + i * step && col("ts_us") < lo + (i + 1) * step)
-    def writeFile(df: DataFrame, i: Int): Unit = {
-      val tmp = s"$base/slice$i"
-      df.coalesce(1).write.json(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-        .getOrElse(sys.error(s"no part-*.json under $tmp — empty slice or changed writer naming"))
-      val dest = new java.io.File(inDir, f"$i%02d.json")
-      Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(60000L * (i + 1))
-    }
+    val (lo, hi) = span(ev)
     // every event arrives exactly twice, and the replay always crosses
     // a batch boundary: slice0 | slice0+slice1 | slice1
-    writeFile(slice(0), 0)
-    writeFile(slice(0).unionByName(slice(1)), 1)
-    writeFile(slice(1), 2)
-
-    val wire = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("ts_us", LongType), StructField("value", DoubleType)))
-    val deduped = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").json(inDir.toString)
+    val in = feed(ev.withColumn(SliceCol, timeSlice(lo, hi, 2) * 2)
+        .unionByName(ev.withColumn(SliceCol, lit(1L))),
+      col(SliceCol), 3, s"$base/in", "json", everySlice = true)
+    val deduped = in.stream()
       .select(col("event_id"), col("user_id"),
               timestamp_micros(col("ts_us")).as("ts"), col("value"))
       .withWatermark("ts", "3650 days")
       .dropDuplicatesWithinWatermark("event_id")
-    val memName = "q87_dedup_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = startStateful(s) {
-      deduped.writeStream
-        .format("memory").queryName(memName)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-
-    s.table(memName).select(
+    drainToMemory(deduped, s"$base/ckpt").select(
       col("event_id"), col("user_id"),
       unix_millis(col("ts")).as("ts_ms"), col("value"))
   }
@@ -865,29 +537,18 @@ object StreamingQueries {
     import graft.sink.AggSink
     import graft.ext.TextAnalysis
     val base = graft.core.TempDirs.scoped("graft_q92_")
-    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val stateDir = s"$base/state"
-    graft.core.Tables.documents(s, d).select(col("doc_id"), col("text"))
-      .repartition(4, pmod(col("doc_id"), lit(4)))
-      .write.json(inDir)
-
-    val wire = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val stream = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").json(inDir)
-    val sink = new AggSink(s, stateDir, keys = Seq("term"),
+    // three doc_id slices -> three micro-batches
+    val in = feed(graft.core.Tables.documents(s, d).select(col("doc_id"), col("text")),
+      pmod(col("doc_id"), lit(3)), 3, s"$base/in", "json")
+    val sink = new AggSink(s, s"$base/state", keys = Seq("term"),
       sumCols = Seq("n"), nBuckets = 16)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val pairs = batch
-          .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("term"))
-          .distinct()
-          .select(col("term"), lit(1L).as("n"))
-        sink.merge(pairs, id)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(in.stream(), s"$base/ckpt") { (batch, id) =>
+      val pairs = batch
+        .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("term"))
+        .distinct()
+        .select(col("term"), lit(1L).as("n"))
+      sink.merge(pairs, id)
+    }
 
     sink.read()
       .filter(col("n") >= 5)
@@ -914,45 +575,26 @@ object StreamingQueries {
     */
   def q93StreamStreamJoin(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q93_")
-    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"
     // two files -> two micro-batches per side: enough to force
     // CROSS-BATCH matching through the join state (file-2 views match
     // file-1 clicks held in state) without paying for a long tail of
     // stateful micro-batches at bench time
-    graft.core.Tables.events(s, d)
-      .select(col("event_id"), col("user_id"),
-              unix_micros(col("ts")).as("ts_us"), col("event_type"))
-      .filter(col("event_type").isin("view", "click"))
-      .repartition(2, pmod(col("event_id"), lit(2)))
-      .write.json(inDir)
-
-    val wire = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("ts_us", LongType), StructField("event_type", StringType)))
-    def src() = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").json(inDir)
-    val views = src().filter(col("event_type") === "view")
+    val in = feed(graft.core.Tables.events(s, d)
+        .select(col("event_id"), col("user_id"),
+                unix_micros(col("ts")).as("ts_us"), col("event_type"))
+        .filter(col("event_type").isin("view", "click")),
+      pmod(col("event_id"), lit(2)), 2, s"$base/in", "json")
+    val views = in.stream().filter(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id").as("vu"),
               timestamp_micros(col("ts_us")).as("ts_v"))
       .withWatermark("ts_v", "3650 days")
-    val clicks = src().filter(col("event_type") === "click")
+    val clicks = in.stream().filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id").as("cu"),
               timestamp_micros(col("ts_us")).as("ts_c"))
       .withWatermark("ts_c", "3650 days")
     val joined = views.join(clicks, expr(
       "vu = cu AND ts_c BETWEEN ts_v - INTERVAL 1 HOUR AND ts_v + INTERVAL 1 HOUR"))
-    val memName = "q93_ssj_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = startStateful(s) {
-      joined.writeStream
-        .format("memory").queryName(memName)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-
-    s.table(memName).select(
+    drainToMemory(joined, s"$base/ckpt").select(
       col("view_id"), col("click_id"), col("vu").as("user_id"),
       (unix_millis(col("ts_c")) - unix_millis(col("ts_v"))).as("gap_ms"))
   }
@@ -965,85 +607,53 @@ object StreamingQueries {
       | AND a.event_type = 'view' AND b.event_type = 'click'
       | AND b.ts BETWEEN a.ts - INTERVAL 1 HOUR AND a.ts + INTERVAL 1 HOUR""".stripMargin
 
-  // ---------------------------------------------------------------- q98
-  /** Stream-stream LEFT OUTER join — semantically distinct machinery
-    * from q93's inner join: an unmatched view can only emit (with NULL
-    * click columns) once the watermark proves no matching click can
-    * still arrive, i.e. passes view_ts + window + delay. Discipline:
-    * time-ordered slices with a SHORT delay (1 s) so the per-batch
-    * watermark genuinely advances, then two far-future sentinel files
-    * (each carrying one view AND one click so BOTH sides' watermarks
-    * jump) — the first flushes every real row's outcome, the second
-    * forces a batch that applies it. Sentinel users are negative and
-    * filtered. Output must equal the batch LEFT JOIN exactly — matched
-    * rows with gaps, unmatched rows with NULLs.
+  /** q98/q202's outer-join gate: views joined `how` to clicks of the
+    * same user within ±1 hour, with a SHORT watermark delay (1 s) so the
+    * per-batch watermark genuinely advances. One real batch
+    * (cross-batch MATCHING is q93's gate; these gates are about
+    * watermark-gated outer emission), then the sentinel flush: each
+    * sentinel slice carries one view AND one click so BOTH sides'
+    * watermarks jump, under distinct negative users so sentinels never
+    * match each other. Returns the drained join, sentinels included.
     */
-  def q98StreamStreamLeftOuter(s: SparkSession, d: String): DataFrame = {
-    val base = graft.core.TempDirs.scoped("graft_q98_")
-    val inDir = new java.io.File(base, "in"); inDir.mkdirs()
-    val ckpt = s"$base/ckpt"
-
+  private def viewClickOuterJoin(s: SparkSession, d: String, base: String,
+                                 how: String): DataFrame = {
     val ev = graft.core.Tables.events(s, d)
       .select(col("event_id"), col("user_id"),
               unix_micros(col("ts")).as("ts_us"), col("event_type"))
       .filter(col("event_type").isin("view", "click"))
-    val hi = ev.agg(max(col("ts_us"))).first().getLong(0)
-    def writeSlice(df: DataFrame, i: Int): Unit = {
-      val tmp = s"$base/slice$i"
-      df.coalesce(1).write.json(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-        .getOrElse(sys.error(s"no part-*.json under $tmp — empty slice or changed writer naming"))
-      val dest = new java.io.File(inDir, f"$i%02d.json")
-      Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(60000L * (i + 1))
+    val in = watermarkFeed(ev, 1, s"$base/in") { (k, at) =>
+      def row(u: Long, etype: String) = s.range(1).select(lit(u).as("event_id"),
+        lit(u).as("user_id"), lit(at).as("ts_us"), lit(etype).as("event_type"))
+      row(-1L - 2 * k, "view").unionByName(row(-2L - 2 * k, "click"))
     }
-    // one real batch (cross-batch MATCHING is q93's gate; this gate is
-    // about watermark-gated outer emission) + the two sentinel batches
-    // that advance and then apply the watermark
-    writeSlice(ev, 0)
-    val day_us = 86400000000L
-    def sentinels(uBase: Long, at: Long) =
-      s.range(1).select(lit(-uBase).as("event_id"), lit(-uBase).as("user_id"),
-          lit(at).as("ts_us"), lit("view").as("event_type"))
-        .unionByName(s.range(1).select(lit(-uBase - 1).as("event_id"),
-          lit(-uBase - 1).as("user_id"), lit(at).as("ts_us"),
-          lit("click").as("event_type")))
-    writeSlice(sentinels(1L, hi + 10 * day_us), 1)
-    writeSlice(sentinels(3L, hi + 20 * day_us), 2)
-
-    val wire = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("ts_us", LongType), StructField("event_type", StringType)))
-    def src() = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").json(inDir.toString)
-    val views = src().filter(col("event_type") === "view")
+    val views = in.stream().filter(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id").as("vu"),
               timestamp_micros(col("ts_us")).as("ts_v"))
       .withWatermark("ts_v", "1 second")
-    val clicks = src().filter(col("event_type") === "click")
+    val clicks = in.stream().filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id").as("cu"),
               timestamp_micros(col("ts_us")).as("ts_c"))
       .withWatermark("ts_c", "1 second")
-    val joined = views.join(clicks, expr(
-      "vu = cu AND ts_c BETWEEN ts_v - INTERVAL 1 HOUR AND ts_v + INTERVAL 1 HOUR"),
-      "leftOuter")
-    val memName = "q98_sslo_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = startStateful(s) {
-      joined.writeStream
-        .format("memory").queryName(memName)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
+    drainToMemory(views.join(clicks, expr(
+      "vu = cu AND ts_c BETWEEN ts_v - INTERVAL 1 HOUR AND ts_v + INTERVAL 1 HOUR"), how),
+      s"$base/ckpt")
+  }
 
-    s.table(memName)
+  // ---------------------------------------------------------------- q98
+  /** Stream-stream LEFT OUTER join — semantically distinct machinery
+    * from q93's inner join: an unmatched view can only emit (with NULL
+    * click columns) once the watermark proves no matching click can
+    * still arrive, i.e. passes view_ts + window + delay
+    * ([[viewClickOuterJoin]]'s feed). Sentinel users are negative and
+    * filtered. Output must equal the batch LEFT JOIN exactly — matched
+    * rows with gaps, unmatched rows with NULLs.
+    */
+  def q98StreamStreamLeftOuter(s: SparkSession, d: String): DataFrame =
+    viewClickOuterJoin(s, d, graft.core.TempDirs.scoped("graft_q98_"), "leftOuter")
       .filter(col("vu") >= 0)
       .select(col("view_id"), col("click_id"), col("vu").as("user_id"),
               (unix_millis(col("ts_c")) - unix_millis(col("ts_v"))).as("gap_ms"))
-  }
 
   val q98Sql: String =
     """SELECT a.event_id AS view_id, b.event_id AS click_id, a.user_id,
@@ -1058,77 +668,17 @@ object StreamingQueries {
     * q93 (inner, cross-batch matching) and q98 (left-outer, watermark-
     * gated emission): unmatched rows from BOTH sides must surface with
     * NULLs once the watermark passes their join horizon, which
-    * requires state eviction to fire symmetrically. Same feed contract
-    * as q98 (one real batch + two sentinel batches that advance, then
-    * apply, the watermark); state stays O(rate x window). The
-    * sentinels never match each other (distinct negative users), so
-    * the first pair outer-emits (filtered in-band) and the last pair
-    * dies in state at stream end — exactly the q98 discipline.
+    * requires state eviction to fire symmetrically. Same feed as q98
+    * ([[viewClickOuterJoin]]); state stays O(rate x window). The first
+    * sentinel pair outer-emits (filtered in-band) and the last pair
+    * dies in state at stream end.
     */
-  def q202StreamStreamFullOuter(s: SparkSession, d: String): DataFrame = {
-    val base = graft.core.TempDirs.scoped("graft_q202_")
-    val inDir = new java.io.File(base, "in"); inDir.mkdirs()
-    val ckpt = s"$base/ckpt"
-
-    val ev = graft.core.Tables.events(s, d)
-      .select(col("event_id"), col("user_id"),
-              unix_micros(col("ts")).as("ts_us"), col("event_type"))
-      .filter(col("event_type").isin("view", "click"))
-    val hi = ev.agg(max(col("ts_us"))).first().getLong(0)
-    def writeSlice(df: DataFrame, i: Int): Unit = {
-      val tmp = s"$base/slice$i"
-      df.coalesce(1).write.json(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-        .getOrElse(sys.error(s"no part-*.json under $tmp — empty slice or changed writer naming"))
-      val dest = new java.io.File(inDir, f"$i%02d.json")
-      Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(60000L * (i + 1))
-    }
-    writeSlice(ev, 0)
-    val day_us = 86400000000L
-    def sentinels(uBase: Long, at: Long) =
-      s.range(1).select(lit(-uBase).as("event_id"), lit(-uBase).as("user_id"),
-          lit(at).as("ts_us"), lit("view").as("event_type"))
-        .unionByName(s.range(1).select(lit(-uBase - 1).as("event_id"),
-          lit(-uBase - 1).as("user_id"), lit(at).as("ts_us"),
-          lit("click").as("event_type")))
-    writeSlice(sentinels(1L, hi + 10 * day_us), 1)
-    writeSlice(sentinels(3L, hi + 20 * day_us), 2)
-
-    val wire = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("ts_us", LongType), StructField("event_type", StringType)))
-    def src() = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").json(inDir.toString)
-    val views = src().filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("vu"),
-              timestamp_micros(col("ts_us")).as("ts_v"))
-      .withWatermark("ts_v", "1 second")
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("cu"),
-              timestamp_micros(col("ts_us")).as("ts_c"))
-      .withWatermark("ts_c", "1 second")
-    val joined = views.join(clicks, expr(
-      "vu = cu AND ts_c BETWEEN ts_v - INTERVAL 1 HOUR AND ts_v + INTERVAL 1 HOUR"),
-      "fullOuter")
-    val memName = "q202_ssfo_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = startStateful(s) {
-      joined.writeStream
-        .format("memory").queryName(memName)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-
-    s.table(memName)
+  def q202StreamStreamFullOuter(s: SparkSession, d: String): DataFrame =
+    viewClickOuterJoin(s, d, graft.core.TempDirs.scoped("graft_q202_"), "fullOuter")
       .filter(coalesce(col("vu"), col("cu")) >= 0)
       .select(col("view_id"), col("click_id"),
               coalesce(col("vu"), col("cu")).as("user_id"),
               (unix_millis(col("ts_c")) - unix_millis(col("ts_v"))).as("gap_ms"))
-  }
 
   val q202Sql: String =
     """SELECT a.event_id AS view_id, b.event_id AS click_id,
@@ -1155,27 +705,17 @@ object StreamingQueries {
   def q103StreamingMinhashIndex(s: SparkSession, d: String): DataFrame = {
     import graft.ext.Dedup
     val base = graft.core.TempDirs.scoped("graft_q103_")
-    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val sigDir = s"$base/sigs"
-    graft.core.Tables.documents(s, d).select(col("doc_id"), col("text"))
-      .repartition(4, pmod(col("doc_id"), lit(4)))
-      .write.json(inDir)
-    val wire = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val stream = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", indexFilesPerTrigger(s).toString).json(inDir)
+    // three doc_id slices -> three micro-batches at one file per trigger
+    val in = feed(graft.core.Tables.documents(s, d).select(col("doc_id"), col("text")),
+      pmod(col("doc_id"), lit(3)), 3, s"$base/in", "json")
     // each doc arrives exactly once, so any deterministic version
     // column works for the LWW tiebreak (keys and orderCols must be
     // disjoint — latestByKey builds a struct over both)
-    val sink = new MergeSink(s, sigDir,
+    val sink = new MergeSink(s, s"$base/sigs",
       keys = Seq("doc_id"), orderCols = Seq("mh0"), nBuckets = 8)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink.merge(Dedup.withMinhash(batch, k = 12).drop("text"))
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(in.stream(indexFilesPerTrigger(s)), s"$base/ckpt") { (batch, _) =>
+      sink.merge(Dedup.withMinhash(batch, k = 12).drop("text"))
+    }
     val cands = Dedup.lshCandidates(
       Dedup.lshBands(sink.read(), bands = 4, rowsPerBand = 3))
     Dedup.withJaccard(cands, graft.core.Tables.documents(s, d))
@@ -1200,31 +740,20 @@ object StreamingQueries {
   def q107StreamingEmbeddingIndex(s: SparkSession, d: String): DataFrame = {
     import graft.ext.Similarity
     val base = graft.core.TempDirs.scoped("graft_q107_")
-    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val idxDir = s"$base/index"
     val planes = Similarity.planes(nPlanes = 40, dim = 64, seed = 42L)
     val corpus = Similarity.plantedNearDupCorpus(
       graft.core.Tables.embeddings(s, d), idCap = 500)
-    // one file per vec_id%4 slice, built in a single staged write
-    // (round 15); parquet wire: float32 embeddings ride exact
-    val nFiles = writeSliceFeed(corpus, pmod(col("vec_id"), lit(4)), 4, inDir)
-    val stream = s.readStream
-      .schema(StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)))))
-      .option("maxFilesPerTrigger", indexFilesPerTrigger(s).toString).parquet(inDir)
+    // one file per vec_id%4 slice; parquet wire: float32 embeddings ride exact
+    val in = feed(corpus, pmod(col("vec_id"), lit(4)), 4, s"$base/in")
     // each (vec_id, t) index row arrives exactly once; any
     // deterministic orderCol works for the LWW tiebreak
-    val sink = new MergeSink(s, idxDir,
+    val sink = new MergeSink(s, s"$base/index",
       keys = Seq("vec_id", "t"), orderCols = Seq("bk"), nBuckets = 8)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink.merge(Similarity.signBuckets(batch, planes, bands = 4))
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val expectedCommits = (nFiles + indexFilesPerTrigger(s) - 1) / indexFilesPerTrigger(s)
+    val perTrigger = indexFilesPerTrigger(s)
+    drain(in.stream(perTrigger), s"$base/ckpt") { (batch, _) =>
+      sink.merge(Similarity.signBuckets(batch, planes, bands = 4))
+    }
+    val expectedCommits = (in.files + perTrigger - 1) / perTrigger
     require(sink.versions().size == expectedCommits,
       s"expected $expectedCommits incremental index commits, got ${sink.versions()}")
     Similarity.nearDupFromIndex(sink.read(), threshold = 0.9)
@@ -1248,32 +777,21 @@ object StreamingQueries {
     */
   def q211StreamingPqIndex(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q211_")
-    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val idxDir = s"$base/codes"
     val emb = graft.core.Tables.embeddings(s, d)
     val cents = AdvancedQueries.pqCodebook(s, emb)
-    // one file per vec_id%4 slice, built in a single staged write
-    // (round 15); parquet wire: float32 embeddings ride exact
-    val nFiles = writeSliceFeed(emb.select(col("vec_id"), col("embedding")),
-      pmod(col("vec_id"), lit(4)), 4, inDir)
-    val stream = s.readStream
-      .schema(StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)))))
-      .option("maxFilesPerTrigger", indexFilesPerTrigger(s).toString).parquet(inDir)
+    // one file per vec_id%4 slice; parquet wire: float32 embeddings ride exact
+    val in = feed(emb.select(col("vec_id"), col("embedding")),
+      pmod(col("vec_id"), lit(4)), 4, s"$base/in")
     // each (vid, s) code row arrives exactly once; any deterministic
     // orderCol works for the LWW tiebreak
-    val sink = new MergeSink(s, idxDir,
+    val sink = new MergeSink(s, s"$base/codes",
       keys = Seq("vid", "s"), orderCols = Seq("code"), nBuckets = 8)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink.merge(AdvancedQueries.pqEncode(batch, cents)
-          .withColumnRenamed("cent_idx", "code"))
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val expectedCommits = (nFiles + indexFilesPerTrigger(s) - 1) / indexFilesPerTrigger(s)
+    val perTrigger = indexFilesPerTrigger(s)
+    drain(in.stream(perTrigger), s"$base/ckpt") { (batch, _) =>
+      sink.merge(AdvancedQueries.pqEncode(batch, cents)
+        .withColumnRenamed("cent_idx", "code"))
+    }
+    val expectedCommits = (in.files + perTrigger - 1) / perTrigger
     require(sink.versions().size == expectedCommits,
       s"expected $expectedCommits incremental index commits, got ${sink.versions()}")
     sink.read().select(col("vid"), col("s").cast("long").as("s"), col("code"))
@@ -1313,50 +831,23 @@ object StreamingQueries {
     */
   def q104TimeTravel(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q104_")
-    val stateDir = s"$base/state"
-    val env = CdcQueries.envelope(s, d)
-      .withColumn("ts_us", unix_micros(col("ts"))).drop("ts")
     // persist: the envelope (a JSON parse of the full events table)
     // feeds FOUR slice merges — re-parsing it per commit quadruples the
     // gate's scan cost without exercising anything time-travel tests
-    val flat = Cdc.enrichWatchedRatio(
-      Cdc.flattenEnvelope(env), "watched", "duration", rounded = false).persist()
-    val sink = new MergeSink(s, stateDir,
-      keys = Seq("user_id"), orderCols = Seq("ts_us", "document_id"), nBuckets = 16)
+    val flat = cdcFlat(cdcWire(s, d)).persist()
+    val sink = lwwSink(s, s"$base/state")
     (0 until 4).foreach(i =>
       sink.merge(flat.filter(pmod(col("document_id"), lit(4)) === lit(i))))
     flat.unpersist()
     require(sink.versions() == Seq(1L, 2L, 3L, 4L),
       s"expected retained versions 1..4, got ${sink.versions()}")
-    sink.readAt(2L).select(
-      col("user_id"),
-      col("document_id").as("last_document_id"),
-      col("operation").as("last_operation"),
-      expr("ts_us div 1000").as("last_ms"),
-      col("watched_ratio").as("last_ratio"))
+    lastState(sink.readAt(2L))
   }
 
   /** The version-2 prefix of the history (batches 0 and 1 of the 4-way
     * document_id slicing), LWW-merged — q66's SQL over that subset.
     */
-  val q104Sql: String =
-    """SELECT user_id, document_id AS last_document_id,
-      |  operation AS last_operation, epoch_ms(ts) AS last_ms,
-      |  (CASE WHEN coalesce(duration, 1) > 0
-      |        THEN coalesce(watched, 0.0) / coalesce(duration, 1)
-      |        ELSE 0.0 END) AS last_ratio
-      |FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-      |        ORDER BY ts DESC, document_id DESC) AS rn
-      |      FROM (SELECT
-      |        CASE WHEN event_type = 'signup' THEN 'insert'
-      |             WHEN event_type = 'error' THEN 'delete'
-      |             ELSE 'update' END AS operation,
-      |        event_id AS document_id, user_id, ts,
-      |        CASE WHEN event_type = 'error' THEN NULL ELSE value END AS watched,
-      |        CASE WHEN event_type = 'error' THEN NULL
-      |             ELSE CAST(json_extract_string(props, '$.k') AS INT) END AS duration
-      |      FROM events WHERE event_id % 4 <= 1))
-      |WHERE rn = 1""".stripMargin
+  val q104Sql: String = lwwSql(events = " WHERE event_id % 4 <= 1")
 
   // ---------------------------------------------------------------- q285
   /** ROLLBACK / RESTORE — the undo button q104's time travel only
@@ -1378,14 +869,9 @@ object StreamingQueries {
     */
   def q285Rollback(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q285_")
-    val stateDir = s"$base/state"
-    val env = CdcQueries.envelope(s, d)
-      .withColumn("ts_us", unix_micros(col("ts"))).drop("ts")
-    val flat = Cdc.enrichWatchedRatio(
-      Cdc.flattenEnvelope(env), "watched", "duration", rounded = false)
+    val flat = cdcFlat(cdcWire(s, d))
       .persist() // k slice merges would re-run the full-events JSON parse k times
-    val sink = new MergeSink(s, stateDir,
-      keys = Seq("user_id"), orderCols = Seq("ts_us", "document_id"), nBuckets = 16)
+    val sink = lwwSink(s, s"$base/state")
     def slice(i: Int) = flat.filter(pmod(col("document_id"), lit(4)) === lit(i))
     (0 until 3).foreach(i => sink.merge(slice(i))) // v1, v2, v3(bad)
 
@@ -1395,40 +881,18 @@ object StreamingQueries {
     require(sink.manifest.mappingAt(4L) == sink.manifest.mappingAt(2L) &&
             sink.manifest.dvAt(4L) == sink.manifest.dvAt(2L),
       "rollback is metadata-only: v4 re-points at v2's generations verbatim")
-    require(bagEqual(sink.read(), sink.readAt(2L)),
+    require(bagEqual(sink.read(), sink.readAt(2L), Seq("user_id")),
       "restored state must equal the target version row-for-row")
     require(sink.readAt(3L).count() >= sink.readAt(2L).count(),
       "the rolled-back-over version stays time-travelable for audit")
 
     sink.merge(slice(3)) // v5: forward write on the restored base
     flat.unpersist()
-    sink.read().select(
-      col("user_id"),
-      col("document_id").as("last_document_id"),
-      col("operation").as("last_operation"),
-      expr("ts_us div 1000").as("last_ms"),
-      col("watched_ratio").as("last_ratio"))
+    lastState(sink.read())
   }
 
   /** LWW over slices {0,1,3} — slice 2's history was rolled back. */
-  val q285Sql: String =
-    """SELECT user_id, document_id AS last_document_id,
-      |  operation AS last_operation, epoch_ms(ts) AS last_ms,
-      |  (CASE WHEN coalesce(duration, 1) > 0
-      |        THEN coalesce(watched, 0.0) / coalesce(duration, 1)
-      |        ELSE 0.0 END) AS last_ratio
-      |FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-      |        ORDER BY ts DESC, document_id DESC) AS rn
-      |      FROM (SELECT
-      |        CASE WHEN event_type = 'signup' THEN 'insert'
-      |             WHEN event_type = 'error' THEN 'delete'
-      |             ELSE 'update' END AS operation,
-      |        event_id AS document_id, user_id, ts,
-      |        CASE WHEN event_type = 'error' THEN NULL ELSE value END AS watched,
-      |        CASE WHEN event_type = 'error' THEN NULL
-      |             ELSE CAST(json_extract_string(props, '$.k') AS INT) END AS duration
-      |      FROM events WHERE event_id % 4 <> 2))
-      |WHERE rn = 1""".stripMargin
+  val q285Sql: String = lwwSql(events = " WHERE event_id % 4 <> 2")
 
   // ---------------------------------------------------------------- q286
   /** OPTIMISTIC CONCURRENCY CONTROL — multi-writer commits without
@@ -1452,14 +916,9 @@ object StreamingQueries {
     */
   def q286Occ(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q286_")
-    val stateDir = s"$base/state"
-    val env = CdcQueries.envelope(s, d)
-      .withColumn("ts_us", unix_micros(col("ts"))).drop("ts")
-    val flat = Cdc.enrichWatchedRatio(
-      Cdc.flattenEnvelope(env), "watched", "duration", rounded = false)
+    val flat = cdcFlat(cdcWire(s, d))
       .persist() // k slice merges would re-run the full-events JSON parse k times
-    val sink = new MergeSink(s, stateDir,
-      keys = Seq("user_id"), orderCols = Seq("ts_us", "document_id"), nBuckets = 16)
+    val sink = lwwSink(s, s"$base/state")
     val a = flat.filter(pmod(col("document_id"), lit(2)) === lit(0))
     val b = flat.filter(pmod(col("document_id"), lit(2)) === lit(1))
 
@@ -1484,12 +943,7 @@ object StreamingQueries {
     require(missing == 0L, "the rebase must not drop the intervening commit's keys")
     flat.unpersist()
 
-    sink.read().select(
-      col("user_id"),
-      col("document_id").as("last_document_id"),
-      col("operation").as("last_operation"),
-      expr("ts_us div 1000").as("last_ms"),
-      col("watched_ratio").as("last_ratio"))
+    lastState(sink.read())
   }
 
   // ---------------------------------------------------------------- q244
@@ -1514,14 +968,9 @@ object StreamingQueries {
     */
   def q244SnapshotDiff(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q244_")
-    val stateDir = s"$base/state"
-    val env = CdcQueries.envelope(s, d)
-      .withColumn("ts_us", unix_micros(col("ts"))).drop("ts")
-    val flat = Cdc.enrichWatchedRatio(
-      Cdc.flattenEnvelope(env), "watched", "duration", rounded = false)
+    val flat = cdcFlat(cdcWire(s, d))
       .persist() // k slice merges would re-run the full-events JSON parse k times
-    val sink = new MergeSink(s, stateDir,
-      keys = Seq("user_id"), orderCols = Seq("ts_us", "document_id"), nBuckets = 16)
+    val sink = lwwSink(s, s"$base/state")
     (0 until 4).foreach(i =>
       sink.merge(flat.filter(pmod(col("document_id"), lit(4)) === lit(i))))
     flat.unpersist()
@@ -1579,33 +1028,22 @@ object StreamingQueries {
     */
   def q247StreamingAnalyze(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q247_")
-    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val statsDir = s"$base/stats"
     val ev = graft.core.Tables.events(s, d)
       .select(col("event_id"), col("event_type"), col("value"))
-    writeSliceFeed(ev, pmod(col("event_id"), lit(4)), 4, inDir)
-    val wire = StructType(Seq(
-      StructField("event_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val sink = new MergeSink(s, statsDir,
+    val in = feed(ev, pmod(col("event_id"), lit(4)), 4, s"$base/in")
+    val sink = new MergeSink(s, s"$base/stats",
       keys = Seq("event_type", "part"), orderCols = Seq("n"), nBuckets = 4)
-    val q = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink.merge(batch
-          .withColumn("cents", round(col("value") * 100).cast("long"))
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("value").isNull, 1L).otherwise(0L)).as("n_null"),
-            coalesce(sum(col("cents")), lit(0L)).as("s1"),
-            min(col("cents")).as("mn"), max(col("cents")).as("mx"),
-            hll_sketch_agg(col("cents")).as("sk"))
-          .withColumn("part", lit(id)), materializeBatch = true)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(in.stream(), s"$base/ckpt") { (batch, id) =>
+      sink.merge(batch
+        .withColumn("cents", round(col("value") * 100).cast("long"))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("value").isNull, 1L).otherwise(0L)).as("n_null"),
+          coalesce(sum(col("cents")), lit(0L)).as("s1"),
+          min(col("cents")).as("mn"), max(col("cents")).as("mx"),
+          hll_sketch_agg(col("cents")).as("sk"))
+        .withColumn("part", lit(id)), materializeBatch = true)
+    }
     require(sink.versions().size == 4,
       s"expected 4 incremental stats commits, got ${sink.versions()}")
     val merged = sink.read().groupBy(col("event_type")).agg(
@@ -1653,43 +1091,30 @@ object StreamingQueries {
   def q264StreamingDrift(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = graft.core.TempDirs.scoped("graft_q264_")
-    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val driftDir = s"$base/drift"
     val ev = graft.core.Tables.events(s, d).select(col("event_id"), col("event_type"))
-    // the slice id rides IN the wire data (the drift gate keys on it),
-    // computed in-plan — identical to the old per-slice lit(i) since
-    // the filter pinned pmod(event_id, 4) == i
-    writeSliceFeed(ev.withColumn("slice", pmod(col("event_id"), lit(4)).cast("long")),
-      col("slice"), 4, inDir)
+    // the slice id rides IN the wire data (the drift gate keys on it)
+    val in = feed(ev.withColumn("slice", pmod(col("event_id"), lit(4)).cast("long")),
+      col("slice"), 4, s"$base/in")
     val refP = ev.groupBy(col("event_type")).agg(count(lit(1)).as("nr"))
       .crossJoin(ev.agg(count(lit(1)).as("tr")))
       .withColumn("pr", col("nr").cast("double") / col("tr").cast("double"))
       .select(col("event_type"), col("pr"))
       .cache()
     refP.count() // materialize once; every batch reuses the 5 cached rows
-    val wire = StructType(Seq(
-      StructField("event_id", LongType), StructField("event_type", StringType),
-      StructField("slice", LongType)))
-    val sink = new MergeSink(s, driftDir,
+    val sink = new MergeSink(s, s"$base/drift",
       keys = Seq("slice"), orderCols = Seq("n_slice"), nBuckets = 2)
-    val q = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bc = batch.groupBy(col("slice"), col("event_type")).agg(count(lit(1)).as("nb"))
-          .withColumn("pb", col("nb").cast("double") /
-            sum(col("nb")).over(Window.partitionBy(col("slice"))).cast("double"))
-          .join(broadcast(refP), Seq("event_type"))
-        val m = (col("pb") + col("pr")) / lit(2)
-        sink.merge(bc.groupBy(col("slice")).agg(
-          sum(col("nb")).as("n_slice"),
-          round(sum(col("pb") * log(col("pb") / m)) / lit(2) +
-            sum(col("pr") * log(col("pr") / m)) / lit(2), 6).as("js")),
-          materializeBatch = true)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(in.stream(), s"$base/ckpt") { (batch, _) =>
+      val bc = batch.groupBy(col("slice"), col("event_type")).agg(count(lit(1)).as("nb"))
+        .withColumn("pb", col("nb").cast("double") /
+          sum(col("nb")).over(Window.partitionBy(col("slice"))).cast("double"))
+        .join(broadcast(refP), Seq("event_type"))
+      val m = (col("pb") + col("pr")) / lit(2)
+      sink.merge(bc.groupBy(col("slice")).agg(
+        sum(col("nb")).as("n_slice"),
+        round(sum(col("pb") * log(col("pb") / m)) / lit(2) +
+          sum(col("pr") * log(col("pr") / m)) / lit(2), 6).as("js")),
+        materializeBatch = true)
+    }
     refP.unpersist()
     require(sink.versions().size == 4,
       s"expected 4 per-slice drift commits, got ${sink.versions()}")
@@ -1824,16 +1249,9 @@ object StreamingQueries {
 
   def q249StreamingCc(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q249_")
-    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val labDir = s"$base/labels"
-    // ONE staged write builds the whole slice feed (round 15): the old
-    // form persisted the pair frame, ran a slice-size aggregate, and
-    // then one filtered coalesce-write job per slice — 6 jobs and 5
-    // passes over the pairs; the feed writer is 1 job, and the file
+    // ONE staged write builds the whole slice feed (round 15): the file
     // count IS the expected commit count (empty slices write no file).
-    val expectedCommits = writeSliceFeed(q249Edges(s, d),
-      pmod(col("id_a") + col("id_b"), lit(4)), 4, inDir)
-    val wire = StructType(Seq(
-      StructField("id_a", LongType), StructField("id_b", LongType)))
+    val in = feed(q249Edges(s, d), pmod(col("id_a") + col("id_b"), lit(4)), 4, s"$base/in")
     // The batch step is the INDEXED form (applyBatchIndexed): endpoint
     // lookup and anti-join resolve only the buckets the batch routes
     // to. NO cluster_id bloom sidecars HERE, deliberately: this gate's
@@ -1846,24 +1264,16 @@ object StreamingQueries {
     // admitted buckets; that configuration is spec-gated
     // (StreamingSpec "indexed path"). Without sidecars the sweep reads
     // all buckets — exactly the full-scan fallback, never wrong.
-    val sink = new MergeSink(s, labDir,
+    val sink = new MergeSink(s, s"$base/labels",
       keys = Seq("id"), orderCols = Seq("upd"), nBuckets = 8)
-    val q = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        // every feed file is a non-empty slice by writeSliceFeed's
-        // contract, so the old per-batch isEmpty probe job is gone
-        val e = batch.select(col("id_a"), col("id_b"))
-        sink.merge(graft.ext.IncrementalCc.applyBatchIndexed(s, sink, e)
-          .withColumn("upd", lit(bid)), materializeBatch = true)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(sink.versions().size == expectedCommits,
-      s"expected $expectedCommits incremental label commits, got ${sink.versions()}")
+    // every feed file is a non-empty slice, so no per-batch isEmpty probe
+    drain(in.stream(), s"$base/ckpt") { (batch, bid) =>
+      val e = batch.select(col("id_a"), col("id_b"))
+      sink.merge(graft.ext.IncrementalCc.applyBatchIndexed(s, sink, e)
+        .withColumn("upd", lit(bid)), materializeBatch = true)
+    }
+    require(sink.versions().size == in.files,
+      s"expected ${in.files} incremental label commits, got ${sink.versions()}")
     sink.read().groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n_docs"), max(col("id")).as("max_doc_id"))
   }
@@ -1888,32 +1298,20 @@ object StreamingQueries {
     */
   def q289StreamingCcSidecars(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q289_")
-    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val labDir = s"$base/labels"
     val (edges, copyLight) = q249EdgesWithStats(s, d)
     // one staged write for the 8-slice feed — see q249's feed comment
-    val expectedCommits = writeSliceFeed(edges,
-      pmod(col("id_a") * 31L + col("id_b"), lit(8L)), 8, inDir)
-    val wire = StructType(Seq(
-      StructField("id_a", LongType), StructField("id_b", LongType)))
-    val sink = new MergeSink(s, labDir,
+    val in = feed(edges, pmod(col("id_a") * 31L + col("id_b"), lit(8L)), 8, s"$base/in")
+    val sink = new MergeSink(s, s"$base/labels",
       keys = Seq("id"), orderCols = Seq("upd"), nBuckets = 32,
       bloomCols = Seq("cluster_id"))
-    val q = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        // feed files are non-empty by writeSliceFeed's contract — no
-        // per-batch isEmpty probe job
-        val e = batch.select(col("id_a"), col("id_b"))
-        sink.merge(graft.ext.IncrementalCc.applyBatchIndexed(s, sink, e)
-          .withColumn("upd", lit(bid)), materializeBatch = true)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(sink.versions().size == expectedCommits,
-      s"expected $expectedCommits incremental label commits, got ${sink.versions()}")
+    // feed files are non-empty slices — no per-batch isEmpty probe job
+    drain(in.stream(), s"$base/ckpt") { (batch, bid) =>
+      val e = batch.select(col("id_a"), col("id_b"))
+      sink.merge(graft.ext.IncrementalCc.applyBatchIndexed(s, sink, e)
+        .withColumn("upd", lit(bid)), materializeBatch = true)
+    }
+    require(sink.versions().size == in.files,
+      s"expected ${in.files} incremental label commits, got ${sink.versions()}")
     require(sink.probeCount.get() > 0,
       "small slices must exercise the sidecar-pruned absorbed sweep at least once")
     // The strict form (some bucket excluded) is a COPY-LIGHT assertion:
@@ -1955,69 +1353,42 @@ object StreamingQueries {
     runPostingsPipeline(s, d)
       .read().filter(!col("is_deleted")).select(col("tok"), col("doc_id"))
 
-  /** FileStreamSource orders input files by MODIFICATION TIME; two
-    * appends written back-to-back can tie on coarse mtime granularity
-    * and flip batch order (ADVICE round 8 — q250's rewrite batch MUST
-    * arrive after the full corpus or the tombstone REQUIRE fails
-    * flakily). Stamp every not-yet-stamped part file in `dir` with a
-    * strictly increasing per-batch mtime, making arrival order
-    * explicit instead of a filesystem accident. Batch `i`'s stamp is
-    * below every later batch's and below "now", so already-stamped
-    * earlier batches (mtime < this stamp) are never touched.
-    */
-  private[graft] def stampBatchMtime(dir: String, batch: Int): Unit = {
-    val t = 1700000000000L + batch * 60000L
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("part-") && f.lastModified() > t)
-      .foreach(f => require(f.setLastModified(t), s"cannot set mtime on $f"))
-  }
-
   /** The q250 pipeline body, shared with q252 (which runs REORG-PURGE
     * compaction on the result): feeds the full corpus then the
     * deterministic rewrite batch through the update-aware delta logic
     * into a tombstone-carrying postings sink, REQUIREs 2 versioned
     * commits and a non-empty tombstone set, and returns the committed
-    * sink.
+    * sink. The rewrite batch MUST arrive after the full corpus or the
+    * tombstone REQUIRE fails — the feed's slice order pins it.
     */
   private[graft] def runPostingsPipeline(s: SparkSession, d: String): MergeSink = {
     val base = graft.core.TempDirs.scoped("graft_q250_")
-    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val idxDir = s"$base/postings"
     val docs = graft.core.Tables.documents(s, d).select(col("doc_id"), col("text"))
-    docs.coalesce(1).write.mode("append").parquet(inDir)
-    stampBatchMtime(inDir, 0)
     // the rewrite batch: keep only the first half of each doc's tokens
-    docs.filter(col("doc_id") % 10 === 0)
+    val rewrites = docs.filter(col("doc_id") % 10 === 0)
       .select(col("doc_id"), expr(
         "array_join(slice(split(text, ' '), 1, greatest(size(split(text, ' ')) div 2, 1)), ' ')")
         .as("text"))
-      .coalesce(1).write.mode("append").parquet(inDir)
-    stampBatchMtime(inDir, 1)
-    val wire = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val sink = new MergeSink(s, idxDir,
+    val in = feed(docs.withColumn(SliceCol, lit(0L))
+        .unionByName(rewrites.withColumn(SliceCol, lit(1L))),
+      col(SliceCol), 2, s"$base/in", everySlice = true)
+    val sink = new MergeSink(s, s"$base/postings",
       keys = Seq("tok", "doc_id"), orderCols = Seq("upd"), nBuckets = 8)
-    val q = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val fresh = batch
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-          .filter(col("tok") =!= "").distinct()
-        val stale =
-          if (sink.versions().isEmpty) fresh.limit(0)
-          else sink.read().filter(!col("is_deleted"))
-            .join(batch.select(col("doc_id")), Seq("doc_id"), "left_semi")
-            .join(fresh, Seq("doc_id", "tok"), "left_anti")
-            .select(col("doc_id"), col("tok"))
-        sink.merge(
-          fresh.withColumn("is_deleted", lit(false))
-            .unionByName(stale.withColumn("is_deleted", lit(true)))
-            .withColumn("upd", lit(bid)), materializeBatch = true)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(in.stream(), s"$base/ckpt") { (batch, bid) =>
+      val fresh = batch
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+        .filter(col("tok") =!= "").distinct()
+      val stale =
+        if (sink.versions().isEmpty) fresh.limit(0)
+        else sink.read().filter(!col("is_deleted"))
+          .join(batch.select(col("doc_id")), Seq("doc_id"), "left_semi")
+          .join(fresh, Seq("doc_id", "tok"), "left_anti")
+          .select(col("doc_id"), col("tok"))
+      sink.merge(
+        fresh.withColumn("is_deleted", lit(false))
+          .unionByName(stale.withColumn("is_deleted", lit(true)))
+          .withColumn("upd", lit(bid)), materializeBatch = true)
+    }
     require(sink.versions().size == 2,
       s"expected 2 postings commits, got ${sink.versions()}")
     val tombs = sink.read().filter(col("is_deleted")).limit(1).count()
@@ -2071,7 +1442,7 @@ object StreamingQueries {
     require(oversized.isEmpty, s"buckets not compacted to one file: $oversized")
     // (1) live-row equality, both directions
     val postKeys = post.select(col("tok"), col("doc_id"))
-    require(bagEqual(postKeys, preLive),
+    require(bagEqual(postKeys, preLive, Seq("tok", "doc_id")),
       "compaction changed the live row set")
     preLive.unpersist()
     sink.read().filter(!col("is_deleted")).select(col("tok"), col("doc_id"))
@@ -2189,13 +1560,9 @@ object StreamingQueries {
     */
   def q259Rebucket(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q259_")
-    val env = CdcQueries.envelope(s, d)
-      .withColumn("ts_us", unix_micros(col("ts"))).drop("ts")
-    val flat = Cdc.enrichWatchedRatio(
-      Cdc.flattenEnvelope(env), "watched", "duration", rounded = false)
+    val flat = cdcFlat(cdcWire(s, d))
       .persist() // k slice merges would re-run the full-events JSON parse k times
-    val sink8 = new MergeSink(s, s"$base/state",
-      keys = Seq("user_id"), orderCols = Seq("ts_us", "document_id"), nBuckets = 8)
+    val sink8 = lwwSink(s, s"$base/state", nBuckets = 8)
     (0 until 2).foreach(i =>
       sink8.merge(flat.filter(pmod(col("document_id"), lit(3)) === lit(i))))
     val vPre = sink8.versions().max
@@ -2208,7 +1575,7 @@ object StreamingQueries {
       s"rebucket must commit exactly one version: $vPre -> ${sink16.versions()}")
     val pre = sink16.readAt(vPre).select(col("user_id"), col("document_id"), col("ts_us"))
     val post = sink16.readAt(vPost).select(col("user_id"), col("document_id"), col("ts_us"))
-    require(bagEqual(post, pre),
+    require(bagEqual(post, pre, Seq("user_id")),
       "rebucket changed table content — layout maintenance must be invisible")
     sink16.merge(flat.filter(pmod(col("document_id"), lit(3)) === lit(2)))
     flat.unpersist()
@@ -2481,7 +1848,7 @@ object StreamingQueries {
       .select(col("event_id"), col("cents"))
     val before = byType
     index.compact(maxFilesPerBucket = 1)
-    require(bagEqual(before, byType),
+    require(bagEqual(before, byType, Seq("event_id")),
       "post-delete compaction must be content-invisible to the pruned read")
     byType
   }
@@ -2539,7 +1906,7 @@ object StreamingQueries {
     sink.compact(maxFilesPerBucket = 64)
     require(sink.deleteVectors().isEmpty,
       "compaction must consume every outstanding deletion vector")
-    require(bagEqual(beforeCompact, sink.read()),
+    require(bagEqual(beforeCompact, sink.read(), Seq("event_id")),
       "physical DV application must be content-invisible")
     sink.read().select(col("event_id"), col("cents"))
   }
@@ -2888,7 +2255,7 @@ object StreamingQueries {
       .select(col("event_id"), col("cents"))
     // one-action bag-equality witness: each route's plan runs once, no
     // persist needed (round 16 — was 2 persists + a 4-subtree except chain)
-    require(bagEqual(viaIndex, viaPrimary),
+    require(bagEqual(viaIndex, viaPrimary, Seq("event_id")),
       "merge-on-read index route must agree with the primary route")
     // lockstep LWW re-insert of a deleted-key subset: each structure's
     // own bucket rewrite consumes its vectors, so the rows come back
@@ -2911,7 +2278,7 @@ object StreamingQueries {
     index.compact(maxFilesPerBucket = 1)
     require(index.deleteVectors().isEmpty,
       "index compaction must consume every outstanding index vector")
-    require(bagEqual(before, viaIndex),
+    require(bagEqual(before, viaIndex, Seq("event_id")),
       "physical DV application on the index must be content-invisible")
     ev.unpersist()
     viaIndex
@@ -3048,10 +2415,7 @@ object StreamingQueries {
     */
   def q265ProgressiveRebucket(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q265_")
-    val env = CdcQueries.envelope(s, d)
-      .withColumn("ts_us", unix_micros(col("ts"))).drop("ts")
-    val flat = Cdc.enrichWatchedRatio(
-      Cdc.flattenEnvelope(env), "watched", "duration", rounded = false)
+    val flat = cdcFlat(cdcWire(s, d))
       .persist() // k slice merges would re-run the full-events JSON parse k times
     def slice(i: Int) = flat.filter(pmod(col("document_id"), lit(3)) === lit(i))
     val cols = Seq("user_id", "document_id", "ts_us").map(col)
@@ -3060,14 +2424,10 @@ object StreamingQueries {
       flat.filter(pmod(col("document_id"), lit(3)) <= lit(upTo)),
       Seq("user_id"), Seq("ts_us", "document_id")).select(cols: _*)
     def assertEq(a: DataFrame, b: DataFrame, what: String): Unit =
-      // one aggregation action for the symmetric difference instead of
-      // two except subtrees (round 16) — same witness on these
-      // key-unique LWW frames
-      require(bagEqual(a, b),
+      require(bagEqual(a, b, Seq("user_id")),
         s"$what: table content diverged from the one-shot oracle")
 
-    val sink = new MergeSink(s, s"$base/state",
-      keys = Seq("user_id"), orderCols = Seq("ts_us", "document_id"), nBuckets = 8)
+    val sink = lwwSink(s, s"$base/state", nBuckets = 8)
     sink.merge(slice(0))
     val vPre = sink.versions().max
     sink.beginMigration(16)
@@ -3106,8 +2466,7 @@ object StreamingQueries {
     // the three slices' union (= flat) builds the identical content in
     // one route+write instead of three (round 16, guide §2.4 — this
     // side is oracle scaffolding, not the progressive capability).
-    val oneShot = new MergeSink(s, s"$base/oneshot",
-      keys = Seq("user_id"), orderCols = Seq("ts_us", "document_id"), nBuckets = 8)
+    val oneShot = lwwSink(s, s"$base/oneshot", nBuckets = 8)
     oneShot.merge(flat)
     flat.unpersist()
     val re16 = oneShot.rebucket(16)
@@ -3146,14 +2505,10 @@ object StreamingQueries {
     */
   def q251StreamingReservoir(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q251_")
-    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val resDir = s"$base/reservoir"
     val docs = graft.core.Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .filter(col("n_chars") > 0)
-    writeSliceFeed(docs, pmod(col("doc_id"), lit(4)), 4, inDir)
-    val wire = StructType(Seq(
-      StructField("doc_id", LongType), StructField("lang", StringType),
-      StructField("n_chars", LongType)))
+    val in = feed(docs, pmod(col("doc_id"), lit(4)), 4, s"$base/in")
     val twoTo52 = 4503599627370496.0
     def scoreOf(df: DataFrame): DataFrame = {
       val u = conv(substring(md5(col("doc_id").cast("string")), 1, 13), 16, 10)
@@ -3161,32 +2516,25 @@ object StreamingQueries {
       df.withColumn("priority", pow(u, lit(1.0) / col("n_chars").cast("double")))
     }
     val topk = udaf(graft.functions.TopK(10))
-    val sink = new MergeSink(s, resDir,
+    val sink = new MergeSink(s, s"$base/reservoir",
       keys = Seq("lang", "rk"), orderCols = Seq("upd"), nBuckets = 4)
-    val q = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val arrivals = scoreOf(batch)
-          .select(col("lang"), col("priority"), col("doc_id"), col("n_chars"))
-        val pool =
-          if (sink.versions().isEmpty) arrivals
-          else arrivals.unionByName(sink.read()
-            .select(col("lang"), col("priority"), col("doc_id"), col("n_chars")))
-        sink.merge(pool
-          .groupBy(col("lang"))
-          .agg(topk(col("priority"), col("doc_id")).as("top"))
-          .select(col("lang"), posexplode(col("top")))
-          .select(col("lang"), (col("pos") + 1).cast("long").as("rk"),
-            col("col._1").as("priority"), col("col._2").as("doc_id"))
-          .join(pool.select(col("doc_id"), col("n_chars")).distinct(), Seq("doc_id"))
-          .select(col("lang"), col("rk"), col("priority"), col("doc_id"), col("n_chars"))
-          .withColumn("upd", lit(bid)), materializeBatch = true)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(in.stream(), s"$base/ckpt") { (batch, bid) =>
+      val arrivals = scoreOf(batch)
+        .select(col("lang"), col("priority"), col("doc_id"), col("n_chars"))
+      val pool =
+        if (sink.versions().isEmpty) arrivals
+        else arrivals.unionByName(sink.read()
+          .select(col("lang"), col("priority"), col("doc_id"), col("n_chars")))
+      sink.merge(pool
+        .groupBy(col("lang"))
+        .agg(topk(col("priority"), col("doc_id")).as("top"))
+        .select(col("lang"), posexplode(col("top")))
+        .select(col("lang"), (col("pos") + 1).cast("long").as("rk"),
+          col("col._1").as("priority"), col("col._2").as("doc_id"))
+        .join(pool.select(col("doc_id"), col("n_chars")).distinct(), Seq("doc_id"))
+        .select(col("lang"), col("rk"), col("priority"), col("doc_id"), col("n_chars"))
+        .withColumn("upd", lit(bid)), materializeBatch = true)
+    }
     require(sink.versions().size == 4,
       s"expected 4 reservoir commits, got ${sink.versions()}")
     sink.read().select(col("lang"), col("rk"), col("doc_id"), col("n_chars"))
@@ -3211,15 +2559,11 @@ object StreamingQueries {
     */
   def q105StatsPrune(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q105_")
-    val stateDir = s"$base/state"
-    val env = CdcQueries.envelope(s, d)
-      .withColumn("ts_us", unix_micros(col("ts"))).drop("ts")
-    val flat = Cdc.enrichWatchedRatio(
-      Cdc.flattenEnvelope(env), "watched", "duration", rounded = false)
+    val flat = cdcFlat(cdcWire(s, d))
       .persist() // k slice merges would re-run the full-events JSON parse k times
     val nBuckets = 64
     val width = 64L
-    val sink = new MergeSink(s, stateDir,
+    val sink = new MergeSink(s, s"$base/state",
       keys = Seq("user_id"), orderCols = Seq("ts_us", "document_id"),
       nBuckets = nBuckets, statsCols = Seq("user_id"), rangeBucketWidth = Some(width))
     (0 until 2).foreach(i =>
@@ -3231,33 +2575,11 @@ object StreamingQueries {
     if (maxUser < width * nBuckets) // unwrapped domain -> skipping MUST engage
       require(resolved.size < held.size,
         s"zone maps resolved ${resolved.size} of ${held.size} buckets — no skipping")
-    sink.readRange("user_id", 40.0, 79.0).select(
-      col("user_id"),
-      col("document_id").as("last_document_id"),
-      col("operation").as("last_operation"),
-      expr("ts_us div 1000").as("last_ms"),
-      col("watched_ratio").as("last_ratio"))
+    lastState(sink.readRange("user_id", 40.0, 79.0))
   }
 
   /** q66's LWW state restricted to the gated user_id range. */
-  val q105Sql: String =
-    """SELECT user_id, document_id AS last_document_id,
-      |  operation AS last_operation, epoch_ms(ts) AS last_ms,
-      |  (CASE WHEN coalesce(duration, 1) > 0
-      |        THEN coalesce(watched, 0.0) / coalesce(duration, 1)
-      |        ELSE 0.0 END) AS last_ratio
-      |FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-      |        ORDER BY ts DESC, document_id DESC) AS rn
-      |      FROM (SELECT
-      |        CASE WHEN event_type = 'signup' THEN 'insert'
-      |             WHEN event_type = 'error' THEN 'delete'
-      |             ELSE 'update' END AS operation,
-      |        event_id AS document_id, user_id, ts,
-      |        CASE WHEN event_type = 'error' THEN NULL ELSE value END AS watched,
-      |        CASE WHEN event_type = 'error' THEN NULL
-      |             ELSE CAST(json_extract_string(props, '$.k') AS INT) END AS duration
-      |      FROM events))
-      |WHERE rn = 1 AND user_id BETWEEN 40 AND 79""".stripMargin
+  val q105Sql: String = lwwSql(states = " AND user_id BETWEEN 40 AND 79")
 
   // ---------------------------------------------------------------- q140
   /** Z-ORDER MULTI-DIMENSIONAL SKIPPING at the gate: events are
@@ -3327,13 +2649,9 @@ object StreamingQueries {
   def q106PurgeCompliance(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q106_")
     val stateDir = s"$base/state"
-    val env = CdcQueries.envelope(s, d)
-      .withColumn("ts_us", unix_micros(col("ts"))).drop("ts")
-    val flat = Cdc.enrichWatchedRatio(
-      Cdc.flattenEnvelope(env), "watched", "duration", rounded = false)
+    val flat = cdcFlat(cdcWire(s, d))
       .persist() // k slice merges would re-run the full-events JSON parse k times
-    val sink = new MergeSink(s, stateDir,
-      keys = Seq("user_id"), orderCols = Seq("ts_us", "document_id"), nBuckets = 16)
+    val sink = lwwSink(s, stateDir)
     (0 until 3).foreach(i =>
       sink.merge(flat.filter(pmod(col("document_id"), lit(3)) === lit(i))))
     val takedown = flat.select(col("user_id")).distinct()
@@ -3346,33 +2664,11 @@ object StreamingQueries {
       .parquet(s"$stateDir/data")
       .filter(pmod(col("user_id"), lit(7)) === lit(3)).count()
     require(residual == 0, s"$residual purged rows still physically on disk")
-    sink.read().select(
-      col("user_id"),
-      col("document_id").as("last_document_id"),
-      col("operation").as("last_operation"),
-      expr("ts_us div 1000").as("last_ms"),
-      col("watched_ratio").as("last_ratio"))
+    lastState(sink.read())
   }
 
   /** The LWW state minus the takedown keys. */
-  val q106Sql: String =
-    """SELECT user_id, document_id AS last_document_id,
-      |  operation AS last_operation, epoch_ms(ts) AS last_ms,
-      |  (CASE WHEN coalesce(duration, 1) > 0
-      |        THEN coalesce(watched, 0.0) / coalesce(duration, 1)
-      |        ELSE 0.0 END) AS last_ratio
-      |FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-      |        ORDER BY ts DESC, document_id DESC) AS rn
-      |      FROM (SELECT
-      |        CASE WHEN event_type = 'signup' THEN 'insert'
-      |             WHEN event_type = 'error' THEN 'delete'
-      |             ELSE 'update' END AS operation,
-      |        event_id AS document_id, user_id, ts,
-      |        CASE WHEN event_type = 'error' THEN NULL ELSE value END AS watched,
-      |        CASE WHEN event_type = 'error' THEN NULL
-      |             ELSE CAST(json_extract_string(props, '$.k') AS INT) END AS duration
-      |      FROM events))
-      |WHERE rn = 1 AND user_id % 7 <> 3""".stripMargin
+  val q106Sql: String = lwwSql(states = " AND user_id % 7 <> 3")
 
   // ---------------------------------------------------------------- q110
   /** CHANGE DATA FEED at the gate: the 4-batch history commits as 4
@@ -3391,23 +2687,13 @@ object StreamingQueries {
     */
   def q110ChangeFeed(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q110_")
-    val stateDir = s"$base/state"
-    val env = CdcQueries.envelope(s, d)
-      .withColumn("ts_us", unix_micros(col("ts"))).drop("ts")
-    val flat = Cdc.enrichWatchedRatio(
-      Cdc.flattenEnvelope(env), "watched", "duration", rounded = false)
+    val flat = cdcFlat(cdcWire(s, d))
       .persist() // k slice merges would re-run the full-events JSON parse k times
-    val sink = new MergeSink(s, stateDir,
-      keys = Seq("user_id"), orderCols = Seq("ts_us", "document_id"), nBuckets = 16)
+    val sink = lwwSink(s, s"$base/state")
     (0 until 4).foreach(i =>
       sink.merge(flat.filter(pmod(col("document_id"), lit(4)) === lit(i))))
     flat.unpersist()
-    sink.changesBetween(2L, 4L).select(
-      col("user_id"), col("_change_type"),
-      col("document_id").as("last_document_id"),
-      col("operation").as("last_operation"),
-      expr("ts_us div 1000").as("last_ms"),
-      col("watched_ratio").as("last_ratio"))
+    lastState(sink.changesBetween(2L, 4L), col("_change_type"))
   }
 
   /** The diff of the two LWW prefixes (batches 0-1 vs all four). */
@@ -3453,28 +2739,18 @@ object StreamingQueries {
     */
   def q119StreamingCurationIndex(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q119_")
-    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val idxDir = s"$base/index"
     val docs = graft.core.Tables.documents(s, d).select(col("doc_id"), col("text"))
     // one file per doc_id%4 slice -> one micro-batch per file
-    val nFiles = writeSliceFeed(docs, pmod(col("doc_id"), lit(4)), 4, inDir,
-      format = "json")
-    val wire = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val stream = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", indexFilesPerTrigger(s).toString).json(inDir)
+    val in = feed(docs, pmod(col("doc_id"), lit(4)), 4, s"$base/in", "json")
     // docs arrive exactly once; n_tokens is a deterministic LWW
     // tiebreak disjoint from the key, as MergeSink requires
-    val sink = new MergeSink(s, idxDir,
+    val sink = new MergeSink(s, s"$base/index",
       keys = Seq("doc_id"), orderCols = Seq("n_tokens"), nBuckets = 8)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink.merge(ExtQueries.repetitionMetrics(batch))
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val expectedCommits = (nFiles + indexFilesPerTrigger(s) - 1) / indexFilesPerTrigger(s)
+    val perTrigger = indexFilesPerTrigger(s)
+    drain(in.stream(perTrigger), s"$base/ckpt") { (batch, _) =>
+      sink.merge(ExtQueries.repetitionMetrics(batch))
+    }
+    val expectedCommits = (in.files + perTrigger - 1) / perTrigger
     require(sink.versions().size == expectedCommits,
       s"expected $expectedCommits incremental index commits, got ${sink.versions()}")
     sink.read().select(col("doc_id"), col("n_tokens"), col("dup_unigram_frac"),
@@ -3593,56 +2869,21 @@ object StreamingQueries {
     */
   def q129StreamingTrending(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q129_")
-    val inDir = new java.io.File(base, "in"); inDir.mkdirs()
-    val ckpt = s"$base/ckpt"
     val ev = graft.core.Tables.events(s, d)
       .select(col("event_id"), col("event_type"), col("value"),
               unix_micros(col("ts")).as("ts_us"))
-    val mm = ev.agg(min(col("ts_us")), max(col("ts_us"))).first()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val step = (hi - lo) / 2 + 1
-    def writeSlice(df: DataFrame, i: Int): Unit = {
-      val tmp = s"$base/slice$i"
-      df.coalesce(1).write.json(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-        .getOrElse(sys.error(s"no part-*.json under $tmp — empty slice or changed writer naming"))
-      val dest = new java.io.File(inDir, f"$i%02d.json")
-      Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(60000L * (i + 1))
+    val in = watermarkFeed(ev, 2, s"$base/in") { (k, at) =>
+      s.range(1).select(lit(-1L - k).as("event_id"), lit("x").as("event_type"),
+        lit(0.0).as("value"), lit(at).as("ts_us"))
     }
-    (0 until 2).foreach { i =>
-      writeSlice(ev.filter(col("ts_us") >= lo + i * step &&
-                           col("ts_us") <  lo + (i + 1) * step), i)
-    }
-    val day_us = 86400000000L
-    writeSlice(s.range(1).select(lit(-1L).as("event_id"), lit("x").as("event_type"),
-      lit(0.0).as("value"), lit(hi + 10 * day_us).as("ts_us")), 2)
-    writeSlice(s.range(1).select(lit(-2L).as("event_id"), lit("x").as("event_type"),
-      lit(0.0).as("value"), lit(hi + 20 * day_us).as("ts_us")), 3)
-
     val topk = udaf(graft.functions.TopK(3))
-    val wire = StructType(Seq(
-      StructField("event_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("ts_us", LongType)))
-    val trending = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").json(inDir.toString)
+    val trending = in.stream()
       .select(col("event_id"), col("event_type"), col("value"),
               timestamp_micros(col("ts_us")).as("ts"))
       .withWatermark("ts", "1 second")
       .groupBy(window(col("ts"), "6 hours"), col("event_type"))
       .agg(topk(col("value"), col("event_id")).as("top"))
-    val memName = "q129_trending_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = startStateful(s) {
-      trending.writeStream
-        .format("memory").queryName(memName)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    s.table(memName)
+    drainToMemory(trending, s"$base/ckpt")
       .filter(col("event_type") =!= "x")
       .select(col("event_type"), unix_millis(col("window.start")).as("w_start_ms"),
               posexplode(col("top")))
@@ -3686,54 +2927,19 @@ object StreamingQueries {
     */
   def q134StreamingDistinct(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q134_")
-    val inDir = new java.io.File(base, "in"); inDir.mkdirs()
-    val ckpt = s"$base/ckpt"
     val ev = graft.core.Tables.events(s, d)
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
-    val mm = ev.agg(min(col("ts_us")), max(col("ts_us"))).first()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val step = (hi - lo) / 2 + 1
-    def writeSlice(df: DataFrame, i: Int): Unit = {
-      val tmp = s"$base/slice$i"
-      df.coalesce(1).write.json(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-        .getOrElse(sys.error(s"no part-*.json under $tmp — empty slice or changed writer naming"))
-      val dest = new java.io.File(inDir, f"$i%02d.json")
-      Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(60000L * (i + 1))
+    val in = watermarkFeed(ev, 2, s"$base/in") { (k, at) =>
+      s.range(1).select(lit(-1L - k).as("user_id"), lit("x").as("event_type"),
+        lit(at).as("ts_us"))
     }
-    (0 until 2).foreach { i =>
-      writeSlice(ev.filter(col("ts_us") >= lo + i * step &&
-                           col("ts_us") <  lo + (i + 1) * step), i)
-    }
-    val day_us = 86400000000L
-    writeSlice(s.range(1).select(lit(-1L).as("user_id"), lit("x").as("event_type"),
-      lit(hi + 10 * day_us).as("ts_us")), 2)
-    writeSlice(s.range(1).select(lit(-2L).as("user_id"), lit("x").as("event_type"),
-      lit(hi + 20 * day_us).as("ts_us")), 3)
-
-    val wire = StructType(Seq(
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("ts_us", LongType)))
-    val uniques = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").json(inDir.toString)
+    val uniques = in.stream()
       .select(col("user_id"), col("event_type"),
               timestamp_micros(col("ts_us")).as("ts"))
       .withWatermark("ts", "1 second")
       .groupBy(window(col("ts"), "6 hours"), col("event_type"))
       .agg(approx_count_distinct(col("user_id"), rsd = 0.02).as("approx_users"))
-    val memName = "q134_uniques_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = startStateful(s) {
-      uniques.writeStream
-        .format("memory").queryName(memName)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    val streamed = s.table(memName)
+    val streamed = drainToMemory(uniques, s"$base/ckpt")
       .filter(col("event_type") =!= "x")
       .select(col("event_type"), unix_millis(col("window.start")).as("w_start_ms"),
               col("approx_users"))
@@ -3765,54 +2971,19 @@ object StreamingQueries {
     */
   def q135StreamingQuantiles(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q135_")
-    val inDir = new java.io.File(base, "in"); inDir.mkdirs()
-    val ckpt = s"$base/ckpt"
     val accuracy = 1000
     val ev = graft.core.Tables.events(s, d)
       .select(col("event_type"), col("value"), unix_micros(col("ts")).as("ts_us"))
-    val mm = ev.agg(min(col("ts_us")), max(col("ts_us"))).first()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val step = (hi - lo) / 2 + 1
-    def writeSlice(df: DataFrame, i: Int): Unit = {
-      val tmp = s"$base/slice$i"
-      df.coalesce(1).write.json(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-        .getOrElse(sys.error(s"no part-*.json under $tmp — empty slice or changed writer naming"))
-      val dest = new java.io.File(inDir, f"$i%02d.json")
-      Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(60000L * (i + 1))
+    val in = watermarkFeed(ev, 2, s"$base/in") { (_, at) =>
+      s.range(1).select(lit("x").as("event_type"), lit(0.0).as("value"),
+        lit(at).as("ts_us"))
     }
-    (0 until 2).foreach { i =>
-      writeSlice(ev.filter(col("ts_us") >= lo + i * step &&
-                           col("ts_us") <  lo + (i + 1) * step), i)
-    }
-    val day_us = 86400000000L
-    writeSlice(s.range(1).select(lit("x").as("event_type"), lit(0.0).as("value"),
-      lit(hi + 10 * day_us).as("ts_us")), 2)
-    writeSlice(s.range(1).select(lit("x").as("event_type"), lit(0.0).as("value"),
-      lit(hi + 20 * day_us).as("ts_us")), 3)
-
-    val wire = StructType(Seq(
-      StructField("event_type", StringType), StructField("value", DoubleType),
-      StructField("ts_us", LongType)))
-    val meds = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").json(inDir.toString)
+    val meds = in.stream()
       .select(col("event_type"), col("value"), timestamp_micros(col("ts_us")).as("ts"))
       .withWatermark("ts", "1 second")
       .groupBy(window(col("ts"), "6 hours"), col("event_type"))
       .agg(expr(s"approx_percentile(value, 0.5D, $accuracy)").as("est"))
-    val memName = "q135_quant_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = startStateful(s) {
-      meds.writeStream
-        .format("memory").queryName(memName)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    val streamed = s.table(memName)
+    val streamed = drainToMemory(meds, s"$base/ckpt")
       .filter(col("event_type") =!= "x")
       .select(col("event_type"), unix_millis(col("window.start")).as("w_start_ms"),
               col("est"))
@@ -3862,50 +3033,20 @@ object StreamingQueries {
   def q162TransformWithState(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val base = graft.core.TempDirs.scoped("graft_q162_")
-    val inDir = new java.io.File(base, "in"); inDir.mkdirs()
-    val ckpt = s"$base/ckpt"
     val ev = graft.core.Tables.events(s, d)
       .filter(col("event_type") === lit("purchase"))
       .select(col("user_id"), round(col("value") * 100).cast("long").as("cents"),
               unix_micros(col("ts")).as("ts_us"))
-    val mm = ev.agg(min(col("ts_us")), max(col("ts_us"))).first()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val step = (hi - lo) / 4 + 1
-    (0 until 4).foreach { i =>
-      val tmp = s"$base/slice$i"
-      ev.filter(col("ts_us") >= lo + i * step && col("ts_us") < lo + (i + 1) * step)
-        .coalesce(1).write.json(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-        .getOrElse(sys.error(s"no part-*.json under $tmp — empty slice or changed writer naming"))
-      val dest = new java.io.File(inDir, f"$i%02d.json")
-      Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(60000L * (i + 1))
-    }
-    val wire = StructType(Seq(
-      StructField("user_id", LongType), StructField("cents", LongType),
-      StructField("ts_us", LongType)))
-    val running = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").json(inDir.toString)
+    val running = eventTimeFeed(ev, 4, s"$base/in").stream()
       .select(col("user_id"), col("cents")).as[(Long, Long)]
       .groupByKey(_._1)
       .transformWithState(new graft.streaming.RunningPurchaseStats,
         org.apache.spark.sql.streaming.TimeMode.None(),
         org.apache.spark.sql.streaming.OutputMode.Update())
       .toDF("user_id", "n", "sum_c", "max_c")
-    val memName = "q162_tws_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = startStateful(s) {
-      running.writeStream
-        .format("memory").queryName(memName)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
     // final fold per key = emission with the largest count (strictly
     // increasing), unpacked from one deterministic max(struct)
-    s.table(memName)
+    drainToMemory(running, s"$base/ckpt", "update")
       .groupBy(col("user_id"))
       .agg(max(struct(col("n"), col("sum_c"), col("max_c"))).as("fin"))
       .select(col("user_id"), col("fin.n").as("n_purchases"),
@@ -3968,49 +3109,21 @@ object StreamingQueries {
     */
   def q164StreamStaticJoin(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q164_")
-    val inDir = new java.io.File(base, "in"); inDir.mkdirs()
-    val ckpt = s"$base/ckpt"
     val ev = graft.core.Tables.events(s, d)
       .filter(col("event_type") === lit("purchase"))
       .select(col("event_id"), col("user_id"),
         round(col("value") * 100).cast("long").as("cents"),
         unix_micros(col("ts")).as("ts_us"))
-    val mm = ev.agg(min(col("ts_us")), max(col("ts_us"))).first()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val step = (hi - lo) / 4 + 1
-    (0 until 4).foreach { i =>
-      val tmp = s"$base/slice$i"
-      ev.filter(col("ts_us") >= lo + i * step && col("ts_us") < lo + (i + 1) * step)
-        .coalesce(1).write.json(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-        .getOrElse(sys.error(s"no part-*.json under $tmp — empty slice or changed writer naming"))
-      val dest = new java.io.File(inDir, f"$i%02d.json")
-      Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(60000L * (i + 1))
-    }
     val dim = broadcast(
       graft.core.Tables.customer(s, d)
         .join(graft.core.Tables.nation(s, d),
           col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("n_name")))
-    val wire = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("cents", LongType), StructField("ts_us", LongType)))
-    val enriched = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").json(inDir.toString)
+    val enriched = eventTimeFeed(ev, 4, s"$base/in").stream()
       .join(dim, col("user_id") === col("c_custkey"))
       .select(col("event_id"), col("user_id"),
         col("n_name").as("nation"), col("cents"))
-    val memName = "q164_ss_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = enriched.writeStream
-      .format("memory").queryName(memName)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(memName)
+    drainToMemory(enriched, s"$base/ckpt")
   }
 
   val q164Sql: String =
@@ -4037,47 +3150,17 @@ object StreamingQueries {
   def q165MapListState(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val base = graft.core.TempDirs.scoped("graft_q165_")
-    val inDir = new java.io.File(base, "in"); inDir.mkdirs()
-    val ckpt = s"$base/ckpt"
     val ev = graft.core.Tables.events(s, d)
       .select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("ts_us"))
-    val mm = ev.agg(min(col("ts_us")), max(col("ts_us"))).first()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val step = (hi - lo) / 4 + 1
-    (0 until 4).foreach { i =>
-      val tmp = s"$base/slice$i"
-      ev.filter(col("ts_us") >= lo + i * step && col("ts_us") < lo + (i + 1) * step)
-        .coalesce(1).write.json(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-        .getOrElse(sys.error(s"no part-*.json under $tmp — empty slice or changed writer naming"))
-      val dest = new java.io.File(inDir, f"$i%02d.json")
-      Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(60000L * (i + 1))
-    }
-    val wire = StructType(Seq(
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("ts_us", LongType)))
-    val running = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").json(inDir.toString)
+    val running = eventTimeFeed(ev, 4, s"$base/in").stream()
       .select(col("user_id"), col("event_type")).as[(Long, String)]
       .groupByKey(_._1)
       .transformWithState(new graft.streaming.UserActivityCounts,
         org.apache.spark.sql.streaming.TimeMode.None(),
         org.apache.spark.sql.streaming.OutputMode.Update())
       .toDF("user_id", "event_type", "n", "nb")
-    val memName = "q165_ml_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = startStateful(s) {
-      running.writeStream
-        .format("memory").queryName(memName)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    s.table(memName)
+    drainToMemory(running, s"$base/ckpt", "update")
       .groupBy(col("user_id"), col("event_type"))
       .agg(max(struct(col("nb"), col("n"))).as("fin"))
       .select(col("user_id"), col("event_type"),
@@ -4105,10 +3188,9 @@ object StreamingQueries {
     * close) is built from. Each user's open session lives in a
     * RocksDB ValueState; a timer at `last_event + gap` fires when the
     * WATERMARK passes it, emitting the closed session in Append mode.
-    * Feed = the q84 harness: globally time-ordered micro-batch slices
-    * plus two far-future sentinel rows whose only job is to push the
-    * watermark past every real deadline (the second sentinel buys the
-    * extra batch in which the first's watermark takes effect). The
+    * Feed = q84's [[StreamGate.watermarkFeed]]: globally time-ordered
+    * micro-batch slices plus the sentinel flush that pushes the
+    * watermark past every real deadline. The
     * oracle is q78's gaps-and-islands SQL extended with the session
     * spend — streamed timer emission must equal the one-shot batch
     * sessionization exactly (same `diff >= gap` boundary rule).
@@ -4116,41 +3198,14 @@ object StreamingQueries {
   def q173SessionTimers(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val base = graft.core.TempDirs.scoped("graft_q173_")
-    val inDir = new java.io.File(base, "in"); inDir.mkdirs()
-    val ckpt = s"$base/ckpt"
-
     val ev = graft.core.Tables.events(s, d)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         coalesce(round(col("value") * 100).cast("long"), lit(0L)).as("cents"))
-    val mm = ev.agg(min(col("ts_us")), max(col("ts_us"))).first()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val step = (hi - lo) / 2 + 1
-
-    def writeSlice(df: DataFrame, i: Int): Unit = {
-      val tmp = s"$base/slice$i"
-      df.coalesce(1).write.json(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-        .getOrElse(sys.error(s"no part-*.json under $tmp — empty slice or changed writer naming"))
-      val dest = new java.io.File(inDir, f"$i%02d.json")
-      Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(60000L * (i + 1))
+    val in = watermarkFeed(ev, 2, s"$base/in") { (k, at) =>
+      s.range(1).select(lit(-1L - k).as("user_id"), lit(at).as("ts_us"),
+        lit(0L).as("cents"))
     }
-    (0 until 2).foreach { i =>
-      writeSlice(ev.filter(col("ts_us") >= lo + i * step &&
-                           col("ts_us") <  lo + (i + 1) * step), i)
-    }
-    val day_us = 86400000000L
-    writeSlice(s.range(1).select(lit(-1L).as("user_id"),
-      lit(hi + 10 * day_us).as("ts_us"), lit(0L).as("cents")), 2)
-    writeSlice(s.range(1).select(lit(-2L).as("user_id"),
-      lit(hi + 20 * day_us).as("ts_us"), lit(0L).as("cents")), 3)
-
-    val wire = StructType(Seq(
-      StructField("user_id", LongType), StructField("ts_us", LongType),
-      StructField("cents", LongType)))
-    val sessions = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").json(inDir.toString)
+    val sessions = in.stream()
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withWatermark("ts", "1 second")
       .select(col("user_id"), col("ts_us"), col("cents"))
@@ -4160,17 +3215,7 @@ object StreamingQueries {
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         org.apache.spark.sql.streaming.OutputMode.Append())
       .toDF("user_id", "start_ms", "end_ms", "n_events", "sum_cents")
-    val memName = "q173_timers_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = startStateful(s) {
-      sessions.writeStream
-        .format("memory").queryName(memName)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    s.table(memName).filter(col("user_id") >= 0)
+    drainToMemory(sessions, s"$base/ckpt").filter(col("user_id") >= 0)
   }
 
   val q173Sql: String =
@@ -4217,59 +3262,28 @@ object StreamingQueries {
     */
   def q196LateDataAccounting(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q196_")
-    val inDir = new java.io.File(base, "in"); inDir.mkdirs()
-    val ckpt = s"$base/ckpt"
     val ev = graft.core.Tables.events(s, d)
       .select(col("event_type"), unix_micros(col("ts")).as("ts_us"),
         coalesce(round(col("value") * 100).cast("long"), lit(0L)).as("cents"))
-    val mm = ev.agg(min(col("ts_us")), max(col("ts_us"))).first()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
+    val (lo, hi) = span(ev)
     val third = (hi - lo) / 3
     val (cut1, cut2) = (lo + 2 * third, lo + third)
-
-    def writeSlice(df: DataFrame, i: Int): Unit = {
-      val tmp = s"$base/slice$i"
-      df.coalesce(1).write.json(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-        .getOrElse(sys.error(s"no part-*.json under $tmp — empty slice or changed writer naming"))
-      val dest = new java.io.File(inDir, f"$i%02d.json")
-      Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(60000L * (i + 1))
-    }
     // upper third FIRST (sets the max); middle third rides the
     // one-batch late-filter lag; lowest third is genuinely dropped
-    writeSlice(ev.filter(col("ts_us") >= cut1), 0)
-    writeSlice(ev.filter(col("ts_us") >= cut2 && col("ts_us") < cut1), 1)
-    writeSlice(ev.filter(col("ts_us") < cut2), 2)
-    val day_us = 86400000000L
-    writeSlice(s.range(1).select(lit("__sentinel").as("event_type"),
-      lit(hi + 10 * day_us).as("ts_us"), lit(0L).as("cents")), 3)
-    writeSlice(s.range(1).select(lit("__sentinel").as("event_type"),
-      lit(hi + 20 * day_us).as("ts_us"), lit(0L).as("cents")), 4)
-
-    val wire = StructType(Seq(
-      StructField("event_type", StringType), StructField("ts_us", LongType),
-      StructField("cents", LongType)))
-    val agg = s.readStream.schema(wire)
-      .option("maxFilesPerTrigger", "1").json(inDir.toString)
+    val sliced = ev.withColumn(SliceCol, when(col("ts_us") >= cut1, 0L)
+      .when(col("ts_us") >= cut2, 1L).otherwise(2L))
+    val in = flushFeed(sliced, 3, hi, s"$base/in") { (_, at) =>
+      s.range(1).select(lit("__sentinel").as("event_type"), lit(at).as("ts_us"),
+        lit(0L).as("cents"))
+    }
+    val agg = in.stream()
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withWatermark("ts", "1 second")
       .groupBy(window(col("ts"), "6 hours"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
       .select(unix_millis(col("window.start")).as("w_start_ms"),
         col("event_type"), col("n"), col("sum_cents"))
-    val memName = "q196_late_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = startStateful(s) {
-      agg.writeStream
-        .format("memory").queryName(memName)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    s.table(memName).filter(col("event_type") =!= "__sentinel")
+    drainToMemory(agg, s"$base/ckpt").filter(col("event_type") =!= "__sentinel")
   }
 
   val q196Sql: String =

@@ -887,7 +887,7 @@ class StreamingSpec extends SparkSpec {
       Seq((21L, 31L), (5L, 40L)))              // post-restart: absorb + label-lowering
     slices.zipWithIndex.foreach { case (es, i) =>
       es.toDF("id_a", "id_b").coalesce(1).write.mode("append").parquet(inDir)
-      graft.queries.StreamingQueries.stampBatchMtime(inDir, i)
+      graft.queries.StreamGate.stampBatchMtime(inDir, i)
     }
     val wire = StructType(Seq(
       StructField("id_a", LongType), StructField("id_b", LongType)))
