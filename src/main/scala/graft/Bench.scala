@@ -227,7 +227,7 @@ object Bench {
     // silently yielded an empty map on any format drift (ADVICE low).
     // Migration: an old-format artifact (pre round 9) has no `best`
     // section; its `queries` WERE the keep-min minima, so they seed it.
-    // Parsed BEFORE the sweep: the lazy-repeat rule needs each query's
+    // Read BEFORE the sweep: the lazy-repeat rule needs each query's
     // historical best at measurement time. The prior `host_ratio`
     // seeds the normalizer (round 14) so the first ~19 queries of a
     // slow-host sweep aren't judged against a fast-host yardstick.

@@ -878,8 +878,8 @@ object StreamingQueries {
     sink.rollback(2L) // v4 = restore of v2
     require(sink.versions() == Seq(1L, 2L, 3L, 4L),
       "rollback is a new version; nothing is erased")
-    require(sink.manifest.mappingAt(4L) == sink.manifest.mappingAt(2L) &&
-            sink.manifest.dvAt(4L) == sink.manifest.dvAt(2L),
+    val (v4, v2) = (sink.manifest.at(4L), sink.manifest.at(2L))
+    require(v4.mapping == v2.mapping && v4.dv == v2.dv,
       "rollback is metadata-only: v4 re-points at v2's generations verbatim")
     require(bagEqual(sink.read(), sink.readAt(2L), Seq("user_id")),
       "restored state must equal the target version row-for-row")
@@ -1884,11 +1884,11 @@ object StreamingQueries {
       sink.merge(ev.filter(pmod(col("event_id"), lit(2)) === i).withColumn("upd", lit(i.toLong)))
     }
     val vBefore = sink.versions().max
-    val mapBefore = sink.manifest.mapping()
+    val mapBefore = sink.manifest.current().mapping
     // scattered merge-on-read delete: every 13th event, zero rewrite
     sink.deleteVector(ev.filter(pmod(col("event_id"), lit(13)) === 0)
       .select(col("event_id")))
-    require(sink.manifest.mapping() == mapBefore,
+    require(sink.manifest.current().mapping == mapBefore,
       "a deletion-vector commit must not rewrite or remap any data bucket")
     require(sink.deleteVectors().nonEmpty, "expected outstanding deletion vectors")
     require(sink.read().filter(pmod(col("event_id"), lit(13)) === 0).isEmpty,
@@ -2237,11 +2237,11 @@ object StreamingQueries {
     }
     // scattered merge-on-read delete, LOCKSTEP DVs on both structures
     val doomed = ev.filter(pmod(col("event_id"), lit(11)) === 0)
-    val (pMap, iMap) = (primary.manifest.mapping(), index.manifest.mapping())
+    val (pMap, iMap) = (primary.manifest.current().mapping, index.manifest.current().mapping)
     lockstep(
       primary.deleteVector(doomed.select(col("event_id"))),
       index.deleteVector(doomed.select(col("type_id"), col("event_id"))))
-    require(primary.manifest.mapping() == pMap && index.manifest.mapping() == iMap,
+    require(primary.manifest.current().mapping == pMap && index.manifest.current().mapping == iMap,
       "lockstep DV commits must not rewrite or remap any data bucket")
     require(primary.deleteVectors().nonEmpty && index.deleteVectors().nonEmpty,
       "expected outstanding deletion vectors on both structures")
@@ -2325,10 +2325,10 @@ object StreamingQueries {
       index.merge(cells.filter(pmod(col("cid"), lit(2)) === i).withColumn("upd", lit(i.toLong)))
     }
     // merge-on-read delete of every 9th vector: zero data-file rewrite
-    val mapBefore = index.manifest.mapping()
+    val mapBefore = index.manifest.current().mapping
     index.deleteVector(cells.filter(pmod(col("cid"), lit(9)) === 0)
       .select(col("cent_id"), col("cid")))
-    require(index.manifest.mapping() == mapBefore,
+    require(index.manifest.current().mapping == mapBefore,
       "ANN delete must not rewrite or remap any index bucket")
     // probe: nprobe=4 cells per query, routed through zone-map pruning
     val probes = {

@@ -76,9 +76,7 @@ final class AggSink(
     * log is shared with MergeSink — every fold is a numbered snapshot).
     */
   def readAt(v: Long): DataFrame =
-    manifest.snapshotAt(v).map(_.drop(BucketCol, FenceCol).filter(col(CountCol) =!= 0L))
-      .getOrElse(
-        throw new IllegalStateException(s"version $v at $path holds no buckets"))
+    visible(manifest.at(v), s"version $v at $path holds no buckets")
 
   /** Retention knob bounding version-log storage — see
     * [[graft.sink.TableManifest.expireVersions]].
@@ -94,9 +92,14 @@ final class AggSink(
     * re-apply into negative state). Insert-only views never hold a
     * zero row, so this filter is invisible to them.
     */
-  def read(): DataFrame =
-    manifest.snapshot().map(_.drop(BucketCol, FenceCol).filter(col(CountCol) =!= 0L))
-      .getOrElse(throw new IllegalStateException(s"no committed state at $path"))
+  def read(): DataFrame = visible(manifest.current(), s"no committed state at $path")
+
+  /** Snapshot `s`'s live aggregate rows; throws `missing` when `s` maps
+    * no bucket.
+    */
+  private def visible(s: TableManifest.Snapshot, missing: => String): DataFrame =
+    manifest.scan(s).map(_.drop(BucketCol, FenceCol).filter(col(CountCol) =!= 0L))
+      .getOrElse(throw new IllegalStateException(missing))
 
   /** Fold one micro-batch of RAW rows into the aggregate table.
     * `batchId` >= 0 arms the per-bucket fence (buckets that already
@@ -139,9 +142,9 @@ final class AggSink(
     val partial = partial0.withColumn(BucketCol, bucketOf)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      val s = manifest.current()
       val touched = TableManifest.touchedBuckets(partial, col(BucketCol))
       if (touched.nonEmpty) {
-        val current = manifest.mapping()
         // Per-bucket applied fences ride the fold plan itself (round
         // 15): state rows KEEP their fence through the aggregate
         // (max(FenceCol) per key — every row of a committed bucket
@@ -154,7 +157,7 @@ final class AggSink(
         // new in this batch has no state row -> null fence -> -1 ->
         // foldable, exactly the old Map.getOrElse(-1) semantics.
         val partialIn = partial.withColumn(FenceCol, lit(null).cast("long"))
-        val base = manifest.snapshot(Some(touched)) match {
+        val base = manifest.scan(s, Some(touched)) match {
           case Some(state) => state.unionByName(partialIn)
           case None        => partialIn
         }
@@ -200,10 +203,7 @@ final class AggSink(
         // a fully-fenced (replayed) batch writes no bucket dir: no
         // commit, no version — the old fold-set-empty skip, now decided
         // by the write's own output
-        if (w.buckets.nonEmpty) {
-          manifest.commit(current ++ w.mapping)
-          manifest.vacuum()
-        }
+        if (w.buckets.nonEmpty) manifest.vacuum(manifest.commit(s, s.mapping ++ w.mapping))
       }
     } finally partial.unpersist()
   }
@@ -218,7 +218,7 @@ final class AggSink(
     * read over the fence column only.
     */
   def lastBatchId: Long =
-    manifest.snapshot() match {
+    manifest.scan(manifest.current()) match {
       case None => -1L
       case Some(df) =>
         // max() over an existing-but-empty table is NULL, not an error

@@ -90,7 +90,7 @@ final class MergeSink(
     bloomBits: Int = BucketBloom.DefaultBits) {
 
   import MergeSink.{BucketCol, LayoutStride, MaxLayoutGen}
-  import TableManifest.{Layout, Migration, Written}
+  import TableManifest.{Layout, Migration, Snapshot, Written}
 
   private[graft] val manifest = new TableManifest(spark, path)
 
@@ -118,12 +118,12 @@ final class MergeSink(
     * created with; once any commit has recorded a layout header, every
     * handle — including one constructed with stale parameters, or one
     * held from before a [[rebucket]]/[[beginMigration]] — routes by
-    * the COMMITTED layout. This closes the silent-wrong-modulus hazard
-    * of handle-owned bucket arithmetic: there is nothing on the handle
-    * left to go stale.
+    * the COMMITTED layout of the operation's snapshot. This closes the
+    * silent-wrong-modulus hazard of handle-owned bucket arithmetic:
+    * there is nothing on the handle left to go stale.
     */
-  private def currentLayout: Layout =
-    manifest.layout().getOrElse(Layout(0, nBuckets, rangeBucketWidth))
+  private def layoutOf(s: Snapshot): Layout =
+    s.layout.getOrElse(Layout(0, nBuckets, rangeBucketWidth))
 
   private def logicalOf(l: Layout): Column = l.rangeWidth match {
     case Some(w) => pmod(expr(s"${keys.head} div $w"), lit(l.n.toLong)).cast("int")
@@ -154,14 +154,14 @@ final class MergeSink(
     case _ => physOf(l)
   }
 
-  private def bucketOf: Column = routing(currentLayout, manifest.migration())
+  private def bucketOf(s: Snapshot): Column = routing(layoutOf(s), s.migration)
 
-  /** The layout state every data commit must carry forward (captured
-    * under the writer lock, published in the same atomic commit as the
-    * data it routes).
+  /** The layout state every data commit must carry forward (that of
+    * the snapshot the writer planned from under the writer lock,
+    * published in the same atomic commit as the data it routes).
     */
-  private def layoutState: Option[(Layout, Option[Migration])] =
-    Some((currentLayout, manifest.migration()))
+  private def layoutState(s: Snapshot): Option[(Layout, Option[Migration])] =
+    Some((layoutOf(s), s.migration))
 
   /** Anti-join `df` against the outstanding DELETION VECTORS of the
     * requested buckets (None = all): DV parquet dirs hold key rows of
@@ -192,26 +192,50 @@ final class MergeSink(
     }
   }
 
-  /** Current committed state (bucket column dropped — callers see the
-    * logical schema they wrote). Keys deleted merge-on-read
-    * ([[deleteVector]]) are excluded. Snapshot and DV set come from
-    * separate manifest parses: a commit racing plan construction can
-    * at worst apply the NEWER version's deletes to this version's rows
-    * (recent-delete visibility, never resurrection or row loss — DV
-    * anti-joins only ever REMOVE); pruned reads, where version skew
-    * COULD lose rows, run under [[consistentRead]] instead.
+  /** Snapshot `s`'s rows of `buckets` (None = all) with their deletion
+    * vectors applied and the bucket column dropped — callers see the
+    * logical schema they wrote. Resolution is path-level: other
+    * buckets' files are never listed, let alone scanned. None when no
+    * requested bucket is mapped.
     */
-  def read(): DataFrame =
-    manifest.snapshot().map(df => applyDv(df.drop(BucketCol), manifest.dv(), None))
-      .getOrElse(throw new IllegalStateException(s"no committed state at $path"))
+  private def scan(s: Snapshot, buckets: Option[Seq[Int]]): Option[DataFrame] =
+    manifest.scan(s, buckets).map(df => applyDv(df.drop(BucketCol), s.dv, buckets))
+
+  /** Every row of `s`; throws `missing` when `s` maps no bucket. */
+  private def scanAll(s: Snapshot, missing: => String): DataFrame =
+    scan(s, None).getOrElse(throw new IllegalStateException(missing))
+
+  /** `s`'s rows of `buckets` — a schema-preserving empty frame (which
+    * optimizes to zero scans) when none of them is mapped.
+    */
+  private def scanIn(s: Snapshot, buckets: Seq[Int]): DataFrame =
+    scan(s, Some(buckets)).getOrElse(scanAll(s, s"no committed state at $path").filter(lit(false)))
+
+  /** Test seam: fires right after a read takes its snapshot, BEFORE it
+    * plans anything from it — where a racing commit must stay out of
+    * the read. Production leaves it default.
+    */
+  private[graft] var onReadSnapshot: () => Unit = () => ()
+
+  /** The snapshot a read plans from: the one taken at its call. */
+  private def readSnapshot(): Snapshot = {
+    val s = manifest.current()
+    onReadSnapshot()
+    s
+  }
+
+  /** Current committed state. Keys deleted merge-on-read
+    * ([[deleteVector]]) are excluded. Serves the snapshot current at
+    * the call: rows and deletion vectors come from that one snapshot.
+    */
+  def read(): DataFrame = scanAll(readSnapshot(), s"no committed state at $path")
 
   /** State as of retained version `v` — see class doc (TIME TRAVEL).
     * Applies the deletion vectors as of THAT version: a DV delete is a
     * real commit, so versions before it still show the rows.
     */
   def readAt(v: Long): DataFrame =
-    manifest.snapshotAt(v).map(df => applyDv(df.drop(BucketCol), manifest.dvAt(v), None))
-      .getOrElse(throw new IllegalStateException(s"version $v at $path holds no buckets"))
+    scanAll(manifest.at(v), s"version $v at $path holds no buckets")
 
   /** Retained snapshot versions, ascending. */
   def versions(): Seq[Long] = manifest.versions()
@@ -234,7 +258,7 @@ final class MergeSink(
     * exposed for layout audits and tests.
     */
   def bucketsForRange(c: String, lo: Double, hi: Double): Seq[Int] =
-    manifest.bucketsForRange(c, lo, hi)
+    manifest.current().bucketsForRange(c, lo, hi)
 
   /** Rows with `c` in `[lo, hi]` (NULLs excluded), resolving ONLY the
     * buckets whose zone map can intersect the range — buckets outside
@@ -243,11 +267,8 @@ final class MergeSink(
     * PipelineSpec asserts both the equivalence and the pruning.
     */
   def readRange(c: String, lo: Double, hi: Double): DataFrame = {
-    val bs = bucketsForRange(c, lo, hi)
-    val resolved =
-      if (bs.isEmpty) read().filter(lit(false)) // schema-preserving empty; optimizes to zero scans
-      else readBuckets(bs).getOrElse(read().filter(lit(false)))
-    resolved.filter(col(c) >= lit(lo) && col(c) <= lit(hi))
+    val s = readSnapshot()
+    scanIn(s, s.bucketsForRange(c, lo, hi)).filter(col(c) >= lit(lo) && col(c) <= lit(hi))
   }
 
   /** Latest-per-key state restricted to the given buckets; resolution
@@ -255,8 +276,7 @@ final class MergeSink(
     * scanned.
     */
   private[graft] def readBuckets(buckets: Seq[Int]): Option[DataFrame] =
-    manifest.snapshot(Some(buckets))
-      .map(df => applyDv(df.drop(BucketCol), manifest.dv(), Some(buckets)))
+    scan(readSnapshot(), Some(buckets))
 
   /** Latest-per-key state restricted to the buckets `probe`'s key rows
     * route to — the KEYED-LOOKUP read. `probe` must expose this sink's
@@ -268,45 +288,13 @@ final class MergeSink(
     * table — a per-batch lookup against a 100 TB labels/index table
     * must not re-scan the table per micro-batch. Only the bucket IDS
     * are collected (O(buckets) metadata, the same discipline as
-    * [[merge]]'s touched-bucket audit).
-    *
-    * Routing and data resolution parse the manifest separately, so the
-    * whole plan construction runs under [[consistentRead]]'s version
-    * fence — a commit landing mid-construction (rebucket flips the
-    * routing, a merge moves a bucket's generation) retries instead of
-    * serving one layout's routing over another's data.
+    * [[merge]]'s touched-bucket audit). Routing and data come from one
+    * snapshot, so a rebucket or merge racing the lookup cannot route
+    * by one layout over another's data.
     */
-  def readForKeys(probe: DataFrame): DataFrame = consistentRead {
-    val touched = route("read", probe)
-    if (touched.isEmpty) read().filter(lit(false))
-    else readBuckets(touched).getOrElse(read().filter(lit(false)))
-  }
-
-  /** OPTIMISTIC READ FENCE for multi-parse plan constructions. The
-    * manifest is re-parsed by every metadata call (mapping, blooms,
-    * layout, snapshot), so a read path that makes several of them can
-    * straddle a concurrent commit and combine state from two versions
-    * — e.g. bloom admission from version N+1 pruning a bucket whose
-    * version-N data the snapshot then serves, silently dropping rows
-    * (the READ-side sibling of the stage-fence lost-update race).
-    * Plans pin immutable generation files at construction time, so
-    * "version unchanged across construction" makes every parse
-    * provably identical. Concurrent commits are rare (writers hold the
-    * table lock far longer than a plan takes to build); after a few
-    * racing retries we fail loudly rather than spin.
-    */
-  private[graft] def consistentRead(build: => DataFrame): DataFrame = {
-    var attempt = 0
-    while (true) {
-      val v0 = manifest.currentVersion()
-      val df = build
-      if (manifest.currentVersion() == v0) return df
-      attempt += 1
-      if (attempt >= 5) throw new IllegalStateException(
-        s"table at $path kept committing during 5 read-plan constructions — " +
-          "pruned reads need a quiescent-enough manifest; use read() or retry")
-    }
-    throw new IllegalStateException("unreachable")
+  def readForKeys(probe: DataFrame): DataFrame = {
+    val s = readSnapshot()
+    scanIn(s, route("read", probe, s))
   }
 
   /** One-time adoption of a table written by the pre-manifest code
@@ -321,10 +309,10 @@ final class MergeSink(
     * compaction-policy input, and what layout gates audit.
     */
   def bucketFileCounts(): Map[Int, Int] =
-    manifest.bucketFiles().map { case (b, fl) => b -> fl.size }
+    bucketFiles().map { case (b, fl) => b -> fl.size }
 
   /** (fileName, size, mtime) per bucket — maintenance metadata. */
-  def bucketFiles(): Map[Int, Seq[(String, Long, Long)]] = manifest.bucketFiles()
+  def bucketFiles(): Map[Int, Seq[(String, Long, Long)]] = manifest.bucketFiles(manifest.current())
 
   /** Buckets that might hold `c = v` per the bloom sidecars — the
     * metadata-level point-lookup pruning decision. `c` must be a
@@ -332,7 +320,7 @@ final class MergeSink(
     * else keeps every bucket (missing sidecars never prune).
     */
   def bucketsForPoint(c: String, v: Long): Seq[Int] =
-    manifest.bucketsForPoint(c, BucketBloom.hashLong(v))
+    manifest.bucketsForPoints(manifest.current(), c, Seq(BucketBloom.hashLong(v)))
 
   /** Rows with `c` IN `vs`, resolving ONLY the buckets some probe's
     * bloom admits — the secondary-id point lookup ([[readRange]]'s
@@ -352,25 +340,23 @@ final class MergeSink(
     * set is a degenerate expression (thousands of literals in one
     * predicate). Bloom probing is batched: one sidecar read per
     * bucket for the whole probe set ([[TableManifest.bucketsForPoints]]),
-    * and admission + data resolution run under [[consistentRead]]'s
-    * version fence (a commit between them could prune a bucket by the
-    * NEW sidecar while serving the OLD generation's rows).
+    * and admission and data come from one snapshot's generations.
     */
-  def readBucketsForPoints(c: String, vs: Seq[Long]): DataFrame = consistentRead {
+  def readBucketsForPoints(c: String, vs: Seq[Long]): DataFrame = {
+    val s = readSnapshot()
     // empty probe set short-circuits to an empty frame BEFORE bloom
     // admission: "admitted if ANY probe might be contained" is
     // vacuously false for zero probes, but an unbloomed bucket's
     // missing-sidecar rule (forall on None) would admit it — an empty
     // probe list on an unbloomed table returned the ENTIRE table
     // (ADVICE r12; latent — callers guarded nChanged > 0)
-    if (vs.isEmpty) read().filter(lit(false))
+    if (vs.isEmpty) scanIn(s, Nil)
     else {
-      val bs = manifest.bucketsForPoints(c, vs.map(BucketBloom.hashLong))
+      val bs = manifest.bucketsForPoints(s, c, vs.map(BucketBloom.hashLong))
       probeCount.incrementAndGet()
       probeBucketsAdmitted.addAndGet(bs.size)
-      probeBucketsTotal.addAndGet(manifest.mapping().size)
-      if (bs.isEmpty) read().filter(lit(false))
-      else readBuckets(bs).getOrElse(read().filter(lit(false)))
+      probeBucketsTotal.addAndGet(s.mapping.size)
+      scanIn(s, bs)
     }
   }
 
@@ -402,35 +388,34 @@ final class MergeSink(
   }
 
   private def mergeImpl(batch: DataFrame): Unit = {
-    val touched = route("merge", batch)
+    val s = manifest.current()
+    val touched = route("merge", batch, s)
     if (touched.nonEmpty) {
-      val current = manifest.mapping()
-      val w = write("merge", mergedWith(batch, touched))
+      val w = write("merge", mergedWith(s, batch, touched))
       // all-or-nothing publish; crashed attempts' files stay invisible
-      manifest.commit(current ++ w.mapping, manifest.stats() ++ w.stats, layoutState)
-      manifest.vacuum()
+      manifest.vacuum(manifest.commit(s, s.mapping ++ w.mapping, s.stats ++ w.stats, layoutState(s)))
     }
   }
 
-  /** Buckets `df`'s keys route to under the committed layout (JobLabel
-    * `<op>:route`).
+  /** Buckets `df`'s keys route to under `s`'s committed layout
+    * (JobLabel `<op>:route`).
     */
-  private def route(op: String, df: DataFrame): Seq[Int] =
-    graft.core.JobLabel(spark, s"$op:route $path")(TableManifest.touchedBuckets(df, bucketOf))
+  private def route(op: String, df: DataFrame, s: Snapshot): Seq[Int] =
+    graft.core.JobLabel(spark, s"$op:route $path")(TableManifest.touchedBuckets(df, bucketOf(s)))
 
-  /** `df` routed to its buckets and key-sorted within each write task:
-    * parquet row-group min/max stats then let point lookups and merge
-    * reads skip row groups.
+  /** `df` routed to its buckets under `s` and key-sorted within each
+    * write task: parquet row-group min/max stats then let point lookups
+    * and merge reads skip row groups.
     */
-  private def keySorted(df: DataFrame): DataFrame =
-    df.withColumn(BucketCol, bucketOf).sortWithinPartitions(keys.map(col): _*)
+  private def keySorted(s: Snapshot, df: DataFrame): DataFrame =
+    df.withColumn(BucketCol, bucketOf(s)).sortWithinPartitions(keys.map(col): _*)
 
-  /** The LWW merge of `batch` into the current state of its `touched`
+  /** The LWW merge of `batch` into `s`'s state of its `touched`
     * buckets, ready for the write — what [[merge]] commits and
     * [[stageMerge]] stages.
     */
-  private def mergedWith(batch: DataFrame, touched: Seq[Int]): DataFrame =
-    keySorted(Cdc.latestByKey(readBuckets(touched).fold(batch)(_.unionByName(batch)), keys, orderCols))
+  private def mergedWith(s: Snapshot, batch: DataFrame, touched: Seq[Int]): DataFrame =
+    keySorted(s, Cdc.latestByKey(scan(s, Some(touched)).fold(batch)(_.unionByName(batch)), keys, orderCols))
 
   /** One generation of this table through the manifest's writer, with
     * this table's zone-map and bloom columns.
@@ -469,29 +454,28 @@ final class MergeSink(
     */
   def stageMergeConcurrent(batch: DataFrame): String = stageImpl(batch)
 
-  /** Test seam: fires right after the stage's base (version+mapping)
-    * is read, BEFORE the O(data) merge write — the window where a
-    * concurrent commit must trip the stale fence, not be overwritten.
-    * Production leaves it default.
+  /** Test seam: fires right after the stage's base snapshot is read,
+    * BEFORE the O(data) merge write — the window where a concurrent
+    * commit must trip the stale fence, not be overwritten. Production
+    * leaves it default.
     */
   private[graft] var onStageBaseRead: () => Unit = () => ()
 
   private def stageImpl(batch: DataFrame): String = {
-    val touched = route("stage", batch)
+    // ONE snapshot is both the merge input and the #base fence. A fence
+    // read later — after the long parquet write — would let a
+    // concurrent commit land unseen and be silently overwritten at
+    // publish.
+    val s = manifest.current()
+    val touched = route("stage", batch, s)
     require(touched.nonEmpty, "stageMerge of an empty batch has nothing to audit")
-    // ONE atomic manifest read: the #base fence must be the version
-    // this mapping (the merge input) was read at. Reading the fence
-    // later — after the long parquet write — would let a concurrent
-    // commit land unseen and be silently overwritten at publish.
-    val (baseVersion, current, curStats) = manifest.versionedState()
     onStageBaseRead()
-    val merged = mergedWith(batch, touched)
+    val merged = mergedWith(s, batch, touched)
     val gen = manifest.newGenDir()
     val pending = manifest.preStage(gen)
     try {
       val w = write("stage", merged, gen)
-      manifest.finalizeStage(pending, current ++ w.mapping, curStats ++ w.stats,
-        baseVersion = Some(baseVersion))
+      manifest.finalizeStage(pending, s, s.mapping ++ w.mapping, s.stats ++ w.stats)
     } catch {
       case scala.util.control.NonFatal(e) =>
         try manifest.discardPending(pending)
@@ -538,18 +522,13 @@ final class MergeSink(
     * theirs.
     */
   def readStaged(token: String): DataFrame =
-    manifest.stagedSnapshot(token)
-      .map(df => applyDv(df.drop(BucketCol), manifest.stagedDv(token), None))
-      .getOrElse(throw new IllegalStateException(s"stage $token resolves no buckets"))
+    scanAll(manifest.staged(token), s"stage $token resolves no buckets")
 
   /** Publish a staged merge atomically (one new version; fails fast if
     * the table committed past the stage's base version).
     */
   def publishStaged(token: String): Unit =
-      MergeSink.withWriterLock(spark, path, "publish") {
-    manifest.publish(token)
-    manifest.vacuum()
-  }
+    MergeSink.withWriterLock(spark, path, "publish")(manifest.vacuum(manifest.publish(token)))
 
   /** Reject a staged merge; its generation is swept immediately. */
   def discardStaged(token: String): Unit =
@@ -584,25 +563,23 @@ final class MergeSink(
     */
   def changesBetween(v1: Long, v2: Long): DataFrame = {
     require(v1 < v2, s"changesBetween needs v1 < v2, got ($v1, $v2)")
-    val (m1, m2) = (manifest.mappingAt(v1), manifest.mappingAt(v2))
-    val (d1, d2) = (manifest.dvAt(v1), manifest.dvAt(v2))
-    val dvOnly = m1 == m2 && d1.forall { case (b, ps) =>
-      d2.getOrElse(b, Seq.empty).startsWith(ps) }
-    val newDv = if (!dvOnly) Seq.empty else d2.toSeq.flatMap { case (b, ps) =>
-      ps.drop(d1.getOrElse(b, Seq.empty).size).map(b -> _) }
+    val cur = manifest.current()
+    val (s1, s2) = (manifest.at(v1, cur), manifest.at(v2, cur))
+    val dvOnly = s1.mapping == s2.mapping && s1.dv.forall { case (b, ps) =>
+      s2.dv.getOrElse(b, Seq.empty).startsWith(ps) }
+    val newDv = if (!dvOnly) Seq.empty else s2.dv.toSeq.flatMap { case (b, ps) =>
+      ps.drop(s1.dv.getOrElse(b, Seq.empty).size).map(b -> _) }
     if (dvOnly && newDv.nonEmpty) {
       val touched = newDv.map(_._1).distinct.sorted
-      val snap1 = manifest.snapshotAt(v1, Some(touched))
-        .getOrElse(throw new IllegalStateException(s"version $v1 missing at $path"))
-        .drop(BucketCol)
-      // one scan, explicit key schema — see [[applyDv]]
-      val dvSchema = org.apache.spark.sql.types.StructType(
-        snap1.schema.fields.filter(f => keys.contains(f.name)))
-      val newKeys = manifest.scanDirs(newDv.map(_._2), dvSchema)
-        .select(keys.map(col): _*).distinct()
       // alive-at-v1 rows of ONLY the vectored buckets (a key in a new
       // vector that an older vector already killed must NOT re-report)
-      val alive = applyDv(snap1, d1, Some(touched))
+      val alive = scan(s1, Some(touched))
+        .getOrElse(throw new IllegalStateException(s"version $v1 missing at $path"))
+      // one scan, explicit key schema — see [[applyDv]]
+      val dvSchema = org.apache.spark.sql.types.StructType(
+        alive.schema.fields.filter(f => keys.contains(f.name)))
+      val newKeys = manifest.scanDirs(newDv.map(_._2), dvSchema)
+        .select(keys.map(col): _*).distinct()
       // deletes carry NULL data columns (the general path's contract:
       // AFTER values, which for a delete do not exist)
       val nulled = alive.columns.filterNot(keys.contains).toSeq
@@ -611,9 +588,10 @@ final class MergeSink(
         .withColumn("_change_type", lit("delete"))
         .select(keys.map(col) ++ (col("_change_type") +: nulled): _*)
     }
-    val before = readAt(v1).withColumn("__in_b", lit(1))
-    val after = readAt(v2).withColumn("__in_a", lit(1))
-    val dataCols = readAt(v2).columns.filterNot(keys.contains).toSeq
+    val before = scanAll(s1, s"version $v1 at $path holds no buckets").withColumn("__in_b", lit(1))
+    val afterRows = scanAll(s2, s"version $v2 at $path holds no buckets")
+    val after = afterRows.withColumn("__in_a", lit(1))
+    val dataCols = afterRows.columns.filterNot(keys.contains).toSeq
     val b = before.select(
       keys.map(col) ++ dataCols.map(c => col(c).as(s"__b_$c")) :+ col("__in_b"): _*)
     val joined = after.join(b, keys, "full_outer")
@@ -627,13 +605,14 @@ final class MergeSink(
       .select(keys.map(col) ++ (col("_change_type") +: dataCols.map(col)): _*)
   }
 
-  /** The purge rewrite frame: surviving rows of the touched buckets —
+  /** The purge rewrite frame: surviving rows of `s`'s touched buckets —
     * a broadcast ANTI-join against the key list (PlanSpec locks the
     * shape), reading only those buckets' files. Exposed for plan
     * audits; [[purgeKeys]] is the committing entry point.
     */
-  private[graft] def purgeKeptFrame(keyList: DataFrame, rewrite: Seq[Int]): DataFrame =
-    readBuckets(rewrite).get.join(broadcast(keyList), keys, "left_anti")
+  private[graft] def purgeKeptFrame(keyList: DataFrame, rewrite: Seq[Int],
+                                    s: Snapshot = manifest.current()): DataFrame =
+    scan(s, Some(rewrite)).get.join(broadcast(keyList), keys, "left_anti")
 
   /** COMPLIANCE PURGE — hard-delete every row whose merge key appears
     * in `keyRows` (a frame of the key columns), then DESTROY history so
@@ -667,21 +646,23 @@ final class MergeSink(
     */
   def purgeKeys(keyRows: DataFrame, destroyHistory: Boolean = true): Unit =
       MergeSink.withWriterLock(spark, path, "purge") {
+    val s = manifest.current()
     val keyList = keyRows.select(keys.map(col): _*).distinct()
-    val current = manifest.mapping()
-    val rewrite = route("purge", keyList).filter(current.contains)
-    if (rewrite.nonEmpty) {
-      val w = write("purge", keySorted(purgeKeptFrame(keyList, rewrite)))
-      // a bucket whose every row was purged vanishes from the mapping
-      // (the write produced no dir for it) rather than keeping a stale gen
-      val emptied = rewrite.toSet -- w.buckets
-      manifest.commit((current -- emptied) ++ w.mapping,
-        (manifest.stats() -- rewrite) ++ w.stats, layoutState)
-    }
+    val rewrite = route("purge", keyList, s).filter(s.mapping.contains)
+    val next =
+      if (rewrite.isEmpty) s
+      else {
+        val w = write("purge", keySorted(s, purgeKeptFrame(keyList, rewrite, s)))
+        // a bucket whose every row was purged vanishes from the mapping
+        // (the write produced no dir for it) rather than keeping a stale gen
+        val emptied = rewrite.toSet -- w.buckets
+        manifest.commit(s, (s.mapping -- emptied) ++ w.mapping,
+          (s.stats -- rewrite) ++ w.stats, layoutState(s))
+      }
     // history carries the purged rows — for a compliance purge destroy
     // it even when no bucket matched (the request may target data
     // already purged upstream)
-    if (destroyHistory) manifest.expireVersions(1)
+    if (destroyHistory) manifest.expireVersions(1, next)
   }
 
   /** MERGE-ON-READ delete (Iceberg v2 delete-file / Delta deletion-
@@ -730,9 +711,10 @@ final class MergeSink(
     // would wrongly delete a FUTURE insert of that key — so keys of
     // absent buckets are dropped before the write, not written and
     // then deleted
-    val held = manifest.mapping().keySet.toSeq
+    val s = manifest.current()
+    val held = s.mapping.keySet.toSeq
     val keyList = keyRows.select(keys.map(col): _*)
-      .withColumn(BucketCol, bucketOf)
+      .withColumn(BucketCol, bucketOf(s))
       .filter(col(BucketCol).isin(held: _*))
     val gen = manifest.newGenDir()
     // ONE distributed write; the touched-bucket set is discovered from
@@ -752,18 +734,16 @@ final class MergeSink(
                   new Path(s"$path/$gen/dv_$b"))
       }
       fs.delete(dvtmp, true)
-      val dv = manifest.dv()
-      val appended = dv ++ touched.map(b =>
-        b -> (dv.getOrElse(b, Seq.empty) :+ s"$gen/dv_$b"))
-      manifest.commit(manifest.mapping(), manifest.stats(), layoutState,
-        dvState = Some(appended))
+      val appended = s.dv ++ touched.map(b =>
+        b -> (s.dv.getOrElse(b, Seq.empty) :+ s"$gen/dv_$b"))
+      manifest.commit(s, s.mapping, s.stats, layoutState(s), dvState = Some(appended))
     } else fs.delete(new Path(s"$path/$gen"), true)
   }
 
   /** Outstanding deletion vectors per bucket — maintenance metadata
     * (what [[compact]] will consume; layout gates audit this).
     */
-  def deleteVectors(): Map[Int, Seq[String]] = manifest.dv()
+  def deleteVectors(): Map[Int, Seq[String]] = manifest.current().dv
 
   /** Compact buckets that have accumulated more than
     * `maxFilesPerBucket` parquet files — the classic streaming-sink
@@ -798,7 +778,8 @@ final class MergeSink(
               dropDeleted: Option[String] = None): Unit =
       MergeSink.withWriterLock(spark, path, "compact") {
     if (manifest.exists) {
-      val oversized = manifest.bucketFiles()
+      val s = manifest.current()
+      val oversized = manifest.bucketFiles(s)
         .filter { case (_, fl) => fl.size > maxFilesPerBucket }
         .keys.toSet
       val tombstoned: Set[Int] = dropDeleted match {
@@ -808,19 +789,16 @@ final class MergeSink(
         // below coalesces to false so NULL-flag rows survive the
         // rewrite — compact is layout maintenance and must never
         // hard-delete a row whose tombstone state is merely unknown.
-        case Some(flag) => manifest.snapshot(None).fold(Set.empty[Int]) { df =>
+        case Some(flag) => manifest.scan(s).fold(Set.empty[Int]) { df =>
           TableManifest.touchedBuckets(df.filter(coalesce(col(flag), lit(false))), col(BucketCol)).toSet
         }
       }
       // buckets with outstanding deletion vectors are compaction
       // candidates too: the rewrite is what applies a DV physically
       // and consumes it (commit's DV-consumption rule)
-      val dvHeld = manifest.dv().keySet
-      val rewrite = (oversized ++ tombstoned ++ dvHeld).toSeq.sorted
+      val rewrite = (oversized ++ tombstoned ++ s.dv.keySet).toSeq.sorted
       if (rewrite.nonEmpty) {
-        val current = manifest.mapping()
-        val base = applyDv(manifest.snapshot(Some(rewrite)).get,
-          manifest.dv(), Some(rewrite))
+        val base = applyDv(manifest.scan(s, Some(rewrite)).get, s.dv, Some(rewrite))
         // content rows are unchanged (minus dropped tombstones), so zone
         // maps carry over; sidecars are generation-scoped and rebuilt
         val w = manifest.writeGeneration("compact",
@@ -830,21 +808,20 @@ final class MergeSink(
         // a bucket whose every row was a tombstone vanishes from the
         // mapping (the write produced no dir for it)
         val emptied = rewrite.toSet -- w.buckets
-        manifest.commit((current -- emptied) ++ w.mapping,
-          manifest.stats() -- emptied, layoutState)
-        manifest.vacuum()
+        manifest.vacuum(manifest.commit(s, (s.mapping -- emptied) ++ w.mapping,
+          s.stats -- emptied, layoutState(s)))
       }
     }
   }
 
-  private def nextLayout(newNBuckets: Int): Layout = {
+  private def nextLayout(s: Snapshot, newNBuckets: Int): Layout = {
     require(newNBuckets >= 1 && newNBuckets <= LayoutStride,
       s"newNBuckets must be in [1, $LayoutStride], got $newNBuckets")
-    val l = currentLayout
+    val l = layoutOf(s)
     require(l.gen + 1 <= MaxLayoutGen,
       s"layout generation ${l.gen + 1} exceeds $MaxLayoutGen at $path")
-    require(manifest.migration().isEmpty,
-      s"a migration to ${manifest.migration().get.target.n} buckets is already " +
+    require(s.migration.isEmpty,
+      s"a migration to ${s.migration.get.target.n} buckets is already " +
         s"in flight at $path — finish it (migrateStep) before starting another")
     Layout(l.gen + 1, newNBuckets, l.rangeWidth)
   }
@@ -871,24 +848,24 @@ final class MergeSink(
     */
   def rebucket(newNBuckets: Int): MergeSink =
       MergeSink.withWriterLock(spark, path, "rebucket") {
-    val target = nextLayout(newNBuckets)
+    val s = manifest.current()
+    val target = nextLayout(s, newNBuckets)
     val handle = new MergeSink(spark, path, keys, orderCols, newNBuckets,
       statsCols, rangeBucketWidth, bloomCols, bloomBits)
-    manifest.snapshot(None) match {
+    scan(s, None) match {
       case None =>
         // empty table: the layout change is metadata-only but still a
         // real commit — a stale-parameter handle must see it
-        manifest.commit(Map.empty, Map.empty, Some((target, None)))
+        manifest.commit(s, Map.empty, Map.empty, Some((target, None)))
         handle
-      case Some(snap) =>
-        val w = write("rebucket", applyDv(snap.drop(BucketCol), manifest.dv(), None)
+      case Some(rows) =>
+        val w = write("rebucket", rows
           .withColumn(BucketCol, physOf(target))
           .repartition(newNBuckets, col(BucketCol))
           .sortWithinPartitions(keys.map(col): _*))
         // FULL mapping replacement: every old bucket id retires with
         // this commit (prior versions still resolve them)
-        manifest.commit(w.mapping, w.stats, Some((target, None)))
-        manifest.vacuum()
+        manifest.vacuum(manifest.commit(s, w.mapping, w.stats, Some((target, None))))
         handle
     }
   }
@@ -906,9 +883,9 @@ final class MergeSink(
     */
   def beginMigration(newNBuckets: Int): Unit =
       MergeSink.withWriterLock(spark, path, "begin-migration") {
-    val target = nextLayout(newNBuckets)
-    manifest.commit(manifest.mapping(), manifest.stats(),
-      Some((currentLayout, Some(Migration(target, Set.empty)))))
+    val s = manifest.current()
+    val target = nextLayout(s, newNBuckets)
+    manifest.commit(s, s.mapping, s.stats, Some((layoutOf(s), Some(Migration(target, Set.empty)))))
   }
 
   /** PROGRESSIVE migration, step 2: rewrite the next `k` unmigrated
@@ -933,8 +910,9 @@ final class MergeSink(
   def migrateStep(k: Int): Int =
       MergeSink.withWriterLock(spark, path, "migrate-step") {
     require(k >= 1, s"migrateStep needs k >= 1, got $k")
-    val l = currentLayout
-    val mig = manifest.migration().getOrElse(throw new IllegalStateException(
+    val s = manifest.current()
+    val l = layoutOf(s)
+    val mig = s.migration.getOrElse(throw new IllegalStateException(
       s"no migration in flight at $path — beginMigration first"))
     val todo = (0 until l.n).filterNot(mig.migrated)
     val pick = todo.take(k)
@@ -943,33 +921,30 @@ final class MergeSink(
     val nextState: Option[(Layout, Option[Migration])] =
       if (complete) Some((mig.target, None))
       else Some((l, Some(Migration(mig.target, mig.migrated ++ pick))))
-    val current = manifest.mapping()
     val physPick = pick.map(b => if (l.gen == 0) b else l.gen * LayoutStride + b)
-    val held = physPick.filter(current.contains)
+    val held = physPick.filter(s.mapping.contains)
     if (held.isEmpty) {
       // nothing stored under these old buckets: marking them migrated
       // is pure metadata (still a real commit — routing changes)
-      manifest.commit(current, manifest.stats(), nextState)
+      manifest.commit(s, s.mapping, s.stats, nextState)
     } else {
-      val moving = applyDv(manifest.snapshot(Some(held)).get.drop(BucketCol),
-          manifest.dv(), Some(held))
+      val moving = scan(s, Some(held)).get
         .withColumn(BucketCol, physOf(mig.target))
       // which target buckets these keys land in: at most k * spread
       // small ints reach the driver — the same metadata-not-data
       // pruning decision merge() makes
       val targets = TableManifest.touchedBuckets(moving, col(BucketCol))
-      val affected = targets.filter(current.contains)
-      val out = manifest.snapshot(Some(affected))
-          .map(df => applyDv(df, manifest.dv(), Some(affected))) match {
+      val affected = targets.filter(s.mapping.contains)
+      val out = manifest.scan(s, Some(affected))
+          .map(df => applyDv(df, s.dv, Some(affected))) match {
         case Some(existing) => existing.unionByName(moving)
         case None           => moving
       }
       val w = write("migrate", out
         .repartition(math.max(targets.size, 1), col(BucketCol))
         .sortWithinPartitions(keys.map(col): _*))
-      manifest.commit((current -- physPick) ++ w.mapping,
-        (manifest.stats() -- physPick) ++ w.stats, nextState)
-      manifest.vacuum()
+      manifest.vacuum(manifest.commit(s, (s.mapping -- physPick) ++ w.mapping,
+        (s.stats -- physPick) ++ w.stats, nextState))
     }
     remaining
   }
@@ -977,8 +952,10 @@ final class MergeSink(
   /** (current layout, in-flight migration) as committed — layout
     * audits and gates read this, never handle fields.
     */
-  def layoutInfo: (Layout, Option[Migration]) =
-    (currentLayout, manifest.migration())
+  def layoutInfo: (Layout, Option[Migration]) = {
+    val s = manifest.current()
+    (layoutOf(s), s.migration)
+  }
 }
 
 object MergeSink {

@@ -70,7 +70,7 @@ import graft.core.JobLabel
   * rewrites `v-<n>` from scratch).
   *
   * TIME TRAVEL: `_versions/v-<n>` files are retained across commits,
-  * so [[snapshotAt]] resolves any historical snapshot; generation dirs
+  * so [[at]] resolves any historical snapshot; generation dirs
   * referenced by ANY retained version survive [[vacuum]]. Retention is
   * bounded by [[expireVersions]] (Delta/Iceberg VACUUM-with-retention
   * semantics): expiring old versions is what finally frees their
@@ -78,7 +78,12 @@ import graft.core.JobLabel
   * (one line per bucket — metadata, not data), so the cost of history
   * is only the superseded data generations, which expiry reclaims.
   *
-  * READ PATH: a snapshot read is planned from the manifest alone. The
+  * READ PATH: an operation parses the manifest ONCE, into an immutable
+  * [[TableManifest.Snapshot]] ([[current]], or [[at]] for a retained
+  * version), and plans everything from that one value: routing, zone-map
+  * and bloom pruning, the scan ([[scan]]), the deletion vectors, the
+  * commit base and the vacuum. No accessor re-reads `_MANIFEST`, so no
+  * operation can mix two versions. The snapshot's
   * mapping names each bucket's generation dir; the handle lists each
   * (generation, bucket) dir once and reads each generation's data
   * schema once from one parquet footer, both cached for the handle's
@@ -100,15 +105,20 @@ import graft.core.JobLabel
   * per column chunk and footer statistics are unchanged.
   *
   * Concurrency: writers are serialized by [[MergeSink.withWriterLock]]
-  * (single-writer contract). Readers never lock; they race only the
-  * manifest rename, which is atomic. A long-running reader of an OLD
+  * (single-writer contract), so a writer's snapshot stays current for
+  * its whole operation and [[commit]] publishes `base.version + 1`
+  * without re-reading. Readers never lock; they race only the manifest
+  * rename, which is atomic: a read serves the snapshot current at its
+  * call, and a commit landing while its plan is built is simply not in
+  * it (the plan pins that snapshot's immutable files; nothing retries).
+  * A long-running reader of an OLD
   * version races only [[expireVersions]] — production object stores
   * defer deletion by a retention horizon; here the writer lock plus
   * same-process readers make the window empty in this engine's usage.
   */
 final class TableManifest(spark: SparkSession, val root: String) {
   import MergeSink.BucketCol
-  import TableManifest.{ColStats, Layout, Migration, Stats, Written}
+  import TableManifest.{ColStats, Layout, Migration, Snapshot, Stats, Written}
 
   // one configuration copy and one FileSystem handle per table handle:
   // a fresh copy per call was a fifth of a point read's main-thread time
@@ -151,13 +161,12 @@ final class TableManifest(spark: SparkSession, val root: String) {
   /** Root-relative dir of one bucket of generation `gen`. */
   private[sink] def bucketDir(gen: String, b: Int): String = s"$gen/$BucketCol=$b"
 
-  private def requireNotLegacy(): Unit =
-    if (!exists) {
-      val legacy = legacyBuckets()
-      if (legacy.nonEmpty) throw new IllegalStateException(
-        s"$root holds a pre-manifest table layout (${legacy.size} bucket dirs, " +
-          "no _MANIFEST); refusing to read it as empty — run migrateLegacy() once")
-    }
+  private def requireNotLegacy(): Unit = {
+    val legacy = legacyBuckets()
+    if (legacy.nonEmpty) throw new IllegalStateException(
+      s"$root holds a pre-manifest table layout (${legacy.size} bucket dirs, " +
+        "no _MANIFEST); refusing to read it as empty — run migrateLegacy() once")
+  }
 
   /** One-time adoption of a pre-manifest table: bucket dirs move (file
     * renames, no data rewrite) into a fresh generation dir and a
@@ -175,7 +184,7 @@ final class TableManifest(spark: SparkSession, val root: String) {
           fs.rename(new Path(root, s"$BucketCol=$b"),
                     new Path(genPath, s"$BucketCol=$b"))
         }
-        commit(legacy.map(_ -> gen).toMap)
+        commit(Snapshot.Empty, legacy.map(_ -> gen).toMap)
       }
     }
 
@@ -185,8 +194,6 @@ final class TableManifest(spark: SparkSession, val root: String) {
     finally in.close()
   }
 
-  import TableManifest.Parsed
-
   private def parseLayout(s: String): Layout = {
     val Array(g, n, w) = s.split(",", 3)
     Layout(g.toInt, n.toInt, if (w == "-") None else Some(w.toLong))
@@ -195,7 +202,7 @@ final class TableManifest(spark: SparkSession, val root: String) {
   /** A body without a `#version` header predates the version log and
     * reads as version 1 with no history.
     */
-  private def parse(text: String): Parsed = {
+  private def parse(text: String): Snapshot = {
     val lines = text.linesIterator.filter(_.nonEmpty).toSeq
     val (headers, dataLines) = lines.span(_.startsWith("#"))
     def header(k: String): Option[String] =
@@ -207,7 +214,7 @@ final class TableManifest(spark: SparkSession, val root: String) {
         .map(_.split(",").map(_.toInt).toSet).getOrElse(Set.empty[Int])
       Migration(t, migrated)
     }
-    val m = dataLines.map { line =>
+    val rows = dataLines.map { line =>
       val fields = line.split("\t", -1)
       val stats: Stats =
         if (fields.length < 3 || fields(2).isEmpty) Map.empty
@@ -218,90 +225,48 @@ final class TableManifest(spark: SparkSession, val root: String) {
       val dvs: Seq[String] =
         if (fields.length < 4 || fields(3).isEmpty) Seq.empty
         else fields(3).split(";").toSeq
-      fields(0).toInt -> (fields(1), stats, dvs)
-    }.toMap
-    Parsed(version, m, layout, migration)
+      (fields(0).toInt, fields(1), stats, dvs)
+    }
+    Snapshot(version,
+      rows.map(r => r._1 -> r._2).toMap,
+      rows.map(r => r._1 -> r._3).toMap,
+      rows.collect { case (b, _, _, d) if d.nonEmpty => b -> d }.toMap,
+      layout, migration)
   }
 
-  private def full(): Parsed =
-    if (!exists) { requireNotLegacy(); Parsed(0L, Map.empty, None, None) }
-    else parse(readText(manifestPath))
-
-  /** Current snapshot: bucket -> root-relative generation dir. */
-  def mapping(): Map[Int, String] = full().m.map { case (b, (g, _, _)) => b -> g }
-
-  /** Current per-bucket zone-map stats (empty map per bucket when the
-    * writer declared no stats columns).
+  /** The published snapshot — the ONE read of `_MANIFEST`. Every
+    * operation calls this once at its start and derives all its plans
+    * from the value (see the class doc, READ PATH). A table never
+    * committed is [[Snapshot.Empty]]; a pre-manifest layout throws.
     */
-  def stats(): Map[Int, Stats] = full().m.map { case (b, (_, s, _)) => b -> s }
+  def current(): Snapshot =
+    try parse(readText(manifestPath))
+    catch { case _: java.io.FileNotFoundException => requireNotLegacy(); Snapshot.Empty }
 
-  /** Current per-bucket DELETION VECTORS: bucket -> root-relative
-    * parquet dirs of key rows deleted merge-on-read (only buckets with
-    * at least one outstanding DV appear). Readers anti-join these
-    * keys; a rewrite of the bucket consumes them (see [[commit]]).
+  /** Retained, published version `v` (time travel): one parse of its
+    * immutable version file, checked against `cur`. Fails loudly on an
+    * expired or never-published version.
     */
-  def dv(): Map[Int, Seq[String]] =
-    full().m.collect { case (b, (_, _, d)) if d.nonEmpty => b -> d }
-
-  /** [[dv]] as of retained version `v`. */
-  def dvAt(v: Long): Map[Int, Seq[String]] =
-    parsedAt(v).m.collect { case (b, (_, _, d)) if d.nonEmpty => b -> d }
-
-  /** Published snapshot version (0 = never committed). */
-  def currentVersion(): Long = full().version
-
-  /** Atomic read of (version, mapping, stats) from ONE manifest parse.
-    * An optimistic stager MUST fence against the version its merge
-    * input was actually read at: reading version and mapping in two
-    * calls lets a concurrent commit land between them, and reading the
-    * version only at stage-finalization time (after the O(data)
-    * parquet write) lets the fence record a version NEWER than the
-    * merge base — publish would then pass its stale check and silently
-    * overwrite the intervening commit's rows (lost update).
-    */
-  def versionedState(): (Long, Map[Int, String], Map[Int, Stats]) = {
-    val f = full()
-    (f.version,
-      f.m.map { case (b, (g, _, _)) => b -> g },
-      f.m.map { case (b, (_, s, _)) => b -> s })
+  def at(v: Long, cur: Snapshot = current()): Snapshot = {
+    require(v >= 1 && v <= cur.version,
+      s"version $v is not published at $root (current=${cur.version})")
+    try parse(readText(versionPath(v)))
+    catch {
+      case _: java.io.FileNotFoundException => throw new IllegalStateException(
+        s"version $v at $root has been expired (expireVersions) — retained: ${versions(cur).mkString(",")}")
+    }
   }
 
-  /** Committed bucket layout, when the writing sink records one —
-    * manifests written before the layout header (or by layout-less
-    * sinks like AggSink) return None and the owning sink's constructor
-    * parameters apply, exactly as before the header existed.
+  /** Retained, published versions of `cur`'s table, ascending. Version
+    * files above the published `#version` are crashed-commit orphans,
+    * not snapshots.
     */
-  def layout(): Option[Layout] = full().layout
-
-  /** In-flight progressive bucket migration, if any. */
-  def migration(): Option[Migration] = full().migration
-
-  /** Retained, published versions, ascending. Version files above the
-    * published `#version` are crashed-commit orphans, not snapshots.
-    */
-  def versions(): Seq[Long] = {
-    val cur = currentVersion()
+  def versions(cur: Snapshot = current()): Seq[Long] =
     if (!fs.exists(versionsDir)) Seq.empty
     else fs.listStatus(versionsDir).toSeq
       .map(_.getPath.getName).filter(_.startsWith("v-"))
       .map(_.stripPrefix("v-").toLong)
-      .filter(_ <= cur).sorted
-  }
-
-  /** Historical snapshot `v`'s bucket -> generation dir. Fails loudly
-    * on an expired or never-published version.
-    */
-  def mappingAt(v: Long): Map[Int, String] =
-    parsedAt(v).m.map { case (b, (g, _, _)) => b -> g }
-
-  private def parsedAt(v: Long): Parsed = {
-    require(v >= 1 && v <= currentVersion(),
-      s"version $v is not published at $root (current=${currentVersion()})")
-    val p = versionPath(v)
-    if (!fs.exists(p)) throw new IllegalStateException(
-      s"version $v at $root has been expired (expireVersions) — retained: ${versions().mkString(",")}")
-    parse(readText(p))
-  }
+      .filter(_ <= cur.version).sorted
 
   /** Fresh, never-reused generation dir for one commit's data files. */
   def newGenDir(): String = s"data/g-${java.util.UUID.randomUUID()}"
@@ -315,54 +280,54 @@ final class TableManifest(spark: SparkSession, val root: String) {
   private def renderLayout(l: Layout): String =
     s"${l.gen},${l.n},${l.rangeWidth.getOrElse("-")}"
 
-  private def render(version: Long, m: Map[Int, String], stats: Map[Int, Stats],
-                     layout: Option[Layout], migration: Option[Migration],
-                     dv: Map[Int, Seq[String]]): String = {
-    val body = m.toSeq.sortBy(_._1).map { case (b, g) =>
-      val st = stats.getOrElse(b, Map.empty)
+  private def render(s: Snapshot): String = {
+    val body = s.mapping.toSeq.sortBy(_._1).map { case (b, g) =>
+      val st = s.stats.getOrElse(b, Map.empty)
         .toSeq.sortBy(_._1)
         .map { case (c, cs) => s"$c,${cs.min},${cs.max}" }.mkString(";")
-      val d = dv.getOrElse(b, Seq.empty).mkString(";")
+      val d = s.dv.getOrElse(b, Seq.empty).mkString(";")
       if (d.isEmpty) s"$b\t$g\t$st" else s"$b\t$g\t$st\t$d"
     }.mkString("", "\n", "\n")
-    val lh = layout.map(l => s"#layout=${renderLayout(l)}\n").getOrElse("")
-    val mh = migration.map(mg =>
+    val lh = s.layout.map(l => s"#layout=${renderLayout(l)}\n").getOrElse("")
+    val mh = s.migration.map(mg =>
       s"#target=${renderLayout(mg.target)}\n#migrated=${mg.migrated.toSeq.sorted.mkString(",")}\n")
       .getOrElse("")
-    s"#version=$version\n$lh$mh$body"
+    s"#version=${s.version}\n$lh$mh$body"
   }
 
-  /** Publish a snapshot atomically (see class doc). `stats` carries
-    * the per-bucket zone maps; omit for stat-less tables.
-    * `layoutState`: None carries the current layout headers forward
+  /** The snapshot following `base` with mapping `m` (see [[commit]] for
+    * the defaults): the value [[commit]] publishes and [[stage]] stages.
+    */
+  private def successor(base: Snapshot, m: Map[Int, String], stats: Map[Int, Stats],
+                        layoutState: Option[(Layout, Option[Migration])],
+                        dvState: Option[Map[Int, Seq[String]]]): Snapshot = {
+    val (lay, mig) = layoutState.fold((base.layout, base.migration)) { case (l, mg) => (Some(l), mg) }
+    val dv = dvState.getOrElse(base.dv.filter { case (b, _) => m.get(b) == base.mapping.get(b) })
+    Snapshot(base.version + 1, m, stats, dv, lay, mig)
+  }
+
+  /** Publish the successor of `base` atomically (see class doc) and
+    * return it. `base` is the snapshot the caller planned from; the
+    * writer lock keeps it current, so nothing is re-read here. `stats`
+    * carries the per-bucket zone maps; omit for stat-less tables.
+    * `layoutState`: None carries `base`'s layout headers forward
     * unchanged (stat-less and layout-less writers never think about
     * them); Some((layout, migration)) sets them exactly — how
     * [[MergeSink]] records layout evolution and migration progress in
     * the SAME atomic commit as the data it describes.
     * `dvState`: None applies the CONSUMPTION rule — a bucket keeps its
     * deletion vectors iff this commit maps it to the SAME generation
-    * as before (an unchanged bucket's DVs still apply; a rewritten
+    * as `base` (an unchanged bucket's DVs still apply; a rewritten
     * bucket was rebuilt from a DV-applied read, so its DVs are
     * consumed and dropped in the same atomic commit). Every
     * data-rewriting caller gets correct DV semantics for free;
     * Some(dv) sets the map exactly (how [[MergeSink.deleteVector]]
     * appends new vectors).
     */
-  def commit(m: Map[Int, String], stats: Map[Int, Stats] = Map.empty,
+  def commit(base: Snapshot, m: Map[Int, String], stats: Map[Int, Stats] = Map.empty,
              layoutState: Option[(Layout, Option[Migration])] = None,
-             dvState: Option[Map[Int, Seq[String]]] = None): Unit = {
-    val f = full()
-    val (lay, mig) = layoutState match {
-      case Some((l, mg)) => (Some(l), mg)
-      case None          => (f.layout, f.migration)
-    }
-    val dv = dvState.getOrElse {
-      f.m.collect {
-        case (b, (g, _, d)) if d.nonEmpty && m.get(b).contains(g) => b -> d
-      }
-    }
-    commitExact(m, stats, lay, mig, dv)
-  }
+             dvState: Option[Map[Int, Seq[String]]] = None): Snapshot =
+    commitExact(successor(base, m, stats, layoutState, dvState))
 
   /** Restore the table to `toVersion`'s EXACT snapshot as a NEW
     * version — the Delta RESTORE / Iceberg rollback primitive.
@@ -375,42 +340,41 @@ final class TableManifest(spark: SparkSession, val root: String) {
     * [[vacuum]] keeps their generations live for the same reason.
     * Forward writes continue normally on top of the restored state.
     */
-  def rollback(toVersion: Long): Unit = {
-    val cur = currentVersion()
-    require(toVersion < cur,
-      s"rollback target $toVersion is not in the past (current=$cur)")
-    val p = parsedAt(toVersion)
-    commitExact(
-      p.m.map { case (b, (g, _, _)) => b -> g },
-      p.m.map { case (b, (_, st, _)) => b -> st }.filter(_._2.nonEmpty),
-      p.layout, p.migration,
-      p.m.collect { case (b, (_, _, d)) if d.nonEmpty => b -> d })
+  def rollback(toVersion: Long): Snapshot = {
+    val cur = current()
+    require(toVersion < cur.version,
+      s"rollback target $toVersion is not in the past (current=${cur.version})")
+    commitExact(at(toVersion, cur).copy(version = cur.version + 1))
   }
 
-  private def commitExact(m: Map[Int, String], stats: Map[Int, Stats],
-                          lay: Option[Layout], mig: Option[Migration],
-                          dv: Map[Int, Seq[String]]): Unit = {
-    val next = currentVersion() + 1
-    val body = render(next, m, stats, lay, mig, dv)
+  /** Write `next` as version `next.version`, publish it, return it. */
+  private def commitExact(next: Snapshot): Snapshot = {
+    val body = render(next).getBytes("UTF-8")
     // immutable history copy first (overwrite: a crashed prior attempt
     // at this same unpublished version is dead by single-writer rule)
     fs.mkdirs(versionsDir)
-    val vout = fs.create(versionPath(next), true)
-    try vout.write(body.getBytes("UTF-8")) finally vout.close()
+    val vout = fs.create(versionPath(next.version), true)
+    try vout.write(body) finally vout.close()
     beforeCommit()
     val tmp = new Path(root, s"_manifest.tmp.${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
     val isLocal = rootPath.toUri.getScheme == null || rootPath.toUri.getScheme == "file"
-    if (isLocal)
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp.toUri.getPath),
+    if (isLocal) {
+      // the temp body is written through NIO, not the checksummed local
+      // FileSystem: only the body moves, so a `.crc` sidecar written
+      // beside it would be left behind by every commit
+      val local = java.nio.file.Paths.get(tmp.toUri.getPath)
+      java.nio.file.Files.write(local, body, java.nio.file.StandardOpenOption.CREATE_NEW)
+      java.nio.file.Files.move(local,
         java.nio.file.Paths.get(manifestPath.toUri.getPath),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    else
+    } else {
+      val out = fs.create(tmp, false)
+      try out.write(body) finally out.close()
       FileContext.getFileContext(rootPath.toUri, conf)
         .rename(tmp, manifestPath, Options.Rename.OVERWRITE)
+    }
+    next
   }
 
   // ------------------------------------------------- staged snapshots
@@ -418,30 +382,21 @@ final class TableManifest(spark: SparkSession, val root: String) {
   private def stagedDir = new Path(root, TableManifest.StagedDir)
   private def stagedPath(token: String) = new Path(stagedDir, token)
 
-  /** WRITE-AUDIT-PUBLISH, stage step: persist a fully-rendered
-    * snapshot body under `_staged/<token>` WITHOUT publishing — no
-    * reader resolves it, no version is consumed. The body carries a
-    * `#base=<version>` fence: [[publish]] refuses when the table has
-    * committed past that version, because the staged mapping was
-    * computed against state that no longer exists (publishing it would
-    * silently drop the intervening commits' rows from the staged
-    * buckets). Staged generations count as LIVE for [[vacuum]] until
-    * the stage is published or [[discard]]ed.
+  /** WRITE-AUDIT-PUBLISH, stage step: persist the successor of `base`
+    * (see [[commit]] for the defaults) under `_staged/<token>` WITHOUT
+    * publishing — no reader resolves it, no version is consumed. The
+    * body carries a `#base=<version>` fence: [[publish]] refuses when
+    * the table has committed past that version, because the staged
+    * mapping was computed against state that no longer exists
+    * (publishing it would silently drop the intervening commits' rows
+    * from the staged buckets). A lock-free stager passes the snapshot
+    * its merge input was READ from, so the fence is that version, never
+    * one observed after the O(data) write. Staged generations count as
+    * LIVE for [[vacuum]] until the stage is published or [[discard]]ed.
     */
-  def stage(m: Map[Int, String], stats: Map[Int, Stats] = Map.empty,
-            dvState: Option[Map[Int, Seq[String]]] = None,
-            baseVersion: Option[Long] = None): String = {
-    val f = full()
-    val dv = dvState.getOrElse {
-      f.m.collect {
-        case (b, (g, _, d)) if d.nonEmpty && m.get(b).contains(g) => b -> d
-      }
-    }
-    // The fence must be the version the stager's merge input was READ
-    // at (threaded in by lock-free stagers), not the version observed
-    // here after the O(data) write — see [[versionedState]].
-    val body = s"#base=${baseVersion.getOrElse(f.version)}\n" +
-      render(f.version + 1, m, stats, f.layout, f.migration, dv)
+  def stage(base: Snapshot, m: Map[Int, String], stats: Map[Int, Stats] = Map.empty,
+            dvState: Option[Map[Int, Seq[String]]] = None): String = {
+    val body = s"#base=${base.version}\n" + render(successor(base, m, stats, None, dvState))
     val token = s"s-${java.util.UUID.randomUUID()}"
     fs.mkdirs(stagedDir)
     val out = fs.create(stagedPath(token), false)
@@ -478,11 +433,10 @@ final class TableManifest(spark: SparkSession, val root: String) {
     * pending marker is consumed. The staged file itself now holds the
     * generation references, so liveness never lapses between the two.
     */
-  def finalizeStage(pending: String, m: Map[Int, String],
+  def finalizeStage(pending: String, base: Snapshot, m: Map[Int, String],
                     stats: Map[Int, Stats] = Map.empty,
-                    dvState: Option[Map[Int, Seq[String]]] = None,
-                    baseVersion: Option[Long] = None): String = {
-    val token = stage(m, stats, dvState, baseVersion)
+                    dvState: Option[Map[Int, Seq[String]]] = None): String = {
+    val token = stage(base, m, stats, dvState)
     fs.delete(stagedPath(pending), false)
     token
   }
@@ -492,7 +446,7 @@ final class TableManifest(spark: SparkSession, val root: String) {
     */
   def discardPending(pending: String): Unit = {
     fs.delete(stagedPath(pending), false)
-    vacuum()
+    vacuum(current())
   }
 
   /** Outstanding pre-registrations. */
@@ -504,7 +458,7 @@ final class TableManifest(spark: SparkSession, val root: String) {
   private def pendingGens(): Set[String] =
     pendingStages().map(t => readText(stagedPath(t)).trim).toSet
 
-  private def parseStaged(token: String): (Long, Parsed) = {
+  private def parseStaged(token: String): (Long, Snapshot) = {
     val p = stagedPath(token)
     if (!fs.exists(p)) throw new IllegalStateException(
       s"stage $token at $root does not exist (published or discarded?)")
@@ -515,34 +469,26 @@ final class TableManifest(spark: SparkSession, val root: String) {
     (base, parse(text))
   }
 
-  /** The staged snapshot as a readable frame (bucket column included,
-    * like [[snapshot]]) — what the AUDIT step inspects. Returns None
-    * for an empty staged mapping.
+  /** The staged snapshot `token` — what the AUDIT step reads (through
+    * [[scan]], like any snapshot).
     */
-  def stagedSnapshot(token: String, buckets: Option[Seq[Int]] = None): Option[DataFrame] =
-    resolve(parseStaged(token)._2.m.map { case (b, (g, _, _)) => b -> g }, buckets)
-
-  /** Staged deletion-vector map (the audit may need to see deletes). */
-  def stagedDv(token: String): Map[Int, Seq[String]] =
-    parseStaged(token)._2.m.collect { case (b, (_, _, d)) if d.nonEmpty => b -> d }
+  def staged(token: String): Snapshot = parseStaged(token)._2
 
   /** WRITE-AUDIT-PUBLISH, publish step: commit the staged snapshot
-    * atomically — the normal [[commit]] path, so history, time travel,
-    * and crash atomicity are identical to a direct commit. Fails fast
-    * when the table committed past the stage's `#base` fence.
+    * atomically — the normal commit path, so history, time travel,
+    * and crash atomicity are identical to a direct commit — and return
+    * it. Fails fast when the table committed past the stage's `#base`
+    * fence.
     */
-  def publish(token: String): Unit = {
+  def publish(token: String): Snapshot = {
     val (base, p) = parseStaged(token)
-    val cur = currentVersion()
-    if (cur != base) throw new IllegalStateException(
-      s"stage $token was computed against version $base but the table is at $cur — " +
+    val cur = current()
+    if (cur.version != base) throw new IllegalStateException(
+      s"stage $token was computed against version $base but the table is at ${cur.version} — " +
         "the staged merge is stale; discard and re-stage")
-    commit(
-      p.m.map { case (b, (g, _, _)) => b -> g },
-      p.m.map { case (b, (_, s, _)) => b -> s },
-      layoutState = p.layout.map(l => (l, p.migration)),
-      dvState = Some(p.m.collect { case (b, (_, _, d)) if d.nonEmpty => b -> d }))
+    val next = commitExact(p.copy(version = cur.version + 1))
     fs.delete(stagedPath(token), false)
+    next
   }
 
   /** WRITE-AUDIT-PUBLISH, reject step: drop the staged snapshot; the
@@ -550,7 +496,7 @@ final class TableManifest(spark: SparkSession, val root: String) {
     */
   def discard(token: String): Unit = {
     fs.delete(stagedPath(token), false)
-    vacuum()
+    vacuum(current())
   }
 
   /** Sweep everything no longer reachable at (generation, bucket)
@@ -563,37 +509,29 @@ final class TableManifest(spark: SparkSession, val root: String) {
     * no parquet byte of a dereferenced bucket survives. Also sweeps
     * generation dirs referenced by nothing (crashed commits), version
     * files above the published version (crashed commits' history
-    * copies), and stale `_manifest.tmp.*` files. Callers hold the
-    * writer lock, so no live committer's files can be racing this
-    * sweep.
+    * copies), and stale `_manifest.tmp.*` files. `cur` is the current
+    * snapshot (what the caller just committed, or read); each older
+    * retained version file is parsed once. Callers hold the writer
+    * lock, so no live committer's files can be racing this sweep.
     */
-  def vacuum(): Unit = {
-    val cur = currentVersion()
-    // gen -> buckets any retained snapshot still resolves from it
-    val dataRefs: Map[String, Set[Int]] =
-      (mapping().toSeq ++ versions().flatMap(v => mappingAt(v).toSeq))
-        .groupMap { case (_, g) => g } { case (b, _) => b }
-        .map { case (g, bs) => g -> bs.toSet }
+  def vacuum(cur: Snapshot): Unit = {
+    // every snapshot that still resolves data: the current one, each
+    // older retained version, and each staged (write-audit-publish)
+    // snapshot until it is published or discarded
+    val live = cur +: (versions(cur).filter(_ < cur.version).map(at(_, cur)) ++
+      staged().map(staged))
+    // gen -> buckets some live snapshot still resolves from it
+    val dataRefs: Map[String, Set[Int]] = live.flatMap(_.mapping.toSeq)
+      .groupMap { case (_, g) => g } { case (b, _) => b }
+      .map { case (g, bs) => g -> bs.toSet }
     // deletion-vector dirs keep their generation alive too: a DV path
     // is `data/g-*/dv_<bucket>`, so its first two segments name the
     // gen; referenced-with-no-data-buckets keeps the dir but sweeps
     // nothing inside (DV subdirs are not `__bucket=` dirs)
-    val dvGens: Set[String] =
-      (dv().values.flatten ++ versions().flatMap(v => dvAt(v).values.flatten))
-        .map(_.split("/").take(2).mkString("/")).toSet
-    // staged (write-audit-publish) snapshots keep their generations —
-    // both data mappings and DV refs — alive until published/discarded
-    val stagedParsed = staged().map(t => parseStaged(t)._2)
-    val stagedDataRefs: Map[String, Set[Int]] = stagedParsed
-      .flatMap(_.m.toSeq.map { case (b, (g, _, _)) => (b, g) })
-      .groupMap(_._2)(_._1).map { case (g, bs) => g -> bs.toSet }
-    val stagedDvGens: Set[String] = stagedParsed
-      .flatMap(_.m.values.flatMap(_._3))
+    val dvGens: Set[String] = live.flatMap(_.dv.values.flatten)
       .map(_.split("/").take(2).mkString("/")).toSet
-    val merged = (dataRefs.toSeq ++ stagedDataRefs.toSeq)
-      .groupMapReduce(_._1)(_._2)(_ ++ _)
     val liveRefs: Map[String, Set[Int]] =
-      merged ++ ((dvGens ++ stagedDvGens) -- merged.keySet).map(_ -> Set.empty[Int])
+      dataRefs ++ (dvGens -- dataRefs.keySet).map(_ -> Set.empty[Int])
     // generations pre-registered by in-flight lock-free stagers are
     // fully live — their bucket layout is still being written
     val pending = pendingGens()
@@ -616,7 +554,7 @@ final class TableManifest(spark: SparkSession, val root: String) {
     if (fs.exists(versionsDir))
       fs.listStatus(versionsDir).foreach { st =>
         val name = st.getPath.getName
-        if (name.startsWith("v-") && name.stripPrefix("v-").toLong > cur)
+        if (name.startsWith("v-") && name.stripPrefix("v-").toLong > cur.version)
           fs.delete(st.getPath, false)
       }
     fs.listStatus(rootPath).foreach { st =>
@@ -639,17 +577,16 @@ final class TableManifest(spark: SparkSession, val root: String) {
       genSchemas.remove(gen)
   }
 
-  /** Drop history: retain only the `keepLast` most recent versions
-    * (minimum 1 — the current snapshot is always readable), then
+  /** Drop history: retain only the `keepLast` most recent versions of
+    * `cur` (minimum 1 — the current snapshot is always readable), then
     * vacuum generation dirs only the expired versions referenced.
     * This is the retention knob that bounds storage growth under
     * continuous merging.
     */
-  def expireVersions(keepLast: Int): Unit = {
-    val keep = math.max(1, keepLast)
-    val cutoff = currentVersion() - keep
-    versions().filter(_ <= cutoff).foreach(v => fs.delete(versionPath(v), false))
-    vacuum()
+  def expireVersions(keepLast: Int, cur: Snapshot = current()): Unit = {
+    val cutoff = cur.version - math.max(1, keepLast)
+    versions(cur).filter(_ <= cutoff).foreach(v => fs.delete(versionPath(v), false))
+    vacuum(cur)
   }
 
   /** Data files of one root-relative dir, listed once per handle.
@@ -708,8 +645,8 @@ final class TableManifest(spark: SparkSession, val root: String) {
   /** One file scan over `dirs` (root-relative dir, partition values,
     * data files) — no listing, no inference: see the class doc.
     */
-  private def scan(dirs: Seq[(String, InternalRow, Seq[FileStatus])],
-                   dataSchema: StructType, partitionSchema: StructType): DataFrame = {
+  private def fileScan(dirs: Seq[(String, InternalRow, Seq[FileStatus])],
+                       dataSchema: StructType, partitionSchema: StructType): DataFrame = {
     val index = new ManifestFileIndex(
       dirs.map { case (d, v, files) => (v, fs.makeQualified(new Path(root, d)), files) },
       partitionSchema)
@@ -733,40 +670,26 @@ final class TableManifest(spark: SparkSession, val root: String) {
       val schemas = dirs.map(_._1).distinct.map(g => g -> genSchema(g, byGen(g).flatMap(_._3)))
       val (g0, s0) = schemas.head
       schemas.tail.foreach { case (g, s) => requireSameSchema(g0, s0, g, s) }
-      Some(scan(dirs.map { case (gen, b, files) => (bucketDir(gen, b), InternalRow(b), files) },
+      Some(fileScan(dirs.map { case (gen, b, files) => (bucketDir(gen, b), InternalRow(b), files) },
         s0, bucketSchema))
     }
   }
 
   /** Rows of root-relative, unpartitioned dirs (deletion vectors) read
-    * with `schema` — the same cached, listing-free scan as [[snapshot]].
+    * with `schema` — the same cached, listing-free scan as [[scan]].
     */
   def scanDirs(dirs: Seq[String], schema: StructType): DataFrame =
-    scan(dirs.map(d => (d, InternalRow.empty, dataFiles(d))), schema, new StructType())
+    fileScan(dirs.map(d => (d, InternalRow.empty, dataFiles(d))), schema, new StructType())
 
-  /** Resolved snapshot read with the `__bucket` partition column.
-    * `buckets` restricts resolution to those buckets' file sets —
-    * pruning at the PATH level: other buckets' files are never even
-    * listed into the scan. None = no committed state for the request.
+  /** Snapshot `s`'s rows with the `__bucket` partition column (deletion
+    * vectors NOT applied: the owning sink applies `s.dv`). `buckets`
+    * restricts resolution to those buckets' file sets — pruning at the
+    * PATH level: other buckets' files are never even listed into the
+    * scan. None = no mapped bucket for the request. Generation dirs are
+    * immutable, so the frame stays `s` whatever commits after it.
     */
-  def snapshot(buckets: Option[Seq[Int]] = None): Option[DataFrame] =
-    resolve(mapping(), buckets)
-
-  /** [[snapshot]] as of a retained historical version — time travel.
-    * Generation dirs are immutable and version-pinned, so this read is
-    * SNAPSHOT-ISOLATED from any concurrent committer.
-    */
-  def snapshotAt(v: Long, buckets: Option[Seq[Int]] = None): Option[DataFrame] =
-    resolve(mappingAt(v), buckets)
-
-  /** Buckets whose zone map can intersect `[lo, hi]` on `col` — the
-    * metadata-level data-skipping decision. Buckets without recorded
-    * stats for `col` are kept (never prune on missing information).
-    */
-  def bucketsForRange(col: String, lo: Double, hi: Double): Seq[Int] =
-    stats().collect {
-      case (b, s) if s.get(col).forall(cs => cs.max >= lo && cs.min <= hi) => b
-    }.toSeq.sorted
+  def scan(s: Snapshot, buckets: Option[Seq[Int]] = None): Option[DataFrame] =
+    resolve(s.mapping, buckets)
 
   // ------------------------------------------------- bloom sidecars
 
@@ -788,18 +711,9 @@ final class TableManifest(spark: SparkSession, val root: String) {
     blooms.remove((gen, bucket, c))
   }
 
-  /** Current snapshot's bloom for (bucket, column), if the writer
-    * recorded one — (numHashes, bits).
-    */
-  def bloom(bucket: Int, c: String): Option[(Int, Array[Byte])] =
-    mapping().get(bucket).flatMap(gen => bloomIn(gen, bucket, c))
-
-  /** [[bloom]] against an already-resolved generation — the form the
-    * batched probes use so one manifest resolve serves every bucket
-    * (and so a probe can never mix two committed versions
-    * mid-iteration, which per-bucket `mapping()` calls could).
-    * Sidecars of a published generation are immutable, so each is read
-    * once per handle (absence included).
+  /** The bloom of (generation, bucket, column), if the writer recorded
+    * one — (numHashes, bits). Sidecars of a published generation are
+    * immutable, so each is read once per handle (absence included).
     */
   private def bloomIn(gen: String, bucket: Int, c: String): Option[(Int, Array[Byte])] =
     blooms.computeIfAbsent((gen, bucket, c), _ => {
@@ -817,37 +731,26 @@ final class TableManifest(spark: SparkSession, val root: String) {
       }
     })
 
-  /** Buckets that MIGHT hold a row with `c` hashing to `hash` — the
-    * metadata-level point-lookup decision ([[bucketsForRange]]'s
-    * equality sibling, for high-cardinality secondary ids where
-    * min/max spans the domain and zone maps cannot prune). A bucket
-    * without a sidecar for `c` is kept: missing information never
-    * prunes.
+  /** Buckets of `s` that MIGHT hold a row with `c` hashing to one of
+    * `hashes` — the metadata-level point-lookup decision (the zone
+    * maps' equality sibling, for high-cardinality secondary ids where
+    * min/max spans the domain and zone maps cannot prune). ONE sidecar
+    * read per bucket for the whole probe set. A bucket is admitted if
+    * ANY probe hash might be contained, or if it has no sidecar for `c`
+    * (missing information never prunes).
     */
-  def bucketsForPoint(c: String, hash: Long): Seq[Int] =
-    bucketsForPoints(c, Seq(hash))
-
-  /** Batched form of [[bucketsForPoint]]: ONE manifest resolve and ONE
-    * sidecar read per bucket for the whole probe set (the per-value
-    * form re-opened every bucket's bloom file per probe — a
-    * 10k-point sweep turned into 10k x buckets of file I/O). A bucket
-    * is admitted if ANY probe hash might be contained (or it has no
-    * sidecar — missing information never prunes).
-    */
-  def bucketsForPoints(c: String, hashes: Seq[Long]): Seq[Int] = {
-    val m = mapping() // ONE resolve: every bucket probes the same committed version
-    m.filter { case (b, gen) =>
+  def bucketsForPoints(s: Snapshot, c: String, hashes: Seq[Long]): Seq[Int] =
+    s.mapping.filter { case (b, gen) =>
       bloomIn(gen, b, c).forall { case (k, bits) =>
         hashes.exists(h => BucketBloom.mightContain(bits, k, h))
       }
     }.keys.toSeq.sorted
-  }
 
-  /** Per-bucket (fileName, size, mtime) of the current snapshot — the
-    * metadata the compaction policy and layout audits read.
+  /** Per-bucket (fileName, size, mtime) of snapshot `s` — the metadata
+    * the compaction policy and layout audits read.
     */
-  def bucketFiles(): Map[Int, Seq[(String, Long, Long)]] =
-    mapping().map { case (b, gen) =>
+  def bucketFiles(s: Snapshot): Map[Int, Seq[(String, Long, Long)]] =
+    s.mapping.map { case (b, gen) =>
       b -> dataFiles(bucketDir(gen, b)).map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
     }
 
@@ -1080,17 +983,42 @@ object TableManifest {
     */
   final case class Migration(target: Layout, migrated: Set[Int])
 
-  /** One parsed manifest body: version, bucket mapping (+ zone maps),
-    * and the BUCKET-LAYOUT state — the committed layout plus, while a
-    * progressive migration is in flight, the target layout and the set
-    * of old-layout buckets already rewritten into it. A body without
-    * the optional headers (pre-round-10 manifests) reads as
-    * `layout = None`: the owning sink falls back to its constructor
-    * parameters, which is exactly the pre-header behavior.
+  /** One table state, parsed from ONE manifest body (published, a
+    * retained version, or staged): its version, bucket -> root-relative
+    * generation dir, per-bucket zone maps (an empty map for a bucket
+    * without stats), DELETION VECTORS — bucket -> root-relative parquet
+    * dirs of key rows deleted merge-on-read, only for buckets holding
+    * some; readers anti-join these keys, a rewrite of the bucket
+    * consumes them — and the BUCKET-LAYOUT state: the committed layout
+    * plus, while a progressive migration is in flight, the target
+    * layout and the set of old-layout buckets already rewritten into
+    * it. A body without the optional headers (pre-round-10 manifests)
+    * reads as `layout = None`: the owning sink falls back to its
+    * constructor parameters, which is exactly the pre-header behavior.
+    *
+    * Immutable: an operation takes one and derives every plan from it,
+    * so nothing it plans can straddle a commit.
     */
-  private final case class Parsed(
+  final case class Snapshot(
       version: Long,
-      m: Map[Int, (String, Stats, Seq[String])],
+      mapping: Map[Int, String],
+      stats: Map[Int, Stats],
+      dv: Map[Int, Seq[String]],
       layout: Option[Layout],
-      migration: Option[Migration])
+      migration: Option[Migration]) {
+
+    /** Buckets whose zone map can intersect `[lo, hi]` on `col` — the
+      * metadata-level data-skipping decision. Buckets without recorded
+      * stats for `col` are kept (never prune on missing information).
+      */
+    def bucketsForRange(col: String, lo: Double, hi: Double): Seq[Int] =
+      mapping.keys.filter { b =>
+        stats.get(b).flatMap(_.get(col)).forall(cs => cs.max >= lo && cs.min <= hi)
+      }.toSeq.sorted
+  }
+
+  object Snapshot {
+    /** A table never committed: version 0, no bucket. */
+    val Empty: Snapshot = Snapshot(0L, Map.empty, Map.empty, Map.empty, None, None)
+  }
 }

@@ -251,10 +251,10 @@ class PipelineSpec extends SparkSpec {
     def state() = sink.read().select($"k", $"v").as[(Long, String)].collect().toSet
     sink.merge((1L to 20L).map(k => (k, s"v$k", 0L)).toDF("k", "v", "upd"))
     val vBefore = sink.versions().max
-    val mapBefore = sink.manifest.mapping()
+    val mapBefore = sink.manifest.current().mapping
     // merge-on-read delete of a scattered key set: no data file moves
     sink.deleteVector(Seq(3L, 7L, 11L, 19L).toDF("k"))
-    assert(sink.manifest.mapping() == mapBefore, "DV commit must not remap data buckets")
+    assert(sink.manifest.current().mapping == mapBefore, "DV commit must not remap data buckets")
     assert(sink.deleteVectors().nonEmpty)
     assert(state().map(_._1) == (1L to 20L).toSet -- Set(3L, 7L, 11L, 19L))
     // time travel BEFORE the DV still shows the rows; at the DV it doesn't
@@ -310,7 +310,7 @@ class PipelineSpec extends SparkSpec {
     sink.deleteVector(Seq(2L).toDF("k"))
     // vacuum runs inside merge/compact; run it directly too — the DV's
     // generation dir is referenced by no bucket mapping, only by the DV
-    sink.manifest.vacuum()
+    sink.manifest.vacuum(sink.manifest.current())
     assert(sink.read().select($"k").as[Long].collect().toSet == Set(1L))
     // a merge into the OTHER bucket must not disturb the outstanding DV
     sink.merge(Seq((1L, "a2", 1L)).toDF("k", "v", "upd"))
@@ -330,7 +330,7 @@ class PipelineSpec extends SparkSpec {
     val stagedGens = gensOnDisk() -- before
     assert(stagedGens.nonEmpty)
     // vacuum (ridden by any maintenance) must NOT sweep a staged gen
-    sink.manifest.vacuum()
+    sink.manifest.vacuum(sink.manifest.current())
     assert((gensOnDisk() -- before) == stagedGens, "staged generation must survive vacuum")
     assert(state() == Set((1L, 10L), (2L, 20L)), "staged rows invisible")
     // audit sees the candidate state
@@ -388,7 +388,8 @@ class PipelineSpec extends SparkSpec {
     spark.range(0).selectExpr("id AS k", "id AS v", "id AS n_rows",
         "id AS __applied_batch")
       .coalesce(1).write.parquet(s"$dir/$gen/__bucket=0")
-    new graft.sink.TableManifest(spark, dir).commit(Map(0 -> gen))
+    val t = new graft.sink.TableManifest(spark, dir)
+    t.commit(t.current(), Map(0 -> gen))
     val sink = new graft.sink.AggSink(spark, dir, Seq("k"), Seq("v"), 4)
     assert(sink.lastBatchId == -1L)
     // and a dir with NO manifest and no bucket dirs is simply absent
@@ -548,14 +549,14 @@ class PipelineSpec extends SparkSpec {
     // travel) but must have swept the crashed attempt's orphan data
     def onDisk() = Option(new java.io.File(dir + "/data").listFiles()).toSeq.flatten
       .filter(_.isDirectory).map(d => s"data/${d.getName}").toSet
-    val retained = (sink.manifest.versions().flatMap(v => sink.manifest.mappingAt(v).values)
-      ++ sink.manifest.mapping().values).toSet
+    val retained = (sink.manifest.versions().flatMap(v => sink.manifest.at(v).mapping.values)
+      ++ sink.manifest.current().mapping.values).toSet
     assert(onDisk() == retained,
       s"vacuum left orphan generations: ${onDisk() -- retained}")
     // expiring history down to the current version frees the rest
     sink.expireVersions(1)
-    assert(onDisk() == sink.manifest.mapping().values.toSet,
-      s"expiry left superseded generations: ${onDisk() -- sink.manifest.mapping().values.toSet}")
+    assert(onDisk() == sink.manifest.current().mapping.values.toSet,
+      s"expiry left superseded generations: ${onDisk() -- sink.manifest.current().mapping.values.toSet}")
     assert(state() == expected, "expiry must not touch the current snapshot")
 
     // ---- AggSink: addition is NOT idempotent — the crashed commit must
@@ -713,7 +714,7 @@ class PipelineSpec extends SparkSpec {
       .withColumn("ingestion_seq", $"ingestion_seq" + 90000L)))
     sink.manifest.beforeCommit = () => ()
     assert(sink.versions() == Seq(1L, 2L, 3L, 4L))
-    assert(sink.manifest.currentVersion() == 4L)
+    assert(sink.manifest.current().version == 4L)
 
     // retention: keep the 2 newest; expired reads fail loudly, the
     // current snapshot is untouched
@@ -739,7 +740,7 @@ class PipelineSpec extends SparkSpec {
     genPath.mkdirs()
     java.nio.file.Files.write(genPath.toPath.resolve("part-half.parquet"),
       "partial".getBytes)
-    sink.manifest.vacuum()
+    sink.manifest.vacuum(sink.manifest.current())
     assert(genPath.exists, "vacuum must not sweep a pre-registered generation")
     sink.manifest.discardPending(pending)
     assert(!new java.io.File(s"$dir/$gen").exists,
@@ -1130,31 +1131,39 @@ class PipelineSpec extends SparkSpec {
     assert(state(sink) == expectedFinal)
   }
 
-  test("consistentRead fence: a racing commit retries construction; churn fails loudly") {
+  test("snapshot pinning: a commit after a read took its snapshot stays out of that read") {
     import graft.sink.MergeSink
     val dir = freshDir()
-    val sink = new MergeSink(spark, dir,
-      keys = Seq("id"), orderCols = Seq("upd"), nBuckets = 4)
-    def batch(upd: Long, lo: Long, hi: Long) =
-      spark.range(lo, hi).select(col("id"), lit(upd).as("upd"))
-    sink.merge(batch(0L, 0L, 20L))
-    // one commit lands between the version probe and plan completion:
-    // the fence must retry and the retried plan must see the NEW state
-    var builds = 0
-    var next = 21L
-    val df = sink.consistentRead {
-      builds += 1
-      if (builds == 1) sink.merge(batch(1L, 20L, next))
-      sink.read()
+    def handle() = new MergeSink(spark, dir, keys = Seq("id"), orderCols = Seq("upd"),
+      nBuckets = 4, statsCols = Seq("id"), bloomCols = Seq("tag"))
+    def batch(upd: Long, lo: Long, hi: Long) = spark.range(lo, hi)
+      .select(col("id"), lit(upd).as("upd"), (col("id") * 100 + lit(upd)).as("tag"))
+    val reader = handle()
+    val writer = handle()
+    reader.merge(batch(0L, 0L, 40L))
+    // each racing commit rewrites every row (new upd, new tag), adds
+    // keys, and deletes one key merge-on-read: a read mixing in any of
+    // it differs from the pre-commit rows
+    var upd = 0L
+    def racingCommit(): Unit = {
+      upd += 1
+      writer.merge(batch(upd, 0L, 40L + upd))
+      writer.deleteVector(Seq(upd).toDF("id"))
     }
-    assert(builds == 2, s"fence did not retry the straddled build (builds=$builds)")
-    assert(df.count() == 21L, "retried plan must serve the post-commit state")
-    // a table that keeps committing during every construction attempt
-    // must fail loudly instead of spinning
-    val churn = intercept[IllegalStateException](sink.consistentRead {
-      sink.merge(batch(2L, next, next + 1)); next += 1
-      sink.read()
-    })
-    assert(churn.getMessage.contains("kept committing"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    def pinned(name: String, read: MergeSink => org.apache.spark.sql.DataFrame): Unit = {
+      val pre = rows(read(reader))
+      var fired = 0
+      reader.onReadSnapshot = () => { fired += 1; racingCommit() }
+      val df = try read(reader) finally reader.onReadSnapshot = () => ()
+      assert(fired == 1, s"$name: the read must take exactly one snapshot (took $fired)")
+      assert(rows(df) == pre, s"$name: the racing commit leaked into a read planned before it")
+      assert(rows(read(reader)) != pre, s"$name: a fresh read must see the racing commit")
+    }
+    pinned("read", _.read())
+    pinned("readRange", _.readRange("id", 3.0, 30.0))
+    val tags = rows(reader.read().select("tag")).toSeq.map(_.head.asInstanceOf[Long]).sorted.take(5)
+    pinned("readPoints", _.readPoints("tag", tags))
+    pinned("readForKeys", _.readForKeys(Seq(2L, 11L, 29L).toDF("id")))
   }
 }

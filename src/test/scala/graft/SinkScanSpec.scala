@@ -48,9 +48,9 @@ class SinkScanSpec extends SparkSpec {
     sink.migrateStep(3)
     sink.merge(batch(200, 204, 3))
     sink.deleteVector(Seq(201L).toDF("k"))
-    assert(sink.manifest.migration().nonEmpty, "fixture: migration must be in flight")
+    assert(sink.manifest.current().migration.nonEmpty, "fixture: migration must be in flight")
     assert(sink.deleteVectors().nonEmpty, "fixture: deletion vectors must be outstanding")
-    assert(sink.manifest.mapping().values.toSet.size >= 3, "fixture: need several generations")
+    assert(sink.manifest.current().mapping.values.toSet.size >= 3, "fixture: need several generations")
     (sink, past)
   }
 
@@ -129,21 +129,21 @@ class SinkScanSpec extends SparkSpec {
   test("manifest scan answers what the per-generation parquet resolution answered") {
     val (sink, past) = busyTable()
     val root = sink.path
-    val m = sink.manifest.mapping()
-    val snap = sink.manifest.snapshot().get
+    val m = sink.manifest.current().mapping
+    val snap = sink.manifest.scan(sink.manifest.current()).get
     val old = parquetResolution(root, m)
     assert(snap.schema == old.schema, s"schema changed:\n${snap.schema.treeString}\nvs\n${old.schema.treeString}")
     assert(rows(snap) == rows(old))
     // a bucket subset, a historical version, and the DV-applied reads
     val some = m.keys.toSeq.sorted.take(3)
-    assert(rows(sink.manifest.snapshot(Some(some)).get) == rows(parquetResolution(root, m.filter(e => some.contains(e._1)))))
-    assert(rows(sink.manifest.snapshotAt(past).get) ==
-      rows(parquetResolution(root, sink.manifest.mappingAt(past))))
+    assert(rows(sink.manifest.scan(sink.manifest.current(), Some(some)).get) == rows(parquetResolution(root, m.filter(e => some.contains(e._1)))))
+    assert(rows(sink.manifest.scan(sink.manifest.at(past)).get) ==
+      rows(parquetResolution(root, sink.manifest.at(past).mapping)))
     val live = parquetRead(root, m, sink.deleteVectors())
     assert(rows(sink.read()) == rows(live))
     assert(sink.read().filter($"k".isin(5L, 9L, 150L, 201L)).isEmpty, "DV keys must stay deleted")
     assert(rows(sink.readAt(past)) ==
-      rows(parquetRead(root, sink.manifest.mappingAt(past), sink.manifest.dvAt(past))))
+      rows(parquetRead(root, sink.manifest.at(past).mapping, sink.manifest.at(past).dv)))
     assert(rows(sink.readRange("v", 10.0, 20.0)) == rows(live.filter($"v".between(10.0, 20.0))))
     val pts = Seq(3L, 9L, 300L, 603L, 606L)
     assert(rows(sink.readPoints("s", pts)) == rows(live.filter($"s".isin(pts: _*))))
@@ -158,14 +158,14 @@ class SinkScanSpec extends SparkSpec {
     assert(r1.location == r2.location && r1.location.hashCode == r2.location.hashCode)
     assert(r1 == r2)
     // a different bucket subset is a different file set
-    val one = sink.manifest.mapping().keys.min
-    assert(rel(sink.manifest.snapshot(Some(Seq(one))).get).location != r1.location)
+    val one = sink.manifest.current().mapping.keys.min
+    assert(rel(sink.manifest.scan(sink.manifest.current(), Some(Seq(one))).get).location != r1.location)
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       // raw snapshots: no deletion-vector broadcast whose own reuse
       // could satisfy the assertion
-      def snap() = sink.manifest.snapshot().get
+      def snap() = sink.manifest.scan(sink.manifest.current()).get
       val a = snap().groupBy("k").agg(max("upd").as("m1"))
       val b = snap().groupBy("k").agg(max("upd").as("m2"))
       val p = a.join(b, "k").queryExecution.executedPlan.toString
@@ -175,10 +175,10 @@ class SinkScanSpec extends SparkSpec {
 
   test("scan statistics are the sum of the snapshot's file lengths") {
     val (sink, _) = busyTable()
-    val snap = sink.manifest.snapshot().get
+    val snap = sink.manifest.scan(sink.manifest.current()).get
     val bytes = sink.bucketFiles().values.flatten.map(_._2).sum
     assert(snap.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(bytes))
-    val old = parquetResolution(sink.path, sink.manifest.mapping())
+    val old = parquetResolution(sink.path, sink.manifest.current().mapping)
     assert(old.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(bytes))
   }
 
@@ -190,22 +190,22 @@ class SinkScanSpec extends SparkSpec {
       a.write.parquet(s"$dir/$g1/$bc=0")
       b.write.parquet(s"$dir/$g2/$bc=1")
       val t = new TableManifest(spark, dir)
-      t.commit(Map(0 -> g1, 1 -> g2))
+      t.commit(t.current(), Map(0 -> g1, 1 -> g2))
       (t, g1, g2)
     }
     // a column present in one generation only: was silently NULL
     val (t1, g1, g2) = table(Seq((1L, "x")).toDF("k", "a"), Seq((2L, "y")).toDF("k", "b"))
-    val e1 = intercept[IllegalStateException](t1.snapshot())
+    val e1 = intercept[IllegalStateException](t1.scan(t1.current()))
     assert(e1.getMessage.contains(g1) && e1.getMessage.contains(g2), e1.getMessage)
     assert(e1.getMessage.contains("schema drift"))
     // a type change of one column
     val (t2, _, _) = table(Seq((1, "x")).toDF("k", "a"), Seq((2L, "y")).toDF("k", "a"))
-    intercept[IllegalStateException](t2.snapshot())
+    intercept[IllegalStateException](t2.scan(t2.current()))
     // nullability alone is not drift; a subset read of one generation is fine
     val (t3, _, _) = table(spark.range(1).select($"id".as("k")),
       Seq(Option(2L)).toDF("k"))
-    assert(t3.snapshot().get.count() == 2)
-    assert(t1.snapshot(Some(Seq(0))).get.count() == 1)
+    assert(t3.scan(t3.current()).get.count() == 2)
+    assert(t1.scan(t1.current(), Some(Seq(0))).get.count() == 1)
 
     // end to end: a MergeSink batch with a renamed column lands in
     // buckets the table does not hold yet, so its commit succeeds —
@@ -288,13 +288,13 @@ class SinkScanSpec extends SparkSpec {
     }
     val purged = table()
     purged.purgeKeys(Seq(1L, 2L).toDF("k"))
-    assert(purged.manifest.mapping().isEmpty, "the purge must commit a snapshot without the keys")
-    assert(purged.versions() == Seq(purged.manifest.currentVersion()), "history must be destroyed")
+    assert(purged.manifest.current().mapping.isEmpty, "the purge must commit a snapshot without the keys")
+    assert(purged.versions() == Seq(purged.manifest.current().version), "history must be destroyed")
 
     val compacted = table()
-    val v0 = compacted.manifest.currentVersion()
+    val v0 = compacted.manifest.current().version
     compacted.compact(dropDeleted = Some("gone"))
-    assert(compacted.manifest.currentVersion() == v0 + 1 && compacted.manifest.mapping().isEmpty)
+    assert(compacted.manifest.current().version == v0 + 1 && compacted.manifest.current().mapping.isEmpty)
   }
 
   test("one generation writer: every write op's zone maps and bloom sidecars equal a plain parquet read's") {
@@ -307,16 +307,16 @@ class SinkScanSpec extends SparkSpec {
       * op's job descriptions.
       */
     def check(op: String, carriesStats: Boolean = false)(body: => Unit): Seq[String] = {
-      val (m0, st0) = (sink.manifest.mapping(), sink.manifest.stats())
+      val (m0, st0) = (sink.manifest.current().mapping, sink.manifest.current().stats)
       val (_, jobs) = jobsDuring(body)
-      val m = sink.manifest.mapping()
+      val m = sink.manifest.current().mapping
       val gens = m.values.toSet -- m0.values
       assert(gens.size == 1, s"$op: expected one new generation, got $gens")
       val gen = gens.head
       val buckets = m.collect { case (b, g) if g == gen => b }.toSeq
       val (refStats, refBlooms) = reference(sink.path, gen, statsCols, bloomCols)
       assert(refStats.keySet == buckets.toSet, s"$op: mapped buckets are not the written ones")
-      val committed = sink.manifest.stats().filter { case (b, _) => buckets.contains(b) }
+      val committed = sink.manifest.current().stats.filter { case (b, _) => buckets.contains(b) }
       assert(committed == refStats, s"$op: zone maps differ from the parquet read's")
       if (carriesStats) assert(committed == st0.filter { case (b, _) => buckets.contains(b) })
       for (b <- buckets; c <- bloomCols) {
@@ -357,8 +357,8 @@ class SinkScanSpec extends SparkSpec {
     val (_, foldJobs) = jobsDuring(view.merge(feed, batchId = 0L))
     assert(foldJobs.exists(_.startsWith("fold:write ")) && !foldJobs.exists(_.contains(":sidecars")))
     assert(rows(view.read()) == rows(feed.groupBy("k").agg(sum("v").as("v"), count(lit(1)).as("n_rows"))))
-    val gen = view.manifest.mapping().values.toSet
-    assert(gen.size == 1 && view.manifest.mapping().keySet ==
+    val gen = view.manifest.current().mapping.values.toSet
+    assert(gen.size == 1 && view.manifest.current().mapping.keySet ==
       spark.read.parquet(s"${view.path}/${gen.head}").select(MergeSink.BucketCol).distinct()
         .collect().map(_.getInt(0)).toSet)
     assertSinkFormat("fold", Seq(s"${view.path}/${gen.head}"), partitioned = true)
@@ -368,7 +368,7 @@ class SinkScanSpec extends SparkSpec {
     val sink = new MergeSink(spark, freshDir() + "/t", keys = Seq("k"), orderCols = Seq("upd"),
       nBuckets = 16)
     sink.merge(batch(0, 3, 0))
-    assert(sink.manifest.mapping().size <= 3, "fixture: most buckets must be absent")
+    assert(sink.manifest.current().mapping.size <= 3, "fixture: most buckets must be absent")
     val probe = (0L until 64L).toDF("k")
     val sc = spark.sparkContext
     val dvStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
@@ -388,7 +388,7 @@ class SinkScanSpec extends SparkSpec {
       ListenerBridge.waitUntilEmpty(sc)
     } finally sc.removeSparkListener(listener)
     val dv = sink.deleteVectors()
-    assert(dv.keySet.subsetOf(sink.manifest.mapping().keySet))
+    assert(dv.keySet.subsetOf(sink.manifest.current().mapping.keySet))
     // every probe row routed to a held bucket lands in that bucket's vector
     val routedToHeld = spark.read.parquet(dv.values.flatten.map(d => s"${sink.path}/$d").toSeq: _*).count()
     assert(routedToHeld > 0 && routedToHeld < probe.count())
@@ -396,4 +396,108 @@ class SinkScanSpec extends SparkSpec {
       s"dv:write wrote ${written.get()} rows, $routedToHeld route to held buckets")
     assert(sink.read().isEmpty, "every key of the table was probed")
   }
+
+  /** Runs `body` with every `file:` FileSystem a fresh
+    * [[ManifestOpenCounter]]; handles must be created inside `body`.
+    */
+  private def countingOpens[T](body: => T): T = {
+    spark.conf.set("fs.file.impl", classOf[ManifestOpenCounter].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try body
+    finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  /** (`_MANIFEST` opens, opens per version file) during `body`. */
+  private def opensDuring(body: => Unit): (Int, Map[String, Int]) = {
+    ManifestOpenCounter.opens.clear()
+    body
+    val names = ManifestOpenCounter.opens.asScala.toSeq
+    (names.count(_ == TableManifest.ManifestFile),
+      names.filter(_.startsWith("v-")).groupBy(identity).map { case (n, ns) => n -> ns.size })
+  }
+
+  test("one manifest parse per operation: each read, merge and fold opens _MANIFEST once") {
+    val (path, viewPath) = (freshDir() + "/t", freshDir() + "/view")
+    def table() = new MergeSink(spark, path, keys = Seq("k"), orderCols = Seq("upd"),
+      nBuckets = 16, statsCols = Seq("v"), bloomCols = Seq("s"))
+    def viewOf() = new AggSink(spark, viewPath, Seq("k"), Seq("v"), nBuckets = 16)
+    def viewBatch(i: Int) = batch(0, 200, i).select(($"k" % 37).as("k"), $"v".cast("long").as("v"))
+    val (sink0, view0) = (table(), viewOf())
+    (0 until 6).foreach { i =>
+      sink0.merge(batch(i * 20L, i * 20L + 100, i))
+      view0.merge(viewBatch(i), batchId = i.toLong)
+    }
+    sink0.deleteVector(Seq(3L, 50L).toDF("k"))
+    countingOpens {
+      val (sink, view) = (table(), viewOf())
+      val reads = Seq[(String, () => DataFrame)](
+        "read" -> (() => sink.read()),
+        "readForKeys" -> (() => sink.readForKeys(Seq(1L, 70L).toDF("k"))),
+        "readPoints" -> (() => sink.readPoints("s", Seq(3L, 300L, 606L))),
+        "readRange" -> (() => sink.readRange("v", 10.0, 20.0)),
+        "AggSink.read" -> (() => view.read()))
+      for ((name, op) <- reads) {
+        val (manifests, versionFiles) = opensDuring(op().collect())
+        assert(manifests == 1 && versionFiles.isEmpty,
+          s"$name opened _MANIFEST $manifests times and version files $versionFiles")
+      }
+      for ((name, op) <- Seq[(String, () => Unit)](
+             "merge" -> (() => sink.merge(batch(500, 520, 9))),
+             "fold" -> (() => view.merge(viewBatch(9), batchId = 9L)))) {
+        val (manifests, versionFiles) = opensDuring(op())
+        assert(manifests == 1, s"$name opened _MANIFEST $manifests times")
+        assert(versionFiles.nonEmpty && versionFiles.values.forall(_ == 1),
+          s"$name must parse each retained older version once: $versionFiles")
+      }
+    }
+    assert(table().read().count() == 218 && viewOf().read().count() == 37)
+  }
+
+  test("_MANIFEST is read only by TableManifest.current(), and consistentRead stays gone") {
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"run from the repo root: ${main.toAbsolutePath}")
+    val sources = Files.walk(main).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> new String(Files.readAllBytes(p), "UTF-8"))
+    val hits = sources.collect {
+      case (n, text) if text.contains("consistentRead") => s"$n: consistentRead"
+      case (n, text) if n != "TableManifest.scala" &&
+        ("\\bManifestFile\\b".r.findFirstIn(text).nonEmpty || text.contains("\"_MANIFEST\"")) =>
+        s"$n: names _MANIFEST"
+    }
+    assert(hits.isEmpty, s"manifest reads outside TableManifest.current(): ${hits.mkString("; ")}")
+    val tm = sources.collectFirst { case ("TableManifest.scala", t) => t }.get
+    val reads = "(readText|open)\\(manifestPath".r.findAllMatchIn(tm).map(_.start).toSeq
+    val current = tm.indexOf("  def current(): Snapshot =")
+    val next = tm.indexOf("\n  /**", current)
+    assert(reads.size == 1 && current >= 0 && reads.head > current && reads.head < next,
+      s"_MANIFEST must be parsed in exactly one place, current(): reads at $reads")
+  }
+
+  test("commits leave no manifest temp file or checksum beside _MANIFEST") {
+    val sink = new MergeSink(spark, freshDir() + "/t", Seq("k"), Seq("upd"), nBuckets = 4)
+    (0 until 4).foreach(i => sink.merge(batch(i * 10L, i * 10L + 20, i)))
+    sink.deleteVector(Seq(1L).toDF("k"))
+    assert(sink.versions().size == 5)
+    val names = Files.list(Paths.get(sink.path)).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(!names.exists(_.contains("_manifest.tmp")), s"left behind: ${names.sorted.mkString(", ")}")
+  }
+}
+
+/** A local FileSystem that records the name of every file opened
+  * (test probe for manifest parses: `fs.file.impl` with
+  * `fs.file.impl.disable.cache=true`).
+  */
+class ManifestOpenCounter extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    ManifestOpenCounter.opens.add(f.getName)
+    super.open(f, bufferSize)
+  }
+}
+
+object ManifestOpenCounter {
+  val opens = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
