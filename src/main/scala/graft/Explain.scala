@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints explain("formatted") for the named queries (or
   * all) against a given SF dir — used to check pushdown (PushedFilters/
   * ReadSchema), broadcast choices, and WholeStageCodegen coverage.
@@ -13,13 +11,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(4)
     names.foreach { name =>
       println(s"\n========== $name ==========")
       SparkEntry.queries.get(name) match {

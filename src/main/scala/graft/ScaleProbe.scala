@@ -97,26 +97,28 @@ object ScaleProbe {
       f"ScaleProbe needs a >=16g driver heap (current -Xmx ~ $heapGb%.1fg) — " +
         "run with SPARK_DRIVER_MEM=16g (build.sbt forwards it to -Xmx)")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPEATS", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = graft.core.Session.cpus()
     // local[N,4]: allow up to 4 task attempts, matching a real cluster's
     // spark.task.maxFailures default. The sf10 tier runs long enough to hit
     // rare JVM-level transient faults (observed: a NativeThreadSet race in
     // spill read-ahead under GCLocker retry, ArrayIndexOutOfBoundsException
     // from sun.nio.ch — not query code); local's default of 1 attempt turns
     // one such fault into a failed probe.
-    def build(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus,4]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    def build(): SparkSession = graft.core.Session.local(cpus, maxFailures = 4)
     var spark = build()
+    // a dead context (a JVM-fatal fault kills it) would fail every later
+    // measurement too — REBUILD a fresh session and keep going (round
+    // 12: the q249 adjudication rerun died with the context and the
+    // artifact recorded rerun=-1/reproduced=false instead of an actual
+    // re-measure; a restart measures, an abort loses the sweep)
+    def reviveIfDead(when: String): Unit =
+      if (spark.sparkContext.isStopped) {
+        System.err.println(s"[probe] SparkContext died — rebuilding a fresh session $when " +
+          "(check driver heap if this repeats)")
+        SparkSession.clearActiveSession()
+        SparkSession.clearDefaultSession()
+        spark = build()
+      }
     dirs.foreach { case (_, d) => graft.core.Preflight.check(spark, d) }
 
     def exec(df: DataFrame): Unit =
@@ -150,19 +152,7 @@ object ScaleProbe {
 
     def time(n: String, d: String): Double = {
       val ts = (1 to repeats).map { _ =>
-        // a dead context (a JVM-fatal fault kills it) would fail every
-        // later measurement too — REBUILD a fresh session and keep
-        // going (round 12: the q249 adjudication rerun died with the
-        // context and the artifact recorded rerun=-1/reproduced=false
-        // instead of an actual re-measure; a restart measures, an
-        // abort loses the sweep)
-        if (spark.sparkContext.isStopped) {
-          System.err.println("[probe] SparkContext died — rebuilding a fresh session " +
-            "for the remaining measurements (check driver heap if this repeats)")
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-          spark = build()
-        }
+        reviveIfDead("for the remaining measurements")
         // one query-level retry on failure: with task retries on, anything
         // that still aborts a whole attempt is either real (fails again) or
         // a driver-side transient; the retried run's time is recorded as a
@@ -174,13 +164,7 @@ object ScaleProbe {
         }
         try once() catch { case t: Throwable =>
           System.err.println(s"[probe] $n failed at $d (retrying once): $t")
-          if (spark.sparkContext.isStopped) {
-            System.err.println("[probe] SparkContext died with the failure — " +
-              "rebuilding before the retry")
-            SparkSession.clearActiveSession()
-            SparkSession.clearDefaultSession()
-            spark = build()
-          }
+          reviveIfDead("before the retry")
           try once() catch { case t2: Throwable =>
             System.err.println(s"[probe] $n failed at $d on retry: $t2"); -1.0 }
         }
@@ -273,57 +257,17 @@ object ScaleProbe {
     // and module options as this process), mirroring Bench's round-14
     // adjudicator. A failed fork leaves the in-JVM verdict standing
     // (rerun_mode says which one judged).
-    def forkPoint(qname: String, dir: String): Option[Double] = {
-      import scala.jdk.CollectionConverters._
-      val out = java.nio.file.Files.createTempFile("graft_probe_fresh_", ".json")
-      val log = java.nio.file.Files.createTempFile("graft_probe_fresh_", ".log")
-      try {
-        java.nio.file.Files.writeString(out, """{"best":{},"host_ratio":1.0}""")
-        val javaBin = java.nio.file.Paths.get(
-          System.getProperty("java.home"), "bin", "java").toString
-        val mx = java.lang.management.ManagementFactory.getRuntimeMXBean
-          .getInputArguments.asScala
-        val inherit = mx.filter(a =>
-          a.startsWith("--add-opens") || a.startsWith("--add-exports") ||
-          a.startsWith("--add-modules") || a.startsWith("--enable-native-access") ||
-          a.startsWith("-Xmx") || a.startsWith("-Dspark."))
-        val cmd = (Seq(javaBin) ++ inherit ++
-          Seq("-cp", System.getProperty("java.class.path"), "graft.Bench", qname)).asJava
-        val pb = new ProcessBuilder(cmd)
-        pb.directory(new java.io.File(System.getProperty("user.dir")))
-        val env = pb.environment()
-        env.put("SPARK_GRAFT_BENCH_OUT", out.toString)
-        env.put("SPARK_GRAFT_SF_DIR", dir)
-        env.put("SPARK_GRAFT_EAGER", "1")
-        env.put("SPARK_GRAFT_REPEATS", repeats.toString)
-        env.put("SPARK_GRAFT_CPUS", cpus)
-        env.put("SPARK_GRAFT_FRESH_CHILD", "1")
-        pb.redirectErrorStream(true)
-        pb.redirectOutput(log.toFile)
-        val proc = pb.start()
-        // generous but bounded: an sf10 point can legitimately run
-        // minutes (q241: 370 s); a hung child must not eat the probe
-        val done = proc.waitFor(900L, java.util.concurrent.TimeUnit.SECONDS)
-        if (!done) { proc.destroyForcibly(); None }
-        else if (proc.exitValue() != 0) {
-          System.err.println(s"[probe] WARN fresh-jvm $qname at $dir rc=${proc.exitValue()}")
-          None
-        } else {
-          import org.json4s._
-          jackson.JsonMethods.parse(java.nio.file.Files.readString(out)) \
-            "queries" \ qname match {
-            case JDouble(d) => Some(r3(d))
-            case JInt(i)    => Some(i.toDouble)
-            case _          => None
-          }
+    def forkPoint(qname: String, dir: String): Option[Double] =
+      // generous but bounded: an sf10 point can legitimately run
+      // minutes (q241: 370 s); a hung child must not eat the probe
+      Bench.freshChild(qname, dir, repeats, cpus, 900L, "probe").flatMap { j =>
+        import org.json4s._
+        j \ "queries" \ qname match {
+          case JDouble(d) => Some(r3(d))
+          case JInt(i)    => Some(i.toDouble)
+          case _          => None
         }
-      } catch { case e: Throwable =>
-        System.err.println(s"[probe] WARN fresh-jvm $qname at $dir failed: $e"); None
-      } finally {
-        java.nio.file.Files.deleteIfExists(out)
-        java.nio.file.Files.deleteIfExists(log)
       }
-    }
     val inJvmVerdict: Map[String, Boolean] = flagData.map { f =>
       val (_, es2) = rerunTimes(f.q)
       val e2e2 = e2e(es2)

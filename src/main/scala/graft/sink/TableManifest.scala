@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileContext, FileStatus, Options, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileStatus, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -132,6 +132,11 @@ final class TableManifest(spark: SparkSession, val root: String) {
   private val listings = new ConcurrentHashMap[String, Seq[FileStatus]]()
   private val genSchemas = new ConcurrentHashMap[String, StructType]()
   private val blooms = new ConcurrentHashMap[(String, Int, String), Option[(Int, Array[Byte])]]()
+  // Published versions this handle parsed or committed, for [[vacuum]]
+  // only: a version file never changes once published, and vacuum
+  // consults an entry only for a version its own listing still shows.
+  // [[expireVersions]] evicts what it deletes.
+  private val versionCache = new ConcurrentHashMap[Long, Snapshot]()
   private def manifestPath = new Path(root, TableManifest.ManifestFile)
   private def versionsDir = new Path(root, TableManifest.VersionsDir)
   private def versionPath(n: Long) = new Path(versionsDir, s"v-$n")
@@ -349,7 +354,8 @@ final class TableManifest(spark: SparkSession, val root: String) {
 
   /** Write `next` as version `next.version`, publish it, return it. */
   private def commitExact(next: Snapshot): Snapshot = {
-    val body = render(next).getBytes("UTF-8")
+    val text = render(next)
+    val body = text.getBytes("UTF-8")
     // immutable history copy first (overwrite: a crashed prior attempt
     // at this same unpublished version is dead by single-writer rule)
     fs.mkdirs(versionsDir)
@@ -374,6 +380,7 @@ final class TableManifest(spark: SparkSession, val root: String) {
       FileContext.getFileContext(rootPath.toUri, conf)
         .rename(tmp, manifestPath, Options.Rename.OVERWRITE)
     }
+    versionCache.put(next.version, parse(text))
     next
   }
 
@@ -509,17 +516,19 @@ final class TableManifest(spark: SparkSession, val root: String) {
     * no parquet byte of a dereferenced bucket survives. Also sweeps
     * generation dirs referenced by nothing (crashed commits), version
     * files above the published version (crashed commits' history
-    * copies), and stale `_manifest.tmp.*` files. `cur` is the current
-    * snapshot (what the caller just committed, or read); each older
-    * retained version file is parsed once. Callers hold the writer
+    * copies), and stale `_manifest.tmp.*` files with their `.crc`
+    * sidecars. `cur` is the current snapshot (what the caller just
+    * committed, or read); an older retained version file is parsed
+    * once per handle, not once per vacuum. Callers hold the writer
     * lock, so no live committer's files can be racing this sweep.
     */
   def vacuum(cur: Snapshot): Unit = {
     // every snapshot that still resolves data: the current one, each
     // older retained version, and each staged (write-audit-publish)
     // snapshot until it is published or discarded
-    val live = cur +: (versions(cur).filter(_ < cur.version).map(at(_, cur)) ++
-      staged().map(staged))
+    val older = versions(cur).filter(_ < cur.version)
+      .map(v => versionCache.computeIfAbsent(v, _ => at(v, cur)))
+    val live = cur +: (older ++ staged().map(staged))
     // gen -> buckets some live snapshot still resolves from it
     val dataRefs: Map[String, Set[Int]] = live.flatMap(_.mapping.toSeq)
       .groupMap { case (_, g) => g } { case (b, _) => b }
@@ -557,9 +566,12 @@ final class TableManifest(spark: SparkSession, val root: String) {
         if (name.startsWith("v-") && name.stripPrefix("v-").toLong > cur.version)
           fs.delete(st.getPath, false)
       }
-    fs.listStatus(rootPath).foreach { st =>
-      if (st.getPath.getName.startsWith("_manifest.tmp."))
-        fs.delete(st.getPath, false)
+    // listed raw: a checksummed FileSystem hides the `.crc` files, and
+    // commits before the NIO temp write left `._manifest.tmp.*.crc`
+    val raw = fs match { case c: ChecksumFileSystem => c.getRawFileSystem; case f => f }
+    raw.listStatus(rootPath).foreach { st =>
+      val n = st.getPath.getName
+      if (n.startsWith("_manifest.tmp.") || n.startsWith("._manifest.tmp.")) raw.delete(st.getPath, false)
     }
   }
 
@@ -585,7 +597,10 @@ final class TableManifest(spark: SparkSession, val root: String) {
     */
   def expireVersions(keepLast: Int, cur: Snapshot = current()): Unit = {
     val cutoff = cur.version - math.max(1, keepLast)
-    versions(cur).filter(_ <= cutoff).foreach(v => fs.delete(versionPath(v), false))
+    versions(cur).filter(_ <= cutoff).foreach { v =>
+      fs.delete(versionPath(v), false)
+      versionCache.remove(v)
+    }
     vacuum(cur)
   }
 

@@ -1,0 +1,56 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.functions.col
+import graft.core.{JobLabel, Probe}
+
+/** The one job probe ([[graft.core.Probe]]) and the one session
+  * builder ([[graft.core.Session]]): the probe's per-job fields on a
+  * fixed action, and a source guard that keeps every other session
+  * builder and listener out of the engine.
+  */
+class ProbeSpec extends SparkSpec {
+  test("the probe records a two-job shuffle action under its JobLabel") {
+    // a fresh conf scope: AQE runs the shuffle map stage as its own job
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    val (rows, jobs) = Probe.during(s) {
+      JobLabel(s, "probe:count /pinned") {
+        s.range(0, 1000, 1, 4).groupBy((col("id") % 10).as("g")).count().collect()
+      }
+    }
+    assert(rows.length == 10)
+    assert(jobs.size == 2, s"expected the map job and the result job: $jobs")
+    assert(jobs.forall(j => j.label == "probe:count" && j.site == "probe:count /pinned"))
+    assert(jobs.forall(j => j.end >= j.start && j.start > 0))
+    val Seq(map, result) = jobs
+    assert(map.tasks == 4 && result.tasks == 1, s"tasks: ${jobs.map(_.tasks)}")
+    assert(map.shuffleWrite > 0 && result.shuffleWrite == 0, s"shuffle: $jobs")
+    assert(result.shuffleRead > 0 && map.shuffleRead == 0, s"shuffle: $jobs")
+  }
+
+  test("SparkSession.builder and addSparkListener live only in core.Session and core.Probe") {
+    // cdcbench/ keeps its own session and listener and is not scanned
+    val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
+    assert(roots.forall(Files.isDirectory(_)), s"run from the repo root: ${roots.head.toAbsolutePath}")
+    val self = "ProbeSpec.scala"
+    val allowed = Map(
+      "SparkSession.builder()" -> Set("graft/core/Session.scala"),
+      "addSparkListener" -> Set("graft/core/Probe.scala"),
+      "waitUntilEmpty" -> Set("graft/core/Probe.scala", "sql/graft/ListenerBridge.scala"))
+    def code(p: Path): Seq[String] = Files.readAllLines(p).asScala.toSeq
+      .map(_.trim).filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+    val hits = for {
+      root <- roots
+      p <- Files.walk(root).iterator().asScala.toSeq.sortBy(_.toString)
+      name = p.getFileName.toString
+      if name.endsWith(".scala") && name != self
+      line <- code(p)
+      (needle, owners) <- allowed if line.contains(needle) && !owners.exists(p.endsWith)
+    } yield s"$p: $needle"
+    assert(hits.isEmpty, s"session or listener machinery outside core: ${hits.mkString("; ")}")
+  }
+}

@@ -4,11 +4,10 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ListenerBridge
+import graft.core.Probe
 import graft.sink.{AggSink, BucketBloom, MergeSink, TableManifest}
 
 /** The manifest-resolved snapshot scan ([[TableManifest]] read path):
@@ -82,32 +81,6 @@ class SinkScanSpec extends SparkSpec {
     df.select(cols.map(col).toSeq: _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
   }
 
-  /** Descriptions (JobLabel phases; "" when unlabelled) of the jobs
-    * started by THIS thread while `body` runs (a thread-local job
-    * property tags them, so other threads' jobs cannot leak in).
-    */
-  private def jobsDuring[T](body: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val tag = s"scan-spec-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(ev: SparkListenerJobStart): Unit =
-        Option(ev.properties).filter(_.getProperty("graft.scanSpec") == tag).foreach { p =>
-          jobs.add(Option(p.getProperty("spark.job.description")).getOrElse(""))
-        }
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.scanSpec", tag)
-    try {
-      val out = body
-      ListenerBridge.waitUntilEmpty(sc)
-      (out, jobs.asScala.toSeq)
-    } finally {
-      sc.setLocalProperty("graft.scanSpec", null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("building sink read frames launches zero Spark jobs, cold handle included") {
     val (sink, past) = busyTable()
     val view = new AggSink(spark, freshDir() + "/view", Seq("k"), Seq("v"), nBuckets = 4)
@@ -117,7 +90,7 @@ class SinkScanSpec extends SparkSpec {
       nBuckets = 8, statsCols = Seq("v"), bloomCols = Seq("s"))
     val coldView = new AggSink(spark, view.path, Seq("k"), Seq("v"), nBuckets = 4)
     for ((s, a) <- Seq((cold, coldView), (sink, view))) {
-      val (frames, jobs) = jobsDuring(Seq(
+      val (frames, jobs) = Probe.during(spark)(Seq(
         s.read(), s.readAt(past), s.readRange("v", 10.0, 20.0),
         s.readPoints("s", Seq(3L, 300L, 606L)), a.read()))
       assert(jobs.isEmpty, s"planning ${frames.size} sink reads launched ${jobs.size} Spark job(s)")
@@ -304,11 +277,11 @@ class SinkScanSpec extends SparkSpec {
       nBuckets = 8, statsCols = statsCols, bloomCols = bloomCols)
     sink.merge(batch(0, 240, 0))
     /** Runs one op and checks the generation it committed; returns the
-      * op's job descriptions.
+      * op's job labels.
       */
     def check(op: String, carriesStats: Boolean = false)(body: => Unit): Seq[String] = {
       val (m0, st0) = (sink.manifest.current().mapping, sink.manifest.current().stats)
-      val (_, jobs) = jobsDuring(body)
+      val jobs = Probe.during(spark)(body)._2.map(_.label)
       val m = sink.manifest.current().mapping
       val gens = m.values.toSet -- m0.values
       assert(gens.size == 1, s"$op: expected one new generation, got $gens")
@@ -324,9 +297,9 @@ class SinkScanSpec extends SparkSpec {
         assert(refBlooms.get((b, c)) == Some(p).filter(Files.exists(_)).map(Files.readAllBytes(_).toSeq),
           s"$op: bloom sidecar of bucket $b column $c differs from the parquet read's")
       }
-      assert(jobs.count(_.startsWith(s"$op:sidecars ")) == bloomCols.size,
+      assert(jobs.count(_ == s"$op:sidecars") == bloomCols.size,
         s"$op: sidecars must be one job per bloom column, got ${jobs.mkString("; ")}")
-      assert(!jobs.exists(_.startsWith(s"$op:stats-scan")), s"$op: footer stats must not scan")
+      assert(!jobs.contains(s"$op:stats-scan"), s"$op: footer stats must not scan")
       assertSinkFormat(op, Seq(s"${sink.path}/$gen"), partitioned = true)
       jobs
     }
@@ -354,8 +327,8 @@ class SinkScanSpec extends SparkSpec {
     // Spark's default — the size check needs rows)
     val view = new AggSink(spark, freshDir() + "/view", Seq("k"), Seq("v"), nBuckets = 4)
     val feed = batch(0, 2000, 0).select(($"k" % 500).as("k"), $"v".cast("long").as("v"))
-    val (_, foldJobs) = jobsDuring(view.merge(feed, batchId = 0L))
-    assert(foldJobs.exists(_.startsWith("fold:write ")) && !foldJobs.exists(_.contains(":sidecars")))
+    val foldJobs = Probe.during(spark)(view.merge(feed, batchId = 0L))._2.map(_.label)
+    assert(foldJobs.contains("fold:write") && !foldJobs.exists(_.contains(":sidecars")))
     assert(rows(view.read()) == rows(feed.groupBy("k").agg(sum("v").as("v"), count(lit(1)).as("n_rows"))))
     val gen = view.manifest.current().mapping.values.toSet
     assert(gen.size == 1 && view.manifest.current().mapping.keySet ==
@@ -370,30 +343,14 @@ class SinkScanSpec extends SparkSpec {
     sink.merge(batch(0, 3, 0))
     assert(sink.manifest.current().mapping.size <= 3, "fixture: most buckets must be absent")
     val probe = (0L until 64L).toDF("k")
-    val sc = spark.sparkContext
-    val dvStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val written = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new SparkListener {
-      override def onJobStart(ev: SparkListenerJobStart): Unit =
-        if (Option(ev.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-              .exists(_.startsWith("dv:write ")))
-          ev.stageIds.foreach(dvStages.add)
-      override def onTaskEnd(ev: SparkListenerTaskEnd): Unit =
-        if (dvStages.contains(ev.stageId) && ev.taskMetrics != null)
-          written.addAndGet(ev.taskMetrics.outputMetrics.recordsWritten)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sink.deleteVector(probe)
-      ListenerBridge.waitUntilEmpty(sc)
-    } finally sc.removeSparkListener(listener)
+    val written = Probe.during(spark)(sink.deleteVector(probe))._2
+      .filter(_.label == "dv:write").map(_.recordsWritten).sum
     val dv = sink.deleteVectors()
     assert(dv.keySet.subsetOf(sink.manifest.current().mapping.keySet))
     // every probe row routed to a held bucket lands in that bucket's vector
     val routedToHeld = spark.read.parquet(dv.values.flatten.map(d => s"${sink.path}/$d").toSeq: _*).count()
     assert(routedToHeld > 0 && routedToHeld < probe.count())
-    assert(written.get() == routedToHeld,
-      s"dv:write wrote ${written.get()} rows, $routedToHeld route to held buckets")
+    assert(written == routedToHeld, s"dv:write wrote $written rows, $routedToHeld route to held buckets")
     assert(sink.read().isEmpty, "every key of the table was probed")
   }
 
@@ -452,8 +409,11 @@ class SinkScanSpec extends SparkSpec {
         assert(versionFiles.nonEmpty && versionFiles.values.forall(_ == 1),
           s"$name must parse each retained older version once: $versionFiles")
       }
+      // published versions are immutable: the same handle never re-parses one
+      val (_, again) = opensDuring(sink.merge(batch(600, 620, 10)))
+      assert(again.isEmpty, s"a second merge on the handle re-opened version files $again")
     }
-    assert(table().read().count() == 218 && viewOf().read().count() == 37)
+    assert(table().read().count() == 238 && viewOf().read().count() == 37)
   }
 
   test("_MANIFEST is read only by TableManifest.current(), and consistentRead stays gone") {
@@ -482,8 +442,13 @@ class SinkScanSpec extends SparkSpec {
     (0 until 4).foreach(i => sink.merge(batch(i * 10L, i * 10L + 20, i)))
     sink.deleteVector(Seq(1L).toDF("k"))
     assert(sink.versions().size == 5)
-    val names = Files.list(Paths.get(sink.path)).iterator().asScala.map(_.getFileName.toString).toSeq
+    def names = Files.list(Paths.get(sink.path)).iterator().asScala.map(_.getFileName.toString).toSeq
     assert(!names.exists(_.contains("_manifest.tmp")), s"left behind: ${names.sorted.mkString(", ")}")
+    // the checksum an older commit left beside its temp body is reclaimed
+    val orphan = Paths.get(sink.path, s"._manifest.tmp.${java.util.UUID.randomUUID()}.crc")
+    Files.write(orphan, Array[Byte](1, 2, 3))
+    sink.merge(batch(100, 110, 5))
+    assert(!Files.exists(orphan), s"left behind: ${names.sorted.mkString(", ")}")
   }
 }
 

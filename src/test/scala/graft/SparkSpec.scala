@@ -8,17 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object GraftTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_tests_").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    // a static conf: Spark reads `spark.*` system properties at startup
+    sys.props("spark.sql.warehouse.dir") =
+      java.nio.file.Files.createTempDirectory("graft_wh_tests_").toString
+    graft.core.Session.local(4)
   }
   val sfDir = "/root/testdata/sf0.001"
 }

@@ -107,32 +107,17 @@ class StreamGateSpec extends SparkSpec {
   test("bagEqual runs no more Spark jobs than the multiset witness it replaced") {
     val a = spark.range(0, 2000).select(col("id").as("k"), (col("id") * 3).as("v"))
     val b = a.orderBy(col("v").desc)
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(ev: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
+    val (multiset, oldJobs) = graft.core.Probe.during(spark) {
+      val cs = a.columns.toSeq.map(col)
+      a.withColumn("__side", lit(1L))
+        .unionByName(b.select(cs: _*).withColumn("__side", lit(-1L)))
+        .groupBy(cs: _*).agg(sum(col("__side")).as("__d"))
+        .filter(col("__d") =!= 0L).isEmpty
     }
-    def countJobs(f: => Boolean): (Boolean, Long) = {
-      org.apache.spark.sql.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      jobs.set(0)
-      val r = f
-      org.apache.spark.sql.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      (r, jobs.get())
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (multiset, oldJobs) = countJobs {
-        val cs = a.columns.toSeq.map(col)
-        a.withColumn("__side", lit(1L))
-          .unionByName(b.select(cs: _*).withColumn("__side", lit(-1L)))
-          .groupBy(cs: _*).agg(sum(col("__side")).as("__d"))
-          .filter(col("__d") =!= 0L).isEmpty
-      }
-      val (keyed, newJobs) = countJobs(StreamGate.bagEqual(a, b, Seq("k")))
-      assert(multiset && keyed)
-      assert(newJobs <= oldJobs, s"bagEqual ran $newJobs jobs, the multiset witness $oldJobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (keyed, newJobs) = graft.core.Probe.during(spark)(StreamGate.bagEqual(a, b, Seq("k")))
+    assert(multiset && keyed)
+    assert(newJobs.size <= oldJobs.size,
+      s"bagEqual ran ${newJobs.size} jobs, the multiset witness ${oldJobs.size}")
   }
 
   test("gate scaffolding lives only in the StreamGate harness") {
