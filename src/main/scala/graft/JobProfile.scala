@@ -4,7 +4,9 @@ package graft
   * one query and prints every Spark job's label (its `JobLabel`, else
   * its call site), duration, task count and shuffle bytes — the
   * evidence for job-floor work ("which call paths launch the 423 jobs
-  * of q289"). Not part of the driver contract.
+  * of q289") — and the Janino compiles and compile time of the run
+  * (JVM-wide, see [[graft.core.Probe.compiles]]). Not part of the
+  * driver contract.
   *
   * Usage: runMain graft.JobProfile <query> [sfDir]
   */
@@ -16,10 +18,14 @@ object JobProfile {
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
     val probe = graft.core.Probe(spark)
     val t0 = System.nanoTime()
-    fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    val result = fn(spark, sfDir)
+    // the jobs that evaluate the returned frame
+    graft.core.JobLabel(spark, "result")(result.write.format("noop").mode("overwrite").save())
     val wall = (System.nanoTime() - t0) / 1e9
     val jobs = probe.jobs.filter(_.end >= 0)
-    println(f"\n=== $name: ${jobs.size} jobs, wall $wall%.2f s ===")
+    val compiled = probe.compiles
+    println(f"\n=== $name: ${jobs.size} jobs, wall $wall%.2f s, " +
+      f"${compiled.count} Janino compiles in ${compiled.seconds}%.2f s ===")
     jobs.foreach { j =>
       println(f"job ${j.id}%4d  ${j.seconds}%7.3f s  tasks=${j.tasks}%-4d  " +
         f"shW=${j.shuffleWrite / 1e6}%9.2fMB shR=${j.shuffleRead / 1e6}%9.2fMB  ${j.site} t0=${j.start} t1=${j.end}")

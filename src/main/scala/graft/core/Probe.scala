@@ -6,21 +6,25 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
 import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.graft.ListenerBridge
 
 /** The one Spark-job measurement listener: one [[Probe.Job]] per job
   * started while it is attached. A stage's metrics accrue to the job
   * that ran it (a stage skipped because its shuffle exists adds
   * nothing). [[jobs]] drains the listener bus first, so no trailing
-  * stage event is missed.
+  * stage event is missed. It also counts Janino compiles over the same
+  * window ([[compiles]]).
   */
 final class Probe private (sc: SparkContext, tag: Option[String]) extends SparkListener {
-  import Probe.Job
+  import Probe.{Compiles, Job}
 
   private val byId = new ConcurrentHashMap[Int, Job]()
   private val stageJob = new ConcurrentHashMap[Int, Int]()
+  private val compiles0 = Compiles.now()
 
   override def onJobStart(ev: SparkListenerJobStart): Unit = {
     def prop(k: String) = Option(ev.properties).flatMap(p => Option(p.getProperty(k)))
@@ -52,6 +56,16 @@ final class Probe private (sc: SparkContext, tag: Option[String]) extends SparkL
     byId.values.asScala.toSeq.sortBy(_.id)
   }
 
+  /** Generated classes Janino compiled since the probe attached, and
+    * their compile time — a codegen cache hit compiles nothing. JVM-WIDE
+    * (Spark's `CodegenMetrics` and `CodeGenerator.compileTime`), not per
+    * thread or per tag: every session and thread of the JVM counts.
+    */
+  def compiles: Compiles = {
+    val now = Compiles.now()
+    Compiles(now.count - compiles0.count, now.seconds - compiles0.seconds)
+  }
+
   def close(): Unit = sc.removeSparkListener(this)
 }
 
@@ -75,6 +89,15 @@ object Probe {
     def site: String = if (description.nonEmpty) description else callSite
 
     def seconds: Double = (end - start) / 1000.0
+  }
+
+  /** `count` Janino compiles taking `seconds` in total. */
+  final case class Compiles(count: Long, seconds: Double)
+
+  object Compiles {
+    /** The JVM's totals since start. */
+    def now(): Compiles = Compiles(CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime / 1e9)
   }
 
   private val TagKey = "graft.probe"

@@ -1298,9 +1298,10 @@ object StreamingQueries {
     */
   def q289StreamingCcSidecars(s: SparkSession, d: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_q289_")
-    val (edges, copyLight) = q249EdgesWithStats(s, d)
+    val (edges, copyLight) = graft.core.JobLabel(s, "q289:edges")(q249EdgesWithStats(s, d))
     // one staged write for the 8-slice feed — see q249's feed comment
-    val in = feed(edges, pmod(col("id_a") * 31L + col("id_b"), lit(8L)), 8, s"$base/in")
+    val in = graft.core.JobLabel(s, "q289:feed")(
+      feed(edges, pmod(col("id_a") * 31L + col("id_b"), lit(8L)), 8, s"$base/in"))
     val sink = new MergeSink(s, s"$base/labels",
       keys = Seq("id"), orderCols = Seq("upd"), nBuckets = 32,
       bloomCols = Seq("cluster_id"))

@@ -3,6 +3,7 @@ package graft.sink
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.functions.BoundValue
 
 /** Incremental AGGREGATE maintenance — the materialized-view twin of
   * `MergeSink` (same hash-bucketed, partition-pruned table layout;
@@ -179,7 +180,9 @@ final class AggSink(
         // commit — never ahead of or behind the aggregate it certifies.
         // Unfenced merges (batchId = -1) carry prior fences forward;
         // an already-fenced bucket's rows are filtered out wholesale,
-        // so its files are not even rewritten (the replay no-op).
+        // so its files are not even rewritten (the replay no-op). The
+        // batch id is a bound value, not a literal, so the next batch
+        // reuses this batch's compiled fold.
         //
         // ONE exchange serves the whole fold (round 16, guide §2.4):
         // the bucket column is functional on the keys, so grouping by
@@ -189,16 +192,17 @@ final class AggSink(
         // agg (hash keys) and again for the windows (hash bucket). The
         // price: at most one non-empty task per touched bucket (class
         // doc, FOLD PARALLELISM).
+        val bid = BoundValue.of(batchId)
         val w = manifest.writeGeneration("fold", base.repartition(col(BucketCol))
           .groupBy((col(BucketCol) +: keys.map(col)): _*)
           .agg(aggs.head, aggs.tail: _*)
           .withColumn("__f_bucket", coalesce(applied, lit(-1L)))
-          .filter(lit(batchId) < 0L || col("__f_bucket") < lit(batchId))
+          .transform(df => if (batchId < 0) df else df.filter(col("__f_bucket") < bid))
           .withColumn("__nz",
             max(when(col(CountCol) =!= 0L, 1).otherwise(0)).over(wAll))
           .withColumn("__rk", row_number().over(wOrd))
           .filter(col(CountCol) =!= 0L || (col("__nz") === 0 && col("__rk") === 1))
-          .withColumn(FenceCol, greatest(lit(batchId), col("__f_bucket")))
+          .withColumn(FenceCol, greatest(bid, col("__f_bucket")))
           .drop("__nz", "__rk", "__f_key", "__f_bucket"))
         // a fully-fenced (replayed) batch writes no bucket dir: no
         // commit, no version — the old fold-set-empty skip, now decided

@@ -2,7 +2,11 @@ package graft.sink
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.LongType
+import graft.functions.BoundValue
 import graft.ops.Cdc
 
 /** Durable keyed MERGE upsert sink — the production replacement for
@@ -264,11 +268,15 @@ final class MergeSink(
     * buckets whose zone map can intersect the range — buckets outside
     * it are never listed, let alone scanned. Equivalent to
     * `read().where(c between lo and hi)` by the zone-map invariant;
-    * PipelineSpec asserts both the equivalence and the pruning.
+    * PipelineSpec asserts both the equivalence and the pruning. The
+    * bounds are bound values ([[BoundValue]]), so a new range reuses
+    * the compiled filter; the price is that the range is not a parquet
+    * pushed filter (SEMANTICS.md).
     */
   def readRange(c: String, lo: Double, hi: Double): DataFrame = {
     val s = readSnapshot()
-    scanIn(s, s.bucketsForRange(c, lo, hi)).filter(col(c) >= lit(lo) && col(c) <= lit(hi))
+    scanIn(s, s.bucketsForRange(c, lo, hi))
+      .filter(col(c) >= BoundValue.of(lo) && col(c) <= BoundValue.of(hi))
   }
 
   /** Latest-per-key state restricted to the given buckets; resolution
@@ -328,10 +336,19 @@ final class MergeSink(
     * `isin` filter; false negatives cannot happen (the sidecar is
     * built from the committed files themselves). Equivalent to
     * `read().where(c isin vs)`; PipelineSpec asserts equivalence and
-    * pruning.
+    * pruning. On a BIGINT `c` the residual is an `InSet`, which codegens
+    * as a reference to its hash set (a new probe set reuses the
+    * compiled filter) and still pushes down as a parquet `In`. Any
+    * other type keeps the analyzer's `isin`: its coercion decides the
+    * comparison type, and an INT `InSet` would codegen literal `switch`
+    * cases anyway.
     */
-  def readPoints(c: String, vs: Seq[Long]): DataFrame =
-    readBucketsForPoints(c, vs).filter(col(c).isin(vs: _*))
+  def readPoints(c: String, vs: Seq[Long]): DataFrame = {
+    val df = readBucketsForPoints(c, vs)
+    val bigint = df.schema.exists(f => f.name == c && f.dataType == LongType)
+    df.filter(if (bigint) ColumnBridge.column(InSet(ColumnBridge.expression(col(c)), vs.toSet[Any]))
+              else col(c).isin(vs: _*))
+  }
 
   /** [[readPoints]] WITHOUT the residual `isin` filter: the rows of
     * every bucket some probe's bloom admits. For a caller that joins

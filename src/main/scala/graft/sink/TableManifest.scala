@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileStatus, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.graft.PlanBridge
@@ -978,10 +979,20 @@ object TableManifest {
 
   /** Distinct buckets `df`'s rows route to under `bucket` — at most
     * one small int per bucket reaches the driver: the touched-bucket
-    * pruning decision every keyed write and read makes.
+    * pruning decision every keyed write and read makes. A frame that
+    * already sits on the driver (a local probe or batch: the optimizer
+    * folds the bucket projection into a `LocalRelation`) is routed from
+    * those rows, without a Spark job; anything else runs the distinct.
     */
-  private[sink] def touchedBuckets(df: DataFrame, bucket: Column): Seq[Int] =
-    df.select(bucket.as(MergeSink.BucketCol)).distinct().collect().map(_.getInt(0)).toSeq
+  private[sink] def touchedBuckets(df: DataFrame, bucket: Column): Seq[Int] = {
+    val ids = df.select(bucket.as(MergeSink.BucketCol)).distinct()
+    val local = ids.queryExecution.optimizedPlan match {
+      case Aggregate(_, _, l: LocalRelation, _) => Some(l)
+      case l: LocalRelation => Some(l) // an empty frame
+      case _ => None
+    }
+    local.fold(ids.collect().map(_.getInt(0)).toSeq)(_.data.map(_.getInt(0)).distinct)
+  }
 
   /** One bucket-layout generation of a [[MergeSink]] table: `n`
     * hash (rangeWidth = None) or range buckets, living in the physical

@@ -341,6 +341,29 @@ class PlanSpec extends SparkSpec {
       "readRange listed files outside the zone-map-resolved buckets")
   }
 
+  test("sink point reads push an In filter; a range read's bound range is not a pushed filter") {
+    import graft.sink.MergeSink
+    val dir = java.nio.file.Files.createTempDirectory("graft_pushplan_").toString + "/t"
+    val sink = new MergeSink(spark, dir, keys = Seq("k"), orderCols = Seq("ver"),
+      nBuckets = 8, statsCols = Seq("v"), bloomCols = Seq("s"))
+    sink.merge(spark.range(400).select($"id".as("k"), ($"id" % 7).as("ver"),
+      ($"id" * 3).as("s"), ($"id" % 100).cast("double").as("v")))
+    def pushed(p: String): String =
+      p.linesIterator.find(_.contains("PushedFilters:")).getOrElse(s"no PushedFilters in:\n$p")
+    val points = pushed(executed(sink.readPoints("s", Seq(3L, 300L, 606L))))
+    assert("In\\(s, \\[[0-9,]+\\]\\)".r.findFirstIn(points).exists(in =>
+      Seq("3", "300", "606").forall(v => in.split("[\\[\\],]").contains(v))),
+      s"readPoints lost its In pushdown: $points")
+    // only Literals translate to data source filters: the bound range
+    // stays a post-scan filter (row-group pruning lost, SEMANTICS.md);
+    // bucket-level zone-map pruning is the metadata decision above it
+    val range = executed(sink.readRange("v", 10.0, 20.0))
+    assert(range.contains("bound(10.0)") && range.contains("bound(20.0)"), range)
+    val rangePushed = pushed(range)
+    assert(rangePushed.contains("IsNotNull(v)") && !rangePushed.contains("GreaterThanOrEqual") &&
+      !rangePushed.contains("LessThanOrEqual"), rangePushed)
+  }
+
   test("z-order layout: interleave bit math exact; both dimensions prune to grid stripes") {
     import graft.ops.ZOrder
     import graft.sink.MergeSink

@@ -9,8 +9,8 @@ import graft.core.{JobLabel, Probe}
 
 /** The one job probe ([[graft.core.Probe]]) and the one session
   * builder ([[graft.core.Session]]): the probe's per-job fields on a
-  * fixed action, and a source guard that keeps every other session
-  * builder and listener out of the engine.
+  * fixed action, its compile counts, and a source guard that keeps
+  * every other session builder and listener out of the engine.
   */
 class ProbeSpec extends SparkSpec {
   test("the probe records a two-job shuffle action under its JobLabel") {
@@ -30,6 +30,18 @@ class ProbeSpec extends SparkSpec {
     assert(map.tasks == 4 && result.tasks == 1, s"tasks: ${jobs.map(_.tasks)}")
     assert(map.shuffleWrite > 0 && result.shuffleWrite == 0, s"shuffle: $jobs")
     assert(result.shuffleRead > 0 && map.shuffleRead == 0, s"shuffle: $jobs")
+  }
+
+  test("the probe counts Janino compiles: a new plan compiles, its rerun hits the codegen cache") {
+    // a literal no earlier plan inlined: its source is new to the cache
+    val q = spark.range(0, 100, 1, 2).select((col("id") * System.nanoTime()).as("x"))
+    def compiledBy(body: => Unit): Probe.Compiles = {
+      val probe = Probe(spark)
+      try { body; probe.compiles } finally probe.close()
+    }
+    val (first, again) = (compiledBy(q.collect()), compiledBy(q.collect()))
+    assert(first.count >= 1 && first.seconds > 0, s"first run: $first")
+    assert(again == Probe.Compiles(0, 0.0), s"rerun: $again")
   }
 
   test("SparkSession.builder and addSparkListener live only in core.Session and core.Probe") {

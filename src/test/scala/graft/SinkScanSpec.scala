@@ -92,11 +92,70 @@ class SinkScanSpec extends SparkSpec {
     for ((s, a) <- Seq((cold, coldView), (sink, view))) {
       val (frames, jobs) = Probe.during(spark)(Seq(
         s.read(), s.readAt(past), s.readRange("v", 10.0, 20.0),
-        s.readPoints("s", Seq(3L, 300L, 606L)), a.read()))
+        s.readPoints("s", Seq(3L, 300L, 606L)), s.readForKeys(Seq(1L, 70L).toDF("k")), a.read()))
       assert(jobs.isEmpty, s"planning ${frames.size} sink reads launched ${jobs.size} Spark job(s)")
     }
     // and the frames still answer (the construction above ran no action)
     assert(cold.readPoints("s", Seq(3L, 300L, 606L)).count() == 3)
+  }
+
+  test("new per-call values reuse compiled code: a second read or fold compiles no class") {
+    // no deletion vector and no migration: every bucket subset of a read
+    // plans to the same shape
+    val sink = new MergeSink(spark, freshDir() + "/t", keys = Seq("k"), orderCols = Seq("upd"),
+      nBuckets = 8, statsCols = Seq("v"), bloomCols = Seq("s"))
+    sink.merge(batch(0, 240, 0))
+    val view = new AggSink(spark, freshDir() + "/view", Seq("k"), Seq("v"), nBuckets = 4)
+    def viewBatch(i: Int) = batch(0, 50, i).select(($"k" % 7).as("k"), $"v".cast("long").as("v"))
+    view.merge(viewBatch(0), batchId = 0L)
+    val calls = Seq[(String, Int => Unit)](
+      "readRange" -> (i => sink.readRange("v", 10.0 + i, 20.0 + 2 * i).collect()),
+      "readPoints" -> (i => sink.readPoints("s", Seq(3L * i, 300L + 3 * i, 606L)).collect()),
+      "readForKeys" -> (i => sink.readForKeys(Seq(1L + i, 70L).toDF("k")).collect()),
+      "AggSink.merge" -> (i => view.merge(viewBatch(i), batchId = i.toLong)))
+    for ((name, call) <- calls) {
+      call(1)
+      val probe = Probe(spark)
+      val compiled = try { call(2); probe.compiles } finally probe.close()
+      assert(compiled.count == 0, s"a second $name with new values compiled ${compiled.count} classes")
+    }
+    assert(view.lastBatchId == 2L)
+  }
+
+  test("readPoints on a non-BIGINT column answers read().where(c isin vs)") {
+    val sink = new MergeSink(spark, freshDir() + "/t", keys = Seq("k"), orderCols = Seq("upd"),
+      nBuckets = 8)
+    sink.merge(batch(0, 240, 0).withColumn("i", ($"k" % 50).cast("int")))
+    val vs = Seq(3L, 9L, 49L, 50L, 1000L)
+    for (c <- Seq("i", "v")) {
+      val got = rows(sink.readPoints(c, vs))
+      assert(got.nonEmpty && got == rows(sink.read().where(col(c).isin(vs: _*))), s"readPoints on $c")
+    }
+  }
+
+  test("a local and a distributed frame route alike: same keyed read, same merged snapshot") {
+    val (sink, _) = busyTable()
+    val keys = Seq(1L, 5L, 70L, 150L, 203L)
+    val local = keys.toDF("k")
+    val distributed = spark.range(0, 240).where($"id".isin(keys: _*)).select($"id".as("k"))
+    val (viaLocal, localJobs) = Probe.during(spark)(sink.readForKeys(local))
+    val (viaDistributed, routeJobs) = Probe.during(spark)(sink.readForKeys(distributed))
+    assert(localJobs.isEmpty && routeJobs.nonEmpty, "only the distributed probe runs a route job")
+    assert(rows(viaLocal) == rows(viaDistributed))
+
+    val rowsIn = batch(0, 60, 0).collect().toSeq
+    val schema = batch(0, 1, 0).schema
+    def merged(df: DataFrame): (MergeSink, Seq[String]) = {
+      val t = new MergeSink(spark, freshDir() + "/t", keys = Seq("k"), orderCols = Seq("upd"),
+        nBuckets = 8, statsCols = Seq("v"), bloomCols = Seq("s"))
+      (t, Probe.during(spark)(t.merge(df))._2.map(_.label))
+    }
+    val (a, aJobs) = merged(spark.createDataFrame(rowsIn.asJava, schema))
+    val (b, bJobs) = merged(spark.createDataFrame(spark.sparkContext.parallelize(rowsIn, 3), schema))
+    assert(!aJobs.contains("merge:route") && bJobs.contains("merge:route"))
+    val (sa, sb) = (a.manifest.current(), b.manifest.current())
+    assert(sa.version == sb.version && sa.mapping.keySet == sb.mapping.keySet && sa.stats == sb.stats)
+    assert(rows(a.read()) == rows(b.read()))
   }
 
   test("manifest scan answers what the per-generation parquet resolution answered") {
