@@ -1,10 +1,11 @@
 package graft
 
 /** Per-job attribution profiler (measurement tooling, guide §1): runs
-  * one query and prints every Spark job's label (its `JobLabel`, else
-  * its call site), duration, task count and shuffle bytes — the
-  * evidence for job-floor work ("which call paths launch the 423 jobs
-  * of q289") — and the Janino compiles and compile time of the run
+  * one query and prints every Spark job's site (its `JobLabel`, else
+  * its call site), duration, task count and shuffle bytes, then a
+  * rollup by label ([[rollup]]) — the evidence for job-floor work
+  * ("which call paths launch the 423 jobs of q289") — and the Janino
+  * compiles and compile time of the run
   * (JVM-wide, see [[graft.core.Probe.compiles]]). Not part of the
   * driver contract.
   *
@@ -30,10 +31,15 @@ object JobProfile {
       println(f"job ${j.id}%4d  ${j.seconds}%7.3f s  tasks=${j.tasks}%-4d  " +
         f"shW=${j.shuffleWrite / 1e6}%9.2fMB shR=${j.shuffleRead / 1e6}%9.2fMB  ${j.site} t0=${j.start} t1=${j.end}")
     }
-    println("\n--- by call site ---")
-    jobs.groupBy(_.site).map { case (s, js) => (s, js.size, js.map(_.seconds).sum) }
-      .toSeq.sortBy(-_._3)
-      .foreach { case (s, n, sec) => println(f"$n%4d jobs  $sec%8.3f s  $s") }
+    println("\n--- by label ---")
+    rollup(jobs).foreach { case (l, n, sec) => println(f"$n%4d jobs  $sec%8.3f s  $l") }
     spark.stop()
   }
+
+  /** (label, jobs, seconds) per [[graft.core.Probe.Job.label]], slowest
+    * first: every micro-batch of a stream rolls into one `stream` row.
+    */
+  def rollup(jobs: Seq[graft.core.Probe.Job]): Seq[(String, Int, Double)] =
+    jobs.groupBy(_.label).map { case (l, js) => (l, js.size, js.map(_.seconds).sum) }
+      .toSeq.sortBy(-_._3)
 }

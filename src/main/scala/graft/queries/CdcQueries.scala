@@ -132,38 +132,32 @@ object CdcQueries {
   /** NETWORK WAREHOUSE SINK roundtrip (S6 made real over the wire —
     * the reference's ClickHouse HTTP insert,
     * consumer/DoFns/load_data.py:52-60, against a REAL JDBC target):
-    * the enriched CDC stream is double-sent through
-    * [[graft.sink.Warehouse.appendJdbc]] (parallel foreachPartition
-    * batched inserts; the second send is the at-least-once replay a
-    * failed task or speculative attempt produces), read back over
-    * JDBC, and resolved by read-side LWW — the ReplacingMergeTree
+    * the enriched CDC stream is double-sent through Spark's own
+    * `format("jdbc")` writer (one connection and one transaction per
+    * partition, batched inserts; the second send is the at-least-once
+    * replay a failed task or speculative attempt produces), read back
+    * over JDBC, and resolved by read-side LWW — the ReplacingMergeTree
     * delivery contract (clickhouse/init.sql:22-24): duplicates
     * collapse by algebra at read time, never by exactly-once
     * machinery. Target: embedded Derby (in-memory, multi-connection,
-    * transactional — rides Spark's own classpath). Timestamps ship as
-    * epoch-micros BIGINTs: JDBC TIMESTAMP round-trips through the
-    * target's session-zone semantics, integers do not. Oracle: the
-    * same live state computed directly from the source (q18's SQL) —
-    * a sink that loses, duplicates-without-resolution, or mangles a
-    * row hash-mismatches.
+    * transactional — rides Spark's own classpath); the first send's
+    * `overwrite` recreates the JVM-lifetime table, so the gate is
+    * re-runnable. Timestamps ship as epoch-micros BIGINTs: JDBC
+    * TIMESTAMP round-trips through the target's session-zone
+    * semantics, integers do not. Oracle: the same live state computed
+    * directly from the source (q18's SQL) — a sink that loses,
+    * duplicates-without-resolution, or mangles a row hash-mismatches.
     */
   def q276JdbcWarehouse(s: SparkSession, d: String): DataFrame = {
-    import graft.sink.Warehouse
     val rows = enriched(s, d).select(
       col("user_id"), col("document_id"), col("operation"),
       unix_micros(col("ts")).as("ts_us"), col("etype"), col("watched_ratio"))
     val url = "jdbc:derby:memory:graft_q276;create=true"
-    Warehouse.dropJdbcTable(url, "wh_rows") // JVM-lifetime target; re-runnable
-    Warehouse.createJdbcTable(url, "wh_rows", rows.schema)
-    Warehouse.appendJdbc(rows, url, "wh_rows")
-    // the at-least-once replay routes through the DSv2 wrapper
-    // (`format("jdbc-lww")`, graft.sink.JdbcLwwProvider) so BOTH write
-    // surfaces of the network sink sit under this oracle
-    rows.write.format("jdbc-lww").option("url", url)
-      .option("dbtable", "wh_rows").mode("append").save()
-    val back = s.read.format("jdbc")
-      .option("url", url).option("dbtable", "wh_rows").load()
-      .toDF(rows.columns: _*) // Derby uppercases identifiers; order is DDL order
+    def send(mode: String): Unit =
+      rows.write.format("jdbc").option("url", url).option("dbtable", "wh_rows").mode(mode).save()
+    send("overwrite") // recreates the JVM-lifetime table: the gate is re-runnable
+    send("append")    // the at-least-once replay
+    val back = s.read.format("jdbc").option("url", url).option("dbtable", "wh_rows").load()
     require(back.count() == 2 * rows.count(),
       "both sends must land — the replay is part of the delivery contract")
     Cdc.liveView(back, Seq("user_id"), Seq("ts_us", "document_id"))

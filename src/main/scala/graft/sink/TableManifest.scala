@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.functions.{col, max, min, xxhash64}
-import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 import graft.core.JobLabel
 
 /** Snapshot-manifest commit protocol for the bucketed sink tables
@@ -622,8 +622,9 @@ final class TableManifest(spark: SparkSession, val root: String) {
     * `files` — Spark's row-metadata schema (parquet's own as fallback),
     * made nullable: exactly what Spark's parquet schema inference
     * yields, read in-process instead of by a schema-inference job.
+    * `files` is listed only on a cache miss.
     */
-  private def genSchema(gen: String, files: Seq[FileStatus]): StructType =
+  private def genSchema(gen: String, files: => Seq[FileStatus]): StructType =
     genSchemas.computeIfAbsent(gen, g => {
       import org.apache.parquet.format.converter.ParquetMetadataConverter
       import org.apache.parquet.hadoop.Footer
@@ -753,13 +754,18 @@ final class TableManifest(spark: SparkSession, val root: String) {
     * min/max spans the domain and zone maps cannot prune). ONE sidecar
     * read per bucket for the whole probe set. A bucket is admitted if
     * ANY probe hash might be contained, or if it has no sidecar for `c`
-    * (missing information never prunes).
+    * (missing information never prunes). `hashes` are BIGINT hashes
+    * ([[BucketBloom.hashLong]]) while a sidecar hashes the column's own
+    * type, so a bucket whose generation does not type `c` as BIGINT is
+    * admitted too. That type comes from the cached generation schema,
+    * read only when the bloom would prune.
     */
   def bucketsForPoints(s: Snapshot, c: String, hashes: Seq[Long]): Seq[Int] =
     s.mapping.filter { case (b, gen) =>
       bloomIn(gen, b, c).forall { case (k, bits) =>
         hashes.exists(h => BucketBloom.mightContain(bits, k, h))
-      }
+      } || !genSchema(gen, dataFiles(bucketDir(gen, b)))
+        .exists(f => f.name == c && f.dataType == LongType)
     }.keys.toSeq.sorted
 
   /** Per-bucket (fileName, size, mtime) of snapshot `s` — the metadata

@@ -17,6 +17,10 @@ import graft.ops.Cdc
   *  - `liveState`: read-side LWW resolution — deterministic, unlike
   *    the reference's merge-lag window (README.md:209-215).
   *
+  * The network hop (the reference's ClickHouse insert,
+  * consumer/DoFns/load_data.py:52-60) needs no code here: it is Spark's
+  * own `df.write.format("jdbc")` (see q276).
+  *
   * The dedup key matches init.sql:23 ORDER BY (original_id, video_id,
   * session_id); tombstones carry only the key + time (load_data.py:74-85),
   * so video_id/session_id are null there and the key degrades to
@@ -53,12 +57,13 @@ object Warehouse {
 
   /** Partitioned append; dynamic partition overwrite makes replaying a
     * day idempotent (the batch-sink analog of the queue's at-least-once
-    * + idempotent-write contract, SURVEY.md §2 S3/S4).
+    * + idempotent-write contract, SURVEY.md §2 S3/S4). The mode is this
+    * write's own option: the session's conf is left as it was.
     */
   def append(rows: DataFrame, path: String, overwritePartitions: Boolean = false): Unit = {
     val mode = if (overwritePartitions) "overwrite" else "append"
-    rows.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    rows.write.mode(mode).partitionBy("ingest_date").parquet(path)
+    rows.write.mode(mode).option("partitionOverwriteMode", "dynamic")
+      .partitionBy("ingest_date").parquet(path)
   }
 
   /** Read-side LWW + tombstone filter: the reference's FINAL-read
@@ -67,111 +72,4 @@ object Warehouse {
   def liveState(spark: SparkSession, path: String): DataFrame =
     Cdc.latestByKey(spark.read.parquet(path), DedupKeys, VersionCols)
       .filter(!col("is_deleted"))
-
-  /** NETWORK warehouse sink — the reference's ClickHouse HTTP insert
-    * (consumer/DoFns/load_data.py:52-60) made real over JDBC instead
-    * of modeled as parquet: `foreachPartition` opens one connection
-    * per partition and streams batched prepared-statement INSERTs, so
-    * rows flow executor -> warehouse with no driver funneling and no
-    * intermediate files — N partitions insert in parallel, the shape
-    * a 1000-executor load carries to any JDBC warehouse.
-    *
-    * Delivery contract mirrors the reference exactly: AT-LEAST-ONCE
-    * append (a failed task retries and may re-insert its partition;
-    * speculative execution may double-send) with READ-side LWW
-    * resolution — the ReplacingMergeTree discipline
-    * (clickhouse/init.sql:22-24): duplicate (key, version) rows are
-    * collapsed by [[Cdc.latestByKey]] at query time, so replays are
-    * harmless by ALGEBRA, not by fragile exactly-once machinery.
-    * PipelineSpec proves it against embedded Derby: double-append,
-    * then live state equals the single-append parquet path's.
-    *
-    * Per-partition transactions (autoCommit off, one commit at
-    * partition end) keep a mid-partition crash all-or-nothing per
-    * task attempt, and `batchSize` bounds executor memory per
-    * round-trip. Values pass through JDBC 4.2 `setObject` with the
-    * java.time bridges Spark rows may carry either side of
-    * `spark.sql.datetime.java8API.enabled`.
-    */
-  def appendJdbc(rows: DataFrame, url: String, table: String,
-                 batchSize: Int = 500): Unit = {
-    val schema = rows.schema
-    val insert = s"INSERT INTO $table VALUES (" +
-      schema.fields.map(_ => "?").mkString(", ") + ")"
-    rows.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      if (it.hasNext) {
-        val conn = java.sql.DriverManager.getConnection(url)
-        try {
-          conn.setAutoCommit(false)
-          val stmt = conn.prepareStatement(insert)
-          var pending = 0
-          it.foreach { row =>
-            var i = 0
-            while (i < schema.length) {
-              row.get(i) match {
-                case null                     => stmt.setObject(i + 1, null)
-                case d: java.time.LocalDate   => stmt.setDate(i + 1, java.sql.Date.valueOf(d))
-                case t: java.time.Instant     => stmt.setTimestamp(i + 1, java.sql.Timestamp.from(t))
-                case v                        => stmt.setObject(i + 1, v)
-              }
-              i += 1
-            }
-            stmt.addBatch()
-            pending += 1
-            if (pending >= batchSize) { stmt.executeBatch(); pending = 0 }
-          }
-          if (pending > 0) stmt.executeBatch()
-          conn.commit()
-          stmt.close()
-        } finally conn.close()
-      }
-    }
-  }
-
-  /** Driver-side DDL for [[appendJdbc]]'s target from a Spark schema —
-    * the warehouse-row type mapping (production targets would own
-    * their DDL; this covers the init.sql column set and test targets).
-    */
-  def createJdbcTable(url: String, table: String,
-                      schema: org.apache.spark.sql.types.StructType): Unit = {
-    import org.apache.spark.sql.types._
-    def sqlType(dt: DataType): String = dt match {
-      case LongType         => "BIGINT"
-      case IntegerType      => "INTEGER"
-      case DoubleType       => "DOUBLE"
-      case FloatType        => "REAL"
-      case BooleanType      => "BOOLEAN"
-      case DateType         => "DATE"
-      case TimestampType    => "TIMESTAMP"
-      case d: DecimalType   => s"DECIMAL(${d.precision},${d.scale})"
-      case StringType       => "VARCHAR(4096)"
-      case other            => throw new IllegalArgumentException(
-        s"no JDBC mapping for $other — pass explicit DDL for non-scalar columns")
-    }
-    val cols = schema.fields
-      .map(f => s"${f.name} ${sqlType(f.dataType)}").mkString(", ")
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      st.executeUpdate(s"CREATE TABLE $table ($cols)")
-      st.close()
-    } finally conn.close()
-  }
-
-  /** Drop [[appendJdbc]]'s target if it exists (re-runnable gates
-    * against a JVM-lifetime in-memory target need a clean slate).
-    */
-  def dropJdbcTable(url: String, table: String): Unit = {
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      try st.executeUpdate(s"DROP TABLE $table")
-      catch { case e: java.sql.SQLException if e.getSQLState == "42Y55" => () }
-      st.close()
-    } finally conn.close()
-  }
-
-  /** The declared analytics (README.md:221) over the live state. */
-  def videoAnalytics(state: DataFrame): DataFrame =
-    Cdc.videoAnalytics(state)
 }

@@ -50,26 +50,26 @@ class PipelineSpec extends SparkSpec {
     assert(live.count() == live.select("original_id").distinct().count())
     val mm = live.agg(min($"watched_ratio"), max($"watched_ratio")).first()
     assert(mm.getDouble(0) >= 0.0 && mm.getDouble(1) <= 1.0)
-    val analytics = Warehouse.videoAnalytics(live)
+    val analytics = Cdc.videoAnalytics(live)
     assert(analytics.count() > 0)
   }
 
   test("JDBC warehouse sink: parallel foreachPartition inserts; at-least-once replay resolved by read-side LWW") {
     // embedded Derby rides Spark's own classpath — a REAL JDBC target
-    // (multi-connection, transactional), no network needed
+    // (multi-connection, transactional), no network needed; the sends
+    // are Spark's own format("jdbc") writer, one transaction per partition
     val url = "jdbc:derby:memory:graftwh;create=true"
     val rows = Warehouse.toWarehouseRows(env)
-    Warehouse.createJdbcTable(url, "wh_rows", rows.schema)
-    Warehouse.appendJdbc(rows, url, "wh_rows", batchSize = 64)
+    def send(mode: String): Unit = rows.repartition(4).write.format("jdbc")
+      .option("url", url).option("dbtable", "wh_rows").mode(mode).save()
+    send("overwrite")
     // the reference's delivery contract: a replay (failed-task retry /
     // speculative double-send) APPENDS — duplicates are resolved at
     // read time by LWW, never by exactly-once machinery
-    Warehouse.appendJdbc(rows, url, "wh_rows", batchSize = 64)
-    // Derby uppercases unquoted identifiers; JDBC reads preserve DDL
-    // column ORDER, so rebind the original names positionally
+    send("append")
     val back = spark.read.format("jdbc")
       .option("url", url).option("dbtable", "wh_rows").load()
-      .toDF(rows.columns: _*)
+    assert(back.columns.toSeq == rows.columns.toSeq)
     assert(back.count() == 2 * rows.count(), "both sends must have landed")
     val live = Cdc.latestByKey(back, Warehouse.DedupKeys, Warehouse.VersionCols)
       .filter(!$"is_deleted")
@@ -81,48 +81,28 @@ class PipelineSpec extends SparkSpec {
       "double-sent JDBC state must LWW-resolve to the single-send live state")
   }
 
-  test("jdbc-lww DSv2 write: df.write.format reaches the network sink; " +
-       "per-partition transactions; replay LWW-resolves; bad types fail at plan time") {
-    val url = "jdbc:derby:memory:graftwh_dsv2;create=true"
-    val rows = Warehouse.toWarehouseRows(env)
-    Warehouse.createJdbcTable(url, "wh_rows", rows.schema)
-    def send(): Unit = rows.repartition(4).write.format("jdbc-lww")
-      .option("url", url).option("dbtable", "wh_rows")
-      .option("batchSize", "64").mode("append").save()
-    send()
-    send() // at-least-once replay — the LWW read side absorbs it
-    val back = spark.read.format("jdbc")
-      .option("url", url).option("dbtable", "wh_rows").load()
-      .toDF(rows.columns: _*)
-    assert(back.count() == 2 * rows.count(), "both sends must have landed")
-    val live = Cdc.latestByKey(back, Warehouse.DedupKeys, Warehouse.VersionCols)
-      .filter(!$"is_deleted")
-      .select($"original_id", $"ingestion_seq").as[(String, Long)].collect().toSet
-    val direct = Cdc.latestByKey(rows, Warehouse.DedupKeys, Warehouse.VersionCols)
-      .filter(!$"is_deleted")
-      .select($"original_id", $"ingestion_seq").as[(String, Long)].collect().toSet
-    assert(live == direct && live.nonEmpty,
-      "DSv2 double-send state must LWW-resolve to the single-send live state")
-    // an unmappable column type fails at PLAN time, not task time
-    val bad = rows.withColumn("nested", struct($"original_id"))
+  test("JDBC warehouse sink: a column with no JDBC type fails loudly and adds no row") {
+    val url = "jdbc:derby:memory:graftwh_types;create=true"
+    val rows = Warehouse.toWarehouseRows(env).limit(3)
+    def count() = spark.read.format("jdbc")
+      .option("url", url).option("dbtable", "wh_rows").load().count()
+    rows.write.format("jdbc").option("url", url).option("dbtable", "wh_rows")
+      .mode("overwrite").save()
+    assert(count() == 3)
+    // same column names as the target, so only the type can fail
+    val bad = rows.withColumn("ingestion_seq", struct($"ingestion_seq".as("id")))
     val e = intercept[Exception] {
-      bad.write.format("jdbc-lww").option("url", url)
-        .option("dbtable", "wh_rows").mode("append").save()
+      bad.write.format("jdbc").option("url", url).option("dbtable", "wh_rows")
+        .mode("append").save()
     }
-    assert(e.getMessage.contains("cannot bind column") ||
-           Option(e.getCause).exists(_.getMessage.contains("cannot bind column")))
-    // reads through the write-only provider fail loudly
-    val r = intercept[Exception] {
-      spark.read.format("jdbc-lww").option("url", url)
-        .option("dbtable", "wh_rows").load()
-    }
-    assert(r.getMessage.contains("write-only") ||
-           Option(r.getCause).exists(_.getMessage.contains("write-only")))
+    assert(e.getMessage.contains("Can't get JDBC type for struct<id:bigint>"), e.getMessage)
+    assert(count() == 3, "a rejected send must leave the target as it was")
   }
 
   test("replaying the same batch is idempotent under dynamic partition overwrite") {
     val dir = freshDir()
     val rows = Warehouse.toWarehouseRows(env)
+    val mode = "spark.sql.sources.partitionOverwriteMode"
     Warehouse.append(rows, dir)
     val once = Warehouse.liveState(spark, dir)
       .select($"original_id", $"ingestion_seq").as[(String, Long)].collect().toSet
@@ -136,6 +116,14 @@ class PipelineSpec extends SparkSpec {
     val thrice = Warehouse.liveState(spark, dir)
       .select($"original_id", $"ingestion_seq").as[(String, Long)].collect().toSet
     assert(thrice == once)
+    // the overwrite mode is the write's own option, not a session setting
+    assert(spark.conf.get(mode) == spark.newSession().conf.get(mode))
+    // the replay rewrites only its own day: an earlier day's partition survives it
+    val days = freshDir()
+    Warehouse.append(rows.withColumn("ingest_date", date_sub($"ingest_date", 1)), days)
+    Warehouse.append(rows, days, overwritePartitions = true)
+    assert(spark.read.parquet(days).groupBy("ingest_date").count().select("count").as[Long]
+      .collect().toSeq == Seq(rows.count(), rows.count()))
   }
 
   test("P5 quarantine split: bad rows captured with reasons, nothing dropped") {

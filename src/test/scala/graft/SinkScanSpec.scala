@@ -123,13 +123,15 @@ class SinkScanSpec extends SparkSpec {
   }
 
   test("readPoints on a non-BIGINT column answers read().where(c isin vs)") {
+    // blooms on INT and DOUBLE columns hash those types, not the BIGINT probes
     val sink = new MergeSink(spark, freshDir() + "/t", keys = Seq("k"), orderCols = Seq("upd"),
-      nBuckets = 8)
+      nBuckets = 8, bloomCols = Seq("i", "v"))
     sink.merge(batch(0, 240, 0).withColumn("i", ($"k" % 50).cast("int")))
     val vs = Seq(3L, 9L, 49L, 50L, 1000L)
     for (c <- Seq("i", "v")) {
       val got = rows(sink.readPoints(c, vs))
       assert(got.nonEmpty && got == rows(sink.read().where(col(c).isin(vs: _*))), s"readPoints on $c")
+      assert(sink.bucketsForPoint(c, 3L).size == sink.bucketFileCounts().size, s"bucketsForPoint on $c")
     }
   }
 
