@@ -1,500 +1,69 @@
 package graft.ext
 
-/** Baseline sequential JPEG (ITU-T T.81) — REAL pure-JVM decode of the
-  * scan data: marker parse, DQT/DHT table load, Huffman entropy decode
-  * (byte unstuffing, restart markers), dequantization, inverse zigzag,
-  * 8x8 IDCT, chroma upsampling, YCbCr->RGB. Closes the one
-  * header-only format left in [[Multimodal]] (the round-4 boundary:
-  * `decodeJpegDims` read SOFn dimensions but not pixels).
+import java.awt.image.BufferedImage
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+
+import javax.imageio.{IIOImage, ImageIO, ImageTypeSpecifier}
+import javax.imageio.metadata.IIOMetadataNode
+import javax.imageio.plugins.jpeg.JPEGQTable
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
+
+import scala.util.control.NonFatal
+
+/** JPEG decode and encode through the JDK's own codec (`javax.imageio`,
+  * a binding to IJG libjpeg), the codec Spark's `format("image")` source
+  * decodes with. Closes the one header-only format left in
+  * [[Multimodal]]: `decodeJpegDims` reads SOFn dimensions, this reads
+  * the pixels.
   *
-  * Scope (and honest boundary): baseline DCT, sequential, Huffman
-  * (SOF0) — the profile every camera/library emits by default and the
-  * mandatory-support profile of the spec. Progressive (SOF2),
-  * arithmetic coding, hierarchical, and 12-bit precision return None
-  * and fall back to header metadata in [[Multimodal.codecFeatures]].
-  * Total-function contract matches the other codecs: any malformed
-  * stream returns None, never throws.
+  * Profile: baseline and progressive Huffman JPEG, grayscale or YCbCr,
+  * any sampling factors, with or without restart markers. Arithmetic
+  * coding, lossless, 12-bit and CMYK streams return None and fall back
+  * to header metadata in [[Multimodal.codecFeatures]].
   *
-  * The encoder exists for fixtures and derived-artifact writes. It
-  * emits spec-valid streams (canonical DHT, correct stuffing/RST
-  * discipline) but uses fixed simple Huffman tables (all 4-bit DC
-  * codes, all 8-bit AC codes) rather than the optimized Annex K
-  * defaults — any conforming decoder reads them; compression ratio is
-  * not the point. Decoder and encoder share no table state at decode
-  * time: the decoder reads everything from the stream's own DQT/DHT
-  * segments, so it decodes foreign baseline JPEGs, not just ours.
+  * Total-function contract, as for the other codecs: any malformed
+  * stream returns None, never throws. libjpeg fills a truncated or
+  * corrupt scan with gray and only warns, so any read warning is a
+  * failure too.
   *
-  * Determinism: all DCT math is strict IEEE double with a precomputed
-  * cosine table, identical on every JVM/executor — decode(bytes) is a
-  * pure function, safe for the hash-checked gate.
+  * Streams stay in memory (`MemoryCache*ImageStream`): `ImageIO.read`
+  * and `write` would cache through files in `java.io.tmpdir` and hide
+  * the warnings, and `ImageIO.setUseCache` is JVM-global state.
+  *
+  * Determinism: libjpeg's integer IDCT and color convert give the same
+  * pixels on every JVM/executor, so decode(bytes) is a pure function,
+  * safe for the hash-checked gate.
   */
 object JpegCodec {
 
-  // zigzag position -> row-major index (T.81 Figure 5)
-  private val Zigzag: Array[Int] = Array(
-    0, 1, 8, 16, 9, 2, 3, 10,
-    17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34,
-    27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36,
-    29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46,
-    53, 60, 61, 54, 47, 55, 62, 63)
+  // a crafted header must not make the reader allocate past 64 MB
+  private val MaxSide = 1 << 14
+  private val MaxBytes = 1L << 26
 
-  // cos((2x+1)*u*pi/16) — shared by FDCT and IDCT
-  private val Cos: Array[Array[Double]] = Array.tabulate(8, 8) { (x, u) =>
-    math.cos((2 * x + 1) * u * math.Pi / 16.0)
-  }
-  private def c(u: Int): Double = if (u == 0) 1.0 / math.sqrt(2.0) else 1.0
+  private val NativeFormat = "javax_imageio_jpeg_image_1.0"
 
-  /** out[y][x] = 1/4 sum_u sum_v c(u)c(v) F[v][u] cos_x_u cos_y_v,
-    * written flat row-major; input is dequantized coefficients.
+  /** Decode a JPEG. Returns (width, height, row-major RGB triplets);
+    * grayscale is expanded to triplets. None on anything outside the
+    * supported profile or structurally broken.
     */
-  private def idct8x8(coef: Array[Double], out: Array[Double]): Unit = {
-    // separable: rows then columns; tmp[v][x] = sum_u c(u) F[v][u] cos
-    val tmp = new Array[Double](64)
-    var v = 0
-    while (v < 8) {
-      var x = 0
-      while (x < 8) {
-        var s = 0.0
-        var u = 0
-        while (u < 8) { s += c(u) * coef(v * 8 + u) * Cos(x)(u); u += 1 }
-        tmp(v * 8 + x) = s
-        x += 1
-      }
-      v += 1
-    }
-    var y = 0
-    while (y < 8) {
-      var x = 0
-      while (x < 8) {
-        var s = 0.0
-        var vv = 0
-        while (vv < 8) { s += c(vv) * tmp(vv * 8 + x) * Cos(y)(vv); vv += 1 }
-        out(y * 8 + x) = s / 4.0
-        x += 1
-      }
-      y += 1
-    }
-  }
-
-  private def fdct8x8(px: Array[Double], out: Array[Double]): Unit = {
-    // F[v][u] = 1/4 c(u)c(v) sum_x sum_y f[y][x] cos_x_u cos_y_v
-    val tmp = new Array[Double](64)
-    var y = 0
-    while (y < 8) {
-      var u = 0
-      while (u < 8) {
-        var s = 0.0
-        var x = 0
-        while (x < 8) { s += px(y * 8 + x) * Cos(x)(u); x += 1 }
-        tmp(y * 8 + u) = s
-        u += 1
-      }
-      y += 1
-    }
-    var v = 0
-    while (v < 8) {
-      var u = 0
-      while (u < 8) {
-        var s = 0.0
-        var yy = 0
-        while (yy < 8) { s += tmp(yy * 8 + u) * Cos(yy)(v); yy += 1 }
-        out(v * 8 + u) = s * c(u) * c(v) / 4.0
-        u += 1
-      }
-      v += 1
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // Decoder
-  // ------------------------------------------------------------------
-
-  private final class HuffTable(bits: Array[Int], vals: Array[Byte]) {
-    // T.81 Annex C canonical code construction -> (minCode, maxCode,
-    // valPtr) per code length for the standard sequential decode.
-    val minCode = new Array[Int](17)
-    val maxCode = new Array[Int](17)
-    val valPtr = new Array[Int](17)
-    val values: Array[Byte] = vals
-    locally {
-      var code = 0
-      var k = 0
-      var l = 1
-      while (l <= 16) {
-        if (bits(l - 1) == 0) { minCode(l) = 0; maxCode(l) = -1 }
-        else {
-          valPtr(l) = k
-          minCode(l) = code
-          code += bits(l - 1); k += bits(l - 1)
-          maxCode(l) = code - 1
-        }
-        code <<= 1
-        l += 1
-      }
-    }
-  }
-
-  /** MSB-first bit reader over the entropy-coded segment with 0xFF00
-    * unstuffing. Restart markers are consumed ONLY via [[restart]];
-    * hitting any marker mid-symbol is a structural error.
-    */
-  private final class BitReader(b: Array[Byte], var pos: Int) {
-    private var bitBuf = 0
-    private var bitCnt = 0
-    var bad = false
-
-    private def fill(): Unit = {
-      if (pos >= b.length) { bad = true; return }
-      val v = b(pos) & 0xff
-      if (v == 0xff) {
-        if (pos + 1 >= b.length) { bad = true; return }
-        val m = b(pos + 1) & 0xff
-        if (m == 0x00) { pos += 2; bitBuf = (bitBuf << 8) | 0xff; bitCnt += 8 }
-        else { bad = true } // real marker inside a symbol
-      } else { pos += 1; bitBuf = (bitBuf << 8) | v; bitCnt += 8 }
-    }
-
-    def bit(): Int = {
-      if (bitCnt == 0) fill()
-      if (bad) 0
-      else { bitCnt -= 1; (bitBuf >> bitCnt) & 1 }
-    }
-
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-
-    def decode(t: HuffTable): Int = {
-      var code = bit()
-      var l = 1
-      while (!bad && (t.maxCode(l) < 0 || code > t.maxCode(l))) {
-        l += 1
-        if (l > 16) { bad = true; return -1 }
-        code = (code << 1) | bit()
-      }
-      if (bad) -1
-      else t.values(t.valPtr(l) + code - t.minCode(l)) & 0xff
-    }
-
-    /** Byte-align and consume the expected RSTn marker. */
-    def restart(n: Int): Boolean = {
-      bitCnt = 0 // discard pad bits
-      if (pos + 2 > b.length || (b(pos) & 0xff) != 0xff ||
-          (b(pos + 1) & 0xff) != (0xd0 + n)) { bad = true; false }
-      else { pos += 2; true }
-    }
-  }
-
-  private def extend(v: Int, s: Int): Int =
-    if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
-
-  private case class Component(id: Int, h: Int, v: Int, tq: Int,
-                               var dcTab: Int = 0, var acTab: Int = 0)
-
-  /** Decode a baseline sequential JPEG. Returns (width, height,
-    * row-major RGB triplets); None on anything outside the supported
-    * profile or structurally broken.
-    */
-  def decode(b: Array[Byte]): Option[(Int, Int, Array[Byte])] =
-    try decodeImpl(b)
-    catch { case _: RuntimeException => None }
-
-  private def decodeImpl(b: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
-    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    val quant = new Array[Array[Int]](4)
-    val dcTabs = new Array[HuffTable](4)
-    val acTabs = new Array[HuffTable](4)
-    var comps: Array[Component] = null
-    var w = 0; var h = 0
-    var restartInterval = 0
-    var off = 2
-
-    def u16(i: Int): Int = ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-
-    while (off + 4 <= b.length) {
-      if ((b(off) & 0xff) != 0xff) return None
-      var m = b(off + 1) & 0xff
-      while (m == 0xff && off + 2 < b.length) { off += 1; m = b(off + 1) & 0xff }
-      if (m == 0xd9) return None // EOI before SOS
-      if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) { off += 2 }
-      else {
-        val len = u16(off + 2)
-        if (len < 2 || off + 2L + len > b.length) return None
-        val seg = off + 4
-        val segEnd = off + 2 + len
-        m match {
-          case 0xdb => // DQT: one or more tables
-            var p = seg
-            while (p < segEnd) {
-              val pq = (b(p) & 0xff) >> 4; val tq = b(p) & 0x0f
-              if (tq > 3 || pq > 1) return None
-              val n = if (pq == 0) 64 else 128
-              if (p + 1 + n > segEnd) return None
-              val t = new Array[Int](64)
-              var k = 0
-              while (k < 64) {
-                t(k) = if (pq == 0) b(p + 1 + k) & 0xff
-                       else ((b(p + 1 + 2 * k) & 0xff) << 8) | (b(p + 2 + 2 * k) & 0xff)
-                if (t(k) == 0) return None
-                k += 1
-              }
-              quant(tq) = t
-              p += 1 + n
-            }
-          case 0xc4 => // DHT: one or more tables
-            var p = seg
-            while (p < segEnd) {
-              val tc = (b(p) & 0xff) >> 4; val th = b(p) & 0x0f
-              if (tc > 1 || th > 3 || p + 17 > segEnd) return None
-              val bits = Array.tabulate(16)(i => b(p + 1 + i) & 0xff)
-              val n = bits.sum
-              if (n == 0 || n > 256 || p + 17 + n > segEnd) return None
-              val vals = java.util.Arrays.copyOfRange(b, p + 17, p + 17 + n)
-              val t = new HuffTable(bits, vals)
-              if (tc == 0) dcTabs(th) = t else acTabs(th) = t
-              p += 17 + n
-            }
-          case 0xc0 | 0xc1 => // SOF0 baseline (and extended-sequential Huffman, same layout)
-            if (len < 8) return None
-            val prec = b(seg) & 0xff
-            h = u16(seg + 1); w = u16(seg + 3)
-            val nf = b(seg + 5) & 0xff
-            if (prec != 8 || w <= 0 || h <= 0 || w > (1 << 14) || h > (1 << 14) ||
-                w.toLong * h * 3 > (1L << 26) || (nf != 1 && nf != 3) ||
-                len < 8 + 3 * nf) return None
-            comps = Array.tabulate(nf) { i =>
-              val p = seg + 6 + 3 * i
-              val cc = Component(b(p) & 0xff, (b(p + 1) & 0xff) >> 4,
-                b(p + 1) & 0x0f, b(p + 2) & 0xff)
-              if (cc.h < 1 || cc.h > 4 || cc.v < 1 || cc.v > 4 || cc.tq > 3) return None
-              cc
-            }
-          case 0xc2 | 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca | 0xcb |
-               0xcd | 0xce | 0xcf =>
-            return None // progressive/lossless/arithmetic: out of profile
-          case 0xdd => // DRI
-            if (len != 4) return None
-            restartInterval = u16(seg)
-          case 0xda => // SOS — decode the scan and return
-            if (comps == null) return None
-            val ns = b(seg) & 0xff
-            if (ns != comps.length || len < 6 + 2 * ns) return None
-            var i = 0
-            while (i < ns) {
-              val cs = b(seg + 1 + 2 * i) & 0xff
-              val comp = comps.find(_.id == cs).getOrElse(return None)
-              comp.dcTab = (b(seg + 2 + 2 * i) & 0xff) >> 4
-              comp.acTab = b(seg + 2 + 2 * i) & 0x0f
-              if (comp.dcTab > 3 || comp.acTab > 3) return None
-              i += 1
-            }
-            return decodeScan(b, segEnd, w, h, comps, quant, dcTabs, acTabs,
-              restartInterval)
-          case _ => () // APPn / COM / others: skip
-        }
-        off = segEnd
-      }
-    }
-    None // no SOS reached
-  }
-
-  private def decodeScan(b: Array[Byte], scanStart: Int, w: Int, h: Int,
-                         comps: Array[Component], quant: Array[Array[Int]],
-                         dcTabs: Array[HuffTable], acTabs: Array[HuffTable],
-                         restartInterval: Int): Option[(Int, Int, Array[Byte])] = {
-    val hMax = comps.map(_.h).max
-    val vMax = comps.map(_.v).max
-    val mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-    val mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-    // per-component plane at its own resolution, MCU-padded
-    val planeW = comps.map(cc => mcusX * 8 * cc.h)
-    val planeH = comps.map(cc => mcusY * 8 * cc.v)
-    val planes = comps.indices.map(i => new Array[Byte](planeW(i) * planeH(i))).toArray
-    comps.foreach { cc =>
-      if (quant(cc.tq) == null) return None
-      if (dcTabs(cc.dcTab) == null || acTabs(cc.acTab) == null) return None
-    }
-
-    val r = new BitReader(b, scanStart)
-    val dcPred = new Array[Int](comps.length)
-    val coef = new Array[Double](64)
-    val pix = new Array[Double](64)
-    var rstN = 0
-    var mcusUntilRestart = restartInterval
-
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        if (restartInterval > 0 && mcusUntilRestart == 0) {
-          if (!r.restart(rstN)) return None
-          rstN = (rstN + 1) & 7
-          java.util.Arrays.fill(dcPred, 0)
-          mcusUntilRestart = restartInterval
-        }
-        var ci = 0
-        while (ci < comps.length) {
-          val cc = comps(ci)
-          val q = quant(cc.tq)
-          var by = 0
-          while (by < cc.v) {
-            var bx = 0
-            while (bx < cc.h) {
-              // --- one 8x8 block ---
-              java.util.Arrays.fill(coef, 0.0)
-              val s = r.decode(dcTabs(cc.dcTab))
-              if (r.bad || s < 0 || s > 11) return None
-              val diff = extend(r.bits(s), s)
-              if (r.bad) return None
-              dcPred(ci) += diff
-              coef(0) = dcPred(ci).toDouble * q(0)
-              var k = 1
-              var eob = false
-              while (!eob && k < 64) {
-                val rs = r.decode(acTabs(cc.acTab))
-                if (r.bad || rs < 0) return None
-                val run = rs >> 4; val size = rs & 0x0f
-                if (size == 0) {
-                  if (run == 15) k += 16 // ZRL
-                  else eob = true // EOB
-                } else {
-                  k += run
-                  if (k > 63 || size > 10) return None
-                  val v = extend(r.bits(size), size)
-                  if (r.bad) return None
-                  coef(Zigzag(k)) = v.toDouble * q(k)
-                  k += 1
-                }
-              }
-              idct8x8(coef, pix)
-              // place into the component plane (level shift + clamp)
-              val px0 = (mx * cc.h + bx) * 8
-              val py0 = (my * cc.v + by) * 8
-              var yy = 0
-              while (yy < 8) {
-                var xx = 0
-                while (xx < 8) {
-                  val v = math.round(pix(yy * 8 + xx) + 128.0).toInt
-                  planes(ci)((py0 + yy) * planeW(ci) + px0 + xx) =
-                    (if (v < 0) 0 else if (v > 255) 255 else v).toByte
-                  xx += 1
-                }
-                yy += 1
-              }
-              bx += 1
-            }
-            by += 1
-          }
-          ci += 1
-        }
-        mcusUntilRestart -= 1
-        mx += 1
-      }
-      my += 1
-    }
-
-    // upsample (replication, floor scaling) + color convert
-    val out = new Array[Byte](w * h * 3)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val o = (y * w + x) * 3
-        if (comps.length == 1) {
-          val v = planes(0)(y * planeW(0) + x)
-          out(o) = v; out(o + 1) = v; out(o + 2) = v
-        } else {
-          def sample(ci: Int): Int = {
-            val sx = x * comps(ci).h / hMax
-            val sy = y * comps(ci).v / vMax
-            planes(ci)(sy * planeW(ci) + sx) & 0xff
-          }
-          val yv = sample(0).toDouble
-          val cb = sample(1) - 128.0
-          val cr = sample(2) - 128.0
-          def clamp(d: Double): Byte = {
-            val v = math.round(d).toInt
-            (if (v < 0) 0 else if (v > 255) 255 else v).toByte
-          }
-          out(o) = clamp(yv + 1.402 * cr)
-          out(o + 1) = clamp(yv - 0.344136 * cb - 0.714136 * cr)
-          out(o + 2) = clamp(yv + 1.772 * cb)
-        }
-        x += 1
-      }
-      y += 1
-    }
-    Some((w, h, out))
-  }
-
-  // ------------------------------------------------------------------
-  // Encoder (fixtures + derived-artifact writes)
-  // ------------------------------------------------------------------
-
-  /** Fixed canonical Huffman tables: DC = the 12 size symbols as 4-bit
-    * codes; AC = all 162 run/size symbols as 8-bit codes (EOB first so
-    * its code is short-ish in spirit, order irrelevant for validity).
-    * Spec-valid (no code is all ones at its length), trivially
-    * decodable by any conforming reader.
-    */
-  private val DcBits = { val a = new Array[Int](16); a(3) = 12; a } // 12 codes of length 4
-  private val DcVals = Array.tabulate(12)(_.toByte)
-  private val AcVals: Array[Byte] = {
-    val syms = Array(0x00, 0xf0) ++
-      (for { run <- 0 to 15; size <- 1 to 10 } yield (run << 4) | size)
-    syms.map(_.toByte)
-  }
-  private val AcBits = { val a = new Array[Int](16); a(7) = AcVals.length; a }
-
-  private final class HuffEncoder(bits: Array[Int], vals: Array[Byte]) {
-    val codeOf = new Array[Int](256)
-    val sizeOf = new Array[Int](256)
-    locally {
-      var code = 0
-      var k = 0
-      var l = 1
-      while (l <= 16) {
-        var i = 0
-        while (i < bits(l - 1)) {
-          codeOf(vals(k) & 0xff) = code
-          sizeOf(vals(k) & 0xff) = l
-          code += 1; k += 1; i += 1
-        }
-        code <<= 1
-        l += 1
-      }
-    }
-  }
-
-  private final class BitWriter(out: java.io.ByteArrayOutputStream) {
-    private var buf = 0
-    private var cnt = 0
-    def put(code: Int, size: Int): Unit = {
-      var i = size - 1
-      while (i >= 0) {
-        buf = (buf << 1) | ((code >> i) & 1)
-        cnt += 1
-        if (cnt == 8) {
-          out.write(buf & 0xff)
-          if ((buf & 0xff) == 0xff) out.write(0x00) // stuffing
-          buf = 0; cnt = 0
-        }
-        i -= 1
-      }
-    }
-    def flushWithOnes(): Unit = if (cnt > 0) put(0xff, 8 - cnt) // pad bits = 1
-  }
-
-  private def csize(v: Int): Int = {
-    var a = math.abs(v); var s = 0
-    while (a > 0) { a >>= 1; s += 1 }
-    s
+  def decode(b: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
+    val reader = ImageIO.getImageReadersByFormatName("jpeg").next()
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(b))
+    var warned = false
+    reader.addIIOReadWarningListener((_, _) => warned = true)
+    try {
+      reader.setInput(in, true, true)
+      val (w, h) = (reader.getWidth(0), reader.getHeight(0))
+      if (w > MaxSide || h > MaxSide || w.toLong * h * 3 > MaxBytes) return None
+      val raster = reader.read(0).getRaster
+      val bands = raster.getNumBands
+      if (warned || (bands != 1 && bands != 3)) return None
+      val px = raster.getPixels(0, 0, w, h, null: Array[Int])
+      Some((w, h, Array.tabulate(w * h * 3) { i =>
+        px(if (bands == 1) i / 3 else i).toByte
+      }))
+    } catch { case NonFatal(_) => None }
+    finally { reader.dispose(); in.close() }
   }
 
   /** Encode row-major RGB triplets as baseline JPEG.
@@ -511,149 +80,45 @@ object JpegCodec {
              restartEvery: Int = 0): Array[Byte] = {
     require(w > 0 && h > 0 && rgb.length == w * h * 3, "bad pixel buffer")
     require(quantVal >= 1 && quantVal <= 255, "flat quant must fit a byte")
-    val out = new java.io.ByteArrayOutputStream()
-    def b8(v: Int): Unit = out.write(v & 0xff)
-    def b16(v: Int): Unit = { b8(v >> 8); b8(v) }
-    def marker(m: Int, body: => Unit, len: Int): Unit = {
-      b8(0xff); b8(m); b16(len + 2); body
-    }
-
-    // color convert to planes
-    val n = w * h
-    val yP = new Array[Double](n); val cbP = new Array[Double](n)
-    val crP = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val r = rgb(3 * i) & 0xff; val g = rgb(3 * i + 1) & 0xff
-      val bb = rgb(3 * i + 2) & 0xff
-      yP(i) = 0.299 * r + 0.587 * g + 0.114 * bb
-      cbP(i) = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * bb
-      crP(i) = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * bb
-      i += 1
-    }
-
-    b8(0xff); b8(0xd8) // SOI
-    marker(0xdb, { b8(0); (0 until 64).foreach(_ => b8(quantVal)) }, 65) // DQT 0
-    val nf = if (gray) 1 else 3
-    val (hy, vy) = if (!gray && subsample420) (2, 2) else (1, 1)
-    marker(0xc0, {
-      b8(8); b16(h); b16(w); b8(nf)
-      b8(1); b8((hy << 4) | vy); b8(0)
-      if (!gray) { b8(2); b8(0x11); b8(0); b8(3); b8(0x11); b8(0) }
-    }, 6 + 3 * nf)
-    marker(0xc4, {
-      b8(0x00); DcBits.foreach(b8); DcVals.foreach(v => b8(v & 0xff))
-      b8(0x10); AcBits.foreach(b8); AcVals.foreach(v => b8(v & 0xff))
-    }, 2 * 17 + DcVals.length + AcVals.length)
-    if (restartEvery > 0) marker(0xdd, b16(restartEvery), 2)
-    marker(0xda, {
-      b8(nf)
-      b8(1); b8(0x00)
-      if (!gray) { b8(2); b8(0x00); b8(3); b8(0x00) }
-      b8(0); b8(63); b8(0)
-    }, 1 + 2 * nf + 3)
-
-    // entropy-coded scan
-    val dcEnc = new HuffEncoder(DcBits, DcVals)
-    val acEnc = new HuffEncoder(AcBits, AcVals)
-    val bw = new BitWriter(out)
-    val dcPred = new Array[Int](nf)
-    val block = new Array[Double](64)
-    val fb = new Array[Double](64)
-
-    // plane sampler with edge replication; chroma optionally 2x2-averaged
-    def planeAt(p: Array[Double], x: Int, y: Int): Double = {
-      val cx = math.min(math.max(x, 0), w - 1)
-      val cy = math.min(math.max(y, 0), h - 1)
-      p(cy * w + cx)
-    }
-    def chromaAt(p: Array[Double], x: Int, y: Int): Double =
-      if (!subsample420) planeAt(p, x, y)
-      else (planeAt(p, 2 * x, 2 * y) + planeAt(p, 2 * x + 1, 2 * y) +
-            planeAt(p, 2 * x, 2 * y + 1) + planeAt(p, 2 * x + 1, 2 * y + 1)) / 4.0
-
-    def encodeBlock(ci: Int, sample: (Int, Int) => Double,
-                    px0: Int, py0: Int): Unit = {
-      var yy = 0
-      while (yy < 8) {
-        var xx = 0
-        while (xx < 8) {
-          block(yy * 8 + xx) = sample(px0 + xx, py0 + yy) - 128.0
-          xx += 1
-        }
-        yy += 1
+    val img = new BufferedImage(w, h,
+      if (gray) BufferedImage.TYPE_BYTE_GRAY else BufferedImage.TYPE_3BYTE_BGR)
+    def u(i: Int): Int = rgb(i) & 0xff
+    val samples =
+      if (gray) Array.tabulate(w * h) { p =>
+        math.round(0.299 * u(3 * p) + 0.587 * u(3 * p + 1) + 0.114 * u(3 * p + 2)).toInt
       }
-      fdct8x8(block, fb)
-      val qc = new Array[Int](64)
-      var k = 0
-      while (k < 64) {
-        var q = math.round(fb(Zigzag(k)) / quantVal).toInt
-        // baseline AC size tops out at 10 bits: clamp pathological
-        // blocks (+-1023) instead of emitting an out-of-table symbol.
-        // DC never needs it (|coef| <= 1024/quantVal, diff fits 11 bits)
-        if (k > 0) { if (q > 1023) q = 1023 else if (q < -1023) q = -1023 }
-        qc(k) = q
-        k += 1
-      }
-      val diff = qc(0) - dcPred(ci)
-      dcPred(ci) = qc(0)
-      val s = csize(diff)
-      bw.put(dcEnc.codeOf(s), dcEnc.sizeOf(s))
-      if (s > 0) bw.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-      var run = 0
-      k = 1
-      while (k < 64) {
-        if (qc(k) == 0) run += 1
-        else {
-          while (run > 15) { bw.put(acEnc.codeOf(0xf0), acEnc.sizeOf(0xf0)); run -= 16 }
-          val sz = csize(qc(k))
-          val sym = (run << 4) | sz
-          bw.put(acEnc.codeOf(sym), acEnc.sizeOf(sym))
-          bw.put(if (qc(k) < 0) qc(k) + (1 << sz) - 1 else qc(k), sz)
-          run = 0
-        }
-        k += 1
-      }
-      if (run > 0) bw.put(acEnc.codeOf(0x00), acEnc.sizeOf(0x00)) // EOB
-    }
+      else Array.tabulate(w * h * 3)(u)
+    img.getRaster.setPixels(0, 0, w, h, samples)
 
-    val mcusX = (w + 8 * hy - 1) / (8 * hy)
-    val mcusY = (h + 8 * vy - 1) / (8 * vy)
-    var rstN = 0
-    var untilRst = restartEvery
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        if (restartEvery > 0 && untilRst == 0) {
-          bw.flushWithOnes()
-          b8(0xff); b8(0xd0 + rstN)
-          rstN = (rstN + 1) & 7
-          java.util.Arrays.fill(dcPred, 0)
-          untilRst = restartEvery
-        }
-        var by = 0
-        while (by < vy) {
-          var bx = 0
-          while (bx < hy) {
-            encodeBlock(0, (x, y) => planeAt(yP, x, y),
-              (mx * hy + bx) * 8, (my * vy + by) * 8)
-            bx += 1
-          }
-          by += 1
-        }
-        if (!gray) {
-          encodeBlock(1, (x, y) => chromaAt(cbP, x, y), mx * 8, my * 8)
-          encodeBlock(2, (x, y) => chromaAt(crP, x, y), mx * 8, my * 8)
-        }
-        untilRst -= 1
-        mx += 1
-      }
-      my += 1
+    val writer = ImageIO.getImageWritersByFormatName("jpeg").next()
+    val meta = writer.getDefaultImageMetadata(new ImageTypeSpecifier(img), null)
+    val tree = meta.getAsTree(NativeFormat).asInstanceOf[IIOMetadataNode]
+    def nodes(name: String): Seq[IIOMetadataNode] = {
+      val l = tree.getElementsByTagName(name)
+      (0 until l.getLength).map(l.item(_).asInstanceOf[IIOMetadataNode])
     }
-    bw.flushWithOnes()
-    b8(0xff); b8(0xd9) // EOI
-    out.toByteArray
+    val flat = new JPEGQTable(Array.fill(64)(quantVal))
+    nodes("dqtable").foreach(_.setUserObject(flat))
+    nodes("componentSpec").zipWithIndex.foreach { case (c, i) =>
+      val f = if (subsample420 && i == 0) "2" else "1"
+      c.setAttribute("HsamplingFactor", f)
+      c.setAttribute("VsamplingFactor", f)
+    }
+    if (restartEvery > 0) {
+      val dri = new IIOMetadataNode("dri")
+      dri.setAttribute("interval", restartEvery.toString)
+      val sos = nodes("sos").head
+      sos.getParentNode.insertBefore(dri, sos)
+    }
+    meta.setFromTree(NativeFormat, tree)
+
+    val bytes = new ByteArrayOutputStream()
+    val out = new MemoryCacheImageOutputStream(bytes)
+    try {
+      writer.setOutput(out)
+      writer.write(null, new IIOImage(img, null, meta), null)
+    } finally { writer.dispose(); out.close() }
+    bytes.toByteArray
   }
 
   /** Flat-fill RGB buffer helper for fixtures. */

@@ -8,14 +8,14 @@ import org.apache.spark.sql.functions._
   * lake would store them (payload + schema'd features).
   *
   * Decode is REAL for the dependency-free formats — BMP (24-bit
-  * uncompressed, both row orders), PPM (binary P6), WAV (PCM RIFF),
-  * PNG (truecolor 8-bit: IDAT inflate through the JVM's built-in
-  * zlib + all five row filters), and baseline sequential JPEG
-  * (Huffman entropy decode + dequant + IDCT + chroma upsample +
-  * YCbCr->RGB, [[JpegCodec]]) are parsed header+payload in pure JVM
-  * code; out-of-profile JPEG (progressive/arithmetic/12-bit) still
-  * gets REAL header metadata (SOFn width/height — the fields a lake
-  * partitions on) via [[decodeJpegDims]].
+  * uncompressed, both row orders), PPM (binary P6), WAV (PCM RIFF)
+  * and PNG (truecolor 8-bit: IDAT inflate through the JVM's built-in
+  * zlib + all five row filters) are parsed header+payload in pure JVM
+  * code; baseline and progressive Huffman JPEG decode through the
+  * JDK's own codec ([[JpegCodec]], `javax.imageio`). Out-of-profile
+  * JPEG (arithmetic/lossless/12-bit/CMYK) still gets REAL header
+  * metadata (SOFn width/height — the fields a lake partitions on) via
+  * [[decodeJpegDims]].
   * [[decodePayload]] sniffs magic bytes and routes. Anything else
   * (MP3/H.264/...) falls back to `decodePayloadStub`, which derives
   * deterministic fake features from the bytes so tests have stable
@@ -477,14 +477,15 @@ object Multimodal {
     */
   def resizeNearest(w: Int, h: Int, px: Array[Byte],
                     ow: Int, oh: Int): Array[Byte] = {
-    require(w > 0 && h > 0 && ow > 0 && oh > 0)
+    require(w > 0 && h > 0 && ow > 0 && oh > 0 && px.length == w * h * 3)
     val out = new Array[Byte](ow * oh * 3)
     var y = 0
     while (y < oh) {
-      val sy = y * h / oh
+      // in Long: x * w (or y * h) overflows Int once a side passes 46340 px
+      val sy = (y.toLong * h / oh).toInt
       var x = 0
       while (x < ow) {
-        val sx = x * w / ow
+        val sx = (x.toLong * w / ow).toInt
         val src = (sy * w + sx) * 3
         val dst = (y * ow + x) * 3
         out(dst) = px(src); out(dst + 1) = px(src + 1); out(dst + 2) = px(src + 2)
@@ -504,10 +505,11 @@ object Multimodal {
   def encodeWav(sampleRate: Int, nFrames: Int): Array[Byte] =
     encodeWavPcm(sampleRate, new Array[Short](nFrames)) // PCM16 mono silence
 
-  /** Sniff-and-decode: real parse for BMP/PPM/WAV/PNG and baseline
-    * JPEG (full scan decode via [[JpegCodec]]); real header metadata
-    * for out-of-profile JPEG (progressive/arithmetic); stub fallback
-    * for everything else (and for any malformed payload).
+  /** Sniff-and-decode: real parse for BMP/PPM/WAV/PNG and baseline or
+    * progressive JPEG (full scan decode via [[JpegCodec]]); real
+    * header metadata for out-of-profile JPEG (arithmetic/lossless/
+    * 12-bit/CMYK); stub fallback for everything else (and for any
+    * malformed payload).
     */
   def decodePayload(modality: String, payload: Array[Byte]): (Long, Long, Long, Long) =
     decodeBmp(payload).map { case (w, h, _) => (w.toLong, h.toLong, 1L, 0L) }
@@ -547,8 +549,9 @@ object Multimodal {
     * unsigned pixel byte for images (proves the pixel payload was
     * actually parsed, not just the header), 0 for audio, -1 when no
     * pixels were read — stub fallback, or an out-of-profile JPEG
-    * (baseline sequential is fully decoded by [[JpegCodec]];
-    * progressive/arithmetic fall back to real SOFn header dims).
+    * (baseline and progressive Huffman are fully decoded by
+    * [[JpegCodec]]; arithmetic/lossless/12-bit/CMYK fall back to real
+    * SOFn header dims).
     */
   def codecFeatures(media: Dataset[MediaRecord])
                    (implicit spark: SparkSession): Dataset[CodecFeatures] = {

@@ -591,11 +591,12 @@ object ExtQueries {
   // ---------------------------------------------------------------- q136
   /** REAL baseline-JPEG scan decode at the gate — closes the last
     * header-only word in the codec tier (q100 proves SOFn dims; this
-    * proves the entropy-coded scan is Huffman-decoded, dequantized,
-    * IDCT'd, upsampled and color-converted). Fixture discipline: flat
-    * gray fills round-trip EXACTLY through baseline JPEG (only the DC
-    * coefficient survives the FDCT of a flat block, and Cb=Cr=128 is a
-    * fixed point of the color transform), so mean_px == fill value is
+    * proves the entropy-coded scan is decoded to pixels, through the
+    * JDK's own libjpeg binding in [[graft.ext.JpegCodec]]). Fixture
+    * discipline: flat gray fills round-trip EXACTLY through baseline
+    * JPEG (only the DC coefficient survives the FDCT of a flat block,
+    * and Cb=Cr=128 is a fixed point of the color transform), so
+    * mean_px == fill value is
     * a closed-form oracle even though the codec is lossy in general —
     * while a header-only reader would emit -1 and hash-mismatch every
     * row. Ids rotate through the three baseline profiles: grayscale

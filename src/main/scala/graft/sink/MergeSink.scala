@@ -1009,8 +1009,7 @@ object MergeSink {
     * transactional table format's optimistic commit protocol
     * (Delta/Iceberg) is the production answer past that.
     */
-  private[graft] var lockTtlMs: Long =
-    sys.env.get("GRAFT_LOCK_TTL_MS").map(_.toLong).getOrElse(60000L)
+  private[graft] var lockTtlMs: Long = 60000L
 
   /** Lease capability per filesystem: can this store refresh a file's
     * mtime (`setTimes`)? Without it a holder cannot heartbeat, so an

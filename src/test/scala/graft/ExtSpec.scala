@@ -458,7 +458,8 @@ class ExtSpec extends SparkSpec {
     val err420 = smooth.indices.map(i => math.abs((smooth(i) & 0xff) - (dec420._3(i) & 0xff))).max
     assert(err420 <= 16, s"4:2:0 smooth-ramp error $err420 out of subsampling bound")
     // profile boundary + robustness: header-only stream has no scan
-    // (full decode None, dims still parse); progressive SOF2 refused;
+    // (full decode None, dims still parse); a baseline scan under a
+    // patched SOF2 byte is a corrupt progressive stream and is refused;
     // junk and truncated scans refused, never thrown
     val hdrOnly = Multimodal.encodeJpegHeader(40, 30)
     assert(JpegCodec.decode(hdrOnly).isEmpty)
@@ -469,9 +470,40 @@ class ExtSpec extends SparkSpec {
     val sofAt = baseline.indices.dropWhile(i =>
       !((baseline(i) & 0xff) == 0xff && (baseline(i + 1) & 0xff) == 0xc0)).head
     progressive(sofAt + 1) = 0xc2.toByte
-    assert(JpegCodec.decode(progressive).isEmpty, "progressive must be out of profile")
+    assert(JpegCodec.decode(progressive).isEmpty,
+      "a baseline scan under an SOF2 header is corrupt and must be refused")
     assert(Multimodal.decodeJpegDims(progressive) == Some((16, 16)),
       "header metadata must still read out-of-profile JPEGs")
+    // a genuine progressive stream (SOF2, several scans) of a flat fill,
+    // written by the JDK's own encoder, decodes exactly, also through
+    // codecFeatures, where a header-only reader gives mean_px = -1
+    val (pw, ph, pv) = (21, 13, 93)
+    val realProgressive = {
+      import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
+      val img = new java.awt.image.BufferedImage(pw, ph,
+        java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
+      img.getRaster.setPixels(0, 0, pw, ph, Array.fill(pw * ph * 3)(pv))
+      val writer = ImageIO.getImageWritersByFormatName("jpeg").next()
+      val param = writer.getDefaultWriteParam
+      param.setProgressiveMode(ImageWriteParam.MODE_DEFAULT)
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bytes)
+      try {
+        writer.setOutput(out)
+        writer.write(null, new IIOImage(img, null, null), param)
+      } finally { writer.dispose(); out.close() }
+      bytes.toByteArray
+    }
+    assert(realProgressive.indices.init.exists(i =>
+      (realProgressive(i) & 0xff) == 0xff && (realProgressive(i + 1) & 0xff) == 0xc2),
+      "fixture must carry an SOF2 marker")
+    assert(JpegCodec.decode(realProgressive).exists { case (dw, dh, px) =>
+      dw == pw && dh == ph && px.length == pw * ph * 3 && px.forall(b => (b & 0xff) == pv)
+    }, "a real progressive JPEG of a flat fill must decode exactly")
+    val progFeatures = Multimodal.codecFeatures(
+      Seq(Multimodal.MediaRecord(1L, "image", realProgressive)).toDS())(spark).collect()
+    assert(progFeatures.map(f => (f.width, f.height, f.mean_px)).toSeq ==
+      Seq((pw.toLong, ph.toLong, pv.toLong)), "codecFeatures must read progressive pixels")
     assert(JpegCodec.decode("not a jpeg at all".getBytes("US-ASCII")).isEmpty)
     assert(JpegCodec.decode(baseline.dropRight(12)).isEmpty, "truncated scan must fail")
   }
@@ -576,6 +608,17 @@ class ExtSpec extends SparkSpec {
     // upsize to 8x4 replicates: out(7,3) = src(7*4/8, 3*2/4) = src(3,1) = 34
     val up = resizeNearest(w, h, px, 8, 4)
     assert((up(((3 * 8) + 7) * 3) & 0xff) == 3 * 7 + 13)
+    // a 70000x1 strip down to 40000x1: x * w passes Int.MaxValue, so
+    // every source index must still match the positional formula
+    val (sw, ow) = (70000, 40000)
+    val strip = Array.tabulate(sw * 3)(i => (i / 3 % 251 + i % 3).toByte)
+    val narrow = resizeNearest(sw, 1, strip, ow, 1)
+    assert(narrow.length == ow * 3)
+    (0 until ow).foreach { x =>
+      val sx = (x.toLong * sw / ow).toInt
+      assert((0 until 3).forall(c => narrow(3 * x + c) == strip(3 * sx + c)),
+        s"wide strip: out($x) != src($sx)")
+    }
     // WAV PCM roundtrip + every-3rd frame sampling (incl. negatives)
     val pcm = Array.tabulate[Short](10)(i => (i * 100 - 400).toShort)
     val Some(dec) = decodeWavSamples(encodeWavPcm(8000, pcm))

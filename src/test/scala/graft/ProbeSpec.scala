@@ -11,7 +11,11 @@ import graft.core.{JobLabel, Probe}
   * builder ([[graft.core.Session]]): the probe's per-job fields on a
   * fixed action, its compile counts, JobProfile's rollup, and a source
   * guard that keeps every other session builder and listener (and any
-  * hand-rolled JDBC writer) out of the engine.
+  * hand-rolled JDBC writer) out of the engine. The same guard keeps
+  * `javax.imageio` inside `ext.JpegCodec` (and ExtSpec's progressive
+  * fixture), and bans the `ImageIO` entry points that cache through
+  * files in `java.io.tmpdir`, hide decode warnings or set JVM-global
+  * state.
   */
 class ProbeSpec extends SparkSpec {
   test("the probe records a two-job shuffle action under its JobLabel") {
@@ -63,7 +67,13 @@ class ProbeSpec extends SparkSpec {
       "waitUntilEmpty" -> Set("graft/core/Probe.scala", "sql/graft/ListenerBridge.scala"),
       // the warehouse hop is Spark's own format("jdbc") writer; spelt in
       // two parts so that a grep of src/ for the class finds no use at all
-      "Driver" + "Manager" -> Set.empty[String])
+      "Driver" + "Manager" -> Set.empty[String],
+      "javax.imageio" -> Set("graft/ext/JpegCodec.scala", "graft/ExtSpec.scala"),
+      "ImageIO.read(" -> Set.empty[String],
+      "ImageIO.write(" -> Set.empty[String],
+      "createImageInputStream" -> Set.empty[String],
+      "createImageOutputStream" -> Set.empty[String],
+      "setUseCache" -> Set.empty[String])
     def code(p: Path): Seq[String] = Files.readAllLines(p).asScala.toSeq
       .map(_.trim).filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
     val hits = for {
