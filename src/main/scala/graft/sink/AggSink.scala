@@ -36,9 +36,10 @@ import graft.functions.BoundValue
   * < B, refolded on replay) or new (fence = B, skipped) — per-bucket
   * exactly-once.
   * Structured Streaming's monotone batch ids + single-writer
-  * discipline (enforced by the same writer lock as MergeSink) make
-  * the fence comparison sound: batch B is only ever re-delivered
-  * while no batch > B has committed its offsets.
+  * discipline (every fold is one [[TableManifest.write]], under the
+  * table handle's writer lock, as every MergeSink write is) make the
+  * fence comparison sound: batch B is only ever re-delivered while no
+  * batch > B has committed its offsets.
   *
   * Writes go through [[TableManifest]] snapshot commits (immutable
   * generation dirs + one atomic manifest rename), so a crash at any
@@ -48,7 +49,7 @@ import graft.functions.BoundValue
   * sides).
   *
   * FOLD PARALLELISM: each fold is one `repartition(col(__bucket))`
-  * exchange (see `foldLocked`), so at most one non-empty task per
+  * exchange (see `fold`), so at most one non-empty task per
   * TOUCHED bucket does the aggregate — a batch touching 4 buckets
   * folds on at most 4 cores however many the cluster has. Size
   * `nBuckets` to at least the number of cores you want folding (and,
@@ -61,7 +62,7 @@ final class AggSink(
     sumCols: Seq[String],
     nBuckets: Int = 64) {
 
-  import MergeSink.{BucketCol, withWriterLock}
+  import TableManifest.BucketCol
   private val CountCol = "n_rows"
   private val FenceCol = "__applied_batch"
 
@@ -70,8 +71,7 @@ final class AggSink(
   private def bucketOf: Column = pmod(hash(keys.map(col): _*), lit(nBuckets))
 
   /** Pre-manifest table adoption — see [[MergeSink.migrateLegacy]]. */
-  def migrateLegacy(): Unit =
-    withWriterLock(spark, path, "migrate")(manifest.migrateLegacy())
+  def migrateLegacy(): Unit = manifest.write("migrate")(_.migrateLegacy())
 
   /** Aggregate state as of retained version `v` (the manifest version
     * log is shared with MergeSink — every fold is a numbered snapshot).
@@ -80,10 +80,9 @@ final class AggSink(
     visible(manifest.at(v), s"version $v at $path holds no buckets")
 
   /** Retention knob bounding version-log storage — see
-    * [[graft.sink.TableManifest.expireVersions]].
+    * [[graft.sink.TableManifest.Txn.expireVersions]].
     */
-  def expireVersions(keepLast: Int): Unit =
-    withWriterLock(spark, path, "expire")(manifest.expireVersions(keepLast))
+  def expireVersions(keepLast: Int): Unit = manifest.write("expire")(_.expireVersions(keepLast))
 
   /** Current aggregate state: keys ++ sumCols ++ n_rows. Keys whose
     * count has been RETRACTED to zero ([[foldPartials]]) are excluded:
@@ -108,12 +107,11 @@ final class AggSink(
     * rewritten); -1 folds unconditionally (non-streaming use) while
     * carrying existing fences forward.
     */
-  def merge(batch: DataFrame, batchId: Long = -1L): Unit = withWriterLock(spark, path, "merge") {
-    foldLocked(batch.groupBy(keys.map(col): _*)
+  def merge(batch: DataFrame, batchId: Long = -1L): Unit =
+    fold(batch.groupBy(keys.map(col): _*)
       .agg(sum(col(sumCols.head)).as(sumCols.head),
            (sumCols.tail.map(c => sum(col(c)).as(c)) :+
              count(lit(1)).cast("long").as(CountCol)): _*), batchId)
-  }
 
   /** RETRACTION fold (the delete half of the IVM algebra — Flink's
     * retract-stream analog): `partials` arrives PRE-AGGREGATED as
@@ -129,11 +127,12 @@ final class AggSink(
     * bucket pruning as merge.
     */
   def foldPartials(partials: DataFrame, batchId: Long = -1L): Unit =
-    withWriterLock(spark, path, "merge") {
-      foldLocked(partials.select((keys ++ sumCols :+ CountCol).map(col): _*), batchId)
-    }
+    fold(partials.select((keys ++ sumCols :+ CountCol).map(col): _*), batchId)
 
-  private def foldLocked(partial0: DataFrame, batchId: Long): Unit = {
+  /** One [[TableManifest.write]]: fold `partial0` (keys ++ sumCols ++
+    * n_rows) into the touched buckets and commit them.
+    */
+  private def fold(partial0: DataFrame, batchId: Long): Unit = manifest.write("merge") { tx =>
     // the partial frame is consumed twice (touched-bucket discovery,
     // then the fold's write) and its upstream can be an arbitrarily
     // expensive plan (q274's per-wave feed join) — persist it so the
@@ -143,7 +142,7 @@ final class AggSink(
     val partial = partial0.withColumn(BucketCol, bucketOf)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val s = manifest.current()
+      val s = tx.base
       val touched = TableManifest.touchedBuckets(partial, col(BucketCol))
       if (touched.nonEmpty) {
         // Per-bucket applied fences ride the fold plan itself (round
@@ -207,7 +206,7 @@ final class AggSink(
         // a fully-fenced (replayed) batch writes no bucket dir: no
         // commit, no version — the old fold-set-empty skip, now decided
         // by the write's own output
-        if (w.buckets.nonEmpty) manifest.vacuum(manifest.commit(s, s.mapping ++ w.mapping))
+        if (w.buckets.nonEmpty) tx.commit(w.mapping)
       }
     } finally partial.unpersist()
   }

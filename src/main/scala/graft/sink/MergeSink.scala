@@ -247,16 +247,15 @@ final class MergeSink(
   /** Retain only the `keepLast` most recent versions (min 1) and free
     * the generations only expired versions referenced.
     */
-  def expireVersions(keepLast: Int): Unit =
-    MergeSink.withWriterLock(spark, path, "expire")(manifest.expireVersions(keepLast))
+  def expireVersions(keepLast: Int): Unit = manifest.write("expire")(_.expireVersions(keepLast))
 
   /** Restore the table to `toVersion` as a new commit (Delta RESTORE /
     * Iceberg rollback) — metadata-only, history preserved; see
-    * [[TableManifest.rollback]]. Takes the writer lock: a rollback IS
-    * a write and must serialize with concurrent merges.
+    * [[TableManifest.Txn.rollback]]. A rollback IS a write: it
+    * serializes with concurrent merges, and its vacuum keeps every
+    * generation a retained version references.
     */
-  def rollback(toVersion: Long): Unit =
-    MergeSink.withWriterLock(spark, path, "rollback")(manifest.rollback(toVersion))
+  def rollback(toVersion: Long): Unit = manifest.write("rollback")(_.rollback(toVersion))
 
   /** Metadata-level data-skipping decision for `col` in `[lo, hi]` —
     * exposed for layout audits and tests.
@@ -310,8 +309,7 @@ final class MergeSink(
     * such layouts instead of treating them as empty. File renames
     * only, no data rewrite; idempotent.
     */
-  def migrateLegacy(): Unit =
-    MergeSink.withWriterLock(spark, path, "migrate")(manifest.migrateLegacy())
+  def migrateLegacy(): Unit = manifest.write("migrate")(_.migrateLegacy())
 
   /** Per-bucket parquet file counts of the committed snapshot — the
     * compaction-policy input, and what layout gates audit.
@@ -377,10 +375,9 @@ final class MergeSink(
     }
   }
 
-  /** Upsert one batch. Empty batches are a no-op (no read, no write).
-    * Holds the writer lock: a concurrent merge or compact on the same
-    * table fails fast instead of interleaving commits
-    * (see [[MergeSink.withWriterLock]]).
+  /** Upsert one batch. Empty batches commit nothing. One
+    * [[TableManifest.write]]: a concurrent writer on the same table
+    * fails fast instead of interleaving commits.
     *
     * `materializeBatch = true` runs the batch plan
     * ONCE (lazy localCheckpoint: the touched-bucket route collect is
@@ -394,23 +391,22 @@ final class MergeSink(
     * (measured +17% on q258's projection-only merges when
     * materialization was unconditional).
     */
-  def merge(batch: DataFrame, materializeBatch: Boolean = false): Unit =
-      MergeSink.withWriterLock(spark, path, "merge") {
-    if (!materializeBatch) mergeImpl(batch)
+  def merge(batch: DataFrame, materializeBatch: Boolean = false): Unit = manifest.write("merge") { tx =>
+    if (!materializeBatch) mergeInto(tx, batch)
     else {
       val (b, freeBatch) = graft.ext.Lineage.checkpointLazy(batch)
-      try mergeImpl(b)
+      try mergeInto(tx, b)
       finally freeBatch()
     }
   }
 
-  private def mergeImpl(batch: DataFrame): Unit = {
-    val s = manifest.current()
+  private def mergeInto(tx: manifest.Txn, batch: DataFrame): Unit = {
+    val s = tx.base
     val touched = route("merge", batch, s)
     if (touched.nonEmpty) {
       val w = write("merge", mergedWith(s, batch, touched))
       // all-or-nothing publish; crashed attempts' files stay invisible
-      manifest.vacuum(manifest.commit(s, s.mapping ++ w.mapping, s.stats ++ w.stats, layoutState(s)))
+      tx.commit(w.mapping, w.stats, layoutState = layoutState(s))
     }
   }
 
@@ -456,20 +452,21 @@ final class MergeSink(
     * of poison stages in, invariant checks run against the REAL merged
     * candidate state (not just the batch — cross-batch invariants
     * need the merge), and visibility is a rename, not a rewrite.
+    *
+    * Staging takes no lock: it commits nothing, every byte lands in
+    * this stage's own fresh generation dir, and that generation is
+    * pre-registered before the first byte, so no vacuum sweeps it
+    * half-written ([[TableManifest.stage]]). ONE snapshot is both the
+    * merge input and the `#base` fence; a fence read after the long
+    * parquet write would let a concurrent commit land unseen and be
+    * silently overwritten at publish.
     */
-  def stageMerge(batch: DataFrame): String =
-    MergeSink.withWriterLock(spark, path, "stage")(stageImpl(batch))
-
-  /** [[stageMerge]] WITHOUT the writer lock — the staging half of the
-    * optimistic-concurrency path. Safe lock-free because every write
-    * lands under this stage's own fresh generation dir and unique
-    * token, and reads resolve only immutable published generations;
-    * the one genuine race — a concurrent publisher's vacuum sweeping
-    * the half-written, not-yet-referenced generation — is closed by
-    * pre-registering the generation ([[TableManifest.preStage]])
-    * BEFORE the first data byte.
-    */
-  def stageMergeConcurrent(batch: DataFrame): String = stageImpl(batch)
+  def stageMerge(batch: DataFrame): String = manifest.stage { (s, gen) =>
+    val touched = route("stage", batch, s)
+    require(touched.nonEmpty, "stageMerge of an empty batch has nothing to audit")
+    onStageBaseRead()
+    write("stage", mergedWith(s, batch, touched), gen)
+  }
 
   /** Test seam: fires right after the stage's base snapshot is read,
     * BEFORE the O(data) merge write — the window where a concurrent
@@ -477,29 +474,6 @@ final class MergeSink(
     * leaves it default.
     */
   private[graft] var onStageBaseRead: () => Unit = () => ()
-
-  private def stageImpl(batch: DataFrame): String = {
-    // ONE snapshot is both the merge input and the #base fence. A fence
-    // read later — after the long parquet write — would let a
-    // concurrent commit land unseen and be silently overwritten at
-    // publish.
-    val s = manifest.current()
-    val touched = route("stage", batch, s)
-    require(touched.nonEmpty, "stageMerge of an empty batch has nothing to audit")
-    onStageBaseRead()
-    val merged = mergedWith(s, batch, touched)
-    val gen = manifest.newGenDir()
-    val pending = manifest.preStage(gen)
-    try {
-      val w = write("stage", merged, gen)
-      manifest.finalizeStage(pending, s, s.mapping ++ w.mapping, s.stats ++ w.stats)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        try manifest.discardPending(pending)
-        catch { case scala.util.control.NonFatal(_) => () }
-        throw e
-    }
-  }
 
   /** OPTIMISTIC CONCURRENCY — the Delta/Iceberg commit-retry loop,
     * replacing "hold the writer lock for the whole merge" with "hold
@@ -518,7 +492,7 @@ final class MergeSink(
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
-      val token = stageMergeConcurrent(batch)
+      val token = stageMerge(batch)
       beforePublish()
       try { publishStaged(token); return attempt }
       catch {
@@ -544,12 +518,10 @@ final class MergeSink(
   /** Publish a staged merge atomically (one new version; fails fast if
     * the table committed past the stage's base version).
     */
-  def publishStaged(token: String): Unit =
-    MergeSink.withWriterLock(spark, path, "publish")(manifest.vacuum(manifest.publish(token)))
+  def publishStaged(token: String): Unit = manifest.write("publish")(_.publish(token))
 
   /** Reject a staged merge; its generation is swept immediately. */
-  def discardStaged(token: String): Unit =
-      MergeSink.withWriterLock(spark, path, "discard")(manifest.discard(token))
+  def discardStaged(token: String): Unit = manifest.write("discard")(_.discard(token))
 
   /** Outstanding stage tokens. */
   def stagedTokens(): Seq[String] = manifest.staged()
@@ -657,29 +629,25 @@ final class MergeSink(
     *
     * `destroyHistory = false` is the TTL-EVICTION variant (dropping
     * cold keys for cost, not compliance): the delete commits like any
-    * other version, history and time travel survive, and
-    * [[changesBetween]] across the eviction reports the keys as
-    * `delete` rows — downstream increments see them leave.
+    * other version, history and time travel survive (its vacuum keeps
+    * what retained versions reference), and [[changesBetween]] across
+    * the eviction reports the keys as `delete` rows — downstream
+    * increments see them leave.
     */
-  def purgeKeys(keyRows: DataFrame, destroyHistory: Boolean = true): Unit =
-      MergeSink.withWriterLock(spark, path, "purge") {
-    val s = manifest.current()
+  def purgeKeys(keyRows: DataFrame, destroyHistory: Boolean = true): Unit = manifest.write("purge") { tx =>
+    val s = tx.base
     val keyList = keyRows.select(keys.map(col): _*).distinct()
     val rewrite = route("purge", keyList, s).filter(s.mapping.contains)
-    val next =
-      if (rewrite.isEmpty) s
-      else {
-        val w = write("purge", keySorted(s, purgeKeptFrame(keyList, rewrite, s)))
-        // a bucket whose every row was purged vanishes from the mapping
-        // (the write produced no dir for it) rather than keeping a stale gen
-        val emptied = rewrite.toSet -- w.buckets
-        manifest.commit(s, (s.mapping -- emptied) ++ w.mapping,
-          (s.stats -- rewrite) ++ w.stats, layoutState(s))
-      }
+    if (rewrite.nonEmpty) {
+      val w = write("purge", keySorted(s, purgeKeptFrame(keyList, rewrite, s)))
+      // a bucket whose every row was purged vanishes from the mapping
+      // (the write produced no dir for it) rather than keeping a stale gen
+      tx.commit(w.mapping, w.stats, drop = rewrite, layoutState = layoutState(s))
+    }
     // history carries the purged rows — for a compliance purge destroy
     // it even when no bucket matched (the request may target data
     // already purged upstream)
-    if (destroyHistory) manifest.expireVersions(1, next)
+    if (destroyHistory) tx.expireVersions(1)
   }
 
   /** MERGE-ON-READ delete (Iceberg v2 delete-file / Delta deletion-
@@ -716,8 +684,7 @@ final class MergeSink(
     * data files' atomic-publish story; vacuum treats DV references as
     * liveness.
     */
-  def deleteVector(keyRows: DataFrame): Unit =
-      MergeSink.withWriterLock(spark, path, "delete-vector") {
+  def deleteVector(keyRows: DataFrame): Unit = manifest.write("delete-vector") { tx =>
     // no write-side distinct (round 16): every DV consumer dedupes at
     // read ([[applyDv]] and [[changesBetween]]'s fast path both
     // `.distinct()` the vector keys), so the exchange a distinct plans
@@ -728,7 +695,7 @@ final class MergeSink(
     // would wrongly delete a FUTURE insert of that key — so keys of
     // absent buckets are dropped before the write, not written and
     // then deleted
-    val s = manifest.current()
+    val s = tx.base
     val held = s.mapping.keySet.toSeq
     val keyList = keyRows.select(keys.map(col): _*)
       .withColumn(BucketCol, bucketOf(s))
@@ -753,7 +720,7 @@ final class MergeSink(
       fs.delete(dvtmp, true)
       val appended = s.dv ++ touched.map(b =>
         b -> (s.dv.getOrElse(b, Seq.empty) :+ s"$gen/dv_$b"))
-      manifest.commit(s, s.mapping, s.stats, layoutState(s), dvState = Some(appended))
+      tx.commit(Map.empty, layoutState = layoutState(s), dvState = Some(appended))
     } else fs.delete(new Path(s"$path/$gen"), true)
   }
 
@@ -792,42 +759,37 @@ final class MergeSink(
     * stats stay conservative-correct for pruning.
     */
   def compact(maxFilesPerBucket: Int = 4,
-              dropDeleted: Option[String] = None): Unit =
-      MergeSink.withWriterLock(spark, path, "compact") {
-    if (manifest.exists) {
-      val s = manifest.current()
-      val oversized = manifest.bucketFiles(s)
-        .filter { case (_, fl) => fl.size > maxFilesPerBucket }
-        .keys.toSet
-      val tombstoned: Set[Int] = dropDeleted match {
-        case None => Set.empty
-        // NULL flag means LIVE on both sides of this operation: a NULL
-        // never marks a bucket for rewrite here, and the keep-filter
-        // below coalesces to false so NULL-flag rows survive the
-        // rewrite — compact is layout maintenance and must never
-        // hard-delete a row whose tombstone state is merely unknown.
-        case Some(flag) => manifest.scan(s).fold(Set.empty[Int]) { df =>
-          TableManifest.touchedBuckets(df.filter(coalesce(col(flag), lit(false))), col(BucketCol)).toSet
-        }
+              dropDeleted: Option[String] = None): Unit = manifest.write("compact") { tx =>
+    val s = tx.base
+    val oversized = manifest.bucketFiles(s)
+      .filter { case (_, fl) => fl.size > maxFilesPerBucket }
+      .keys.toSet
+    val tombstoned: Set[Int] = dropDeleted match {
+      case None => Set.empty
+      // NULL flag means LIVE on both sides of this operation: a NULL
+      // never marks a bucket for rewrite here, and the keep-filter
+      // below coalesces to false so NULL-flag rows survive the
+      // rewrite — compact is layout maintenance and must never
+      // hard-delete a row whose tombstone state is merely unknown.
+      case Some(flag) => manifest.scan(s).fold(Set.empty[Int]) { df =>
+        TableManifest.touchedBuckets(df.filter(coalesce(col(flag), lit(false))), col(BucketCol)).toSet
       }
-      // buckets with outstanding deletion vectors are compaction
-      // candidates too: the rewrite is what applies a DV physically
-      // and consumes it (commit's DV-consumption rule)
-      val rewrite = (oversized ++ tombstoned ++ s.dv.keySet).toSeq.sorted
-      if (rewrite.nonEmpty) {
-        val base = applyDv(manifest.scan(s, Some(rewrite)).get, s.dv, Some(rewrite))
-        // content rows are unchanged (minus dropped tombstones), so zone
-        // maps carry over; sidecars are generation-scoped and rebuilt
-        val w = manifest.writeGeneration("compact",
-          dropDeleted.fold(base)(flag => base.filter(!coalesce(col(flag), lit(false))))
-            .repartition(rewrite.length, col(BucketCol)),
-          bloomCols = bloomCols, bloomBits = bloomBits)
-        // a bucket whose every row was a tombstone vanishes from the
-        // mapping (the write produced no dir for it)
-        val emptied = rewrite.toSet -- w.buckets
-        manifest.vacuum(manifest.commit(s, (s.mapping -- emptied) ++ w.mapping,
-          s.stats -- emptied, layoutState(s)))
-      }
+    }
+    // buckets with outstanding deletion vectors are compaction
+    // candidates too: the rewrite is what applies a DV physically
+    // and consumes it (commit's DV-consumption rule)
+    val rewrite = (oversized ++ tombstoned ++ s.dv.keySet).toSeq.sorted
+    if (rewrite.nonEmpty) {
+      val base = applyDv(manifest.scan(s, Some(rewrite)).get, s.dv, Some(rewrite))
+      // content rows are unchanged (minus dropped tombstones), so zone
+      // maps carry over; sidecars are generation-scoped and rebuilt
+      val w = manifest.writeGeneration("compact",
+        dropDeleted.fold(base)(flag => base.filter(!coalesce(col(flag), lit(false))))
+          .repartition(rewrite.length, col(BucketCol)),
+        bloomCols = bloomCols, bloomBits = bloomBits)
+      // a bucket whose every row was a tombstone vanishes from the
+      // mapping (the write produced no dir for it)
+      tx.commit(w.mapping, drop = rewrite.toSet -- w.buckets, layoutState = layoutState(s))
     }
   }
 
@@ -863,18 +825,14 @@ final class MergeSink(
     * [[migrateStep]] is the same evolution as an incremental
     * background job with merges running throughout.
     */
-  def rebucket(newNBuckets: Int): MergeSink =
-      MergeSink.withWriterLock(spark, path, "rebucket") {
-    val s = manifest.current()
+  def rebucket(newNBuckets: Int): MergeSink = manifest.write("rebucket") { tx =>
+    val s = tx.base
     val target = nextLayout(s, newNBuckets)
-    val handle = new MergeSink(spark, path, keys, orderCols, newNBuckets,
-      statsCols, rangeBucketWidth, bloomCols, bloomBits)
     scan(s, None) match {
       case None =>
         // empty table: the layout change is metadata-only but still a
         // real commit — a stale-parameter handle must see it
-        manifest.commit(s, Map.empty, Map.empty, Some((target, None)))
-        handle
+        tx.commit(Map.empty, layoutState = Some((target, None)))
       case Some(rows) =>
         val w = write("rebucket", rows
           .withColumn(BucketCol, physOf(target))
@@ -882,9 +840,10 @@ final class MergeSink(
           .sortWithinPartitions(keys.map(col): _*))
         // FULL mapping replacement: every old bucket id retires with
         // this commit (prior versions still resolve them)
-        manifest.vacuum(manifest.commit(s, w.mapping, w.stats, Some((target, None))))
-        handle
+        tx.commit(w.mapping, w.stats, drop = s.mapping.keys, layoutState = Some((target, None)))
     }
+    new MergeSink(spark, path, keys, orderCols, newNBuckets,
+      statsCols, rangeBucketWidth, bloomCols, bloomBits)
   }
 
   /** PROGRESSIVE bucket-layout migration, step 1 of 2 (the actual
@@ -898,11 +857,10 @@ final class MergeSink(
     * table whose physical buckets span two layout generations, each
     * key living in exactly one of them.
     */
-  def beginMigration(newNBuckets: Int): Unit =
-      MergeSink.withWriterLock(spark, path, "begin-migration") {
-    val s = manifest.current()
+  def beginMigration(newNBuckets: Int): Unit = manifest.write("begin-migration") { tx =>
+    val s = tx.base
     val target = nextLayout(s, newNBuckets)
-    manifest.commit(s, s.mapping, s.stats, Some((layoutOf(s), Some(Migration(target, Set.empty)))))
+    tx.commit(Map.empty, layoutState = Some((layoutOf(s), Some(Migration(target, Set.empty)))))
   }
 
   /** PROGRESSIVE migration, step 2: rewrite the next `k` unmigrated
@@ -924,10 +882,9 @@ final class MergeSink(
     *
     * Returns the number of old buckets still unmigrated (0 = done).
     */
-  def migrateStep(k: Int): Int =
-      MergeSink.withWriterLock(spark, path, "migrate-step") {
+  def migrateStep(k: Int): Int = manifest.write("migrate-step") { tx =>
     require(k >= 1, s"migrateStep needs k >= 1, got $k")
-    val s = manifest.current()
+    val s = tx.base
     val l = layoutOf(s)
     val mig = s.migration.getOrElse(throw new IllegalStateException(
       s"no migration in flight at $path — beginMigration first"))
@@ -943,7 +900,7 @@ final class MergeSink(
     if (held.isEmpty) {
       // nothing stored under these old buckets: marking them migrated
       // is pure metadata (still a real commit — routing changes)
-      manifest.commit(s, s.mapping, s.stats, nextState)
+      tx.commit(Map.empty, layoutState = nextState)
     } else {
       val moving = scan(s, Some(held)).get
         .withColumn(BucketCol, physOf(mig.target))
@@ -960,8 +917,7 @@ final class MergeSink(
       val w = write("migrate", out
         .repartition(math.max(targets.size, 1), col(BucketCol))
         .sortWithinPartitions(keys.map(col): _*))
-      manifest.vacuum(manifest.commit(s, (s.mapping -- physPick) ++ w.mapping,
-        (s.stats -- physPick) ++ w.stats, nextState))
+      tx.commit(w.mapping, w.stats, drop = physPick, layoutState = nextState)
     }
     remaining
   }
@@ -977,7 +933,7 @@ final class MergeSink(
 
 object MergeSink {
   /** Partition column of the state table layout. */
-  val BucketCol = "__bucket"
+  val BucketCol: String = TableManifest.BucketCol
 
   /** Physical-bucket-id namespace width per layout generation:
     * `phys = gen * LayoutStride + logical` (gen 0 stays bare for
@@ -988,242 +944,9 @@ object MergeSink {
   val LayoutStride: Int = 1 << 20
   val MaxLayoutGen: Int = Int.MaxValue / LayoutStride - 1 // 2046
 
-  /** Thrown when a second writer attempts to mutate a sink table while
-    * another merge/compact holds the lock.
+  /** Thrown when a second writer attempts to change a sink table while
+    * another write holds its lock ([[TableManifest.write]]).
     */
   final class ConcurrentWriterException(msg: String)
     extends IllegalStateException(msg)
-
-  /** Lease TTL for the writer lock: a holder HEARTBEATS the lock's
-    * mtime every ttl/4; a contender may break a lock whose mtime is
-    * older than the TTL (no heartbeat for >= 4 missed intervals =
-    * crashed holder), never a live one. Package-visible so specs can
-    * shrink the lease; production default 60 s — far above any GC
-    * pause, far below "page an operator". The classic lease caveat
-    * applies and is accepted: a holder frozen LONGER than the TTL
-    * (stop-the-world pause measured in minutes) could be broken while
-    * still alive; the commit itself stays untorn either way because
-    * publishing is one atomic manifest rename, so the failure mode is
-    * a lost-update race identical to the pre-lock world — which is why
-    * the TTL is 60 s and the heartbeat 15 s, not seconds. A
-    * transactional table format's optimistic commit protocol
-    * (Delta/Iceberg) is the production answer past that.
-    */
-  private[graft] var lockTtlMs: Long = 60000L
-
-  /** Lease capability per filesystem: can this store refresh a file's
-    * mtime (`setTimes`)? Without it a holder cannot heartbeat, so an
-    * old mtime says NOTHING about holder liveness — the lock must
-    * degrade to a pure advisory lock there (never auto-broken;
-    * [[breakLock]] is the only override) instead of letting a
-    * contender break a LIVE long-running writer after the TTL.
-    * Probed once per filesystem URI with a throwaway file; transient
-    * probe failures count as capable (individual missed beats are
-    * already tolerated — TTL = 4 beats).
-    */
-  private val leaseCapable =
-    new java.util.concurrent.ConcurrentHashMap[java.net.URI, java.lang.Boolean]()
-
-  private def canHeartbeat(fs: org.apache.hadoop.fs.FileSystem, lock: Path): Boolean =
-    leaseCapable.computeIfAbsent(fs.getUri, _ => {
-      val probe = new Path(lock.toString + s".probe.${java.util.UUID.randomUUID()}")
-      try {
-        val out = fs.create(probe, false); out.close()
-        fs.setTimes(probe, System.currentTimeMillis(), -1)
-        true
-      } catch {
-        case _: UnsupportedOperationException      => false
-        case scala.util.control.NonFatal(_)        => true
-      } finally {
-        try fs.delete(probe, false)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-    })
-
-  /** SINGLE-WRITER contract, enforced: dynamic partition overwrite is
-    * per-partition-atomic but has no cross-writer commit protocol —
-    * two interleaved merges (or a merge racing a compact) could each
-    * rewrite a bucket from a stale read and lose the other's rows. A
-    * create-exclusive lock file (`<table>_lock`) makes the second
-    * writer FAIL FAST with the holder's identity instead of corrupting
-    * state. Exclusive-create atomicity is filesystem-specific, so the
-    * acquisition path picks the primitive that IS atomic on each:
-    * local paths use NIO `Files.createFile` (O_CREAT|O_EXCL);
-    * HDFS-like filesystems use `fs.create(overwrite = false)` (an
-    * atomic namespace operation there). Genuine I/O errors are
-    * rethrown, never misreported as contention. The reference
-    * delegates this to ClickHouse's merge machinery; a transactional
-    * table format (Delta/Iceberg) replaces this with optimistic commit
-    * protocols without changing callers.
-    *
-    * CRASHED holders no longer need an operator: the lock is a LEASE
-    * (see [[lockTtlMs]]) — holders heartbeat its mtime, and a
-    * contender that finds the heartbeat stale breaks the lock and
-    * proceeds. The break is guarded against racing a FRESH holder:
-    * the breaker RENAMES the lock aside (one atomic winner among
-    * concurrent breakers), re-reads the renamed file, and only
-    * proceeds if it holds exactly the stale owner it observed —
-    * anything else is restored and reported as live contention.
-    * `breakLock` remains as the manual override.
-    */
-  def withWriterLock[T](spark: SparkSession, table: String, op: String)(body: => T): T = {
-    val lock = new Path(table + "_lock")
-    val fs = lock.getFileSystem(spark.sessionState.newHadoopConf())
-    val owner = s"$op pid=${ProcessHandle.current().pid()} " +
-      s"epochMs=${System.currentTimeMillis()} uuid=${java.util.UUID.randomUUID()}"
-    val isLocal = lock.toUri.getScheme == null || lock.toUri.getScheme == "file"
-
-    def readLock(): Option[(String, Long)] =
-      try {
-        val st = fs.getFileStatus(lock)
-        val in = fs.open(lock)
-        val text = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-        Some((text, st.getModificationTime))
-      } catch { case _: java.io.IOException => None } // vanished or unreadable
-
-    def contention(holder: String): Nothing =
-      throw new ConcurrentWriterException(
-        s"$table is locked by [$holder]; refusing concurrent $op " +
-          s"(single-writer contract; lease expires ${lockTtlMs} ms after its " +
-          "last heartbeat; breakLock() is the manual override)")
-
-    /** One create-exclusive claim attempt; false = someone holds it. */
-    def tryClaim(): Boolean =
-      if (isLocal) {
-        val p = java.nio.file.Paths.get(lock.toUri.getPath)
-        if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-        try {
-          java.nio.file.Files.write(p, owner.getBytes("UTF-8"),
-            java.nio.file.StandardOpenOption.CREATE_NEW,
-            java.nio.file.StandardOpenOption.WRITE)
-          true
-        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      } else {
-        // rename is the atomic namespace op on HDFS-like stores, so the
-        // CLAIM is the rename of a fully-written temp file — a contender
-        // can never observe a claimed-but-empty lock (create-then-write
-        // had that window). On S3-like object stores neither
-        // create-exclusive nor rename is atomic: the lock is ADVISORY
-        // there; a table format with a real commit protocol
-        // (Delta/Iceberg — see class doc) is the production answer.
-        val tmp = new Path(table + s"_lock.tmp.${java.util.UUID.randomUUID()}")
-        val out = fs.create(tmp, false)
-        out.write(owner.getBytes("UTF-8")); out.close()
-        val claimed =
-          try fs.rename(tmp, lock)
-          catch {
-            case e: java.io.IOException =>
-              // the rename may have landed despite the error — if the lock
-              // now carries OUR owner string we hold it; otherwise this is
-              // a genuine I/O failure and must be rethrown, not
-              // misreported as contention (class-doc contract)
-              val ours = readLock().exists(_._1 == owner)
-              if (!ours) { fs.delete(tmp, false); throw e }
-              true
-          }
-        if (!claimed) fs.delete(tmp, false)
-        else {
-          // holder-side hygiene: sweep lock temp files from CRASHED
-          // claimers (mtime-guarded so a live claimer mid-write is never
-          // raced; a live one is about to fail on rename and delete its
-          // own tmp anyway)
-          try {
-            val dir = lock.getParent
-            val prefix = lock.getName + ".tmp."
-            val cutoff = System.currentTimeMillis() - 10 * 60 * 1000
-            fs.listStatus(dir).foreach { st =>
-              if (st.getPath.getName.startsWith(prefix) &&
-                  st.getModificationTime < cutoff)
-                fs.delete(st.getPath, false)
-            }
-          } catch { case _: java.io.IOException => () } // best-effort
-        }
-        claimed
-      }
-
-    /** Break a lock whose heartbeat is stale. Atomic among concurrent
-      * breakers (exactly one rename wins); guarded against a fresh
-      * holder appearing between the staleness read and the rename by
-      * re-reading the renamed file — if it is not the observed stale
-      * owner, it is restored and treated as live. Returns true if the
-      * stale lock is gone and a claim may be retried.
-      */
-    def breakStale(staleOwner: String): Boolean = {
-      val aside = new Path(table + s"_lock.stale.${java.util.UUID.randomUUID()}")
-      val renamed =
-        try fs.rename(lock, aside)
-        catch { case _: java.io.IOException => false }
-      if (!renamed) true // another breaker won the rename; retry the claim
-      else {
-        val moved =
-          try {
-            val in = fs.open(aside)
-            try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-          } catch { case _: java.io.IOException => "" }
-        if (moved == staleOwner) { fs.delete(aside, false); true }
-        else {
-          // we grabbed a FRESH holder's lock — put it back and report
-          // live contention (a release racing the restore leaves a
-          // zombie lock that the TTL itself will break: self-healing)
-          try fs.rename(aside, lock)
-          catch { case _: java.io.IOException => fs.delete(aside, false) }
-          false
-        }
-      }
-    }
-
-    // claim loop: exclusive-create; on contention, break only a lock
-    // whose lease has expired. Bounded — never spins on live holders.
-    var acquired = false
-    var attempts = 0
-    while (!acquired && attempts < 3) {
-      attempts += 1
-      acquired = tryClaim()
-      if (!acquired) readLock() match {
-        case None => () // holder released between claim and read; retry
-        case Some((holder, mtime)) =>
-          val age = System.currentTimeMillis() - mtime
-          if (age <= lockTtlMs) contention(holder)
-          // no heartbeat support on this FS → mtime age proves nothing
-          // about liveness; advisory posture, never auto-break
-          else if (!canHeartbeat(fs, lock)) contention(holder)
-          else if (!breakStale(holder)) contention(holder)
-      }
-    }
-    if (!acquired) contention(readLock().map(_._1).getOrElse("<unknown>"))
-
-    // the lease heartbeat: refresh the lock's mtime every ttl/4 while
-    // the body runs — a contender reading an mtime older than the TTL
-    // can only be seeing a crashed (or frozen-past-the-lease) holder
-    val hb: Option[Thread] =
-      if (!canHeartbeat(fs, lock)) None // advisory posture: no lease on this FS
-      else {
-        val t = new Thread(() => {
-          try {
-            while (!Thread.interrupted()) {
-              Thread.sleep(math.max(lockTtlMs / 4, 10))
-              try fs.setTimes(lock, System.currentTimeMillis(), -1)
-              // NonFatal (not just IOException): any one missed beat is
-              // tolerated (TTL = 4 beats), but an uncaught throw would
-              // kill the daemon silently and let a contender break a
-              // LIVE holder after the TTL. NonFatal leaves interrupts
-              // and JVM-fatal errors alone.
-              catch { case scala.util.control.NonFatal(_) => () }
-            }
-          } catch { case _: InterruptedException => () }
-        })
-        t.setDaemon(true)
-        t.setName(s"graft-lock-heartbeat-$op")
-        t.start()
-        Some(t)
-      }
-    try body finally { hb.foreach(_.interrupt()); fs.delete(lock, false) }
-  }
-
-  /** Operator override: remove a lock left by a crashed writer. */
-  def breakLock(spark: SparkSession, table: String): Unit = {
-    val lock = new Path(table + "_lock")
-    val fs = lock.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(lock, false)
-  }
 }

@@ -73,7 +73,7 @@ import graft.core.JobLabel
   * TIME TRAVEL: `_versions/v-<n>` files are retained across commits,
   * so [[at]] resolves any historical snapshot; generation dirs
   * referenced by ANY retained version survive [[vacuum]]. Retention is
-  * bounded by [[expireVersions]] (Delta/Iceberg VACUUM-with-retention
+  * bounded by [[Txn.expireVersions]] (Delta/Iceberg VACUUM-with-retention
   * semantics): expiring old versions is what finally frees their
   * superseded generation dirs. At 100 TB, version files stay tiny
   * (one line per bucket — metadata, not data), so the cost of history
@@ -105,27 +105,35 @@ import graft.core.JobLabel
   * fixed, not an option. Readers need nothing: the codec is recorded
   * per column chunk and footer statistics are unchanged.
   *
-  * Concurrency: writers are serialized by [[MergeSink.withWriterLock]]
-  * (single-writer contract), so a writer's snapshot stays current for
-  * its whole operation and [[commit]] publishes `base.version + 1`
-  * without re-reading. Readers never lock; they race only the manifest
-  * rename, which is atomic: a read serves the snapshot current at its
-  * call, and a commit landing while its plan is built is simply not in
-  * it (the plan pins that snapshot's immutable files; nothing retries).
-  * A long-running reader of an OLD
-  * version races only [[expireVersions]] — production object stores
+  * Concurrency: the writer lock belongs to this handle. [[write]] is the
+  * one way to change the table: it takes the lock (`<root>_lock`, a
+  * lease; see [[locked]]) through the handle's own configuration and
+  * FileSystem, reads the current snapshot once and hands the body a
+  * [[Txn]]. Commit, publish, discard, expiry, rollback and legacy
+  * adoption exist only on that value, and the one vacuum runs at the
+  * end of the write, still under the lock. So a writer's snapshot stays
+  * current for its whole operation, [[Txn.commit]] publishes
+  * `head.version + 1` without re-reading, and no sweep can race a
+  * committer. A lock-free [[stage]] commits nothing and sweeps nothing;
+  * its pre-registered generation is live to every vacuum. Readers never
+  * lock; they race only the manifest rename, which is atomic: a read
+  * serves the snapshot current at its call, and a commit landing while
+  * its plan is built is simply not in it (the plan pins that snapshot's
+  * immutable files; nothing retries). A long-running reader of an OLD
+  * version races only [[Txn.expireVersions]] — production object stores
   * defer deletion by a retention horizon; here the writer lock plus
   * same-process readers make the window empty in this engine's usage.
   */
 final class TableManifest(spark: SparkSession, val root: String) {
-  import MergeSink.BucketCol
-  import TableManifest.{ColStats, Layout, Migration, Snapshot, Stats, Written}
+  import TableManifest.{BucketCol, ColStats, Layout, Migration, Snapshot, Stats, Written, canHeartbeat, lockTtlMs}
 
-  // one configuration copy and one FileSystem handle per table handle:
-  // a fresh copy per call was a fifth of a point read's main-thread time
+  // one configuration copy and one FileSystem handle per table handle,
+  // shared by reads, commits and the writer lock: a fresh copy per call
+  // was a fifth of a point read's main-thread time
   private lazy val conf = spark.sessionState.newHadoopConf()
   private val rootPath = new Path(root)
   private[sink] lazy val fs = rootPath.getFileSystem(conf)
+  private val isLocal = rootPath.toUri.getScheme == null || rootPath.toUri.getScheme == "file"
 
   // Caches of immutable objects: a generation dir never changes once
   // written, so none of these can go stale; [[vacuum]] evicts the dirs
@@ -136,19 +144,19 @@ final class TableManifest(spark: SparkSession, val root: String) {
   // Published versions this handle parsed or committed, for [[vacuum]]
   // only: a version file never changes once published, and vacuum
   // consults an entry only for a version its own listing still shows.
-  // [[expireVersions]] evicts what it deletes.
+  // [[Txn.expireVersions]] evicts what it deletes.
   private val versionCache = new ConcurrentHashMap[Long, Snapshot]()
   private def manifestPath = new Path(root, TableManifest.ManifestFile)
   private def versionsDir = new Path(root, TableManifest.VersionsDir)
   private def versionPath(n: Long) = new Path(versionsDir, s"v-$n")
 
-  def exists: Boolean = fs.exists(manifestPath)
+  private def exists: Boolean = fs.exists(manifestPath)
 
   /** A table written by the pre-manifest code has `__bucket=N` dirs
     * directly under the root and no `_MANIFEST`. Reading that as "no
     * committed state" would silently orphan every previously merged
     * row (and, for AggSink, disarm the replay fence) — so resolution
-    * FAILS LOUDLY instead, and [[migrateLegacy]] performs the one-time
+    * FAILS LOUDLY instead, and [[Txn.migrateLegacy]] performs the one-time
     * adoption: move the bucket dirs into a generation dir and commit a
     * manifest naming them.
     */
@@ -173,26 +181,6 @@ final class TableManifest(spark: SparkSession, val root: String) {
       s"$root holds a pre-manifest table layout (${legacy.size} bucket dirs, " +
         "no _MANIFEST); refusing to read it as empty — run migrateLegacy() once")
   }
-
-  /** One-time adoption of a pre-manifest table: bucket dirs move (file
-    * renames, no data rewrite) into a fresh generation dir and a
-    * manifest naming them is committed. Idempotent: a no-op when the
-    * manifest already exists or no legacy dirs remain.
-    */
-  def migrateLegacy(): Unit =
-    if (!exists) {
-      val legacy = legacyBuckets()
-      if (legacy.nonEmpty) {
-        val gen = newGenDir()
-        val genPath = new Path(root, gen)
-        fs.mkdirs(genPath)
-        legacy.foreach { b =>
-          fs.rename(new Path(root, s"$BucketCol=$b"),
-                    new Path(genPath, s"$BucketCol=$b"))
-        }
-        commit(Snapshot.Empty, legacy.map(_ -> gen).toMap)
-      }
-    }
 
   private def readText(p: Path): String = {
     val in = fs.open(p)
@@ -301,8 +289,9 @@ final class TableManifest(spark: SparkSession, val root: String) {
     s"#version=${s.version}\n$lh$mh$body"
   }
 
-  /** The snapshot following `base` with mapping `m` (see [[commit]] for
-    * the defaults): the value [[commit]] publishes and [[stage]] stages.
+  /** The snapshot following `base` with mapping `m` (see [[Txn.commit]]
+    * for the defaults): the value a commit publishes and [[stage]]
+    * stages.
     */
   private def successor(base: Snapshot, m: Map[Int, String], stats: Map[Int, Stats],
                         layoutState: Option[(Layout, Option[Migration])],
@@ -312,45 +301,161 @@ final class TableManifest(spark: SparkSession, val root: String) {
     Snapshot(base.version + 1, m, stats, dv, lay, mig)
   }
 
-  /** Publish the successor of `base` atomically (see class doc) and
-    * return it. `base` is the snapshot the caller planned from; the
-    * writer lock keeps it current, so nothing is re-read here. `stats`
-    * carries the per-bucket zone maps; omit for stat-less tables.
-    * `layoutState`: None carries `base`'s layout headers forward
-    * unchanged (stat-less and layout-less writers never think about
-    * them); Some((layout, migration)) sets them exactly — how
-    * [[MergeSink]] records layout evolution and migration progress in
-    * the SAME atomic commit as the data it describes.
-    * `dvState`: None applies the CONSUMPTION rule — a bucket keeps its
-    * deletion vectors iff this commit maps it to the SAME generation
-    * as `base` (an unchanged bucket's DVs still apply; a rewritten
-    * bucket was rebuilt from a DV-applied read, so its DVs are
-    * consumed and dropped in the same atomic commit). Every
-    * data-rewriting caller gets correct DV semantics for free;
-    * Some(dv) sets the map exactly (how [[MergeSink.deleteVector]]
-    * appends new vectors).
-    */
-  def commit(base: Snapshot, m: Map[Int, String], stats: Map[Int, Stats] = Map.empty,
-             layoutState: Option[(Layout, Option[Migration])] = None,
-             dvState: Option[Map[Int, Seq[String]]] = None): Snapshot =
-    commitExact(successor(base, m, stats, layoutState, dvState))
+  // ------------------------------------------------------------- writes
 
-  /** Restore the table to `toVersion`'s EXACT snapshot as a NEW
-    * version — the Delta RESTORE / Iceberg rollback primitive.
-    * Metadata-only and O(1): the rollback commit re-points at
-    * `toVersion`'s generation dirs (mapping, zone maps, layout,
-    * migration headers AND deletion vectors all restored verbatim,
-    * including a None layout — a plain `commit` cannot clear headers,
-    * rollback must). History is preserved: the rolled-back-over
-    * versions stay time-travelable until [[expireVersions]], and
-    * [[vacuum]] keeps their generations live for the same reason.
-    * Forward writes continue normally on top of the restored state.
+  /** THE way to change the table: take the writer lock ([[locked]]),
+    * hand `body` a [[Txn]] over the snapshot current under it, and,
+    * before the lock drops, vacuum once if the write changed the bucket
+    * -> generation mapping, expired a version or discarded a stage. A
+    * write that only appends deletion vectors or changes layout
+    * metadata sweeps nothing; one whose body throws publishes nothing
+    * further and sweeps nothing. `op` names the write in the lock file,
+    * so a refused contender's error names the holder.
     */
-  def rollback(toVersion: Long): Snapshot = {
-    val cur = current()
-    require(toVersion < cur.version,
-      s"rollback target $toVersion is not in the past (current=${cur.version})")
-    commitExact(at(toVersion, cur).copy(version = cur.version + 1))
+  def write[T](op: String)(body: Txn => T): T = locked(op) {
+    val tx = new Txn
+    try {
+      val out = body(tx)
+      if (tx.sweep) vacuum(tx.head)
+      out
+    } finally tx.open = false
+  }
+
+  /** One [[write]]'s hold on the table, and the only holder of the
+    * operations that change it. Valid only inside its write's body.
+    */
+  final class Txn private[TableManifest] () {
+    private[TableManifest] var open = true
+    private[TableManifest] var sweep = false
+    private var last: Option[Snapshot] = None
+
+    /** The snapshot current when the write took the lock: parsed once,
+      * on first use, and kept current by the lock.
+      */
+    lazy val base: Snapshot = current()
+
+    /** What this write last published, else [[base]]. */
+    private[TableManifest] def head: Snapshot = last.getOrElse(base)
+
+    private def live(): Unit =
+      require(open, s"a transaction on $root was used after its write ended")
+
+    private def publishNext(next: Snapshot, from: Snapshot): Snapshot = {
+      live()
+      commitExact(next)
+      sweep ||= next.mapping != from.mapping
+      last = Some(next)
+      next
+    }
+
+    /** Publish the successor of [[head]] atomically (see class doc) and
+      * return it: `head`'s mapping without the buckets in `drop`, plus
+      * `put` (bucket -> generation dir); the per-bucket zone maps are
+      * dropped and put alike (`stats`; omit for stat-less tables).
+      * `layoutState`: None carries `head`'s layout headers forward
+      * unchanged (stat-less and layout-less writers never think about
+      * them); Some((layout, migration)) sets them exactly — how
+      * [[MergeSink]] records layout evolution and migration progress in
+      * the SAME atomic commit as the data it describes.
+      * `dvState`: None applies the CONSUMPTION rule — a bucket keeps its
+      * deletion vectors iff this commit maps it to the SAME generation
+      * as `head` (an unchanged bucket's DVs still apply; a rewritten
+      * bucket was rebuilt from a DV-applied read, so its DVs are
+      * consumed and dropped in the same atomic commit). Every
+      * data-rewriting caller gets correct DV semantics for free;
+      * Some(dv) sets the map exactly (how [[MergeSink.deleteVector]]
+      * appends new vectors).
+      */
+    def commit(put: Map[Int, String], stats: Map[Int, Stats] = Map.empty, drop: Iterable[Int] = Nil,
+               layoutState: Option[(Layout, Option[Migration])] = None,
+               dvState: Option[Map[Int, Seq[String]]] = None): Snapshot = {
+      val h = head
+      publishNext(successor(h, (h.mapping -- drop) ++ put, (h.stats -- drop) ++ stats, layoutState, dvState), h)
+    }
+
+    /** Restore the table to `toVersion`'s EXACT snapshot as a NEW
+      * version — the Delta RESTORE / Iceberg rollback primitive.
+      * Metadata-only and O(1): the rollback commit re-points at
+      * `toVersion`'s generation dirs (mapping, zone maps, layout,
+      * migration headers AND deletion vectors all restored verbatim,
+      * including a None layout — a plain `commit` cannot clear headers,
+      * rollback must). History is preserved: the rolled-back-over
+      * versions stay time-travelable until [[expireVersions]], and
+      * [[vacuum]] keeps their generations live for the same reason.
+      * Forward writes continue normally on top of the restored state.
+      */
+    def rollback(toVersion: Long): Snapshot = {
+      val h = head
+      require(toVersion < h.version,
+        s"rollback target $toVersion is not in the past (current=${h.version})")
+      publishNext(at(toVersion, h).copy(version = h.version + 1), h)
+    }
+
+    /** WRITE-AUDIT-PUBLISH, publish step: commit the staged snapshot
+      * atomically — the normal commit path, so history, time travel,
+      * and crash atomicity are identical to a direct commit — and return
+      * it. Fails fast when the table committed past the stage's `#base`
+      * fence.
+      */
+    def publish(token: String): Snapshot = {
+      val (fence, staged) = parseStaged(token)
+      val h = head
+      if (h.version != fence) throw new IllegalStateException(
+        s"stage $token was computed against version $fence but the table is at ${h.version} — " +
+          "the staged merge is stale; discard and re-stage")
+      val next = publishNext(staged.copy(version = h.version + 1), h)
+      fs.delete(stagedPath(token), false)
+      next
+    }
+
+    /** WRITE-AUDIT-PUBLISH, reject step: drop the staged snapshot; this
+      * write's vacuum sweeps generations only it referenced.
+      */
+    def discard(token: String): Unit = {
+      live()
+      fs.delete(stagedPath(token), false)
+      sweep = true
+    }
+
+    /** Drop history: retain only the `keepLast` most recent versions of
+      * [[head]] (minimum 1 — the current snapshot is always readable);
+      * this write's vacuum then frees generation dirs only the expired
+      * versions referenced. This is the retention knob that bounds
+      * storage growth under continuous merging.
+      */
+    def expireVersions(keepLast: Int): Unit = {
+      live()
+      val h = head
+      versions(h).filter(_ <= h.version - math.max(1, keepLast)).foreach { v =>
+        fs.delete(versionPath(v), false)
+        versionCache.remove(v)
+      }
+      sweep = true
+    }
+
+    /** One-time adoption of a pre-manifest table: bucket dirs move (file
+      * renames, no data rewrite) into a fresh generation dir and a
+      * manifest naming them is committed. Idempotent: a no-op when the
+      * manifest already exists or no legacy dirs remain.
+      */
+    def migrateLegacy(): Unit =
+      if (!exists) {
+        val legacy = legacyBuckets()
+        if (legacy.nonEmpty) {
+          live()
+          val gen = newGenDir()
+          val genPath = new Path(root, gen)
+          fs.mkdirs(genPath)
+          legacy.foreach { b =>
+            fs.rename(new Path(root, s"$BucketCol=$b"), new Path(genPath, s"$BucketCol=$b"))
+          }
+          val empty = Snapshot.Empty
+          publishNext(successor(empty, legacy.map(_ -> gen).toMap, Map.empty, None, None), empty)
+        }
+      }
+
+    /** Sweep at the end of this write even if it changed nothing. */
+    def vacuum(): Unit = { live(); sweep = true }
   }
 
   /** Write `next` as version `next.version`, publish it, return it. */
@@ -364,7 +469,6 @@ final class TableManifest(spark: SparkSession, val root: String) {
     try vout.write(body) finally vout.close()
     beforeCommit()
     val tmp = new Path(root, s"_manifest.tmp.${java.util.UUID.randomUUID()}")
-    val isLocal = rootPath.toUri.getScheme == null || rootPath.toUri.getScheme == "file"
     if (isLocal) {
       // the temp body is written through NIO, not the checksummed local
       // FileSystem: only the body moves, so a `.crc` sidecar written
@@ -385,31 +489,232 @@ final class TableManifest(spark: SparkSession, val root: String) {
     next
   }
 
+  // -------------------------------------------------------- writer lock
+
+  private val lockPath = new Path(root + "_lock")
+
+  /** SINGLE-WRITER contract, enforced: every [[write]] runs inside this.
+    * Two interleaved writers could each rewrite a bucket from a stale
+    * read and lose the other's rows, and a commit publishes
+    * `head.version + 1` without re-reading. A create-exclusive lock
+    * file (`<root>_lock`) makes the second writer FAIL FAST with the
+    * holder's identity instead of corrupting state. Exclusive-create
+    * atomicity is filesystem-specific, so the acquisition path picks
+    * the primitive that IS atomic on each: local paths use NIO
+    * `Files.createFile` (O_CREAT|O_EXCL); HDFS-like filesystems claim
+    * by renaming a fully-written temp file (an atomic namespace
+    * operation there). Genuine I/O errors are rethrown, never
+    * misreported as contention. The reference delegates this to
+    * ClickHouse's merge machinery; a transactional table format
+    * (Delta/Iceberg) replaces this with optimistic commit protocols
+    * without changing callers.
+    *
+    * CRASHED holders need no operator: the lock is a LEASE (see
+    * [[TableManifest.lockTtlMs]]) — holders heartbeat its mtime, and a
+    * contender that finds the heartbeat stale breaks the lock and
+    * proceeds. The break is guarded against racing a FRESH holder: the
+    * breaker RENAMES the lock aside (one atomic winner among concurrent
+    * breakers), re-reads the renamed file, and only proceeds if it
+    * holds exactly the stale owner it observed — anything else is
+    * restored and reported as live contention. [[breakLock]] remains as
+    * the manual override.
+    */
+  private def locked[T](op: String)(body: => T): T = {
+    val lock = lockPath
+    val owner = s"$op pid=${ProcessHandle.current().pid()} " +
+      s"epochMs=${System.currentTimeMillis()} uuid=${java.util.UUID.randomUUID()}"
+
+    def readLock(): Option[(String, Long)] =
+      try {
+        val st = fs.getFileStatus(lock)
+        val in = fs.open(lock)
+        val text = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
+        Some((text, st.getModificationTime))
+      } catch { case _: java.io.IOException => None } // vanished or unreadable
+
+    def contention(holder: String): Nothing =
+      throw new MergeSink.ConcurrentWriterException(
+        s"$root is locked by [$holder]; refusing concurrent $op " +
+          s"(single-writer contract; lease expires ${lockTtlMs} ms after its " +
+          "last heartbeat; breakLock() is the manual override)")
+
+    /** One create-exclusive claim attempt; false = someone holds it. */
+    def tryClaim(): Boolean =
+      if (isLocal) {
+        val p = java.nio.file.Paths.get(lock.toUri.getPath)
+        if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
+        try {
+          java.nio.file.Files.write(p, owner.getBytes("UTF-8"),
+            java.nio.file.StandardOpenOption.CREATE_NEW,
+            java.nio.file.StandardOpenOption.WRITE)
+          true
+        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      } else {
+        // rename is the atomic namespace op on HDFS-like stores, so the
+        // CLAIM is the rename of a fully-written temp file — a contender
+        // can never observe a claimed-but-empty lock (create-then-write
+        // had that window). On S3-like object stores neither
+        // create-exclusive nor rename is atomic: the lock is ADVISORY
+        // there; a table format with a real commit protocol
+        // (Delta/Iceberg — see class doc) is the production answer.
+        val tmp = new Path(root + s"_lock.tmp.${java.util.UUID.randomUUID()}")
+        val out = fs.create(tmp, false)
+        out.write(owner.getBytes("UTF-8")); out.close()
+        val claimed =
+          try fs.rename(tmp, lock)
+          catch {
+            case e: java.io.IOException =>
+              // the rename may have landed despite the error — if the lock
+              // now carries OUR owner string we hold it; otherwise this is
+              // a genuine I/O failure and must be rethrown, not
+              // misreported as contention (class-doc contract)
+              val ours = readLock().exists(_._1 == owner)
+              if (!ours) { fs.delete(tmp, false); throw e }
+              true
+          }
+        if (!claimed) fs.delete(tmp, false)
+        else {
+          // holder-side hygiene: sweep lock temp files from CRASHED
+          // claimers (mtime-guarded so a live claimer mid-write is never
+          // raced; a live one is about to fail on rename and delete its
+          // own tmp anyway)
+          try {
+            val dir = lock.getParent
+            val prefix = lock.getName + ".tmp."
+            val cutoff = System.currentTimeMillis() - 10 * 60 * 1000
+            fs.listStatus(dir).foreach { st =>
+              if (st.getPath.getName.startsWith(prefix) &&
+                  st.getModificationTime < cutoff)
+                fs.delete(st.getPath, false)
+            }
+          } catch { case _: java.io.IOException => () } // best-effort
+        }
+        claimed
+      }
+
+    /** Break a lock whose heartbeat is stale. Atomic among concurrent
+      * breakers (exactly one rename wins); guarded against a fresh
+      * holder appearing between the staleness read and the rename by
+      * re-reading the renamed file — if it is not the observed stale
+      * owner, it is restored and treated as live. Returns true if the
+      * stale lock is gone and a claim may be retried.
+      */
+    def breakStale(staleOwner: String): Boolean = {
+      val aside = new Path(root + s"_lock.stale.${java.util.UUID.randomUUID()}")
+      val renamed =
+        try fs.rename(lock, aside)
+        catch { case _: java.io.IOException => false }
+      if (!renamed) true // another breaker won the rename; retry the claim
+      else {
+        val moved =
+          try {
+            val in = fs.open(aside)
+            try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
+          } catch { case _: java.io.IOException => "" }
+        if (moved == staleOwner) { fs.delete(aside, false); true }
+        else {
+          // we grabbed a FRESH holder's lock — put it back and report
+          // live contention (a release racing the restore leaves a
+          // zombie lock that the TTL itself will break: self-healing)
+          try fs.rename(aside, lock)
+          catch { case _: java.io.IOException => fs.delete(aside, false) }
+          false
+        }
+      }
+    }
+
+    // claim loop: exclusive-create; on contention, break only a lock
+    // whose lease has expired. Bounded — never spins on live holders.
+    var acquired = false
+    var attempts = 0
+    while (!acquired && attempts < 3) {
+      attempts += 1
+      acquired = tryClaim()
+      if (!acquired) readLock() match {
+        case None => () // holder released between claim and read; retry
+        case Some((holder, mtime)) =>
+          val age = System.currentTimeMillis() - mtime
+          if (age <= lockTtlMs) contention(holder)
+          // no heartbeat support on this FS → mtime age proves nothing
+          // about liveness; advisory posture, never auto-break
+          else if (!canHeartbeat(fs, lock)) contention(holder)
+          else if (!breakStale(holder)) contention(holder)
+      }
+    }
+    if (!acquired) contention(readLock().map(_._1).getOrElse("<unknown>"))
+
+    // the lease heartbeat: refresh the lock's mtime every ttl/4 while
+    // the body runs — a contender reading an mtime older than the TTL
+    // can only be seeing a crashed (or frozen-past-the-lease) holder
+    val hb: Option[Thread] =
+      if (!canHeartbeat(fs, lock)) None // advisory posture: no lease on this FS
+      else {
+        val t = new Thread(() => {
+          try {
+            while (!Thread.interrupted()) {
+              Thread.sleep(math.max(lockTtlMs / 4, 10))
+              try fs.setTimes(lock, System.currentTimeMillis(), -1)
+              // NonFatal (not just IOException): any one missed beat is
+              // tolerated (TTL = 4 beats), but an uncaught throw would
+              // kill the daemon silently and let a contender break a
+              // LIVE holder after the TTL. NonFatal leaves interrupts
+              // and JVM-fatal errors alone.
+              catch { case scala.util.control.NonFatal(_) => () }
+            }
+          } catch { case _: InterruptedException => () }
+        })
+        t.setDaemon(true)
+        t.setName(s"graft-lock-heartbeat-$op")
+        t.start()
+        Some(t)
+      }
+    try body finally { hb.foreach(_.interrupt()); fs.delete(lock, false) }
+  }
+
+  /** Operator override: remove a lock left by a crashed writer. */
+  def breakLock(): Unit = fs.delete(lockPath, false)
+
   // ------------------------------------------------- staged snapshots
 
   private def stagedDir = new Path(root, TableManifest.StagedDir)
   private def stagedPath(token: String) = new Path(stagedDir, token)
 
-  /** WRITE-AUDIT-PUBLISH, stage step: persist the successor of `base`
-    * (see [[commit]] for the defaults) under `_staged/<token>` WITHOUT
-    * publishing — no reader resolves it, no version is consumed. The
-    * body carries a `#base=<version>` fence: [[publish]] refuses when
-    * the table has committed past that version, because the staged
-    * mapping was computed against state that no longer exists
-    * (publishing it would silently drop the intervening commits' rows
-    * from the staged buckets). A lock-free stager passes the snapshot
-    * its merge input was READ from, so the fence is that version, never
-    * one observed after the O(data) write. Staged generations count as
-    * LIVE for [[vacuum]] until the stage is published or [[discard]]ed.
+  /** WRITE-AUDIT-PUBLISH, stage step, LOCK-FREE: `body` gets the current
+    * snapshot and a fresh generation dir, writes the staged data there
+    * and returns what it wrote; its successor of that snapshot is then
+    * persisted under `_staged/<token>` WITHOUT publishing — no reader
+    * resolves it, no version is consumed. The generation is
+    * pre-registered ([[preStage]]) BEFORE `body` runs, so a concurrent
+    * writer's vacuum never sweeps it half-written; the staged file
+    * takes over that reference before the marker goes. A body that
+    * throws drops the marker and its generation ([[discardPending]]).
+    * The staged body carries a `#base=<version>` fence: [[Txn.publish]]
+    * refuses when the table has committed past that version, because
+    * the staged mapping was computed against state that no longer
+    * exists (publishing it would silently drop the intervening commits'
+    * rows from the staged buckets). The fence is the snapshot the body
+    * READ, never one observed after the O(data) write. Staged
+    * generations count as LIVE for [[vacuum]] until the stage is
+    * published or [[Txn.discard]]ed.
     */
-  def stage(base: Snapshot, m: Map[Int, String], stats: Map[Int, Stats] = Map.empty,
-            dvState: Option[Map[Int, Seq[String]]] = None): String = {
-    val body = s"#base=${base.version}\n" + render(successor(base, m, stats, None, dvState))
-    val token = s"s-${java.util.UUID.randomUUID()}"
-    fs.mkdirs(stagedDir)
-    val out = fs.create(stagedPath(token), false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    token
+  private[sink] def stage(body: (Snapshot, String) => Written): String = {
+    val base = current()
+    val gen = newGenDir()
+    val pending = preStage(gen)
+    try {
+      val w = body(base, gen)
+      val next = successor(base, base.mapping ++ w.mapping, base.stats ++ w.stats, None, None)
+      val token = s"s-${java.util.UUID.randomUUID()}"
+      val out = fs.create(stagedPath(token), false)
+      try out.write((s"#base=${base.version}\n" + render(next)).getBytes("UTF-8")) finally out.close()
+      fs.delete(stagedPath(pending), false)
+      token
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        try discardPending(pending)
+        catch { case scala.util.control.NonFatal(_) => () }
+        throw e
+    }
   }
 
   /** Outstanding stage tokens (audit/maintenance metadata). */
@@ -417,18 +722,15 @@ final class TableManifest(spark: SparkSession, val root: String) {
     if (!fs.exists(stagedDir)) Seq.empty
     else fs.listStatus(stagedDir).toSeq.map(_.getPath.getName).filter(_.startsWith("s-")).sorted
 
-  // ------------------------------------------- lock-free stage support
-
   /** Pre-register a generation a LOCK-FREE stager is about to write
-    * (`_staged/p-<token>`, body = the gen name). A concurrent
-    * publisher's [[vacuum]] counts pre-registered generations fully
-    * live, closing the race where the half-written generation of an
-    * optimistic stager is referenced by nothing yet. Written BEFORE
-    * any data byte, so there is no unprotected window. A crashed
-    * stager leaves its marker until [[discardPending]] — the same
-    * manual-reclaim posture as an unaudited staged snapshot.
+    * (`_staged/p-<token>`, body = the gen name). Every [[vacuum]] counts
+    * pre-registered generations fully live, closing the race where the
+    * half-written generation of a stager is referenced by nothing yet.
+    * Written BEFORE any data byte, so there is no unprotected window. A
+    * crashed stager leaves its marker until [[discardPending]] — the
+    * same manual-reclaim posture as an unaudited staged snapshot.
     */
-  def preStage(gen: String): String = {
+  private[graft] def preStage(gen: String): String = {
     val token = s"p-${java.util.UUID.randomUUID()}"
     fs.mkdirs(stagedDir)
     val out = fs.create(stagedPath(token), false)
@@ -436,25 +738,16 @@ final class TableManifest(spark: SparkSession, val root: String) {
     token
   }
 
-  /** Promote a pre-registered stage to a full staged snapshot (the
-    * normal `s-` token [[publish]]/[[discard]] operate on); the
-    * pending marker is consumed. The staged file itself now holds the
-    * generation references, so liveness never lapses between the two.
+  /** Drop a pending pre-registration (failed or crashed stager): delete
+    * the one generation its marker names, then the marker. No vacuum —
+    * a stager holds no lock, and a sweep now could delete a concurrent
+    * committer's written-but-unpublished files.
     */
-  def finalizeStage(pending: String, base: Snapshot, m: Map[Int, String],
-                    stats: Map[Int, Stats] = Map.empty,
-                    dvState: Option[Map[Int, Seq[String]]] = None): String = {
-    val token = stage(base, m, stats, dvState)
+  private[graft] def discardPending(pending: String): Unit = {
+    val gen = readText(stagedPath(pending)).trim
+    fs.delete(new Path(root, gen), true)
+    evict(gen, None)
     fs.delete(stagedPath(pending), false)
-    token
-  }
-
-  /** Drop a pending pre-registration (failed or crashed stager) and
-    * reclaim its generation.
-    */
-  def discardPending(pending: String): Unit = {
-    fs.delete(stagedPath(pending), false)
-    vacuum(current())
   }
 
   /** Outstanding pre-registrations. */
@@ -482,31 +775,6 @@ final class TableManifest(spark: SparkSession, val root: String) {
     */
   def staged(token: String): Snapshot = parseStaged(token)._2
 
-  /** WRITE-AUDIT-PUBLISH, publish step: commit the staged snapshot
-    * atomically — the normal commit path, so history, time travel,
-    * and crash atomicity are identical to a direct commit — and return
-    * it. Fails fast when the table committed past the stage's `#base`
-    * fence.
-    */
-  def publish(token: String): Snapshot = {
-    val (base, p) = parseStaged(token)
-    val cur = current()
-    if (cur.version != base) throw new IllegalStateException(
-      s"stage $token was computed against version $base but the table is at ${cur.version} — " +
-        "the staged merge is stale; discard and re-stage")
-    val next = commitExact(p.copy(version = cur.version + 1))
-    fs.delete(stagedPath(token), false)
-    next
-  }
-
-  /** WRITE-AUDIT-PUBLISH, reject step: drop the staged snapshot; the
-    * next [[vacuum]] sweeps generations only it referenced.
-    */
-  def discard(token: String): Unit = {
-    fs.delete(stagedPath(token), false)
-    vacuum(current())
-  }
-
   /** Sweep everything no longer reachable at (generation, bucket)
     * granularity: a generation dir is shared by every bucket its
     * commit wrote, so whole-dir liveness is not enough — a bucket
@@ -518,12 +786,13 @@ final class TableManifest(spark: SparkSession, val root: String) {
     * generation dirs referenced by nothing (crashed commits), version
     * files above the published version (crashed commits' history
     * copies), and stale `_manifest.tmp.*` files with their `.crc`
-    * sidecars. `cur` is the current snapshot (what the caller just
+    * sidecars. `cur` is the current snapshot (what the write just
     * committed, or read); an older retained version file is parsed
-    * once per handle, not once per vacuum. Callers hold the writer
-    * lock, so no live committer's files can be racing this sweep.
+    * once per handle, not once per vacuum. Runs only at the end of a
+    * [[write]], under its lock, so no live committer's files can be
+    * racing this sweep.
     */
-  def vacuum(cur: Snapshot): Unit = {
+  private def vacuum(cur: Snapshot): Unit = {
     // every snapshot that still resolves data: the current one, each
     // older retained version, and each staged (write-audit-publish)
     // snapshot until it is published or discarded
@@ -588,21 +857,6 @@ final class TableManifest(spark: SparkSession, val root: String) {
       listings.keySet.removeIf(_.startsWith(s"$gen/"))
       blooms.keySet.removeIf(_._1 == gen)
       genSchemas.remove(gen)
-  }
-
-  /** Drop history: retain only the `keepLast` most recent versions of
-    * `cur` (minimum 1 — the current snapshot is always readable), then
-    * vacuum generation dirs only the expired versions referenced.
-    * This is the retention knob that bounds storage growth under
-    * continuous merging.
-    */
-  def expireVersions(keepLast: Int, cur: Snapshot = current()): Unit = {
-    val cutoff = cur.version - math.max(1, keepLast)
-    versions(cur).filter(_ <= cutoff).foreach { v =>
-      fs.delete(versionPath(v), false)
-      versionCache.remove(v)
-    }
-    vacuum(cur)
   }
 
   /** Data files of one root-relative dir, listed once per handle.
@@ -713,7 +967,7 @@ final class TableManifest(spark: SparkSession, val root: String) {
   /** Bloom sidecars live INSIDE the bucket's generation dir, prefixed
     * `_` so every Hadoop/Spark data scan ignores them. Generation dirs
     * are immutable and atomically published, so a sidecar written
-    * before [[commit]] shares the data files' crash story exactly: an
+    * before [[Txn.commit]] shares the data files' crash story exactly: an
     * unpublished generation's sidecars are orphans, a published one's
     * are guaranteed present and consistent with its rows.
     */
@@ -966,6 +1220,54 @@ object TableManifest {
   val VersionsDir = "_versions"
   val StagedDir = "_staged"
 
+  /** Partition column of every sink table's generation dirs. */
+  val BucketCol = "__bucket"
+
+  /** Lease TTL for the writer lock: a holder HEARTBEATS the lock's
+    * mtime every ttl/4; a contender may break a lock whose mtime is
+    * older than the TTL (no heartbeat for >= 4 missed intervals =
+    * crashed holder), never a live one. Package-visible so specs can
+    * shrink the lease; production default 60 s — far above any GC
+    * pause, far below "page an operator". The classic lease caveat
+    * applies and is accepted: a holder frozen LONGER than the TTL
+    * (stop-the-world pause measured in minutes) could be broken while
+    * still alive; the commit itself stays untorn either way because
+    * publishing is one atomic manifest rename, so the failure mode is
+    * a lost-update race identical to the pre-lock world — which is why
+    * the TTL is 60 s and the heartbeat 15 s, not seconds. A
+    * transactional table format's optimistic commit protocol
+    * (Delta/Iceberg) is the production answer past that.
+    */
+  private[graft] var lockTtlMs: Long = 60000L
+
+  /** Lease capability per filesystem: can this store refresh a file's
+    * mtime (`setTimes`)? Without it a holder cannot heartbeat, so an
+    * old mtime says NOTHING about holder liveness — the lock must
+    * degrade to a pure advisory lock there (never auto-broken;
+    * `breakLock` is the only override) instead of letting a
+    * contender break a LIVE long-running writer after the TTL.
+    * Probed once per filesystem URI with a throwaway file; transient
+    * probe failures count as capable (individual missed beats are
+    * already tolerated — TTL = 4 beats).
+    */
+  private val leaseCapable = new ConcurrentHashMap[java.net.URI, java.lang.Boolean]()
+
+  private def canHeartbeat(fs: org.apache.hadoop.fs.FileSystem, lock: Path): Boolean =
+    leaseCapable.computeIfAbsent(fs.getUri, _ => {
+      val probe = new Path(lock.toString + s".probe.${java.util.UUID.randomUUID()}")
+      try {
+        val out = fs.create(probe, false); out.close()
+        fs.setTimes(probe, System.currentTimeMillis(), -1)
+        true
+      } catch {
+        case _: UnsupportedOperationException      => false
+        case scala.util.control.NonFatal(_)        => true
+      } finally {
+        try fs.delete(probe, false)
+        catch { case scala.util.control.NonFatal(_) => () }
+      }
+    })
+
   /** Inclusive min/max zone map of one column within one bucket.
     * Doubles: exact for integral values up to 2^53 (ids, epoch
     * micros); floating stats columns round-trip via Double.toString.
@@ -991,7 +1293,7 @@ object TableManifest {
     * those rows, without a Spark job; anything else runs the distinct.
     */
   private[sink] def touchedBuckets(df: DataFrame, bucket: Column): Seq[Int] = {
-    val ids = df.select(bucket.as(MergeSink.BucketCol)).distinct()
+    val ids = df.select(bucket.as(BucketCol)).distinct()
     val local = ids.queryExecution.optimizedPlan match {
       case Aggregate(_, _, l: LocalRelation, _) => Some(l)
       case l: LocalRelation => Some(l) // an empty frame

@@ -298,7 +298,7 @@ class PipelineSpec extends SparkSpec {
     sink.deleteVector(Seq(2L).toDF("k"))
     // vacuum runs inside merge/compact; run it directly too — the DV's
     // generation dir is referenced by no bucket mapping, only by the DV
-    sink.manifest.vacuum(sink.manifest.current())
+    sink.manifest.write("vacuum")(_.vacuum())
     assert(sink.read().select($"k").as[Long].collect().toSet == Set(1L))
     // a merge into the OTHER bucket must not disturb the outstanding DV
     sink.merge(Seq((1L, "a2", 1L)).toDF("k", "v", "upd"))
@@ -318,7 +318,7 @@ class PipelineSpec extends SparkSpec {
     val stagedGens = gensOnDisk() -- before
     assert(stagedGens.nonEmpty)
     // vacuum (ridden by any maintenance) must NOT sweep a staged gen
-    sink.manifest.vacuum(sink.manifest.current())
+    sink.manifest.write("vacuum")(_.vacuum())
     assert((gensOnDisk() -- before) == stagedGens, "staged generation must survive vacuum")
     assert(state() == Set((1L, 10L), (2L, 20L)), "staged rows invisible")
     // audit sees the candidate state
@@ -377,7 +377,7 @@ class PipelineSpec extends SparkSpec {
         "id AS __applied_batch")
       .coalesce(1).write.parquet(s"$dir/$gen/__bucket=0")
     val t = new graft.sink.TableManifest(spark, dir)
-    t.commit(t.current(), Map(0 -> gen))
+    t.write("fixture")(_.commit(Map(0 -> gen)))
     val sink = new graft.sink.AggSink(spark, dir, Seq("k"), Seq("v"), 4)
     assert(sink.lastBatchId == -1L)
     // and a dir with NO manifest and no bucket dirs is simply absent
@@ -572,41 +572,71 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("writer lock: concurrent merge/compact fails fast, breakLock overrides") {
-    import graft.sink.MergeSink
+    import graft.sink.{AggSink, MergeSink}
     val dir = freshDir() + "/locked"
     val rows = Warehouse.toWarehouseRows(env)
     val sink = new MergeSink(spark, dir, Warehouse.DedupKeys, Warehouse.VersionCols, 4)
     sink.merge(rows)
     assert(!new java.io.File(dir + "_lock").exists(), "lock must release after merge")
+    sink.merge(rows.limit(5).withColumn("ingestion_seq", $"ingestion_seq" + 1000L))
 
-    // another writer holds the lock (atomic create-exclusive)
+    // another writer holds the lock (atomic create-exclusive): every
+    // write entry point refuses, names the holder and changes nothing
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir + "_lock"),
       "merge pid=9999 epochMs=0")
     val before = sink.read().count()
-    val eM = intercept[MergeSink.ConcurrentWriterException](sink.merge(rows))
-    assert(eM.getMessage.contains("pid=9999"), "error must name the holder")
-    val eC = intercept[MergeSink.ConcurrentWriterException](sink.compact())
-    assert(eC.getMessage.contains("locked"))
+    def manifestBytes(d: String) = Files.readAllBytes(java.nio.file.Paths.get(d, "_MANIFEST")).toSeq
+    def refused(d: String, holder: String, writes: Seq[(String, () => Any)]): Unit = {
+      val bytes = manifestBytes(d)
+      for ((name, op) <- writes) {
+        val e = intercept[MergeSink.ConcurrentWriterException](op())
+        assert(e.getMessage.contains("locked") && e.getMessage.contains(holder),
+          s"$name: error must name the holder: ${e.getMessage}")
+        assert(manifestBytes(d) == bytes, s"$name changed _MANIFEST under another writer's lock")
+      }
+    }
+    // staging commits nothing, so it needs no lock
+    val stage = () => sink.stageMerge(rows.limit(3).withColumn("ingestion_seq", $"ingestion_seq" + 2000L))
+    val (toPublish, toDiscard) = (stage(), stage())
+    val keyRows = rows.select(Warehouse.DedupKeys.map(col): _*).limit(2)
+    refused(dir, "pid=9999", Seq(
+      "merge" -> (() => sink.merge(rows)),
+      "publishStaged" -> (() => sink.publishStaged(toPublish)),
+      "discardStaged" -> (() => sink.discardStaged(toDiscard)),
+      "purgeKeys" -> (() => sink.purgeKeys(keyRows)),
+      "deleteVector" -> (() => sink.deleteVector(keyRows)),
+      "compact" -> (() => sink.compact()),
+      "rebucket" -> (() => sink.rebucket(8)),
+      "beginMigration" -> (() => sink.beginMigration(8)),
+      "migrateStep" -> (() => sink.migrateStep(1)),
+      "expireVersions" -> (() => sink.expireVersions(1)),
+      "rollback" -> (() => sink.rollback(1L)),
+      "mergeOptimistic" -> (() => sink.mergeOptimistic(rows.limit(5)))))
+    assert(Set(toPublish, toDiscard).subsetOf(sink.stagedTokens().toSet))
     assert(sink.read().count() == before, "locked-out writer must not mutate state")
 
     // operator override for a crashed holder
-    MergeSink.breakLock(spark, dir)
+    sink.manifest.breakLock()
     sink.merge(rows)
     assert(!new java.io.File(dir + "_lock").exists())
 
     // AggSink honors the same contract
-    import graft.sink.AggSink
     val adir = freshDir() + "/agg_locked"
     val asink = new AggSink(spark, adir,
       Seq("device_type"), Seq("ws"), 4)
+    val arows = rows.select($"device_type", $"watched_seconds".cast("long").as("ws"))
+    asink.merge(arows, batchId = 0L)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(adir + "_lock"), "compact pid=1 epochMs=0")
-    intercept[MergeSink.ConcurrentWriterException](
-      asink.merge(rows.select($"device_type", $"watched_seconds".cast("long").as("ws"))))
-    MergeSink.breakLock(spark, adir)
+    refused(adir, "compact pid=1 ", Seq(
+      "AggSink.merge" -> (() => asink.merge(arows, batchId = 1L)),
+      "AggSink.foldPartials" -> (() => asink.foldPartials(
+        Seq(("tv", 5L, 1L)).toDF("device_type", "ws", "n_rows"), batchId = 1L)),
+      "AggSink.expireVersions" -> (() => asink.expireVersions(1))))
+    asink.manifest.breakLock()
   }
 
   test("writer-lock lease: a killed holder's stale lock breaks after TTL; a live holder is never broken") {
-    import graft.sink.MergeSink
+    import graft.sink.{MergeSink, TableManifest}
     val dir = freshDir() + "/leased"
     val rows = Warehouse.toWarehouseRows(env)
     val sink = new MergeSink(spark, dir, Warehouse.DedupKeys, Warehouse.VersionCols, 4)
@@ -616,8 +646,8 @@ class PipelineSpec extends SparkSpec {
     def state() = sink.read().select($"original_id", $"ingestion_seq")
       .as[(String, Long)].collect().toSet
 
-    val ttl0 = MergeSink.lockTtlMs
-    MergeSink.lockTtlMs = 1500
+    val ttl0 = TableManifest.lockTtlMs
+    TableManifest.lockTtlMs = 1500
     try {
       // a KILLED mid-merge holder: lock left behind (finally never ran),
       // heartbeat dead, mtime frozen in the past
@@ -638,13 +668,13 @@ class PipelineSpec extends SparkSpec {
       val entered = new java.util.concurrent.CountDownLatch(1)
       val release = new java.util.concurrent.CountDownLatch(1)
       val holder = new Thread(() =>
-        MergeSink.withWriterLock(spark, dir, "slow-merge") {
+        sink.manifest.write("slow-merge") { _ =>
           entered.countDown()
           release.await()
         })
       holder.start()
       assert(entered.await(10, java.util.concurrent.TimeUnit.SECONDS))
-      Thread.sleep(2 * MergeSink.lockTtlMs) // well past the TTL
+      Thread.sleep(2 * TableManifest.lockTtlMs) // well past the TTL
       val before = state()
       val e = intercept[MergeSink.ConcurrentWriterException](sink.merge(b1))
       assert(e.getMessage.contains("slow-merge"), s"must name the live holder: ${e.getMessage}")
@@ -654,7 +684,7 @@ class PipelineSpec extends SparkSpec {
       // clean release: the contender proceeds immediately
       sink.merge(b1)
       assert(!java.nio.file.Files.exists(lockPath))
-    } finally MergeSink.lockTtlMs = ttl0
+    } finally TableManifest.lockTtlMs = ttl0
   }
 
   test("tombstone wins when it is the latest record for a key") {
@@ -728,7 +758,7 @@ class PipelineSpec extends SparkSpec {
     genPath.mkdirs()
     java.nio.file.Files.write(genPath.toPath.resolve("part-half.parquet"),
       "partial".getBytes)
-    sink.manifest.vacuum(sink.manifest.current())
+    sink.manifest.write("vacuum")(_.vacuum())
     assert(genPath.exists, "vacuum must not sweep a pre-registered generation")
     sink.manifest.discardPending(pending)
     assert(!new java.io.File(s"$dir/$gen").exists,
@@ -746,7 +776,7 @@ class PipelineSpec extends SparkSpec {
 
     // a crashing stage discards its pending marker and generation
     intercept[Exception] {
-      sink.stageMergeConcurrent(rows.limit(5).drop("watched_ratio"))
+      sink.stageMerge(rows.limit(5).drop("watched_ratio"))
     }
     assert(sink.manifest.pendingStages().isEmpty,
       "a failed lock-free stage must not leak its pre-registration")
@@ -781,6 +811,49 @@ class PipelineSpec extends SparkSpec {
     val live = sink.read().select($"original_id").as[String].collect().toSet
     assert(midKeys.subsetOf(live),
       "rows committed during a concurrent stage must not be silently overwritten")
+  }
+
+  test("a failed lock-free stage sweeps nothing: a merge paused before its manifest rename " +
+       "still publishes intact") {
+    import graft.sink.MergeSink
+    val dir = freshDir() + "/stage_race"
+    val rows = Warehouse.toWarehouseRows(env).cache()
+    val b1 = rows.filter(pmod($"ingestion_seq", lit(2)) === 0)
+    val b2 = rows.filter(pmod($"ingestion_seq", lit(2)) === 1)
+    val sink = new MergeSink(spark, dir, Warehouse.DedupKeys, Warehouse.VersionCols, 4)
+    sink.merge(b1)
+    val n = sink.versions().last
+    def state(df: org.apache.spark.sql.DataFrame) =
+      df.select($"original_id", $"ingestion_seq").as[(String, Long)].collect().toSet
+
+    // the merge of b2 stops where its generation and v-<n+1> are
+    // written but _MANIFEST is not yet renamed
+    val paused = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    sink.manifest.beforeCommit = () => { paused.countDown(); release.await() }
+    var failure: Option[Throwable] = None
+    val merging = new Thread(() =>
+      try sink.merge(b2) catch { case t: Throwable => failure = Some(t) })
+    merging.start()
+    try {
+      assert(paused.await(120, java.util.concurrent.TimeUnit.SECONDS), "the merge never reached its commit")
+      // meanwhile another writer stages lock-free a batch that throws
+      // inside its write (the route job reads only the key columns)
+      val stager = new MergeSink(spark, dir, Warehouse.DedupKeys, Warehouse.VersionCols, 4)
+      val poisoned = rows.limit(5)
+        .withColumn("watched_ratio", raise_error(lit("poisoned batch")).cast("double"))
+      val e = intercept[Exception](stager.stageMerge(poisoned))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("poisoned batch")), e.toString)
+      assert(stager.manifest.pendingStages().isEmpty, "a failed stage must drop its pre-registration")
+    } finally release.countDown()
+    merging.join(120000)
+    sink.manifest.beforeCommit = () => ()
+    assert(failure.isEmpty, s"the paused merge failed: $failure")
+    val expected = state(Cdc.latestByKey(rows, Warehouse.DedupKeys, Warehouse.VersionCols))
+    assert(state(sink.read()) == expected, "the stage's cleanup took the paused merge's files")
+    assert(sink.versions().last == n + 1)
+    assert(state(sink.readAt(n + 1)) == expected)
   }
 
   test("rollback: vacuum keeps restored generations live; expired targets fail loudly; " +

@@ -224,7 +224,7 @@ class SinkScanSpec extends SparkSpec {
       a.write.parquet(s"$dir/$g1/$bc=0")
       b.write.parquet(s"$dir/$g2/$bc=1")
       val t = new TableManifest(spark, dir)
-      t.commit(t.current(), Map(0 -> g1, 1 -> g2))
+      t.write("fixture")(_.commit(Map(0 -> g1, 1 -> g2)))
       (t, g1, g2)
     }
     // a column present in one generation only: was silently NULL
