@@ -245,116 +245,44 @@ object Dedup {
       .select(col("doc_id").as("id"), col("cluster_id"))
   }
 
-  /** Connected components over near-dup pairs: pair lists become
-    * DEDUP CLUSTERS (the step a 100 TB pipeline actually acts on —
-    * keep one canonical doc per component, drop the rest).
+  /** Connected components over near-dup pairs — THE connected-components
+    * kernel of the engine: pair lists become DEDUP CLUSTERS (the step a
+    * 100 TB pipeline actually acts on — keep one canonical doc per
+    * component, drop the rest), and every other min-label caller
+    * (q130's canonical pick, q208's co-purchase communities,
+    * [[graft.ext.IncrementalCc]]'s over-cap contraction graph) runs it
+    * too.
     *
-    * Two-tier strategy:
-    *
-    *  1. Iterative min-label propagation (one equi-join + one
-    *     min-aggregate per round, both map-side combinable) — O(|E|+|V|)
-    *     shuffle per round, O(component diameter) rounds. Near-dup
-    *     clusters are shallow (diameter a few hops), so 3-4 rounds
-    *     typically settle it.
-    *  2. If min-label has NOT converged after `maxIter` rounds (an
-    *     adversarial long-chain graph), ESCALATE to the alternating
-    *     large-star/small-star algorithm ([[starComponents]]) —
-    *     O(log diameter) rounds — instead of silently returning
-    *     partially-propagated labels. That variant throws if its own
-    *     (log-scale) bound is hit, so this method either returns fully
-    *     converged labels or fails loudly; truncated output is never
-    *     returned.
-    *
-    * Returns (id, cluster_id = min reachable id). Nodes not in any
-    * edge are absent (singletons need no dedup action).
-    *
-    * Cache contract: the returned frame is an eager localCheckpoint
-    * (already materialized by the convergence check); superseded
-    * rounds' checkpoint blocks are freed deterministically per round
-    * (see [[Lineage]]), and only the escaping final frame is left to
-    * the ContextCleaner — no session-level cache entries remain.
-    */
-  def connectedComponents(edges: DataFrame, idA: String = "id_a",
-                          idB: String = "id_b", maxIter: Int = 20): DataFrame = {
-    val sym = edges.select(col(idA).as("src"), col(idB).as("dst"))
-      .unionByName(edges.select(col(idB).as("src"), col(idA).as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Per-round lineage truncation: labels_{n+1} references labels_n
-    // TWICE (union + join), so the Catalyst tree doubles per round —
-    // an eager localCheckpoint keeps the plan O(1) per round AND
-    // materializes the frame the convergence check needs anyway.
-    // Superseded rounds' checkpoint BLOCKS are freed deterministically
-    // via Lineage handles (Dataset.unpersist alone does not release
-    // localCheckpoint storage); only the escaping final frame is left
-    // to the ContextCleaner.
-    // Convergence witness: every label is non-increasing per round, so
-    // the label SUM strictly decreases iff anything changed. The sum
-    // RIDES the checkpoint job itself (checkpointObserved) — one job
-    // per round, not checkpoint + separate aggregate (round 15, guide
-    // §1.2/§2: the loop's job-launch floor halves, frames unchanged).
-    val witness = sum(col("cluster_id").cast("decimal(38,0)")).as("s")
-    def asDec(v: Any): java.math.BigDecimal = v.asInstanceOf[java.math.BigDecimal]
-    var (labels, m0, freeLabels) = Lineage.checkpointObserved(
-      sym.select(col("src").as("id")).distinct()
-        .withColumn("cluster_id", col("id")), witness)
-    var prevSum = asDec(m0("s"))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val viaNeighbor = sym.join(labels, sym("dst") === labels("id"))
-        .select(col("src").as("id"), col("cluster_id"))
-      val (next, mN, freeNext) = Lineage.checkpointObserved(
-        labels.unionByName(viaNeighbor)
-          .groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id")), witness)
-      val s = asDec(mN("s"))
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      freeLabels() // previous round is fully superseded
-      labels = next
-      freeLabels = freeNext
-      iter += 1
-    }
-    if (!converged) {
-      // Diameter exceeded the linear-round budget: hand the edge set to
-      // the log-round variant rather than returning truncated labels.
-      freeLabels() // truncated labels are discarded, free them too
-      val out = starComponents(sym)
-      sym.unpersist()
-      out
-    } else {
-      sym.unpersist()
-      labels // escapes to the caller — its blocks stay until GC
-    }
-  }
-
-  /** CONTRACTIVE connected components — label contraction with
-    * geometric work shrinkage, the batch twin of
-    * [[graft.ext.IncrementalCc]]'s per-batch contraction step. Where
-    * min-label PROPAGATION ([[connectedComponents]]) re-shuffles the
-    * full O(|V| + |E|) frame every round for O(diameter) rounds,
-    * contraction shrinks the graph itself: each round every label
-    * takes the min of its closed neighborhood, node labels compose
-    * through that mapping, and the edge set CONTRACTS to the
+    * LABEL CONTRACTION with geometric work shrinkage: each round every
+    * label takes the min of its closed neighborhood, node labels
+    * compose through that mapping, and the edge set CONTRACTS to the
     * distinct-label component graph — a dense near-dup cluster (the
     * planted-copy corpora that dominate dedup inputs are cliques per
     * copy group) collapses to its single min label in ONE round, so
     * round 2 runs on the tiny inter-cluster remainder, not the corpus.
+    * Min-label propagation, by contrast, re-shuffles the full
+    * O(|V| + |E|) frame every round for O(diameter) rounds.
     *
     * The min-of-neighborhood map only guarantees CONSTANT shrinkage on
-    * adversarial path graphs, so after `contractRounds` rounds the
-    * (by-then small) remainder escalates to [[starComponents]]
-    * (O(log diameter) guaranteed) and the final mapping composes back.
+    * adversarial path graphs (an id-sorted path loses one edge per
+    * round), so once `contractRounds` rounds have failed to halve the
+    * edge set the remainder escalates to [[starComponents]]
+    * (O(log diameter) guaranteed; it throws at its own bound rather
+    * than return partial labels) and the final mapping composes back.
+    * Rounds that do halve it are not counted: they are the cheap ones
+    * (two checkpoints on a shrinking graph, where a star round costs
+    * more jobs), and there are at most log2 |E| of them. The edge
+    * count each round's checkpoint already observes decides.
     * Labels are min-member ids at every step — the component min maps
-    * to itself in every round, every other label strictly decreases —
-    * so the output is BIT-IDENTICAL to the propagation tier's
-    * (ExtSpec proves equality on cliques, paths, crossings, and
-    * self-loop singletons).
+    * to itself in every round, every other label strictly decreases.
     *
-    * Returns (id, cluster_id = min reachable id); nodes not in any
-    * edge are absent, self-loop-only nodes label themselves — the
-    * exact [[connectedComponents]] contract. Same [[Lineage]] cache
-    * discipline: superseded rounds free deterministically, only the
-    * escaping frame is left to the ContextCleaner.
+    * Returns (id, cluster_id = min reachable id) for every id named by
+    * an edge — self-loop-only nodes label themselves; a vertex in no
+    * edge is absent (singletons need no dedup action; callers that
+    * need every vertex left-join and label it itself). Cache contract:
+    * superseded rounds' checkpoint blocks are freed deterministically
+    * (see [[Lineage]]); only the escaping frame is left to the
+    * ContextCleaner.
     */
   def contractiveComponents(edges: DataFrame, idA: String = "id_a",
                             idB: String = "id_b", contractRounds: Int = 4): DataFrame = {
@@ -363,18 +291,23 @@ object Dedup {
     // materialization job (checkpointObserved, round 15) — the loop no
     // longer pays a separate isEmpty job per round.
     val witness = count(lit(1)).as("n")
-    var (e, mE, freeE) = Lineage.checkpointObserved(
+    // the input plan runs ONCE: its canonical edges, self-loops still
+    // in, are checkpointed, and both the round-0 edge set and the id
+    // set read that (callers hand in joins — q208's co-purchase
+    // self-join, the LSH pair verification — not materialized frames)
+    val (input, mIn, freeInput) = Lineage.checkpointObserved(
       edges.select(greatest(col(idA), col(idB)).as("a"),
-                   least(col(idA), col(idB)).as("b"))
-        .filter(col("a") =!= col("b")).distinct(), witness)
+                   least(col(idA), col(idB)).as("b")).distinct(),
+      count(when(col("a") =!= col("b"), 1)).as("n"))
+    var (e, freeE) = (input.filter(col("a") =!= col("b")), freeInput)
     // composed id -> current-label mapping over ALL ids seen in the
     // input (self-loop-only nodes stay their own singleton labels)
     var (labels, freeLabels) = Lineage.checkpoint(
-      edges.select(col(idA).as("id")).unionByName(edges.select(col(idB).as("id")))
+      input.select(col("a").as("id")).unionByName(input.select(col("b").as("id")))
         .distinct().withColumn("cluster_id", col("id")))
-    var round = 0
-    var done = mE("n") == 0L
-    while (!done && round < contractRounds) {
+    var n = mIn("n").asInstanceOf[Long]
+    var slowRounds = 0
+    while (n != 0L && slowRounds < contractRounds) {
       val sym = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
       // m(l) = min(N(l) ∪ {l}) — one map-side-combinable aggregate over
       // the CURRENT (already contracted) edge set
@@ -399,10 +332,11 @@ object Dedup {
       freeLabels(); freeE()
       labels = labelsN; freeLabels = freeLabelsN
       e = eN; freeE = freeEN
-      done = mEN("n") == 0L
-      round += 1
+      val nN = mEN("n").asInstanceOf[Long]
+      if (2 * nN > n) slowRounds += 1
+      n = nN
     }
-    if (done) { freeE(); labels }
+    if (n == 0L) { freeE(); labels }
     else {
       // adversarially deep remainder: hand the (contracted, small)
       // label graph to the log-round tier and compose once more. The
@@ -443,11 +377,12 @@ object Dedup {
     * reached, this THROWS — partial labels are never returned.
     *
     * Returns (id, cluster_id), same contract as
-    * [[connectedComponents]]. Per-round frames are eagerly
-    * localCheckpoint'ed: the Catalyst tree would otherwise grow
-    * exponentially across rounds (each round references the previous
-    * edge set three times); finished rounds' blocks are freed
-    * deterministically per round (see [[Lineage]]).
+    * [[contractiveComponents]], whose escalation tier this is (the
+    * specs also run it alone, as the kernel's independent reference).
+    * Per-round frames are eagerly localCheckpoint'ed: the Catalyst
+    * tree would otherwise grow exponentially across rounds (each round
+    * references the previous edge set three times); finished rounds'
+    * blocks are freed deterministically per round (see [[Lineage]]).
     */
   def starComponents(symEdges: DataFrame, maxRounds: Int = 30): DataFrame = {
     // canonical down-pointing parent edges (src > dst), self-loops out.
@@ -504,7 +439,7 @@ object Dedup {
       .withColumn("cluster_id", col("id"))
     val labelled = e.select(col("src").as("id"), col("dst").as("cluster_id"))
       .unionByName(roots)
-    // node-set parity with the min-label tier: nodes whose only edges
+    // node-set parity with the contraction tier: nodes whose only edges
     // were self-loops vanished at canonicalization — they are their
     // own singleton components and must still be labelled
     val selfOnly = symEdges.select(col("src").as("id")).distinct()

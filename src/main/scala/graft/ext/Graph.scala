@@ -206,170 +206,6 @@ object Graph {
     dist
   }
 
-  /** Bounded-depth BFS shortest hop counts from one source over an
-    * undirected edge frame (`a`, `b`) — frontier-parallel, the
-    * Pregel-shape traversal (one equi-join + one min-combine per
-    * round), NOT a transitive-closure materialization: round h's
-    * frontier is only the nodes FIRST reached at distance h (an
-    * anti-join against the visited set drops re-reachings), so per
-    * round the join touches O(frontier-adjacent edges) and state is
-    * one (node, dist) row per visited node. The closure-style oracle
-    * (recursive CTE enumerating every (node, d<=maxHops) walk
-    * endpoint, then min(d)) is the quadratic anti-baseline the
-    * frontier shape avoids; both agree because min over all walk
-    * lengths IS the shortest distance.
-    *
-    * Both frontier and visited are lineage-checkpointed each round
-    * (visited is referenced by the anti-join AND the final result, so
-    * without truncation the plan doubles per round — the q71 CC
-    * lesson), with superseded rounds' blocks freed deterministically.
-    *
-    * Returns (node, hops) for every node within `maxHops` of `source`
-    * (source itself at 0).
-    */
-  /** Min-label propagation TO CONVERGENCE over a directed edge frame
-    * (`src`, `dst`): each round every vertex takes the min of its own
-    * label and its in-neighbors' labels, and the loop ends when an
-    * exact changed-row count (one join per round) reaches ZERO — the
-    * convergence-promoted upgrade of the fixed-3-round prefix contract
-    * (q199), run with q71's escalation discipline: per-round lineage
-    * checkpoints keep the plan O(1) deep, superseded rounds' blocks are
-    * freed deterministically, and the safety cap turns a runaway loop
-    * into a loud error, not a silent hang (monotone min propagation
-    * converges in <= diameter rounds, so the cap should never fire).
-    * At the fixpoint every label is its component's minimum vertex id
-    * (for symmetric edge frames) — which is what lets a closure-style
-    * oracle state the result without replaying rounds.
-    *
-    * Returns (vx, lbl) for every vertex in `vertices` (column `vx`).
-    *
-    * `symmetricContract = true` (ONLY valid when the edge frame is
-    * SYMMETRIC — both directions present) prepends one CONTRACTION
-    * round before the synchronous loop: every endpoint maps to the min
-    * of its closed neighborhood `m(v) = min(N(v) ∪ {v})` and the loop
-    * then runs on the CONTRACTED label graph, with vertex labels
-    * composed back through the map at the end. This is q71's
-    * copy-clique discipline applied to community labels: a k-clique
-    * (one order's same-brand parts in the co-purchase substrate)
-    * collapses to its single min in the contraction, so the fixpoint
-    * loop propagates over the small inter-clique remainder instead of
-    * re-shuffling the full O(|V|+|E|) frame every round. Exact because
-    * on a symmetric frame the fixpoint label IS the component minimum,
-    * and contraction preserves components and their minima (the min
-    * vertex maps to itself; every m(v) is 1-hop reachable from v).
-    */
-  def labelPropagateToFixpoint(vertices: DataFrame, edgesIn: DataFrame,
-                               maxRounds: Int = 200,
-                               symmetricContract: Boolean = false): DataFrame = {
-    if (symmetricContract)
-      return labelPropContracted(vertices, edgesIn, maxRounds)
-    val edges = edgesIn.select(col("src"), col("dst"))
-    val (ck0, free0) = Lineage.checkpoint(
-      vertices.select(col("vx")).distinct().withColumn("lbl", col("vx")))
-    var labels = ck0
-    var free: () => Unit = free0
-    var converged = false
-    var round = 0
-    while (!converged) {
-      round += 1
-      if (round > maxRounds)
-        sys.error(s"labelPropagateToFixpoint: no convergence in $maxRounds rounds")
-      val nbr = edges.join(labels, edges("src") === labels("vx"))
-        .groupBy(col("dst")).agg(min(col("lbl")).as("nl"))
-      // the changed-row count rides the checkpoint's own
-      // materialization job (checkpointObserved, round 15) — the old
-      // form scanned the just-written blocks in a SECOND job per round
-      // (itself the round-14 fix for re-running the round's join); now
-      // each round is exactly one job, same frames, same witness
-      val (ckNext, mNext, freeNext) = Lineage.checkpointObserved(
-        labels.join(nbr, labels("vx") === nbr("dst"), "left")
-          .select(labels("vx"),
-            least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl"),
-            (coalesce(col("nl"), col("lbl")) < col("lbl")).as("chg")),
-        count(when(col("chg"), 1)).as("changed"))
-      val changed = mNext("changed").asInstanceOf[Long]
-      free()
-      free = freeNext
-      labels = ckNext.select(col("vx"), col("lbl"))
-      converged = changed == 0L
-    }
-    labels
-  }
-
-  /** The `symmetricContract` path of [[labelPropagateToFixpoint]]:
-    * contract once, run the plain fixpoint loop on the contracted
-    * label graph, compose labels back over every input vertex
-    * (edgeless vertices keep themselves). The contraction map is
-    * referenced by the edge rewrite (twice) and the final compose, so
-    * it is lineage-checkpointed and freed only after the composed
-    * result materializes.
-    */
-  private def labelPropContracted(vertices: DataFrame, edgesIn: DataFrame,
-                                  maxRounds: Int,
-                                  contractRounds: Int = 2): DataFrame = {
-    // canonical undirected edges (self-loops out), and the composed
-    // original-id -> current-label map, both rolled forward per round
-    // per-round emptiness witness rides the edge checkpoints
-    // (checkpointObserved, round 15) — no separate isEmpty job
-    val witness = count(lit(1)).as("n")
-    var (e, mE0, freeE) = Lineage.checkpointObserved(
-      edgesIn.select(greatest(col("src"), col("dst")).as("a"),
-                     least(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct(), witness)
-    var nE = mE0("n").asInstanceOf[Long]
-    var mapped: Option[(DataFrame, () => Unit)] = None // vx -> label
-    var round = 0
-    while (round < contractRounds && nE != 0L) {
-      // m(l) = min(N(l) ∪ {l}) over the CURRENT label graph
-      val (m, freeM) = Lineage.checkpoint(
-        e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-          .groupBy(col("a"))
-          .agg(least(min(col("b")), col("a")).as("m"))
-          .select(col("a").as("v0"), col("m")))
-      val (mappedN, freeMappedN) = Lineage.checkpoint(mapped match {
-        case None =>
-          m.select(col("v0").as("vx"), col("m").as("lbl"))
-        case Some((prev, _)) =>
-          prev.join(m, prev("lbl") === m("v0"), "left")
-            .select(prev("vx"), coalesce(col("m"), prev("lbl")).as("lbl"))
-      })
-      val mA = m.select(col("v0").as("a"), col("m").as("ma"))
-      val mB = m.select(col("v0").as("b"), col("m").as("mb"))
-      val (eN, mEN, freeEN) = Lineage.checkpointObserved(
-        e.join(mA, "a").join(mB, "b")
-          .select(greatest(col("ma"), col("mb")).as("a"),
-                  least(col("ma"), col("mb")).as("b"))
-          .filter(col("a") =!= col("b")).distinct(), witness)
-      mapped.foreach(_._2())
-      freeM(); freeE()
-      mapped = Some((mappedN, freeMappedN))
-      e = eN; freeE = freeEN
-      nE = mEN("n").asInstanceOf[Long]
-      round += 1
-    }
-    val (map, freeMap) = mapped.getOrElse(
-      (vertices.sparkSession.emptyDataFrame, () => ()))
-    // the genuine data-dependent fixpoint loop runs on the (small)
-    // contracted remainder graph
-    val eInner = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(e.select(col("b").as("src"), col("a").as("dst")))
-    val innerV = (if (mapped.isEmpty) vertices.limit(0)
-                  else map.select(col("lbl").as("vx"))).distinct()
-    val inner = labelPropagateToFixpoint(innerV, eInner, maxRounds)
-    // compose: vx -> contracted label -> inner label; edgeless
-    // vertices (absent from the map) keep themselves
-    val composed =
-      if (mapped.isEmpty) vertices.select(col("vx")).distinct()
-        .withColumn("lbl", col("vx"))
-      else vertices.select(col("vx")).distinct()
-        .join(map.withColumnRenamed("lbl", "m"), Seq("vx"), "left")
-        .join(inner.select(col("vx").as("m"), col("lbl").as("il")), Seq("m"), "left")
-        .select(col("vx"), coalesce(col("il"), col("m"), col("vx")).as("lbl"))
-    val (out, _) = Lineage.checkpoint(composed)
-    freeMap(); freeE()
-    out // escapes to the caller — its blocks are the ContextCleaner's
-  }
-
   /** K-core peeling TO STABILITY (capped at `maxRounds`) over a
     * SYMMETRIC edge frame (`src`, `dst` with both directions present,
     * so out-degree = degree): each round drops vertices whose
@@ -412,6 +248,27 @@ object Graph {
     e
   }
 
+  /** Bounded-depth BFS shortest hop counts from one source over an
+    * undirected edge frame (`a`, `b`) — frontier-parallel, the
+    * Pregel-shape traversal (one equi-join + one min-combine per
+    * round), NOT a transitive-closure materialization: round h's
+    * frontier is only the nodes FIRST reached at distance h (an
+    * anti-join against the visited set drops re-reachings), so per
+    * round the join touches O(frontier-adjacent edges) and state is
+    * one (node, dist) row per visited node. The closure-style oracle
+    * (recursive CTE enumerating every (node, d<=maxHops) walk
+    * endpoint, then min(d)) is the quadratic anti-baseline the
+    * frontier shape avoids; both agree because min over all walk
+    * lengths IS the shortest distance.
+    *
+    * Both frontier and visited are lineage-checkpointed each round
+    * (visited is referenced by the anti-join AND the final result, so
+    * without truncation the plan doubles per round — the q71 CC
+    * lesson), with superseded rounds' blocks freed deterministically.
+    *
+    * Returns (node, hops) for every node within `maxHops` of `source`
+    * (source itself at 0).
+    */
   def bfsHops(edgesIn: DataFrame, source: Long, maxHops: Int): DataFrame = {
     val spark = edgesIn.sparkSession
     import spark.implicits._

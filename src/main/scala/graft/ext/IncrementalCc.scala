@@ -15,8 +15,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * absorbed into a smaller label. Cost is O(|edges| + members of
   * changed components); the label-contraction CC runs on a frame of
   * at most 2|edges| label nodes (component-cardinality metadata),
-  * via the same two-tier fixpoint as the batch path
-  * ([[Dedup.connectedComponents]]). Applying the returned upserts
+  * via the same kernel as the batch path
+  * ([[Dedup.contractiveComponents]]). Applying the returned upserts
   * preserves the invariant, so any edge-arrival order converges to
   * the one-shot batch CC bit-for-bit.
   */
@@ -43,7 +43,7 @@ object IncrementalCc {
 
   /** The contraction CC's old_lbl -> new_lbl mapping, computed on the
     * driver (min-label union-find) when the contraction graph fits
-    * [[ContractionDriverCap]], else by [[Dedup.connectedComponents]].
+    * [[ContractionDriverCap]], else by [[Dedup.contractiveComponents]].
     * The ONE bounded collect also answers emptiness, so callers no
     * longer pay a separate isEmpty probe job. Labels are identical to
     * the distributed tier's by construction: both emit, for every node
@@ -79,7 +79,7 @@ object IncrementalCc {
       import s.implicits._
       nodes.toSeq.map(n => (n, find(n))).toDF("old_lbl", "new_lbl")
     } else
-      Dedup.connectedComponents(contraction, "la", "lb")
+      Dedup.contractiveComponents(contraction, "la", "lb")
         .select(col("id").as("old_lbl"), col("cluster_id").as("new_lbl"))
   }
 
@@ -171,8 +171,8 @@ object IncrementalCc {
     // table routes to a touched bucket, so absence from `lookup` IS
     // absence from the table
     val newNodes = withFinal.join(lookup.select(col("id")), Seq("id"), "left_anti")
-    // `mapping` is connectedComponents' output — already a materialized
-    // (lineage-checkpointed) frame, so this filter and its bounded
+    // `mapping` is the driver union-find's local frame or the CC
+    // kernel's lineage-checkpointed output, so this filter and its bounded
     // collect are cheap scans of existing blocks (phase-profiled at
     // sf10: ~0.2 s/batch); persisting or re-checkpointing here would
     // only add corpus-scale disk passes.

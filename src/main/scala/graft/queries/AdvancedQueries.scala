@@ -779,19 +779,22 @@ object AdvancedQueries {
 
   // ---------------------------------------------------------------- q208
   /** LABEL PROPAGATION TO CONVERGENCE — the fixpoint promotion of
-    * q199's fixed-3-round prefix, via [[graft.ext.Graph.labelPropagateToFixpoint]]
-    * (per-round lineage checkpoints, deterministic block release, exact
-    * changed-count convergence detection — q71's escalation machinery
-    * applied to community labels). Substrate: the BRAND-SCOPED
-    * co-purchase graph (parts co-purchased in one order AND sharing
-    * p_brand) — component sizes are bounded by brand part-count, which
-    * keeps the oracle's transitive closure quadratic-in-component, not
-    * quadratic-in-corpus, while the Spark side still runs a genuinely
-    * data-dependent number of rounds. At the fixpoint every part's
-    * community is the min part-key reachable in its brand component,
-    * which is exactly what the closure-style oracle states — min over
-    * all reachable labels — with NO round replay, so the gate is exact
-    * for ANY convergence round count.
+    * q199's fixed-3-round prefix. At the fixpoint of min-label
+    * propagation over a symmetric graph every vertex carries its
+    * component's min vertex id, so the engine computes exactly that
+    * with the connected-components kernel ([[graft.ext.Dedup
+    * .contractiveComponents]]: label contraction, escalating to
+    * large/small-star on deep remainders). Substrate: the
+    * BRAND-SCOPED co-purchase graph (parts co-purchased in one order
+    * AND sharing p_brand) — component sizes are bounded by brand
+    * part-count, which keeps the oracle's transitive closure
+    * quadratic-in-component, not quadratic-in-corpus. Each order's
+    * same-brand parts form a clique, which the kernel collapses to its
+    * min in one round, so later rounds run on the small inter-clique
+    * remainder. The closure-style oracle states the same result — min
+    * over all reachable labels — with NO round replay, so the gate is
+    * exact for ANY convergence round count. Parts with no same-brand
+    * co-purchase are edgeless and label themselves.
     */
   def q208LabelPropFixpoint(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
@@ -799,17 +802,15 @@ object AdvancedQueries {
     val lib = li.join(pb, li("l_partkey") === pb("p_partkey"))
       .select(col("l_orderkey"), col("p_brand"), col("l_partkey").cast("long").as("p"))
       .distinct()
+    // one row per unordered co-purchase pair; the kernel canonicalizes
+    // and deduplicates edges itself
     val e = lib.as("x").join(lib.as("y"), Seq("l_orderkey", "p_brand"))
-      .select(col("x.p").as("src"), col("y.p").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-    val v = lib.select(col("p").as("vx")).distinct()
-    // the co-purchase edge frame is symmetric (the self-join emits both
-    // directions), so the clique-collapsing contraction prefix applies:
-    // each order's same-brand clique contracts to its min in one round
-    // and the fixpoint loop runs on the small inter-clique remainder
-    graft.ext.Graph.labelPropagateToFixpoint(v, e, symmetricContract = true)
-      .select(col("vx").as("part"), col("lbl").as("community"))
+      .filter(col("x.p") < col("y.p"))
+      .select(col("x.p").as("id_a"), col("y.p").as("id_b"))
+    val comp = graft.ext.Dedup.contractiveComponents(e)
+    lib.select(col("p").as("id")).distinct()
+      .join(comp, Seq("id"), "left")
+      .select(col("id").as("part"), coalesce(col("cluster_id"), col("id")).as("community"))
   }
 
   val q208Sql: String =

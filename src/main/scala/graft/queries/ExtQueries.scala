@@ -1561,7 +1561,7 @@ object ExtQueries {
   def q130ClusterCanonical(s: SparkSession, d: String): DataFrame = {
     import TextAnalysis._
     val pairs = Dedup.minhashNearDups(docs(s, d), k = 12, bands = 4, threshold = 0.5)
-    val comps = Dedup.connectedComponents(pairs)
+    val comps = Dedup.contractiveComponents(pairs)
     val toks = tokens(col("text"))
     val quality = docs(s, d).select(col("doc_id"),
       qualityScore(size(toks), digitTokenCount(toks), countIn(toks, Stopwords)).as("q"))

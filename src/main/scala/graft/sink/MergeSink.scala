@@ -482,7 +482,10 @@ final class MergeSink(
     * their heavy work), then publish under the short critical
     * section; when an intervening commit moved the base — the staged
     * LWW was computed against replaced state — the stale stage is
-    * discarded and the merge RE-STAGES against the new base.
+    * discarded and the merge RE-STAGES against the new base. A publish
+    * that fails for any other reason (another writer's lock, an I/O
+    * error) drops its stage too and rethrows, so no attempt leaves a
+    * stage behind ([[TableManifest.dropStaged]], lock-free).
     * Returns the attempt count that succeeded. `beforePublish` is a
     * test seam (contention injection); production leaves it default.
     */
@@ -493,11 +496,11 @@ final class MergeSink(
     while (attempt < maxAttempts) {
       attempt += 1
       val token = stageMerge(batch)
-      beforePublish()
-      try { publishStaged(token); return attempt }
+      try { beforePublish(); publishStaged(token); return attempt }
       catch {
-        case e: IllegalStateException if e.getMessage.contains("stale") =>
-          discardStaged(token)
+        case scala.util.control.NonFatal(e) =>
+          manifest.dropStaged(token)
+          if (!(e.isInstanceOf[IllegalStateException] && e.getMessage.contains("stale"))) throw e
           if (attempt >= maxAttempts)
             throw new IllegalStateException(
               s"mergeOptimistic lost the commit race $attempt times at $path — " +

@@ -188,6 +188,12 @@ final class TableManifest(spark: SparkSession, val root: String) {
     finally in.close()
   }
 
+  /** [[readText]], or None when `p` is gone — a `_staged/` entry that a
+    * lock-free stager or a failed publish deleted after it was listed.
+    */
+  private def readIfPresent(p: Path): Option[String] =
+    try Some(readText(p)) catch { case _: java.io.FileNotFoundException => None }
+
   private def parseLayout(s: String): Layout = {
     val Array(g, n, w) = s.split(",", 3)
     Layout(g.toInt, n.toInt, if (w == "-") None else Some(w.toLong))
@@ -738,6 +744,14 @@ final class TableManifest(spark: SparkSession, val root: String) {
     token
   }
 
+  /** Drop the staged snapshot `token` WITHOUT the writer lock — what a
+    * failed publish does, whatever refused it. Only the staged file
+    * goes: its generation is then referenced by nothing and the next
+    * sweeping write reclaims it. Deleting the generation here, unlocked,
+    * could take the files of a publish that committed before it threw.
+    */
+  private[sink] def dropStaged(token: String): Unit = fs.delete(stagedPath(token), false)
+
   /** Drop a pending pre-registration (failed or crashed stager): delete
     * the one generation its marker names, then the marker. No vacuum —
     * a stager holds no lock, and a sweep now could delete a concurrent
@@ -756,19 +770,27 @@ final class TableManifest(spark: SparkSession, val root: String) {
     else fs.listStatus(stagedDir).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("p-")).sorted
 
+  /** Generations of the outstanding pre-registrations; a marker whose
+    * stager finished after the listing names nothing (its staged file,
+    * written before the marker went, is listed after this).
+    */
   private def pendingGens(): Set[String] =
-    pendingStages().map(t => readText(stagedPath(t)).trim).toSet
+    pendingStages().flatMap(t => readIfPresent(stagedPath(t))).map(_.trim).toSet
 
-  private def parseStaged(token: String): (Long, Snapshot) = {
-    val p = stagedPath(token)
-    if (!fs.exists(p)) throw new IllegalStateException(
-      s"stage $token at $root does not exist (published or discarded?)")
-    val text = readText(p)
-    val base = text.linesIterator.collectFirst {
-      case l if l.startsWith("#base=") => l.stripPrefix("#base=").toLong
-    }.getOrElse(throw new IllegalStateException(s"stage $token has no #base fence"))
-    (base, parse(text))
-  }
+  /** The staged file `token` as (`#base` fence, snapshot); None once it
+    * is published, discarded or dropped.
+    */
+  private def stagedIfPresent(token: String): Option[(Long, Snapshot)] =
+    readIfPresent(stagedPath(token)).map { text =>
+      val base = text.linesIterator.collectFirst {
+        case l if l.startsWith("#base=") => l.stripPrefix("#base=").toLong
+      }.getOrElse(throw new IllegalStateException(s"stage $token has no #base fence"))
+      (base, parse(text))
+    }
+
+  private def parseStaged(token: String): (Long, Snapshot) =
+    stagedIfPresent(token).getOrElse(throw new IllegalStateException(
+      s"stage $token at $root does not exist (published or discarded?)"))
 
   /** The staged snapshot `token` — what the AUDIT step reads (through
     * [[scan]], like any snapshot).
@@ -793,12 +815,19 @@ final class TableManifest(spark: SparkSession, val root: String) {
     * racing this sweep.
     */
   private def vacuum(cur: Snapshot): Unit = {
+    // generations pre-registered by in-flight lock-free stagers are
+    // fully live — their bucket layout is still being written. Listed
+    // BEFORE the staged files: a stager writes its staged file, then
+    // drops its marker, so one of the two listings sees its generation
+    val pending = pendingGens()
     // every snapshot that still resolves data: the current one, each
     // older retained version, and each staged (write-audit-publish)
-    // snapshot until it is published or discarded
+    // snapshot until it is published, discarded or dropped (a staged
+    // file that vanishes between the listing and its parse was one of
+    // these, so it keeps nothing live)
     val older = versions(cur).filter(_ < cur.version)
       .map(v => versionCache.computeIfAbsent(v, _ => at(v, cur)))
-    val live = cur +: (older ++ staged().map(staged))
+    val live = cur +: (older ++ staged().flatMap(stagedIfPresent).map(_._2))
     // gen -> buckets some live snapshot still resolves from it
     val dataRefs: Map[String, Set[Int]] = live.flatMap(_.mapping.toSeq)
       .groupMap { case (_, g) => g } { case (b, _) => b }
@@ -811,9 +840,6 @@ final class TableManifest(spark: SparkSession, val root: String) {
       .map(_.split("/").take(2).mkString("/")).toSet
     val liveRefs: Map[String, Set[Int]] =
       dataRefs ++ (dvGens -- dataRefs.keySet).map(_ -> Set.empty[Int])
-    // generations pre-registered by in-flight lock-free stagers are
-    // fully live — their bucket layout is still being written
-    val pending = pendingGens()
     val dataDir = new Path(root, "data")
     if (fs.exists(dataDir))
       fs.listStatus(dataDir).foreach { st =>

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Locks for the advanced-tier gates: the data assumptions q204's
   * witness column leans on, q206's one-scan banding, q207's index-side
   * plan shape, and the fixpoint semantics of the convergence-promoted
-  * graph helpers (q208/q209).
+  * graph queries (q208 on hand substrates, q209's k-core peel).
   */
 class AdvancedSpec extends SparkSpec {
   import spark.implicits._
@@ -86,38 +86,44 @@ class AdvancedSpec extends SparkSpec {
     assert(!p.contains("Sort [cid"), "IVF assign path sorts the corpus")
   }
 
-  test("label propagation converges past any bounded prefix on a hand chain graph") {
-    // path 1-2-...-10: the min label needs 9 rounds to reach the far
-    // end, so a fixed-3-round prefix provably cannot finish — the
-    // fixpoint loop must keep going until the changed-count hits zero
-    val edges = (1L to 9L).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("src", "dst")
-    val verts = (1L to 10L).map(Tuple1(_)).toDF("vx")
-    val out = graft.ext.Graph.labelPropagateToFixpoint(verts, edges)
+  /** q208 over a hand-written substrate: each order's (part, brand)
+    * lines, written as the lineitem and part tables it reads.
+    */
+  private def q208On(orders: Seq[(Long, Seq[(Long, String)])]): Map[Long, Long] = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_q208_").toString
+    orders.flatMap { case (o, lines) => lines.map { case (p, _) => (o, p) } }
+      .toDF("l_orderkey", "l_partkey").write.parquet(s"$dir/lineitem.parquet")
+    orders.flatMap(_._2).distinct.toDF("p_partkey", "p_brand")
+      .write.parquet(s"$dir/part.parquet")
+    SparkEntry.queries("q208_label_prop_fixpoint")(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out == (1L to 10L).map(_ -> 1L).toMap,
-      s"fixpoint labels wrong: $out")
   }
 
-  test("symmetricContract label propagation is bit-identical to the plain loop " +
-       "(chain, cliques, crossings, edgeless vertices)") {
-    // two 4-cliques bridged by a path, one isolated vertex, one
-    // self-contained pair — the shapes the contraction must preserve
-    val cliqueA = for (i <- 1L to 4L; j <- 1L to 4L if i != j) yield (i, j)
-    val cliqueB = for (i <- 10L to 13L; j <- 10L to 13L if i != j) yield (i, j)
-    val bridge = Seq((4L, 7L), (7L, 10L)).flatMap { case (a, b) => Seq((a, b), (b, a)) }
-    val pair = Seq((20L, 21L), (21L, 20L))
-    val edges = (cliqueA ++ cliqueB ++ bridge ++ pair).toDF("src", "dst")
-    val verts = ((1L to 4L) ++ Seq(7L) ++ (10L to 13L) ++ Seq(20L, 21L, 99L))
-      .map(Tuple1(_)).toDF("vx")
-    def lbls(sym: Boolean) =
-      graft.ext.Graph.labelPropagateToFixpoint(verts, edges, symmetricContract = sym)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val plain = lbls(sym = false)
-    val contracted = lbls(sym = true)
-    assert(contracted == plain, s"contracted path diverges: $contracted vs $plain")
-    assert(contracted(99L) == 99L, "edgeless vertex labels itself")
-    assert(contracted(13L) == 1L, "bridged cliques share the global min")
-    assert(contracted(21L) == 20L)
+  test("label propagation converges past any bounded prefix on a hand chain graph") {
+    // path 1-2-...-10 (order i buys parts i and i+1): the min label
+    // needs 9 propagation rounds to reach the far end, and each
+    // contraction round shortens a path by one edge, so the kernel's
+    // 4-round budget escalates to the star tier — q208 must still label
+    // every part 1
+    val out = q208On((1L to 9L).map(i => i -> Seq(i -> "B1", (i + 1) -> "B1")))
+    assert(out == (1L to 10L).map(_ -> 1L).toMap, s"fixpoint labels wrong: $out")
+  }
+
+  test("q208 labels bridged cliques, pairs and edgeless parts with their component min") {
+    // two 4-part same-brand orders (cliques) bridged through part 7, a
+    // pair of another brand, a part bought alone, and a part co-bought
+    // with clique A but of another brand (no same-brand edge): both of
+    // the last two are edgeless and label themselves
+    val cliqueA = (1L to 4L).map(_ -> "B1") :+ (30L -> "B4")
+    val cliqueB = (10L to 13L).map(_ -> "B1")
+    val out = q208On(Seq(
+      100L -> cliqueA, 101L -> cliqueB,
+      102L -> Seq(4L -> "B1", 7L -> "B1"), 103L -> Seq(7L -> "B1", 10L -> "B1"),
+      104L -> Seq(20L -> "B3", 21L -> "B3"),
+      105L -> Seq(99L -> "B1")))
+    val bridged = ((1L to 4L) ++ Seq(7L) ++ (10L to 13L)).map(_ -> 1L)
+    assert(out == (bridged ++ Seq(20L -> 20L, 21L -> 20L, 30L -> 30L, 99L -> 99L)).toMap,
+      s"q208 labels wrong: $out")
   }
 
   test("k-core peeling: early-exit stability, full peel, and cap prefix on hand graphs") {

@@ -194,30 +194,28 @@ class ExtSpec extends SparkSpec {
       s"trained cost ${cost(a)} worse than init ${cost(init)}")
   }
 
-  test("connectedComponents: chains, stars, and disjoint clusters converge to min labels") {
-    import graft.ext.Dedup
+  test("contractiveComponents: chains, stars, and disjoint clusters converge to min labels") {
     // component A: chain 1-2-3-4 (diameter 3); component B: star around
     // 10; component C: pair (20, 21); plus a redundant duplicate edge
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (10L, 12L),
                     (10L, 13L), (20L, 21L), (2L, 3L))
       .toDF("id_a", "id_b")
-    val comp = Dedup.connectedComponents(edges)
+    val comp = Dedup.contractiveComponents(edges)
       .as[(Long, Long)].collect().toMap
     assert(comp == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
                        10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L,
                        20L -> 20L, 21L -> 20L))
   }
 
-  test("connectedComponents: a path deeper than maxIter escalates to star rounds and still converges") {
-    import graft.ext.Dedup
-    // path graph 0-1-2-...-40: diameter 40 > maxIter=5 linear rounds —
-    // min-label alone would return truncated labels; the escalation
-    // must converge (log-diameter) and label everything 0. A second
+  test("contractiveComponents: a path deeper than the contraction budget escalates to star rounds and still converges") {
+    // path graph 0-1-2-...-40: a contraction round shortens a path by
+    // one edge, so 5 rounds leave 35 edges and the remainder must
+    // escalate (log-diameter) and label everything 0. A second
     // component checks the escalated path keeps components separate.
     val edges = ((0L until 40L).map(i => (i, i + 1)) ++
                  Seq((100L, 101L), (101L, 102L)))
       .toDF("id_a", "id_b")
-    val comp = Dedup.connectedComponents(edges, maxIter = 5)
+    val comp = Dedup.contractiveComponents(edges, contractRounds = 5)
       .as[(Long, Long)].collect().toMap
     assert(comp.size == 44)
     assert((0L to 40L).forall(comp(_) == 0L))
@@ -226,22 +224,20 @@ class ExtSpec extends SparkSpec {
   }
 
   test("starComponents alone matches min-label on a mixed graph") {
-    import graft.ext.Dedup
-    // (30,30): a self-loop-only node — both tiers must keep it as its
-    // own singleton component (the star tier canonicalizes self-loops
-    // away and must add such nodes back)
+    // (30,30): a self-loop-only node — the star tier canonicalizes
+    // self-loops away and must add such nodes back as their own
+    // singleton components, like the kernel
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (10L, 12L),
                     (10L, 13L), (20L, 21L), (2L, 3L), (30L, 30L)).toDF("id_a", "id_b")
-    val sym = edges.select($"id_a".as("src"), $"id_b".as("dst"))
-      .unionByName(edges.select($"id_b".as("src"), $"id_a".as("dst")))
-    val star = Dedup.starComponents(sym).as[(Long, Long)].collect().toMap
-    val minLabel = Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap
-    assert(star == minLabel)
+    val star = ExtSpec.starLabels(edges)
+    assert(star == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+                       10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L,
+                       20L -> 20L, 21L -> 20L, 30L -> 30L))
+    assert(star == Dedup.contractiveComponents(edges).as[(Long, Long)].collect().toMap)
     spark.catalog.clearCache()
   }
 
-  test("contractiveComponents: bit-identical to propagation on cliques, deep paths, crossings, self-loops; cliques collapse in one round") {
-    import graft.ext.Dedup
+  test("contractiveComponents: equals starComponents and the driver union-find on cliques, deep paths, crossings, self-loops; cliques collapse in one round") {
     // the shapes that matter: copy-group CLIQUES (the dedup-dominant
     // case contraction exists for), a PATH deeper than the contraction
     // budget (forces the starComponents escalation), a bridge edge
@@ -259,11 +255,11 @@ class ExtSpec extends SparkSpec {
       .toDF("id_a", "id_b")
     val viaContraction = Dedup.contractiveComponents(edges, contractRounds = 3)
       .as[(Long, Long)].collect().toMap
-    val viaPropagation = Dedup.connectedComponents(edges)
-      .as[(Long, Long)].collect().toMap
-    assert(viaContraction == viaPropagation,
-      s"tiers diverged: ${(viaContraction.toSet -- viaPropagation.toSet).take(5)}")
-    // semantic spot checks, independent of the propagation tier
+    for ((name, ref) <- Seq("starComponents" -> ExtSpec.starLabels(edges),
+                            "driver union-find" -> ExtSpec.unionFindLabels(edges)))
+      assert(viaContraction == ref,
+        s"kernel diverged from $name: ${(viaContraction.toSet diff ref.toSet).take(5)}")
+    // semantic spot checks, independent of both references
     assert((0L until 10L).map(i => viaContraction(50L + (i / 5) * 100 + i % 5)).toSet == Set(50L),
       "bridged cliques must share the min label")
     assert((1000L to 1030L).forall(viaContraction(_) == 1000L), "escalated path mislabeled")
@@ -790,9 +786,10 @@ class ExtSpec extends SparkSpec {
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaDriver = asMap(IncrementalCc.contractionMapping(spark, edges))
     val viaDistributed = asMap(
-      graft.ext.Dedup.connectedComponents(edges, "la", "lb"))
+      graft.ext.Dedup.contractiveComponents(edges, "la", "lb"))
     assert(viaDriver == viaDistributed,
       s"driver union-find diverged: $viaDriver vs $viaDistributed")
+    assert(viaDriver == ExtSpec.starLabels(edges, "la", "lb"), "driver union-find diverged from starComponents")
     assert(viaDriver == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 1L, 7L -> 1L,
       8L -> 8L, 9L -> 8L, 10L -> 10L, 11L -> 10L, 12L -> 10L))
     // over the cap the distributed tier must produce the same labels
@@ -970,4 +967,25 @@ class ExtSpec extends SparkSpec {
       assert(bad == 0L, s"$bad rows kept un-redacted PII")
     } finally out.unpersist()
   }
+}
+
+object ExtSpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** The connected-components kernel's two independent references over
+    * an undirected edge frame: the large-star/small-star tier alone...
+    */
+  def starLabels(edges: DataFrame, a: String = "id_a", b: String = "id_b"): Map[Long, Long] = {
+    val sym = edges.select(col(a).as("src"), col(b).as("dst"))
+      .unionByName(edges.select(col(b).as("src"), col(a).as("dst")))
+    asMap(Dedup.starComponents(sym))
+  }
+
+  /** ...and IncrementalCc's driver union-find (under its size cap). */
+  def unionFindLabels(edges: DataFrame, a: String = "id_a", b: String = "id_b"): Map[Long, Long] =
+    asMap(graft.ext.IncrementalCc.contractionMapping(edges.sparkSession,
+      edges.select(col(a).as("la"), col(b).as("lb"))))
+
+  private def asMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 }

@@ -305,6 +305,36 @@ class PipelineSpec extends SparkSpec {
     assert(sink.read().select($"k").as[Long].collect().toSet == Set(1L))
   }
 
+  test("a vacuum treats a stage that vanishes between its listing and its parse as dropped") {
+    import graft.sink.MergeSink
+    val dir = freshDir() + "/vanish"
+    def table() = new MergeSink(spark, dir, Seq("k"), Seq("upd"), nBuckets = 2)
+    val sink0 = table()
+    sink0.merge(Seq((1L, 10L, 0L), (2L, 20L, 0L)).toDF("k", "v", "upd"))
+    def gensOnDisk() = Option(new java.io.File(dir + "/data").listFiles()).toSeq.flatten
+      .filter(_.isDirectory).map(_.getName).toSet
+    val before = gensOnDisk()
+    sink0.stageMerge(Seq((3L, 30L, 1L)).toDF("k", "v", "upd"))
+    sink0.manifest.preStage(sink0.manifest.newGenDir())
+    // every `_staged/` entry the vacuum opens is gone by then: a failed
+    // publish dropped the stage, a stager finished and dropped its marker
+    spark.conf.set("fs.file.impl", classOf[VanishingStages].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try {
+      val sink = table()
+      VanishingStages.armed = true
+      sink.manifest.write("vacuum")(_.vacuum())
+      VanishingStages.armed = false
+      assert(sink.stagedTokens().isEmpty && sink.manifest.pendingStages().isEmpty)
+      assert(gensOnDisk() == before, "the dropped stage's generation must be swept")
+      assert(sink.read().select($"k").as[Long].collect().toSet == Set(1L, 2L))
+    } finally {
+      VanishingStages.armed = false
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
   test("write-audit-publish: staged gens live through vacuum, swept on discard, crash-safe publish") {
     import graft.sink.MergeSink
     val dir = freshDir() + "/wap"
@@ -612,7 +642,9 @@ class PipelineSpec extends SparkSpec {
       "expireVersions" -> (() => sink.expireVersions(1)),
       "rollback" -> (() => sink.rollback(1L)),
       "mergeOptimistic" -> (() => sink.mergeOptimistic(rows.limit(5)))))
-    assert(Set(toPublish, toDiscard).subsetOf(sink.stagedTokens().toSet))
+    // the refused publishes keep their stages; mergeOptimistic drops the
+    // stage its refused publish leaves
+    assert(sink.stagedTokens().toSet == Set(toPublish, toDiscard))
     assert(sink.read().count() == before, "locked-out writer must not mutate state")
 
     // operator override for a crashed holder
@@ -1227,4 +1259,20 @@ class PipelineSpec extends SparkSpec {
     pinned("readPoints", _.readPoints("tag", tags))
     pinned("readForKeys", _.readForKeys(Seq(2L, 11L, 29L).toDF("id")))
   }
+}
+
+/** A `file:` FileSystem that, while armed, deletes each `_staged/`
+  * entry just before opening it — a stage or pre-registration that
+  * vanishes between a vacuum's listing and its parse (test probe:
+  * `fs.file.impl` with `fs.file.impl.disable.cache=true`).
+  */
+class VanishingStages extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (VanishingStages.armed && f.getParent.getName == graft.sink.TableManifest.StagedDir) delete(f, false)
+    super.open(f, bufferSize)
+  }
+}
+
+object VanishingStages {
+  @volatile var armed = false
 }

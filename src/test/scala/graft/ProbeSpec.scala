@@ -16,8 +16,9 @@ import graft.core.{JobLabel, Probe}
   * fixture), and bans the `ImageIO` entry points that cache through
   * files in `java.io.tmpdir`, hide decode warnings or set JVM-global
   * state. And it keeps the sink's writer lock, commit and vacuum inside
-  * `sink.TableManifest` (only `PipelineSpec` plants a lock file), and
-  * the Hadoop configuration copy inside its few owners.
+  * `sink.TableManifest` (only `PipelineSpec` plants a lock file), the
+  * Hadoop configuration copy inside its few owners, and the engine's
+  * connected components inside `ext.Dedup`'s one kernel.
   */
 class ProbeSpec extends SparkSpec {
   test("the probe records a two-job shuffle action under its JobLabel") {
@@ -84,6 +85,13 @@ class ProbeSpec extends SparkSpec {
       "manifest.vacuum(" -> Set("graft/sink/TableManifest.scala"),
       "newHadoopConf()" -> Set("graft/sink/TableManifest.scala", "graft/queries/StreamGate.scala",
         "graft/StreamGateSpec.scala", "graft/SparkSpec.scala"))
+    // one connected-components kernel, Dedup.contractiveComponents: its
+    // star tier is called from nowhere else in the engine (specs use it
+    // as the kernel's reference), and no second min-label loop returns
+    val mainOnly = Map(
+      "starComponents(" -> Set("graft/ext/Dedup.scala"),
+      "connectedComponents(" -> Set.empty[String],
+      "labelPropagateToFixpoint" -> Set.empty[String])
     def code(p: Path): Seq[String] = Files.readAllLines(p).asScala.toSeq
       .map(_.trim).filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
     val hits = for {
@@ -92,7 +100,8 @@ class ProbeSpec extends SparkSpec {
       name = p.getFileName.toString
       if name.endsWith(".scala") && name != self
       line <- code(p)
-      (needle, owners) <- allowed if line.contains(needle) && !owners.exists(p.endsWith)
+      (needle, owners) <- allowed ++ (if (root == roots.head) mainOnly else Map.empty)
+      if line.contains(needle) && !owners.exists(p.endsWith)
     } yield s"$p: $needle"
     assert(hits.isEmpty, s"machinery outside its one owner: ${hits.mkString("; ")}")
   }

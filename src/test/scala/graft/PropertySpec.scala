@@ -271,19 +271,21 @@ class PropertySpec extends SparkSpec {
 
   test("large-star/small-star CC agrees with min-label on random graphs") {
     import graft.ext.Dedup
-    import org.apache.spark.sql.functions.col
     (1 to 3).foreach { i =>
       val edgeGen = Gen.listOfN(40,
         Gen.zip(Gen.choose(0L, 25L), Gen.choose(0L, 25L)))
       val edges = edgeGen.pureApply(Gen.Parameters.default, Seed(500L + i))
         .filter { case (a, b) => a != b }
       val df = edges.toDF("id_a", "id_b")
-      val minLabel = Dedup.connectedComponents(df, maxIter = 30)
-        .as[(Long, Long)].collect().toMap
-      val sym = df.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .unionByName(df.select(col("id_b").as("src"), col("id_a").as("dst")))
-      val star = Dedup.starComponents(sym).as[(Long, Long)].collect().toMap
-      assert(star == minLabel, s"seed $i: star/min-label divergence")
+      val star = ExtSpec.starLabels(df)
+      assert(star == ExtSpec.unionFindLabels(df), s"seed $i: star/union-find divergence")
+      // the kernel with its default budget, and with one contraction
+      // round (the remainder escalates to the star tier)
+      for (rounds <- Seq(4, 1)) {
+        val minLabel = Dedup.contractiveComponents(df, contractRounds = rounds)
+          .as[(Long, Long)].collect().toMap
+        assert(star == minLabel, s"seed $i, $rounds contraction rounds: star/min-label divergence")
+      }
       spark.catalog.clearCache()
     }
   }
@@ -435,7 +437,7 @@ class PropertySpec extends SparkSpec {
           .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster_id"))
         labels = labels ++ ups
       }
-      val batch = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
+      val batch = Dedup.contractiveComponents(edges.toDF("id_a", "id_b"))
         .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster_id")).toMap
       assert(labels == batch,
         s"trial $trial: incremental $labels != batch $batch (order ${perm.take(5)}...)")

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.Skew
-import graft.sink.Bucketed
 
 /** Scale-pattern specs: salted aggregation correctness and shuffle-free
   * bucketed joins (plan-shape asserted, not just results).
@@ -68,13 +67,15 @@ class ScaleOpsSpec extends SparkSpec {
       .select("o_orderkey", "o_custkey", "o_totalprice")
     val l = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select("l_orderkey", "l_quantity")
-    Bucketed.write(o, "orders_b", Seq("o_orderkey"), buckets = 4)
-    Bucketed.write(l, "lineitem_b", Seq("l_orderkey"), buckets = 4)
+    def bucketed(df: org.apache.spark.sql.DataFrame, table: String, key: String): Unit =
+      df.write.bucketBy(4, key).sortBy(key).format("parquet").mode("overwrite").saveAsTable(table)
+    bucketed(o, "orders_b", "o_orderkey")
+    bucketed(l, "lineitem_b", "l_orderkey")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = Bucketed.table(spark, "lineitem_b")
-        .join(Bucketed.table(spark, "orders_b"),
+      val joined = spark.table("lineitem_b")
+        .join(spark.table("orders_b"),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_custkey").agg(sum("l_quantity").as("q"))
       joined.collect() // force final plan (AQE)

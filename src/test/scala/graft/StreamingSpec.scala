@@ -748,7 +748,7 @@ class StreamingSpec extends SparkSpec {
     val up3 = asMap(IncrementalCc.applyBatch(spark, lab2, edges(0L -> 6L)))
     assert(up3 == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 5L -> 0L, 6L -> 0L))
     // final state equals the one-shot batch CC on the full edge set
-    val batch = graft.ext.Dedup.connectedComponents(
+    val batch = graft.ext.Dedup.contractiveComponents(
       edges(1L -> 2L, 5L -> 6L, 2L -> 6L, 0L -> 6L), "id_a", "id_b")
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster_id")).toMap
     assert((up1 ++ up2 ++ up3) == batch)
@@ -778,7 +778,7 @@ class StreamingSpec extends SparkSpec {
         .withColumn("upd", lit(i.toLong)))
       lab = lab ++ frame
     }
-    val oneShot = Dedup.connectedComponents(
+    val oneShot = Dedup.contractiveComponents(
       edges(1L -> 2L, 5L -> 6L, 2L -> 6L, 0L -> 6L), "id_a", "id_b")
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster_id")).toMap
     assert(asMap(sink.read().select(col("id"), col("cluster_id"))) == oneShot)
@@ -928,7 +928,7 @@ class StreamingSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L, 20L -> 10L, 21L -> 10L, 30L -> 10L, 31L -> 10L,
       5L -> 5L, 40L -> 5L, 41L -> 5L, 50L -> 5L, 51L -> 5L)
     assert(got == expected, s"restarted labels diverge: $got")
-    val batchCc = graft.ext.Dedup.connectedComponents(
+    val batchCc = graft.ext.Dedup.contractiveComponents(
         slices.flatten.toDF("id_a", "id_b"), "id_a", "id_b")
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("cluster_id"))).toMap
     assert(got == batchCc, "restarted incremental CC diverges from one-shot batch CC")
